@@ -37,7 +37,15 @@ def _spread(spark, df, path):
     (deterministic: sort-before-repartition is on) spreads it. Scale-
     adaptive, not a constant: decided from the parquet footers (a few ms,
     no Spark planning), and any table with at least one row group per core
-    — every production-sized table — skips it without any shuffle."""
+    — every production-sized table — skips it without any shuffle.
+
+    Caveat: the footers are read through the LOCAL filesystem (os.listdir,
+    pyarrow on a plain path), not through Spark's Hadoop filesystem, so
+    only local paths are supported. On object storage the check cannot
+    list the table: os.path.isdir is False for a URI, and pyarrow then
+    either raises on a scheme it does not know (s3a:// gives ArrowInvalid,
+    a ValueError the OSError handler below does not catch) or reads the
+    footers outside Spark's credentials and configuration."""
     par = spark.sparkContext.defaultParallelism
     try:
         import pyarrow.parquet as pq
@@ -287,10 +295,11 @@ def _q_bm25_topk(spark, sf_dir):
 
 
 def _q_bm25_index_topk(spark, sf_dir):
-    """BM25 top-10 through the FULL index engine: build a factored
-    SPIMI index (doc-sharded posting blocks storing the doc-local tf-part;
-    idf applied at query time from term_stats — index_build.IndexBuilder,
-    the weight_scheme='factored' default) from the documents table, query
+    """BM25 top-10 through the FULL index engine: build a raw SPIMI
+    index (doc-sharded posting blocks storing tf and dl; the tf-part is
+    derived and idf applied at query time from term_stats —
+    index_build.IndexBuilder, the weight_scheme='raw' default) from the
+    documents table, query
     it with the auto-routed front-end (retrieve.topk → segment scorer).
 
     The index stores float32 factors, so for the hash-exact oracle compare
@@ -313,7 +322,7 @@ def _q_bm25_index_topk(spark, sf_dir):
     )
     d = tempfile.mkdtemp(prefix="entry_idx_")
     IndexBuilder(d, shard_size=1 << 14, n_groups=2).build(docs)
-    # the PUBLIC load-once serve handle (round 5): meta + factored-idf
+    # the PUBLIC load-once serve handle (round 5): meta + per-term idf
     # segment annotation paid at open; .topk() is the per-batch call.
     # cache=False — this is a single batch, nothing to amortize.
     picked = retrieve.open_index(spark, d, cache=False).topk(
@@ -688,14 +697,14 @@ def _q_bm25_mlt_topk(spark, sf_dir):
 
 
 def _q_bm25_point_topk(spark, sf_dir):
-    """BM25 top-10 through the term-major POINT path: build the factored
+    """BM25 top-10 through the term-major POINT path: build the raw
     SPIMI index, merge it to the term-major global layout
     (index_merge.merge_to_term_major), open it with the public handle and
     force ``path='term_major'`` — the Block-Max MaxScore kernel over
     partition-pruned per-term block buckets (wand._score_maxscore). This
     puts the point path (routing + merged layout + MaxScore pruning) under
-    the hash-exact DuckDB gate; segment-path parity and the BMW kernel are
-    pinned separately in tests. As with bm25_index_topk, the selected
+    the hash-exact DuckDB gate; segment-path parity is pinned separately
+    in tests. As with bm25_index_topk, the selected
     (query_id, doc_id) pairs are re-scored with exact float64 relational
     weights so float32 index storage can hash-match the oracle. Shares
     _SQL_BM25_TOPK (same query set, same rows)."""
@@ -733,7 +742,7 @@ def _q_bm25_point_topk(spark, sf_dir):
 
 def _q_bm25_and_topk(spark, sf_dir):
     """Conjunctive BM25 top-10 through the full index engine: build the
-    factored SPIMI index, query with ``retrieve.topk(mode='and')`` — only
+    raw SPIMI index, query with ``retrieve.topk(mode='and')`` — only
     docs containing EVERY query term qualify (the batch scorer's
     distinct-term match-count grid; the point path is rarest-first
     posting-list intersection with per-block doc-range skipping,
@@ -832,7 +841,7 @@ def _q_bm25_append_topk(spark, sf_dir):
 
 def _q_bm25_delete_topk(spark, sf_dir):
     """BM25 top-10 under DOCUMENT DELETION (fulltext/delete.py — round 5):
-    build the factored index, tombstone every doc_id % 10 == 3, query
+    build the raw index, tombstone every doc_id % 10 == 3, query
     through the public handle. Tombstones filter AT DECODE TIME inside the
     kernels (deleted docs can never crowd a local top-k or inflate the
     MaxScore θ) while corpus stats stay pre-deletion until compact_index —

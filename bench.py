@@ -29,8 +29,7 @@ driver's timeout — round 3 lost ALL its driver-observed numbers to exactly
 that (BENCH_r03.json: rc=124, parsed=null).
 
 Env knobs: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, BENCH_DOCS, BENCH_QUERIES,
-BENCH_TIME_BUDGET, BENCH_SKIP_SCALING=1, BENCH_BUCKET=1 (opt-in path
-comparison — r3 had it default-on and it ate the budget).
+BENCH_TIME_BUDGET, BENCH_SKIP_SCALING=1.
 """
 
 from __future__ import annotations
@@ -201,7 +200,7 @@ def _barrier(stage: str) -> None:
 
 def fulltext_bench(
     cpus: int, n_docs: int, n_queries: int, vocab: int, repeats: int = 1,
-    measure_bucket: bool = False, warmup_build: bool = False,
+    warmup_build: bool = False,
     build_repeats: int | None = None,
 ) -> dict:
     """Build + query throughput at a given parallelism; fresh session.
@@ -209,9 +208,7 @@ def fulltext_bench(
     single-box interference (page cache, GC, compaction of /tmp) adds tens
     of percent of run-to-run noise, and best-of-N is the standard way to
     measure capability rather than interference. All samples are reported
-    as {best, median, n}. ``measure_bucket`` additionally times the
-    term-major bucket path, pruned (bound-then-refine) vs exhaustive, on a
-    mid-size slice of the query batch."""
+    as {best, median, n}."""
     from pyspark.sql import functions as F
 
     from similaripy_spark.fulltext.index_build import IndexBuilder
@@ -341,51 +338,9 @@ def fulltext_bench(
                 "build_stats": _stats(build_samples),
                 "query_stats": _stats(query_samples),
             }
-            if measure_bucket:
-                out["bucket"] = _bucket_demo(spark, idx, vocab)
             return out
     finally:
         spark.stop()
-
-
-def _bucket_demo(spark, idx: str, vocab: int) -> dict:
-    """Three-way path comparison on one mid-size batch: segment sweep vs
-    exhaustive bucket vs bound-then-refine bucket. Honest artifact for the
-    routing decision (retrieve.route) and the pruning verdict (bucket_topk
-    docstring): on this Zipf corpus the segment path dominates and pruning
-    is a measured loss — recorded here so the claim is in the bench output,
-    not just prose."""
-    from similaripy_spark.fulltext.index_build import read_meta, read_segments
-    from similaripy_spark.fulltext.index_merge import merge_to_term_major
-    from similaripy_spark.fulltext.wand import bucket_topk, segment_topk
-    from similaripy_spark.sources.pages import generate_queries_pandas
-
-    t0 = time.monotonic()
-    merge_to_term_major(spark, idx, n_buckets=64)
-    merge_s = round(time.monotonic() - t0, 3)
-    nq = int(os.environ.get("BENCH_BUCKET_QUERIES", "500"))
-    queries = spark.createDataFrame(
-        generate_queries_pandas(nq, vocab_size=vocab, seed=77)
-    )
-    seg = read_segments(spark, idx)
-    sids = list(range(read_meta(idx)["n_shards"]))
-    runs = {
-        "segment_sec": lambda: segment_topk(seg, queries, k=10,
-                                            shard_ids=sids, index_dir=idx),
-        "exhaustive_sec": lambda: bucket_topk(spark, idx, queries, k=10,
-                                              prune=False),
-        "pruned_sec": lambda: bucket_topk(spark, idx, queries, k=10,
-                                          prune=True),
-    }
-    out = {"merge_sec": merge_s, "n_queries": nq}
-    for name, fn in runs.items():
-        samples = []
-        for _ in range(2):
-            t0 = time.monotonic()
-            fn().write.format("noop").mode("overwrite").save()
-            samples.append(time.monotonic() - t0)
-        out[name] = _stats(samples)
-    return out
 
 
 def headline_queries(
@@ -514,11 +469,9 @@ def main():
         n_queries = int(os.environ.get("BENCH_QUERIES", "10000"))
         vocab = int(os.environ.get("BENCH_VOCAB", "50000"))
         repeats = int(os.environ.get("BENCH_REPEATS", "1"))
-        measure_bucket = os.environ.get("BENCH_BUCKET") == "1"
         build_repeats = os.environ.get("BENCH_BUILD_REPEATS")
         print(json.dumps(fulltext_bench(
             cpus, n_docs, n_queries, vocab, repeats,
-            measure_bucket=measure_bucket,
             warmup_build=os.environ.get("BENCH_WARMUP_BUILD", "1") == "1",
             build_repeats=int(build_repeats) if build_repeats else None,
         )))
@@ -761,9 +714,6 @@ def main():
         med["membw_gbps"] = [bw0, _membw_probe_gbps()]
         return med
 
-    # bucket-path comparison is OPT-IN (r3 had it default-on; the merge +
-    # six timed runs it adds were a main reason the driver timeout hit)
-    os.environ["BENCH_BUCKET"] = os.environ.get("BENCH_BUCKET", "0")
     # single pass here; a budget-gated second sample runs AFTER the scaling
     # section (storm defense without delaying the first quad round)
     t_ft0 = time.monotonic()
@@ -771,7 +721,6 @@ def main():
         run_level(cpus, repeats=int(os.environ.get("BENCH_REPEATS", "1")))
     ]
     ft_cost = time.monotonic() - t_ft0
-    os.environ["BENCH_BUCKET"] = "0"  # scaling levels: identical jobs only
 
     def publish_fulltext() -> None:
         ft = _fresh_best(ft_samples)
@@ -1252,7 +1201,8 @@ def _iso_best(samples: list[dict]) -> dict:
 
 def _best_of_history(samples: list[dict]) -> dict:
     """Append this run's level samples to BENCH/history.jsonl and return the
-    best throughput observed for (cpus, n_docs, n_queries) across history.
+    best throughput observed for the same level (``_history_key``) across
+    history.
     Entries tagged ``"seeded": true`` (hand-recorded controlled/quiet-window
     measurements) are kept in the file for provenance but EXCLUDED here —
     the best-per-level table reports uncontrolled harness runs only
@@ -1277,8 +1227,7 @@ def _best_of_history(samples: list[dict]) -> dict:
             continue
         if r.get("seeded") or r.get("foreign_load"):
             continue
-        if (r.get("cpus"), r.get("n_docs"), r.get("n_queries"),
-                r.get("build_layout"), r.get("n_conc")) != key:
+        if _history_key(r) != key:
             continue
         if r["build_docs_per_sec"] > best["build_docs_per_sec"]:
             best["build_docs_per_sec"] = r["build_docs_per_sec"]

@@ -77,7 +77,6 @@ def append_to_index(
     *,
     n_groups: int = 8,
     n_docs: int | None = None,
-    encoder: str | None = None,
     input_layout: str = "shuffle",
 ) -> dict:
     """Append new documents to a committed 'raw'-scheme index; returns the
@@ -134,7 +133,6 @@ def append_to_index(
         shard_size=shard_size,
         n_groups=int(n_groups),
         input_layout=input_layout,
-        encoder=encoder or "arrow",
         weight_scheme="raw",
         # match the base index's backend: rename-committed delta groups
         # beside pointer-committed ones would be invisible to readers

@@ -91,7 +91,8 @@ def decode_doc_blocks(
     """Bulk-decode MANY delta+varint posting blocks in one vectorized pass:
     all blocks' varints are decoded from one concatenated buffer, then
     absolute docIDs are restored with a cross-block cumsum-rebase (the first
-    delta of every block is 0 by construction, index_build._encode_partition).
+    delta of every block is 0 by construction,
+    index_build._encode_sorted_cols_factory).
 
     delta_bufs: iterable of per-block varint byte strings;
     ns: per-block posting counts (int64); first_docs: per-block first docID.

@@ -21,9 +21,10 @@ bounded by ``SIMILARIPY_TOMBSTONE_CAP`` (default 4M ids ≈ 32 MB). Above
 the cap, queries refuse with instructions to ``compact_index`` (which
 folds ANY number of tombstones into a rewrite and resets the count to
 zero). Deletion fractions beyond a few percent should compact anyway —
-dead postings still burn scan bandwidth on every query. The bucket path's
-bound-then-refine θ guarantee is discounted by the tombstone count
-(term_stats df still counts deleted docs — wand.essential_split).
+dead postings still burn scan bandwidth on every query. Block and term
+score bounds still include deleted docs, so they stay valid upper bounds
+for the survivors (wand._ShardIndex); pruning is merely looser until a
+compact.
 
 The reference has no deletion concept at all (rebuild-per-call CSR);
 extension surface, same category as append.py.

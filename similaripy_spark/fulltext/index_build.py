@@ -47,10 +47,7 @@ import os
 import sys
 import time
 import uuid
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -102,87 +99,13 @@ SEGMENT_SCHEMA = T.StructType(
 )
 
 
-def _encode_partition_arrow(batches, block_size: int, bounds_fn=None):
-    """Arrow-native encoder: one partition = whole (shard, term) groups,
-    sorted by (shard, term, doc_id); groups may span record batches → carry
-    the tail group. Numeric columns come out of Arrow zero-copy and term
-    strings NEVER materialize as Python objects — change detection runs on
-    per-iteration dictionary codes, per-block terms via Arrow take. Same
-    bytes as the pandas encoder (parity-pinned); removes the 40M-row
-    arrow→pandas object conversion that dominated the encode stage's DRAM
-    traffic (the resource concurrent workers contend on)."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    carry: dict | None = None  # columns of the held-back tail group
-    encode_cols = _encode_sorted_cols_factory(block_size, bounds_fn)
-
-    def cols_of(b):
-        idx = {name: b.schema.get_field_index(name)
-               for name in ("shard", "term", "doc_id", "tf", "weight")}
-        return {
-            "shard": b.column(idx["shard"]).to_numpy(
-                zero_copy_only=False).astype(np.int32),
-            "term": b.column(idx["term"]),
-            "doc": b.column(idx["doc_id"]).to_numpy(zero_copy_only=False),
-            "tf": b.column(idx["tf"]).to_numpy(
-                zero_copy_only=False).astype(np.int64),
-            "w32": b.column(idx["weight"]).to_numpy(
-                zero_copy_only=False).astype(np.float32),
-        }
-
-    for b in batches:
-        if b.num_rows == 0:
-            continue
-        c = cols_of(b)
-        if carry is not None:
-            c = {
-                "shard": np.concatenate([carry["shard"], c["shard"]]),
-                "term": pa.concat_arrays(
-                    [carry["term"].combine_chunks()
-                     if isinstance(carry["term"], pa.ChunkedArray)
-                     else carry["term"],
-                     c["term"].combine_chunks()
-                     if isinstance(c["term"], pa.ChunkedArray)
-                     else c["term"]]
-                ),
-                "doc": np.concatenate([carry["doc"], c["doc"]]),
-                "tf": np.concatenate([carry["tf"], c["tf"]]),
-                "w32": np.concatenate([carry["w32"], c["w32"]]),
-            }
-        n = len(c["doc"])
-        # hold back the final (shard, term) group — it may continue in the
-        # next batch. The tail is a suffix because input is sorted.
-        last_shard = c["shard"][-1]
-        same_shard = c["shard"] == last_shard
-        last_term = c["term"][n - 1]
-        same_term = pc.equal(c["term"], last_term).to_numpy(
-            zero_copy_only=False
-        )
-        tail_len = int((same_shard & same_term)[::-1].argmin()) or n
-        tail_start = n - tail_len
-        carry = {k: (v.slice(tail_start) if k == "term" else v[tail_start:])
-                 for k, v in c.items()}
-        if tail_start:
-            yield encode_cols(
-                c["shard"][:tail_start],
-                c["term"].slice(0, tail_start),
-                c["doc"][:tail_start],
-                c["tf"][:tail_start],
-                c["w32"][:tail_start],
-            )
-    if carry is not None and len(carry["doc"]):
-        yield encode_cols(carry["shard"], carry["term"], carry["doc"],
-                          carry["tf"], carry["w32"])
-
-
 def _encode_partition_arrow_unsorted(batches, block_size: int,
                                      bounds_fn=None):
-    """Arrow encoder over UNSORTED partitions: buffer the partition,
-    dictionary-encode terms, one ``np.lexsort`` by (shard, term-code,
-    doc_id), then the same block encoder as the sorted path.
+    """The block encoder. Arrow over UNSORTED partitions: buffer the
+    partition, dictionary-encode terms, one ``np.lexsort`` by (shard,
+    term-code, doc_id), then encode each (shard, term) group into blocks.
 
-    Why: the JVM ``sortWithinPartitions`` the streaming encoder needs is
+    Why: a JVM ``sortWithinPartitions`` before a streaming encoder was
     the segment job's dominant reduce-side CPU (measured 300k docs,
     local[8]: 106 s executor CPU in the sort+encode stage, ~2/3 of it the
     row sort + row-format traffic). An int lexsort over dictionary codes
@@ -200,9 +123,8 @@ def _encode_partition_arrow_unsorted(batches, block_size: int,
     the ALIGNED path there is no exchange, so the buffered size is the
     INPUT partition — bounded only by the caller's corpus layout (one
     parquet split of complete shards). An aligned corpus with unusually
-    fat input splits should either be re-split at the source or built
-    with ``encoder='arrow_stream'``, which streams over a JVM
-    partition-local sort in bounded memory."""
+    fat input splits should be re-split at the source, or built with the
+    default ``input_layout='shuffle'``."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -246,8 +168,8 @@ def _encode_partition_arrow_unsorted(batches, block_size: int,
 
 
 def _encode_sorted_cols_factory(block_size: int, bounds_fn=None):
-    """The (shard,term)-grouped column → block-rows encoder, shared by the
-    streaming (pre-sorted) and lexsort encoders.
+    """The (shard,term)-grouped column → block-rows encoder of
+    ``_encode_partition_arrow_unsorted``.
 
     ``bounds_fn(tfs, w32) -> float32 scores``: when given, per-block
     max_score/min_score bounds are computed over ITS output instead of the
@@ -311,94 +233,6 @@ def _encode_sorted_cols_factory(block_size: int, bounds_fn=None):
     return encode_cols
 
 
-def _encode_partition(
-    batches: Iterator[pd.DataFrame], block_size: int, bounds_fn=None
-) -> Iterator[pd.DataFrame]:
-    """One partition = whole shards, sorted by (shard, term, doc_id).
-    Groups may span Arrow batches → carry the tail group over.
-    (pandas twin of _encode_partition_arrow, kept for parity testing)"""
-    carry: pd.DataFrame | None = None
-
-    def encode(pdf: pd.DataFrame) -> pd.DataFrame:
-        """Vectorized block builder: per-block metadata via ``reduceat``,
-        varints for the WHOLE partition in one encode pass, per-block bytes
-        as offset slices — the only Python loop is the final cheap
-        bytes-slicing over blocks (≈1 µs each)."""
-        terms = pdf["term"].to_numpy()
-        shards = pdf["shard"].to_numpy(np.int32)
-        docs = pdf["doc_id"].to_numpy(np.int64)
-        tfs = pdf["tf"].to_numpy(np.int64)
-        w32 = pdf["weight"].to_numpy(np.float64).astype(np.float32)
-        n = len(pdf)
-        # group boundaries on (shard, term)
-        change = np.empty(n, dtype=bool)
-        change[0] = True
-        change[1:] = (terms[1:] != terms[:-1]) | (shards[1:] != shards[:-1])
-        gstart_idx = np.flatnonzero(change)
-        pos_in_group = np.arange(n) - np.repeat(
-            gstart_idx, np.diff(np.append(gstart_idx, n))
-        )
-        bstart = change | (pos_in_group % block_size == 0)
-        block_starts = np.flatnonzero(bstart)
-        block_ends = np.append(block_starts[1:], n)
-        block_n = block_ends - block_starts
-        block_id = (pos_in_group[block_starts] // block_size).astype(np.int32)
-        first_doc = docs[block_starts]
-        max_doc = docs[block_ends - 1]
-        bscore = w32 if bounds_fn is None else bounds_fn(tfs, w32)
-        max_score = np.maximum.reduceat(bscore, block_starts)
-        min_score = np.minimum.reduceat(bscore, block_starts)
-        # deltas with reset-to-0 at every block start
-        deltas = np.empty(n, dtype=np.int64)
-        deltas[0] = 0
-        np.subtract(docs[1:], docs[:-1], out=deltas[1:])
-        deltas[block_starts] = 0
-        dbuf, dlens = codec.encode_varints_with_lens(deltas.astype(np.uint64))
-        doff = np.zeros(n + 1, dtype=np.int64)
-        np.cumsum(dlens, out=doff[1:])
-        tbuf, tlens = codec.encode_varints_with_lens(tfs.astype(np.uint64))
-        toff = np.zeros(n + 1, dtype=np.int64)
-        np.cumsum(tlens, out=toff[1:])
-        wbuf = w32.tobytes()
-
-        dd = [dbuf[doff[s]:doff[e]] for s, e in zip(block_starts, block_ends)]
-        tt = [tbuf[toff[s]:toff[e]] for s, e in zip(block_starts, block_ends)]
-        ww = [wbuf[4 * s:4 * e] for s, e in zip(block_starts, block_ends)]
-        return pd.DataFrame(
-            {
-                "shard": shards[block_starts],
-                "term": terms[block_starts],
-                "block_id": block_id,
-                "n": block_n.astype(np.int32),
-                "first_doc": first_doc,
-                "max_doc": max_doc,
-                "max_score": max_score,
-                "min_score": min_score,
-                "doc_deltas": dd,
-                "tfs": tt,
-                "weights": ww,
-            }
-        )
-
-    for b in batches:
-        if len(b) == 0:
-            continue
-        if carry is not None:
-            b = pd.concat([carry, b], ignore_index=True)
-        # hold back the final (shard, term) group — it may continue
-        last_term = b["term"].iloc[-1]
-        last_shard = b["shard"].iloc[-1]
-        tail_mask = (b["term"] == last_term) & (b["shard"] == last_shard)
-        # the mask is a suffix because input is sorted by (shard, term)
-        tail_start = len(b) - int(tail_mask.sum())
-        carry = b.iloc[tail_start:].copy()
-        head = b.iloc[:tail_start]
-        if len(head):
-            yield encode(head)
-    if carry is not None and len(carry):
-        yield encode(carry)
-
-
 class IndexBuilder:
     """Builds (and resumes) a doc-sharded BM25 index on disk.
 
@@ -421,7 +255,6 @@ class IndexBuilder:
         lang: str | None = None,
         commit: CommitProtocol | None = None,
         input_layout: str = "shuffle",
-        encoder: str = "arrow",
         weight_scheme: str = "raw",
     ):
         if input_layout not in ("shuffle", "aligned"):
@@ -444,24 +277,13 @@ class IndexBuilder:
         self.shard_size = shard_size
         self.n_groups = n_groups
         self.lang = lang
-        #: block encoder: 'arrow' (default — groups its own partition via
-        #: one dictionary-code lexsort, no JVM row sort in the plan),
-        #: 'arrow_stream' (streams over a JVM-presorted partition: bounded
-        #: kernel memory for unusually fat shards), or 'pandas' (parity
-        #: twin). All three commit identical blocks.
-        if encoder not in ("arrow", "arrow_stream", "pandas"):
-            raise ValueError(
-                "encoder must be 'arrow', 'arrow_stream' or 'pandas', "
-                f"got {encoder!r}"
-            )
-        self.encoder = encoder
         #: 'shuffle' (default): one global exchange physically forms the
         #: posting lists — correct for ANY input partitioning. 'aligned':
         #: the input already co-locates complete shards per partition (a
         #: crawl table stored with Iceberg bucket/range partitioning on the
         #: doc id, or generate_pages(align_to=shard_size)) — the build then
         #: runs WITHOUT any wide exchange of the postings stream: map-side
-        #: postings → weighting → sortWithinPartitions → encode. A violated
+        #: postings → weighting → in-kernel lexsort + encode. A violated
         #: layout contract is caught at commit time by the duplicate-block
         #: check, failing the build instead of silently corrupting posting
         #: lists.
@@ -796,8 +618,8 @@ class IndexBuilder:
         return meta
 
     def _segment_plan(self, weighted: DataFrame, n_shards_in: int):
-        """repartition(shard, term-salt) → Arrow block encode (the default
-        encoder lexsorts its partition in-kernel; see encoder options).
+        """repartition(shard, term-salt) → Arrow block encode (the encoder
+        lexsorts its partition in-kernel: no JVM row sort in the plan).
 
         Partition count: ≥1 per shard and ≥4× the core count. The term salt
         splits each shard into 4 sub-keys, so even n_parts == n_shards hash
@@ -822,13 +644,6 @@ class IndexBuilder:
             F.col("weight").cast("float").alias("weight"),
         )
 
-        # the default 'arrow' encoder groups its partition itself (one
-        # numpy lexsort over dictionary codes) — no JVM row sort in the
-        # plan. 'arrow_stream'/'pandas' stream over pre-sorted input and
-        # keep the partition-local JVM sort (bounded memory for unusually
-        # fat shards; also the parity twins).
-        needs_sort = self.encoder in ("pandas", "arrow_stream")
-
         # 'raw' scheme: blocks store dl in the weights column; the block
         # score bounds are computed over the derived tf-part at the index's
         # pinned bounds_avgdl (meta.json) — valid for any later corpus
@@ -845,20 +660,10 @@ class IndexBuilder:
             )
 
         def encode(df):
-            if needs_sort:
-                df = df.sortWithinPartitions("shard", "term", "doc_id")
-            if self.encoder == "pandas":
-                return df.mapInPandas(
-                    lambda it, bs=bs, bf=bfn: _encode_partition(it, bs, bf),
-                    schema=SEGMENT_SCHEMA,
-                )
-            kernel = (
-                _encode_partition_arrow
-                if self.encoder == "arrow_stream"
-                else _encode_partition_arrow_unsorted
-            )
             return df.mapInArrow(
-                lambda it, bs=bs, k=kernel, bf=bfn: k(it, bs, bf),
+                lambda it, bs=bs, bf=bfn: _encode_partition_arrow_unsorted(
+                    it, bs, bf
+                ),
                 schema=SEGMENT_SCHEMA,
             )
 

@@ -2,7 +2,7 @@
 
 The naive plan (explode tokens → groupBy(doc, term)) shuffles every token.
 Because a document's tokens arrive together in its own row, per-doc term
-counts are a MAP-SIDE computation: one Arrow-vectorized ``mapInPandas`` stage
+counts are a MAP-SIDE computation: one Arrow-vectorized ``mapInArrow`` stage
 emits ``(doc_id, term, tf, dl)`` with zero shuffles — ``np.unique`` over
 (doc-index, token) pairs does the counting for a whole Arrow batch at once,
 no per-row Python.
@@ -19,10 +19,7 @@ tests assert both produce identical postings.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -44,68 +41,30 @@ POSTINGS_SCHEMA = T.StructType(
 )
 
 
-def build_postings(
-    pages: DataFrame, lang: str | None = None, engine: str = "arrow"
-) -> DataFrame:
+def build_postings(pages: DataFrame, lang: str | None = None) -> DataFrame:
     """Map-side postings: (doc_id, term, tf, dl) — no shuffle.
 
-    ``engine='arrow'`` (default) runs the whole tokenize+count inside Arrow
-    buffers via ``mapInArrow`` + ``pyarrow.compute``: lower/split/filter on
-    Arrow string kernels, tokens dictionary-encoded to int32 codes, then one
-    int64 ``np.unique`` — per-token work is integer ops on contiguous
-    buffers, never Python string objects. That matters twice at scale: ~3.7×
-    faster single-threaded than the pandas path (measured, 1.3M tokens) and
-    far less DRAM traffic, which is the resource concurrent tokenize workers
-    actually contend on (profiled: the pandas path stops scaling at ~2
-    workers per socket on this box). ``engine='pandas'`` keeps the original
-    pandas-kernel path for parity testing."""
+    The whole tokenize+count runs inside Arrow buffers via ``mapInArrow``
+    + ``pyarrow.compute``: lower/split/filter on Arrow string kernels,
+    tokens dictionary-encoded to int32 codes, then one int64 ``np.unique``
+    — per-token work is integer ops on contiguous buffers, never Python
+    string objects. That matters twice at scale: ~3.7× faster
+    single-threaded than a pandas kernel (measured, 1.3M tokens) and far
+    less DRAM traffic, which is the resource concurrent tokenize workers
+    actually contend on (profiled: the pandas kernel stops scaling at ~2
+    workers per socket)."""
     if lang is not None:
         pages = pages.filter(F.col("lang") == lang)
-    src = pages.select("doc_id", "text")
-    if engine == "arrow":
-        return src.mapInArrow(_count_terms_arrow, schema=POSTINGS_SCHEMA)
-    if engine != "pandas":
-        raise ValueError(f"engine must be 'arrow' or 'pandas', got {engine!r}")
-
-    def count_terms(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            if len(b) == 0:
-                continue
-            toks = (
-                b["text"].fillna("").str.lower()
-                .str.split(TOKEN_SPLIT_RE, regex=True)
-            )
-            lens = toks.map(len).to_numpy(np.int64)
-            flat = np.concatenate(toks.to_numpy()) if len(toks) else np.array([], dtype=object)
-            doc_idx = np.repeat(np.arange(len(b), dtype=np.int64), lens)
-            keep = flat != ""
-            flat, doc_idx = flat[keep], doc_idx[keep]
-            # dl per doc = number of real tokens
-            dl = np.bincount(doc_idx, minlength=len(b)).astype(np.int64)
-            # unique (doc, term) pairs with counts — factorize tokens to int
-            # codes (C-speed hash table), then one int64 np.unique pass
-            codes, uniques = pd.factorize(pd.Series(flat), sort=False)
-            key = doc_idx * np.int64(len(uniques)) + codes
-            ukey, counts = np.unique(key, return_counts=True)
-            u_doc = ukey // len(uniques)
-            u_code = ukey % len(uniques)
-            doc_ids = b["doc_id"].to_numpy(np.int64)
-            yield pd.DataFrame(
-                {
-                    "doc_id": doc_ids[u_doc],
-                    "term": uniques.take(u_code),
-                    "tf": counts.astype(np.int32),
-                    "dl": dl[u_doc],
-                }
-            )
-
-    return src.mapInPandas(count_terms, schema=POSTINGS_SCHEMA)
+    return pages.select("doc_id", "text").mapInArrow(
+        _count_terms_arrow, schema=POSTINGS_SCHEMA
+    )
 
 
 def _count_terms_arrow(batches):
     """Arrow-native tokenize+count kernel (see build_postings docstring).
-    Identical output rows to the pandas kernel; within-partition row order
-    may differ (downstream sorts/aggregates are order-insensitive)."""
+    Same rows as the pandas reference kernel in the tests; within-partition
+    row order may differ (downstream sorts/aggregates are
+    order-insensitive)."""
     import pyarrow as pa
     import pyarrow.compute as pc
 

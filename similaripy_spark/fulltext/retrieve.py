@@ -1,7 +1,7 @@
 """Unified query front-end: ONE entry point, physical path chosen for you.
 
-The engine has three exact top-k strategies (wand.py), each best in a
-different regime — exactly like the reference exposes one ``dot_product``
+The engine has two exact top-k paths (wand.py), each best in a different
+regime — exactly like the reference exposes one ``dot_product``
 call while s_plus.h picks blocked vs single-pass accumulation internally
 (s_plus.pyx:217-225):
 
@@ -13,10 +13,8 @@ call while s_plus.h picks blocked vs single-pass accumulation internally
 * ``segment_topk``    — everything else: replicate the batch to every doc
   shard, one vectorized dense-accumulator pass per shard. Measured on the
   50k-doc Zipf corpus (local[8], cached index) it dominates at every batch
-  size ≥ 50 (1.5-2.0 s flat where the bucket path takes 3.8-36.6 s).
-* ``bucket_topk``     — per-term-bucket cogroups; NOT auto-routed (measured
-  slower than both, see its docstring) but available via ``path='bucket'``
-  for the cold-selective-mid-size niche its layout serves.
+  size ≥ 50 (1.5-2.0 s flat; a per-term-bucket cogroup path over the
+  merged layout took 3.8-36.6 s and was removed).
 
 ``topk(spark, index_dir, queries)`` routes on the query-batch size and the
 index's own metadata (``meta.json`` for the shard list — no per-call
@@ -36,7 +34,6 @@ from pyspark.sql import functions as F
 
 from similaripy_spark.fulltext.index_build import read_meta, read_segments
 from similaripy_spark.fulltext.wand import (
-    bucket_topk,
     segment_topk,
     segments_with_idf,
     term_major_topk,
@@ -54,9 +51,7 @@ def route(
     has_merged: bool,
     point_cutoff: int = POINT_CUTOFF,
 ) -> str:
-    """'term_major' | 'segment' (pure function — unit-tested). The bucket
-    path is deliberately not auto-chosen: measured slower than both
-    neighbors on the Zipf corpus at every batch size tried (wand.py)."""
+    """'term_major' | 'segment' (pure function — unit-tested)."""
     if has_merged and n_queries <= point_cutoff:
         return "term_major"
     return "segment"
@@ -88,11 +83,11 @@ class IndexHandle:
     * ``meta.json`` read (shard count, weight scheme) — a driver-side file
       read, so no per-call shard-discovery job;
     * the merged-layout probe for term-major routing;
-    * for FACTORED indexes, the per-term ``idf`` join onto the segment
-      relation (``segments_with_idf`` — measured +30% wall per 10k-query
-      batch when paid per call instead), with the annotated segments
-      persisted (``cache=True``) so repeated batches read memory, not
-      parquet.
+    * for RAW (the default build) and FACTORED indexes, the per-term
+      ``idf`` join onto the segment relation (``segments_with_idf`` —
+      measured +30% wall per 10k-query batch when paid per call instead),
+      with the annotated segments persisted (``cache=True``) so repeated
+      batches read memory, not parquet.
 
     Every ``.topk()`` batch then reuses the loaded state. Constructing the
     handle runs NO Spark job (reads are lazy; persist is lazy) — call
@@ -156,8 +151,8 @@ class IndexHandle:
         routes there.
 
         ``mode='and'`` returns only docs containing every query term
-        (posting-list intersection — served by both the segment sweep and
-        the term-major point path; the bucket path raises); default
+        (served by both the segment sweep and the term-major point path's
+        posting-list intersection); default
         ``'or'`` is the BM25 union ranking. ``min_match=m`` (quorum,
         mode='or' only) keeps docs matching at least m distinct query
         terms — served by the segment batch scorer's match-count grid, so
@@ -165,8 +160,8 @@ class IndexHandle:
         ``queries`` (Lucene MUST_NOT) excludes docs containing any of
         those terms from that query's ranking — also segment-routed.
 
-        ``path`` forces 'segment' | 'bucket' | 'term_major' (parity
-        testing / expert override). Weighted queries (``weights`` column)
+        ``path`` forces 'segment' | 'term_major' (parity testing / expert
+        override). Weighted queries (``weights`` column)
         are only supported by the batch scorer, so they always route to
         'segment'. Routing counts the query batch — one action over the
         (small) query side only; pass ``path`` to skip even that.
@@ -174,9 +169,8 @@ class IndexHandle:
         queries = _ensure_terms(queries)
         if mode not in ("or", "and"):
             raise ValueError(f"mode must be 'or' or 'and', got {mode!r}")
-        if mode == "and" and path == "bucket":
-            raise ValueError("mode='and' is served by the segment and "
-                             "term_major paths, not 'bucket'")
+        if path not in (None, "segment", "term_major"):
+            raise ValueError(f"unknown path {path!r}")
         if min_match is not None and path not in (None, "segment"):
             raise ValueError(
                 "min_match is served by the segment batch scorer; "
@@ -220,13 +214,9 @@ class IndexHandle:
                 min_match=min_match,
                 dv_filter=filter,
             )
-        if path == "term_major":
-            return term_major_topk(
-                self.spark, self.index_dir, queries, k=k, mode=mode
-            )
-        if path == "bucket":
-            return bucket_topk(self.spark, self.index_dir, queries, k=k)
-        raise ValueError(f"unknown path {path!r}")
+        return term_major_topk(
+            self.spark, self.index_dir, queries, k=k, mode=mode
+        )
 
     def search(self, q: str, k: int = 10, query_id: int = 0) -> DataFrame:
         """One query STRING through the Lucene-flavored grammar

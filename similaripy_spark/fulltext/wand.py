@@ -9,28 +9,31 @@ Distributed shape:
 * **Local top-k, global merge**: each shard emits its local top-k per query
   (global top-k ⊆ union of shard top-k); a windowed top-k merges them.
 
-Three exact scorers, chosen by workload:
+Two query paths, each with its own exact scorer (``retrieve.route`` picks
+the path):
 
-* ``_score_batch`` (default for batches): a dense sparse-accumulator — the
-  distributed twin of the reference's SPA (s_plus.h:71-240) — scatter-adds
-  every (query, term)'s posting weights into a (chunk × shard-span) grid via
-  one ``np.bincount``. The chunk is sized so all concurrent workers' grids
-  stay L3-resident: the same kernel with a 25 MB grid is DRAM-bound and
-  stops scaling past ~8 cores (measured; see BENCH/BASELINE.md).
-* ``_score_maxscore`` (point queries / term-major path): Block-Max MaxScore
-  (Turtle & Flood 1995; block-max variant after Ding & Suel, SIGIR 2011) —
-  terms in descending max-weight order; once the k-th-best lower bound θ
-  exceeds any unseen doc's best possible score (block max_score + suffix of
-  term maxima), hot-term blocks are skipped for new candidates and only
-  probed by binary search for existing ones. BM25 idf is unclamped
-  (reference semantics) so weights can be NEGATIVE; bounds use positive-part
-  maxima and negative-part minima to stay exact.
-* ``_score_exhaustive``: the oracle-grade union-accumulate.
+* ``_score_batch`` (``segment_topk``, batches): a dense sparse-accumulator —
+  the distributed twin of the reference's SPA (s_plus.h:71-240) —
+  scatter-adds every (query, term)'s posting weights into a (chunk ×
+  shard-span) grid via one ``np.bincount``. The chunk is sized so all
+  concurrent workers' grids stay L3-resident: the same kernel with a 25 MB
+  grid is DRAM-bound and stops scaling past ~8 cores (measured; see
+  BENCH/BASELINE.md).
+* ``_score_maxscore`` (``term_major_topk``, point queries): Block-Max
+  MaxScore (Turtle & Flood 1995; block-max variant after Ding & Suel,
+  SIGIR 2011) — terms in descending max-weight order; once the k-th-best
+  lower bound θ exceeds any unseen doc's best possible score (block
+  max_score + suffix of term maxima), hot-term blocks are skipped for new
+  candidates and only probed by binary search for existing ones. BM25 idf
+  is unclamped (reference semantics) so weights can be NEGATIVE; bounds use
+  positive-part maxima and negative-part minima to stay exact. AND queries
+  on this path run ``_score_intersect`` instead.
 
-All three are rank-identical (randomized adversarial parity tests, hot-term
-and negative-weight regimes included). Scoring accumulates float32 stored
-weights in float64, matching the relational SQL path within 1e-6 relative
-(tests pin rtol 1e-4, the reference's own tolerance:
+``_score_exhaustive`` is the oracle-grade union-accumulate the scorers are
+tested against. All are rank-identical (randomized adversarial parity
+tests, hot-term and negative-weight regimes included). Scoring accumulates
+float32 stored weights in float64, matching the relational SQL path within
+1e-6 relative (tests pin rtol 1e-4, the reference's own tolerance:
 tests/test_similarity.py:293-294).
 """
 
@@ -73,7 +76,7 @@ class _ShardIndex:
     the stored tf-part is strictly positive, so a negative idf (unclamped
     reference semantics, df > N/2) flips each bound to the opposite
     extreme: effective max = idf × stored_min, effective min = idf ×
-    stored_max. All three scorers then run unchanged and stay exact.
+    stored_max. Every scorer then runs unchanged and stays exact.
 
     ``raw``: params dict for RAW indexes (meta.json weight_scheme='raw' —
     blocks store dl in the weights column and tf in every block): decode
@@ -91,7 +94,7 @@ class _ShardIndex:
     ``tomb``: SORTED int64 array of tombstoned doc_ids (delete.py).
     Deleted docs are dropped AT DECODE TIME — the single choke point every
     scorer reads through — so they can never enter a candidate set, inflate
-    the MaxScore/BMW θ, crowd a local top-k, or match an AND intersection.
+    the MaxScore θ, crowd a local top-k, or match an AND intersection.
     Stored block/term bounds still include deleted docs' scores: they
     remain valid (superset) upper bounds for the survivors, so pruning
     stays exact, merely a little looser until delete.compact_index.
@@ -297,7 +300,8 @@ class _ShardIndex:
 
 
 def _score_exhaustive(idx: _ShardIndex, terms) -> tuple[np.ndarray, np.ndarray]:
-    """Union-accumulate all postings of all terms (always exact)."""
+    """Union-accumulate all postings of all terms (always exact): the
+    oracle the pruning scorers are tested against."""
     d_parts, w_parts = [], []
     for t in terms:
         if t in idx._groups:
@@ -398,129 +402,6 @@ def _score_maxscore(idx: _ShardIndex, terms, k: int):
                     acc_docs = acc_docs2[order]
                     acc_scores = acc_scores2[order]
     return acc_docs, acc_scores
-
-
-def _score_bmw(idx: _ShardIndex, terms, k: int):
-    """Block-Max WAND (Ding & Suel 2011) re-shaped for a vectorized batch
-    kernel: pivot-and-skip realized as BEST-FIRST scoring of doc-range
-    segments under block-max upper bounds.
-
-    Classic BMW walks doc-at-a-time, sorts term pointers, picks the pivot
-    where the running block-max sum first reaches θ, and skips to it — an
-    inherently sequential pointer dance that is pathological in Python.
-    The same skipping decision can be made for WHOLE doc ranges at once:
-
-    1. cut doc space at every block boundary of the query's terms → a
-       piecewise-constant upper bound UB(range) = Σ max(block_max, 0) over
-       covering blocks (one np.add.at sweep over all blocks);
-    2. visit segments in DESCENDING UB order, chunk at a time; a chunk
-       decodes only the blocks overlapping its segments (block_mask) and
-       exactly scores the docs inside them (every block containing such a
-       doc overlaps the doc's segment, so scores are complete);
-    3. θ = exact k-th best score so far; stop as soon as the next
-       segment's UB < θ. Every unvisited doc has score ≤ its segment's
-       UB < θ — exactly BMW's skip invariant, applied range-wise.
-
-    Exact for negative idf too (unclamped reference semantics): block
-    bounds arrive idf-adjusted from term_meta, and a block whose effective
-    max is negative contributes 0 to UB (a doc need not contain the term).
-
-    MEASURED VERDICT (100k-doc Zipf corpus, ~4.5-term queries, k=10,
-    kernel-only, 200 queries, best-of-2, after tuning chunk size 64→16k
-    and adding full-decode memoization for hot terms): BMW 5.09 s vs
-    MaxScore 3.27 s — a ~1.5× LOSS, so Block-Max MaxScore stays the point
-    path's default (same precedent as the bucket-pruning negative result).
-    Why it loses HERE: the reference's unclamped idf makes hot terms'
-    weights NEGATIVE, so their blocks contribute 0 to every upper bound
-    yet must still be decoded for the exact score of any doc in a visited
-    segment — segment-wise skipping cannot avoid the most expensive lists,
-    while term-at-a-time MaxScore touches them once, in a single
-    vectorized membership probe over the candidate set. On a
-    positive-weight corpus (clamped idf / rare-term queries) the
-    best-first order would skip far more; the kernel stays available as
-    ``scorer='bmw'`` in term_major_topk. Rank/score identity vs MaxScore
-    and the exhaustive scan is pinned in tests (incl. negative-idf
-    factored indexes).
-    """
-    metas = []
-    for t in dict.fromkeys(terms):
-        m = idx.term_meta(t)
-        if m is not None:
-            metas.append((t, m))
-    if not metas:
-        return np.zeros(0, np.int64), np.zeros(0, np.float64)
-    firsts = np.concatenate([m[2] for _, m in metas])
-    maxds = np.concatenate([m[3] for _, m in metas])
-    ubs = np.concatenate([np.maximum(m[4], 0.0) for _, m in metas])
-    # segment boundaries: every block start and one-past-every-block-end
-    bounds = np.unique(np.concatenate([firsts, maxds + 1]))
-    delta = np.zeros(len(bounds) + 1, np.float64)
-    np.add.at(delta, np.searchsorted(bounds, firsts), ubs)
-    np.add.at(delta, np.searchsorted(bounds, maxds + 1), -ubs)
-    ub_seg = np.cumsum(delta[:-1])[:-1]  # UB of [bounds[i], bounds[i+1])
-    n_seg = len(ub_seg)
-    if n_seg == 0:
-        return np.zeros(0, np.int64), np.zeros(0, np.float64)
-    order = np.argsort(-ub_seg, kind="stable")
-    # per-term segment-index span of each block (for overlap tests)
-    blk_lo = {t: np.searchsorted(bounds, m[2], side="right") - 1
-              for t, m in metas}
-    blk_hi = {t: np.searchsorted(bounds, m[3], side="right") - 1
-              for t, m in metas}
-
-    acc_docs = np.zeros(0, np.int64)
-    acc_scores = np.zeros(0, np.float64)
-    theta = -np.inf
-    pos = 0
-    chunk = max(16 * k, 1024)
-    while pos < n_seg:
-        if len(acc_docs) >= k and ub_seg[order[pos]] < theta:
-            break  # every remaining segment's UB < θ: BMW skip, exact
-        take = order[pos:pos + chunk]
-        if len(acc_docs) >= k:
-            take = take[ub_seg[take] >= theta]
-            if len(take) == 0:
-                break
-        pos += chunk
-        sel = np.zeros(n_seg + 1, np.int64)
-        sel[take] = 1
-        csel = np.concatenate(([0], np.cumsum(sel)))
-        d_parts, w_parts = [], []
-        for t, _m in metas:
-            lo, hi = blk_lo[t], blk_hi[t]
-            # block needed iff any selected segment index in [lo, hi]
-            need = (csel[hi + 1] - csel[lo]) > 0
-            n_need = int(need.sum())
-            if n_need == 0:
-                continue
-            # hot terms overlap almost every chunk: the memoized full-term
-            # decode (paid once, reused every chunk) beats re-decoding the
-            # same blocks chunk after chunk once a fair share is needed
-            if n_need >= max(2, len(need) // 4):
-                d, w = idx.decode_blocks(t)
-            else:
-                d, w = idx.decode_blocks(t, block_mask=need)
-            # keep only docs inside the chunk's segments (a decoded block
-            # may span unselected segments; those docs score later or never)
-            seg_of = np.searchsorted(bounds, d, side="right") - 1
-            inside = sel[seg_of] == 1
-            d_parts.append(d[inside])
-            w_parts.append(w[inside])
-        if d_parts:
-            docs = np.concatenate(d_parts)
-            ws = np.concatenate(w_parts)
-            if len(docs):
-                udocs, inv = np.unique(docs, return_inverse=True)
-                scores = np.bincount(inv, weights=ws, minlength=len(udocs))
-                # segments are disjoint and visited once: no doc repeats
-                acc_docs = np.concatenate([acc_docs, udocs])
-                acc_scores = np.concatenate([acc_scores, scores])
-        if len(acc_docs) >= k:
-            theta = np.partition(acc_scores, len(acc_scores) - k)[
-                len(acc_scores) - k
-            ]
-    order_out = np.argsort(acc_docs, kind="stable")
-    return acc_docs[order_out], acc_scores[order_out]
 
 
 def _score_intersect(idx: _ShardIndex, terms) -> tuple[np.ndarray, np.ndarray]:
@@ -687,13 +568,14 @@ def _index_idf_table(spark, index_dir: str) -> DataFrame:
 
 
 def segments_with_idf(segments: DataFrame, index_dir: str) -> DataFrame:
-    """Serve-path annotation for FACTORED indexes: join the per-term ``idf``
-    onto the segment relation ONCE, at index-load time, so every subsequent
-    ``segment_topk`` batch skips the per-batch query-side annotation
-    (posexplode → V-row join → collect_list regroup — two extra exchanges
-    per batch, measured +30% wall on a 10k-query batch at local[32]).
-    Persist the result and hand it to ``segment_topk``; the scorers detect
-    the column and build their idf lookup from the shard's own rows.
+    """Serve-path annotation for RAW and FACTORED indexes: join the
+    per-term ``idf`` onto the segment relation ONCE, at index-load time, so
+    every subsequent ``segment_topk`` batch skips the per-batch query-side
+    annotation (posexplode → V-row join → collect_list regroup — two extra
+    exchanges per batch, measured +30% wall on a 10k-query batch at
+    local[32]). Persist the result and hand it to ``segment_topk``; the
+    scorer detects the column and builds its idf lookup from the shard's
+    own rows.
 
     The join keys on term over the block-metadata-sized relation
     (~postings/block_size rows): AQE broadcast-converts the V-row idf table
@@ -988,8 +870,6 @@ def segment_topk(
     segments: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    prune: bool = True,
-    batch: bool | None = None,
     shard_ids=None,
     query_weighted: bool = False,
     index_dir: str | None = None,
@@ -1014,44 +894,41 @@ def segment_topk(
     ``mode='or'`` (default) ranks any doc matching ≥1 query term (the BM25
     union semantics of the reference's sparse dot products); ``mode='and'``
     keeps only docs containing EVERY query term — the batch scorer filters
-    on its distinct-term match-count grid, the point path runs rarest-first
-    posting-list intersection with per-block [first_doc, max_doc] skipping
-    (_score_intersect). AND is shard-local decidable (a doc's postings live
-    wholly in its shard), so the global merge is unchanged.
+    on its distinct-term match-count grid. AND is shard-local decidable (a
+    doc's postings live wholly in its shard), so the global merge is
+    unchanged.
 
     ``min_match=m`` (quorum retrieval, Lucene's minimum_should_match):
     with ``mode='or'``, keep only docs matching at least ``m`` DISTINCT
     query terms — m=1 is plain OR, m=len(terms) is AND; in between is the
     standard long-query recall/precision knob. Rides the batch scorer's
-    match-count grid (requires ``batch=True``), shard-local decidable like
-    AND. Queries with fewer than m distinct index-present terms return
-    nothing (strict quorum, matching the relational HAVING semantics).
+    match-count grid, shard-local decidable like AND. Queries with fewer
+    than m distinct index-present terms return nothing (strict quorum,
+    matching the relational HAVING semantics).
 
     ``not_terms`` (an optional array<string> column on ``queries`` —
     Lucene's MUST_NOT): docs containing ANY of a query's not_terms are
     excluded from that query's ranking; scores of survivors are unchanged
     (exclusion, not scoring). Shard-local decidable, composes with
-    mode/min_match/filters, requires the batch scorer.
+    mode/min_match/filters.
 
-    ``batch=True`` scores every query of a shard in one vectorized pass
-    (fastest for large batches, exhaustive); ``batch=False`` scores
-    query-at-a-time with Block-Max MaxScore pruning (``prune``) — best for
-    small selective batches. Default: batch for ≥64 queries per shard is a
-    good rule of thumb, but since the query count isn't known at plan time,
-    ``batch=None`` resolves to True (the bench/batch use case).
+    Every query of a shard is scored in one vectorized pass
+    (``_score_batch``). Small selective batches belong on
+    ``term_major_topk``, which ``retrieve.route`` picks for them.
 
     Shard enumeration: pass ``shard_ids`` (``range(meta['n_shards'])``) or
     ``index_dir`` (the shard count is read from ``meta.json``, a driver-side
     file read — no job). Only a bare-DataFrame call with neither falls back
     to a shard-discovery ``distinct().collect()`` job.
 
-    Weight scheme: a FACTORED index (meta.json weight_scheme='factored' —
-    the default build) stores only the doc-local BM25 factor; this function
-    then annotates the query batch with per-term idf from term_stats and
-    the scorers apply it during decode. Resolution: explicit
-    ``weight_scheme`` wins, else ``index_dir``'s meta, else 'prod'
-    (round-3 format). Factored scoring needs ``index_dir`` (for term_stats
-    + n_docs).
+    Weight scheme: a RAW index (meta.json weight_scheme='raw' — the
+    default build) stores tf and dl, a FACTORED one the doc-local BM25
+    factor; for both this function annotates the query batch with per-term
+    idf from term_stats (unless the segments already carry it —
+    ``segments_with_idf``) and the scorer applies it during decode.
+    Resolution: explicit ``weight_scheme`` wins, else ``index_dir``'s meta,
+    else 'prod' (round-3 format). Raw and factored scoring need
+    ``index_dir`` (for term_stats + n_docs).
     """
     if mode not in ("or", "and"):
         raise ValueError(f"mode must be 'or' or 'and', got {mode!r}")
@@ -1063,24 +940,7 @@ def segment_topk(
             )
         if int(min_match) < 1:
             raise ValueError(f"min_match must be >= 1, got {min_match}")
-        if batch is False:
-            raise ValueError(
-                "min_match requires the batch scorer (batch=True): the "
-                "quorum filter lives on its match-count grid"
-            )
         min_match = int(min_match)
-    if "not_terms" in queries.columns and batch is False:
-        raise ValueError(
-            "not_terms (MUST_NOT exclusion) requires the batch scorer "
-            "(batch=True): exclusion is applied on its score grid"
-        )
-    if batch is None:
-        batch = True
-    if query_weighted and not batch:
-        raise ValueError(
-            "query_weighted requires the batch scorer (batch=True); the "
-            "MaxScore point path assumes binarized queries"
-        )
     if query_weighted and "weights" not in queries.columns:
         raise ValueError(
             "query_weighted=True requires a `weights` array column "
@@ -1198,32 +1058,13 @@ def segment_topk(
             idx = _ShardIndex(
                 seg_pdf, idf=idf, raw=raw_params, tomb=tomb, dv=dv
             )
-            if batch:
-                return _score_batch(
-                    idx, q_pdf, k_emit, query_weighted=query_weighted,
-                    tau=(
-                        q_pdf["tau"].to_numpy(np.float64)
-                        if with_tau else None
-                    ),
-                    mode=mode, min_match=min_match,
-                )
-            out_q, out_d, out_s = [], [], []
-            for qid, terms in zip(q_pdf["query_id"], q_pdf["terms"]):
-                uterms = list(dict.fromkeys(terms))
-                if mode == "and":
-                    docs, scores = _score_intersect(idx, uterms)
-                elif prune:
-                    docs, scores = _score_maxscore(idx, uterms, k_emit)
-                else:
-                    docs, scores = _score_exhaustive(idx, uterms)
-                docs, scores = _local_topk(docs, scores, k_emit)
-                out_q.extend([qid] * len(docs))
-                out_d.extend(docs.tolist())
-                out_s.extend(scores.tolist())
-            return pd.DataFrame(
-                {"query_id": np.asarray(out_q, np.int64),
-                 "doc_id": np.asarray(out_d, np.int64),
-                 "score": np.asarray(out_s, np.float64)}
+            return _score_batch(
+                idx, q_pdf, k_emit, query_weighted=query_weighted,
+                tau=(
+                    q_pdf["tau"].to_numpy(np.float64)
+                    if with_tau else None
+                ),
+                mode=mode, min_match=min_match,
             )
 
         return score_shard
@@ -1250,7 +1091,7 @@ def segment_topk(
 
     n_shards = len(shards_list)
     if deep_paging is None:
-        deep_paging = batch and k >= DEEP_K_CUTOFF and n_shards >= 8
+        deep_paging = k >= DEEP_K_CUTOFF and n_shards >= 8
     k1 = max(32, -(-4 * k // max(n_shards, 1)))
     if deep_paging and k1 < k:
         # Exact two-pass deep paging. The one-pass merge ships
@@ -1315,11 +1156,9 @@ def term_major_topk(
     index_dir: str,
     queries: DataFrame,
     k: int = 10,
-    prune: bool = True,
     n_buckets: int | None = None,
     max_pruned_terms: int = 10_000,
     mode: str = "or",
-    scorer: str = "maxscore",
 ) -> DataFrame:
     """Point-query path over the term-major merged layout: bucket-pruned scan
     of exactly the queried terms' blocks, then one scoring pass per query.
@@ -1341,18 +1180,12 @@ def term_major_topk(
     on the query terms (row-level pruning only, no partition pruning, but
     safe at any batch size).
 
-    ``scorer``: the OR-mode pruning kernel — 'maxscore' (Block-Max
-    MaxScore, default: measured ~1.5× faster than BMW on the Zipf corpus
-    because unclamped-idf hot terms defeat segment-wise skipping, see
-    _score_bmw's measured verdict) or 'bmw' (Block-Max WAND as best-first
-    segment scoring). Both are exact; rank identity is pinned in tests.
-    ``prune=False`` forces the exhaustive scan.
+    OR queries are scored by Block-Max MaxScore (``_score_maxscore``).
+    Block-Max WAND, run as best-first doc-range scoring, measured ~1.5×
+    slower on the Zipf corpus (100k docs, k=10: 5.09 s vs 3.27 s): the
+    unclamped idf makes hot terms' weights negative, so their blocks add 0
+    to every upper bound yet must still be decoded for every visited range.
     """
-    import os as _os
-
-    if scorer not in ("bmw", "maxscore"):
-        raise ValueError(f"scorer must be 'bmw' or 'maxscore', got {scorer!r}")
-
     from similaripy_spark.fulltext.index_merge import (
         merged_n_buckets,
         read_merged_for_terms,
@@ -1386,7 +1219,7 @@ def term_major_topk(
         blocks = read_merged_for_terms(spark, index_dir, terms, n_buckets)
         joined = blocks.join(F.broadcast(qterms), "term")
     else:
-        merged = spark.read.parquet(_os.path.join(index_dir, "merged"))
+        merged = spark.read.parquet(os.path.join(index_dir, "merged"))
         blocks = merged.join(dterms, "term", "left_semi")
         joined = blocks.join(qterms, "term")
     if qn is not None:
@@ -1408,12 +1241,8 @@ def term_major_topk(
             if len(uterms) < int(pdf["nreq"].iloc[0]):
                 return pd.DataFrame(_EMPTY_RESULT)
             docs, scores = _score_intersect(idx, uterms)
-        elif prune and scorer == "bmw":
-            docs, scores = _score_bmw(idx, uterms, k)
-        elif prune:
-            docs, scores = _score_maxscore(idx, uterms, k)
         else:
-            docs, scores = _score_exhaustive(idx, uterms)
+            docs, scores = _score_maxscore(idx, uterms, k)
         docs, scores = _local_topk(docs, scores, k)
         return pd.DataFrame(
             {"query_id": np.full(len(docs), qid, np.int64),
@@ -1425,470 +1254,6 @@ def term_major_topk(
     )
     out = top_k(
         local, k, group="query_id", order_value="score", tiebreak="doc_id",
-        keep_rank=True,
-    )
-    return out.select("query_id", "doc_id", "score", "rank")
-
-
-def bucket_topk(
-    spark,
-    index_dir: str,
-    queries: DataFrame,
-    k: int = 10,
-    n_buckets: int | None = None,
-    prune: bool = False,
-) -> DataFrame:
-    """Mid-size-batch path over the term-major merged layout: one cogroup
-    per TERM BUCKET (not per shard, not per query).
-
-    BM25 scores are additive over terms, so each bucket scores only the
-    postings of ITS query terms into partial (query_id, doc_id, partial)
-    sums; a groupBy(query_id, doc_id) merge + top-k finishes the job. Query
-    fan-out is the number of distinct buckets a query's terms hash to
-    (<= its term count, independent of shard count) — between
-    ``term_major_topk`` (ships each query's blocks to a per-query group:
-    great for point queries, hot blocks duplicated per query) and
-    ``segment_topk`` (replicates the whole batch to every shard: great for
-    huge batches). No driver-side term collect anywhere.
-
-    MEASURED VERDICT (50k-doc Zipf corpus, local[8], cached index; see
-    ROUND3_NOTES.md): the doc-sharded ``segment_topk`` beats this path at
-    every batch size tried (50→1000 queries: 1.5-2.0 s vs 3.8-36.6 s) —
-    the additive-partials design emits one row per touched (query, doc)
-    pair, so a stopword term referenced by a third of the batch
-    materializes ~df partial rows PER QUERY where the shard scorer emits
-    only per-shard top-k. Bucket remains the right shape only when the
-    whole-index scan of the segment path is the cost that matters (cold,
-    selective access over the partition-pruned merged layout) with batches
-    too big for per-query term-major groups. Auto-routing therefore no
-    longer selects it (retrieve.route); it stays available explicitly.
-
-    ``prune=True`` adds BOUND-THEN-REFINE (exact — ranks AND scores
-    identical to the exhaustive scan, adversarially tested). Also a
-    measured LOSS on this corpus (pruned 4.7-56.6 s vs exhaustive
-    1.3-36.6 s): the unclamped-idf semantics give hot terms large NEGATIVE
-    weights that contribute to every returned score, so correctness makes
-    them essential and unprunable, while the θ/probe phases add two windows
-    and a cogroup of fixed cost; the non-essential mass that remains is the
-    cheap mid-tail. Default is therefore prune=False; the operator, its
-    exactness proof and its tests are kept because the technique pays off
-    in positive-weight regimes (clamped idf / stopword-free vocabularies):
-
-    1. metadata-only lower bound θ_q on the final k-th score: any term t
-       with df ≥ k guarantees k docs scoring ≥ min_weight_t + Σ_{t'≠t}
-       min(0, min_weight_{t'}) (a doc not containing t' gets 0 ≥ lb_{t'});
-       θ_q = the best such guarantee (term_stats only, no decode);
-    2. MaxScore-style essential split (Turtle & Flood 1995): order q's
-       terms by ub = max(0, max_weight) descending; the maximal suffix with
-       Σ ub < θ_q is NON-ESSENTIAL — a doc appearing only there scores
-       < θ_q ≤ k-th final, so it can never enter the top-k (strict, so
-       doc_id tie-breaks cannot flip it);
-    3. only essential postings are decoded + scatter-scored (the expensive
-       phase — on Zipfian corpora the hot stopword terms have small ub and
-       land in the non-essential suffix, which is exactly the work worth
-       skipping);
-    4. refine: per query, θ₂ = k-th best partial+Σlb_ne; candidates (those
-       with partial+Σub_ne ≥ θ₂) have their non-essential terms PROBED —
-       binary-searched in only the posting blocks whose [first_doc,
-       max_doc] range overlaps a candidate — restoring exact totals.
-    """
-    from similaripy_spark.fulltext.index_merge import merged_n_buckets
-
-    if n_buckets is None:
-        n_buckets = merged_n_buckets(index_dir)
-    merged = spark.read.parquet(os.path.join(index_dir, "merged"))
-    qterms = (
-        queries.select("query_id", F.explode("terms").alias("term"))
-        .distinct()
-        .withColumn("bucket", F.crc32(F.col("term")) % n_buckets)
-    )
-    from similaripy_spark.fulltext.index_build import read_meta
-
-    meta = read_meta(index_dir)
-    raw_params = None
-    if _index_is_factored(index_dir):
-        if meta.get("weight_scheme") == "raw":
-            raw_params = _raw_params_from_meta(meta)
-        qterms = qterms.join(
-            _index_idf_table(spark, index_dir), "term", "left"
-        )
-    tomb = _tomb_for(index_dir, meta)
-    if prune:
-        return _bucket_topk_pruned(
-            spark, index_dir, merged, qterms, k, n_buckets,
-            raw_params=raw_params, tomb=tomb,
-        )
-    blocks = merged.withColumn(
-        "bucket", F.crc32(F.col("term")) % n_buckets
-    ).join(qterms.select("term").distinct(), "term", "left_semi")
-
-    partials = (
-        qterms.groupby("bucket")
-        .cogroup(blocks.groupby("bucket"))
-        .applyInPandas(
-            _bucket_scorer(raw_params, tomb), schema=_RESULT_SCHEMA
-        )
-    )
-    totals = partials.groupBy("query_id", "doc_id").agg(
-        F.sum("score").alias("score")
-    )
-    out = top_k(
-        totals, k, group="query_id", order_value="score", tiebreak="doc_id",
-        keep_rank=True,
-    )
-    return out.select("query_id", "doc_id", "score", "rank")
-
-
-#: dense-accumulator budget for the bucket scorer: bins per chunk
-#: (chunk_queries × distinct docs in bucket); 2^24 float64 bins ≈ 128 MB
-_BUCKET_BINS = 1 << 24
-
-
-def _bucket_scorer(raw: dict | None, tomb=None):
-    """Two-positional-arg cogroup wrappers (pyspark counts the function's
-    positional parameters to decide whether to pass the group key — a
-    default-arg lambda would be handed (key, left, right))."""
-
-    def score(q_pdf: pd.DataFrame, seg_pdf: pd.DataFrame) -> pd.DataFrame:
-        return _score_bucket(q_pdf, seg_pdf, raw=raw, tomb=tomb)
-
-    return score
-
-
-def _bucket_prober(raw: dict | None, tomb=None):
-    def probe(p_pdf: pd.DataFrame, seg_pdf: pd.DataFrame) -> pd.DataFrame:
-        return _probe_bucket(p_pdf, seg_pdf, raw=raw, tomb=tomb)
-
-    return probe
-
-
-def _score_bucket(q_pdf: pd.DataFrame, seg_pdf: pd.DataFrame,
-                  raw: dict | None = None, tomb=None) -> pd.DataFrame:
-    """Exhaustive bucket scorer: decode the bucket's query terms ONCE,
-    factorize the bucket's docIDs into a dense local space, then
-    scatter-add every (query, term) pair's posting weights with chunked
-    ``np.bincount`` — the same SPA pattern as ``_score_batch``. The round-2
-    version tiled postings per query and merged with a sort-based
-    ``np.unique`` over int64 keys, ~10× slower per byte on hot buckets
-    (Zipf stopword terms referenced by a third of the batch). Dense-doc
-    factorization also removes the int64 key-wrap hazard of raw corpus
-    spans (ADVICE r2)."""
-    if q_pdf.empty or seg_pdf.empty:
-        return pd.DataFrame(_EMPTY_RESULT)
-    idf = None
-    if "idf" in q_pdf.columns:
-        idf = {
-            t: (0.0 if v is None or (isinstance(v, float) and v != v)
-                else float(v))
-            for t, v in zip(q_pdf["term"], q_pdf["idf"])
-        }
-    idx = _ShardIndex(seg_pdf, idf=idf, raw=raw, tomb=tomb)
-    uterms = list(dict.fromkeys(q_pdf["term"]))
-    docs, weights, spans = idx.decode_terms(uterms)
-    if len(docs) == 0:
-        return pd.DataFrame(_EMPTY_RESULT)
-    udocs, dcode = np.unique(docs, return_inverse=True)
-    n_ud = len(udocs)
-
-    # incidence: (local query index, term span) pairs, query-major
-    q_uniq, q_local_all = np.unique(
-        q_pdf["query_id"].to_numpy(np.int64), return_inverse=True
-    )
-    p_q, p_s, p_e = [], [], []
-    for qi, t in zip(q_local_all, q_pdf["term"]):
-        se = spans.get(t)
-        if se is None:
-            continue
-        p_q.append(qi)
-        p_s.append(se[0])
-        p_e.append(se[1])
-    if not p_q:
-        return pd.DataFrame(_EMPTY_RESULT)
-    p_q = np.asarray(p_q, np.int64)
-    p_s = np.asarray(p_s, np.int64)
-    p_e = np.asarray(p_e, np.int64)
-    order = np.argsort(p_q, kind="stable")
-    p_q, p_s, p_e = p_q[order], p_s[order], p_e[order]
-
-    chunk_q = max(1, _BUCKET_BINS // max(n_ud, 1))
-    n_q = len(q_uniq)
-    out = []
-    for c0 in range(0, n_q, chunk_q):
-        c1 = min(c0 + chunk_q, n_q)
-        lo = np.searchsorted(p_q, c0)
-        hi = np.searchsorted(p_q, c1)
-        if lo == hi:
-            continue
-        lens = p_e[lo:hi] - p_s[lo:hi]
-        nz = lens > 0
-        if not nz.any():
-            continue
-        cq, cs, lens = p_q[lo:hi][nz], p_s[lo:hi][nz], lens[nz]
-        ends = np.cumsum(lens)
-        arena = (
-            np.arange(int(ends[-1]), dtype=np.int64)
-            - np.repeat(ends - lens, lens)
-            + np.repeat(cs, lens)
-        )
-        flat = np.repeat((cq - c0) * n_ud, lens) + dcode[arena]
-        nbins = (c1 - c0) * n_ud
-        S = np.bincount(flat, weights=weights[arena], minlength=nbins)
-        matched = np.bincount(flat, minlength=nbins) > 0
-        cells = np.flatnonzero(matched)
-        out.append(
-            pd.DataFrame(
-                {
-                    "query_id": q_uniq[cells // n_ud + c0],
-                    "doc_id": udocs[cells % n_ud],
-                    "score": S[cells],
-                }
-            )
-        )
-    if not out:
-        return pd.DataFrame(_EMPTY_RESULT)
-    return pd.concat(out, ignore_index=True)
-
-
-def _probe_bucket(p_pdf: pd.DataFrame, seg_pdf: pd.DataFrame,
-                  raw: dict | None = None, tomb=None) -> pd.DataFrame:
-    """Refine phase: for given (query_id, doc_id, term) probe rows, return
-    the exact weight contribution of ``term`` to ``doc_id`` where present.
-    Decodes ONLY blocks whose [first_doc, max_doc] range overlaps a probed
-    doc (binary search on block metadata, then on the decoded list)."""
-    if p_pdf.empty or seg_pdf.empty:
-        return pd.DataFrame(_EMPTY_RESULT)
-    idf = None
-    if "idf" in p_pdf.columns:
-        idf = {
-            t: (0.0 if v is None or (isinstance(v, float) and v != v)
-                else float(v))
-            for t, v in zip(p_pdf["term"], p_pdf["idf"])
-        }
-    idx = _ShardIndex(seg_pdf, idf=idf, raw=raw, tomb=tomb)
-    out = []
-    for t, grp in p_pdf.groupby("term"):
-        meta = idx.term_meta(t)
-        if meta is None:
-            continue
-        _, _, firsts, maxds, _ = meta
-        g_docs = grp["doc_id"].to_numpy(np.int64)
-        need = np.unique(g_docs)
-        lo = np.searchsorted(need, firsts, side="left")
-        hi = np.searchsorted(need, maxds, side="right")
-        mask = hi > lo
-        if not mask.any():
-            continue
-        d, w = idx.decode_blocks(t, block_mask=None if mask.all() else mask)
-        if len(d) == 0:
-            continue
-        pos = np.clip(np.searchsorted(d, g_docs), 0, len(d) - 1)
-        hit = d[pos] == g_docs
-        if not hit.any():
-            continue
-        out.append(
-            pd.DataFrame(
-                {
-                    "query_id": grp["query_id"].to_numpy(np.int64)[hit],
-                    "doc_id": g_docs[hit],
-                    "score": w[pos[hit]],
-                }
-            )
-        )
-    if not out:
-        return pd.DataFrame(_EMPTY_RESULT)
-    return pd.concat(out, ignore_index=True)
-
-
-def essential_split(spark, index_dir: str, qterms: DataFrame, k: int):
-    """Phase 0 of bound-then-refine: classify each (query, term) pair as
-    essential / non-essential from term_stats metadata alone. Returns
-    qterms + (df, ub, lb, suffix_ub, theta, essential). Exposed for tests
-    and diagnostics — the pruning win is exactly the non-essential mass."""
-    from pyspark.sql import Window
-
-    from similaripy_spark.fulltext.index_build import (
-        read_meta,
-        read_term_stats,
-    )
-
-    neg_inf = float("-inf")
-    ts = read_term_stats(spark, index_dir)
-    factored = _index_is_factored(index_dir)
-    qterms = qterms.drop("idf")  # derived fresh below; avoids a dup column
-    if factored:
-        meta = read_meta(index_dir)
-        if meta.get("weight_scheme") == "raw":
-            # raw bounds were encoded at the pinned bounds_avgdl; the
-            # one-sided avgdl-ratio scaling keeps them valid (and
-            # conservative) at the current corpus avgdl — stays double
-            # so an upper bound is never rounded down
-            rp = _raw_params_from_meta(meta)
-            r = rp["avgdl"] / rp["bounds_avgdl"]
-            up, dn = max(1.0, r), min(1.0, r)
-            if r != 1.0:
-                # same float32 cross-rounding widening as _ShardIndex
-                up *= 1.0 + 1e-6
-                dn *= 1.0 - 1e-6
-            ts = ts.select(
-                "term", "df",
-                (F.col("max_weight").cast("double") * up)
-                .alias("max_weight"),
-                (F.col("min_weight").cast("double") * dn)
-                .alias("min_weight"),
-            )
-        # stored bounds are positive tf-parts; idf-adjust them here so the
-        # pruning algebra below is scheme-oblivious (negative idf swaps the
-        # extremes, exactly as _ShardIndex.term_meta does per shard)
-        ts = ts.join(_index_idf_table(spark, index_dir), "term")
-        eff_max = F.when(
-            F.col("idf") >= 0, F.col("idf") * F.col("max_weight")
-        ).otherwise(F.col("idf") * F.col("min_weight"))
-        eff_min = F.when(
-            F.col("idf") >= 0, F.col("idf") * F.col("min_weight")
-        ).otherwise(F.col("idf") * F.col("max_weight"))
-        ts = ts.select(
-            "term", "df", "idf",
-            eff_max.cast("double").alias("max_weight"),
-            eff_min.cast("double").alias("min_weight"),
-        )
-    qt = qterms.join(ts, "term")  # unhinted: AQE broadcasts when small
-    ub = F.greatest(F.col("max_weight").cast("double"), F.lit(0.0))
-    lb = F.least(F.col("min_weight").cast("double"), F.lit(0.0))
-    qt = qt.select(
-        "query_id", "term", "bucket", "df",
-        *(["idf"] if factored else []),
-        ub.alias("ub"), lb.alias("lb"),
-        F.col("min_weight").cast("double").alias("minw"),
-    )
-    # tombstones: term_stats df counts deleted docs, so the "df ≥ k docs
-    # exist" guarantee must be discounted by the WHOLE tombstone count (at
-    # worst every deleted doc contained t) — θ stays a valid lower bound
-    # on the SURVIVING k-th score, just weaker until compact_index
-    n_tomb = 0
-    meta_es = read_meta(index_dir)
-    if meta_es.get("n_tombstone_epochs"):
-        t_arr = _tomb_for(index_dir, meta_es)
-        n_tomb = 0 if t_arr is None else len(t_arr)
-    # θ_q = max over t with df - n_tomb ≥ k of (minw_t - lb_t) + Σ_all lb
-    per_q = qt.groupBy("query_id").agg(
-        F.sum("lb").alias("sum_lb"),
-        F.max(
-            F.when(F.col("df") - n_tomb >= k, F.col("minw") - F.col("lb"))
-        ).alias("theta_base"),
-    ).select(
-        "query_id",
-        F.coalesce(
-            F.col("theta_base") + F.col("sum_lb"), F.lit(neg_inf)
-        ).alias("theta"),
-    )
-    w_desc = Window.partitionBy("query_id").orderBy(
-        F.col("ub").desc(), F.col("term").asc()
-    )
-    suffix = F.sum("ub").over(
-        w_desc.rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    )
-    qt = qt.withColumn("suffix_ub", suffix).join(per_q, "query_id")
-    # non-essential = maximal suffix with Σ ub < θ (STRICT — ties at the
-    # k-th score must never be pruned). θ and suffix_ub come from separate
-    # aggregations over the same rows, and Spark may recompute each branch
-    # with a different float addition order — widen the boundary by a
-    # relative epsilon (the deep-paging tau pattern) so ULP noise between
-    # recomputations can never flip a tied term to non-essential.
-    theta_eps = F.col("theta") - (
-        F.abs(F.col("theta")) * 1e-9 + F.lit(1e-12)
-    )
-    return qt.withColumn("essential", F.col("suffix_ub") >= theta_eps)
-
-
-def _bucket_topk_pruned(
-    spark, index_dir: str, merged: DataFrame, qterms: DataFrame, k: int,
-    n_buckets: int, raw_params: dict | None = None, tomb=None,
-) -> DataFrame:
-    """Bound-then-refine (docstring in bucket_topk). All bounds come from
-    term_stats (block-metadata-derived, index_build._write_term_stats) and
-    are float32-consistent with the stored weights, so every comparison is
-    conservative-exact."""
-    from pyspark.sql import Window
-
-    neg_inf = float("-inf")
-    qt = essential_split(spark, index_dir, qterms, k)
-    idf_cols = ["idf"] if "idf" in qt.columns else []
-
-    ess = qt.filter("essential").select(
-        "query_id", "term", "bucket", *idf_cols
-    )
-    ne = qt.filter(~F.col("essential")).select(
-        "query_id", "term", "bucket", "ub", "lb", *idf_cols
-    )
-    bounds_ne = ne.groupBy("query_id").agg(
-        F.sum("ub").alias("ub_ne"), F.sum("lb").alias("lb_ne")
-    )
-
-    # phase 1: exhaustive scoring of ESSENTIAL postings only. The block
-    # side recomputes its bucket column independently (same crc32 % n)
-    # rather than joining the query side's — reusing that attribute in a
-    # later cogroup would be an ambiguous self-join.
-    ess_blocks = merged.join(
-        ess.select("term").distinct(), "term", "left_semi"
-    ).withColumn("bucket", F.crc32(F.col("term")) % n_buckets)
-    partials = (
-        ess.groupby("bucket")
-        .cogroup(ess_blocks.groupby("bucket"))
-        .applyInPandas(
-            _bucket_scorer(raw_params, tomb), schema=_RESULT_SCHEMA
-        )
-        .groupBy("query_id", "doc_id")
-        .agg(F.sum("score").alias("p"))
-    )
-
-    # phase 2: candidate filter — θ₂ = k-th best (p + Σlb_ne); keep docs
-    # with p + Σub_ne ≥ θ₂ (missing bounds row ⇒ no ne terms ⇒ exact)
-    scored = partials.join(bounds_ne, "query_id", "left").select(
-        "query_id", "doc_id", "p",
-        (F.col("p") + F.coalesce(F.col("lb_ne"), F.lit(0.0))).alias("d_lb"),
-        (F.col("p") + F.coalesce(F.col("ub_ne"), F.lit(0.0))).alias("d_ub"),
-    )
-    w_lb = Window.partitionBy("query_id").orderBy(F.col("d_lb").desc())
-    theta2 = (
-        scored.withColumn("rn", F.row_number().over(w_lb))
-        .filter(F.col("rn") == k)
-        .select("query_id", F.col("d_lb").alias("theta2"))
-    )
-    # `scored` is recomputed independently on the theta2 branch and here,
-    # and bucket-partial aggregation order is not deterministic across
-    # recomputations — the doc DEFINING theta2 can land an ULP below its
-    # own bound and vanish. Widen by a relative epsilon (deep-paging tau
-    # pattern); extra survivors are exact-probed and sorted out by the
-    # final top-k, so exactness is unchanged.
-    t2 = F.coalesce(F.col("theta2"), F.lit(neg_inf))
-    cand = scored.join(theta2, "query_id", "left").filter(
-        F.col("d_ub") >= t2 - (F.abs(t2) * 1e-9 + F.lit(1e-12))
-    ).select("query_id", "doc_id", "p")
-
-    # phase 3: probe non-essential terms for the candidates only
-    probe_in = cand.select("query_id", "doc_id").join(
-        ne.select("query_id", "term", "bucket", *idf_cols), "query_id"
-    )
-    ne_blocks = merged.join(
-        ne.select("term").distinct(), "term", "left_semi"
-    ).withColumn("bucket", F.crc32(F.col("term")) % n_buckets)
-    probe_partials = (
-        probe_in.groupby("bucket")
-        .cogroup(ne_blocks.groupby("bucket"))
-        .applyInPandas(
-            _bucket_prober(raw_params, tomb), schema=_RESULT_SCHEMA
-        )
-    )
-
-    # phase 4: exact totals for candidates + deterministic top-k
-    totals = (
-        cand.select("query_id", "doc_id", F.col("p").alias("score"))
-        .unionByName(probe_partials)
-        .groupBy("query_id", "doc_id")
-        .agg(F.sum("score").alias("score"))
-    )
-    out = top_k(
-        totals, k, group="query_id", order_value="score", tiebreak="doc_id",
         keep_rank=True,
     )
     return out.select("query_id", "doc_id", "score", "rank")

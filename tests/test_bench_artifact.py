@@ -218,3 +218,33 @@ def test_best_clean_pair_over_configs_selects_max_min(tmp_path, monkeypatch):
     assert pair["max_partition_bytes"] == "128m"
     assert pair["build_efficiency"] == 1.0
     assert pair["query_efficiency"] == 0.95
+
+
+def test_best_of_history_matches_full_level_key(tmp_path, monkeypatch):
+    """A history line at the same six-field level key (_history_key) is
+    picked up; lines at another split size or layout are not."""
+    monkeypatch.setattr(bench, "REPO", str(tmp_path))
+    (tmp_path / "BENCH").mkdir()
+    level = dict(cpus=8, n_docs=300000, n_queries=15000,
+                 build_layout="shuffle", n_conc=None,
+                 max_partition_bytes="128m")
+    rows = [
+        dict(level, build_sec=17.0, build_docs_per_sec=17613.0,
+             query_sec=25.0, queries_per_sec=600.0),
+        dict(level, max_partition_bytes="16m", build_sec=1.0,
+             build_docs_per_sec=99999.0, query_sec=1.0,
+             queries_per_sec=9999.0),
+        dict(level, build_layout="aligned", build_sec=1.0,
+             build_docs_per_sec=88888.0, query_sec=1.0,
+             queries_per_sec=8888.0),
+    ]
+    with open(tmp_path / "BENCH" / "history.jsonl", "w") as f:
+        for r in rows:
+            f.write(json.dumps(r) + "\n")
+    sample = dict(level, build_sec=49.8, build_docs_per_sec=6029.0,
+                  query_sec=31.1, queries_per_sec=482.6)
+    best = bench._best_of_history([sample])
+    assert best["build_docs_per_sec"] == 17613.0
+    assert best["build_sec"] == 17.0
+    assert best["queries_per_sec"] == 600.0
+    assert best["query_sec"] == 25.0

@@ -32,8 +32,9 @@ from similaripy_spark.fulltext.index_build import (
     read_meta,
     read_segments,
 )
+from similaripy_spark.fulltext.index_merge import merge_to_term_major
 from similaripy_spark.fulltext.retrieve import open_index
-from similaripy_spark.fulltext.wand import segment_topk
+from similaripy_spark.fulltext.wand import segment_topk, term_major_topk
 from similaripy_spark.sources.pages import generate_pages
 
 N_DOCS = 1200
@@ -53,8 +54,9 @@ def test_and_point_path_survives_fully_tombstoned_term(
     spark, corpus, tmp_path_factory
 ):
     """Delete EVERY doc containing a query term: the AND intersection's
-    later-term decode comes back empty for overlapping blocks and must
-    yield an empty result, not an IndexError."""
+    later-term decode (term-major point path) comes back empty for
+    overlapping blocks and must yield an empty result, not an IndexError;
+    the segment batch scorer agrees."""
     d = str(tmp_path_factory.mktemp("andtomb") / "idx")
     IndexBuilder(d, n_groups=2, shard_size=256).build(corpus)
     row = corpus.filter(F.col("doc_id") == 5).select("text").first()
@@ -73,11 +75,12 @@ def test_and_point_path_survives_fully_tombstoned_term(
     q = spark.createDataFrame(
         [(0, [t1, t2])], "query_id long, terms array<string>"
     )
-    out = segment_topk(
-        read_segments(spark, d), q, k=5, index_dir=d,
-        batch=False, mode="and",
-    ).collect()
-    assert out == []  # every doc holding t2 is gone; AND is empty
+    merge_to_term_major(spark, d, n_buckets=8)
+    # every doc holding t2 is gone; AND is empty
+    assert term_major_topk(spark, d, q, k=5, mode="and").collect() == []
+    assert segment_topk(
+        read_segments(spark, d), q, k=5, index_dir=d, mode="and",
+    ).collect() == []
 
 
 def test_append_matches_pointer_committed_index(

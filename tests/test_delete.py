@@ -27,11 +27,7 @@ from similaripy_spark.fulltext.index_build import (
 )
 from similaripy_spark.fulltext.index_merge import merge_to_term_major
 from similaripy_spark.fulltext.retrieve import open_index
-from similaripy_spark.fulltext.wand import (
-    bucket_topk,
-    segment_topk,
-    term_major_topk,
-)
+from similaripy_spark.fulltext.wand import segment_topk, term_major_topk
 from similaripy_spark.fulltext.weights import bm25_weights
 from similaripy_spark.fulltext.postings import build_postings
 from similaripy_spark.sources.pages import generate_pages
@@ -111,10 +107,6 @@ def test_segment_paths_exclude_deleted_exactly(
     seg = read_segments(spark, tombstoned)
     got = _rows(segment_topk(seg, queries, k=5, index_dir=tombstoned))
     _assert_same_ranking(got, oracle_rows)
-    _assert_same_ranking(_rows(
-        segment_topk(seg, queries, k=5, index_dir=tombstoned,
-                     batch=False, prune=True)
-    ), oracle_rows)
 
 
 def test_term_major_and_bucket_exclude_deleted(
@@ -122,12 +114,6 @@ def test_term_major_and_bucket_exclude_deleted(
 ):
     _assert_same_ranking(_rows(
         term_major_topk(spark, tombstoned, queries, k=5)
-    ), oracle_rows)
-    _assert_same_ranking(
-        _rows(bucket_topk(spark, tombstoned, queries, k=5)), oracle_rows
-    )
-    _assert_same_ranking(_rows(
-        bucket_topk(spark, tombstoned, queries, k=5, prune=True)
     ), oracle_rows)
 
 

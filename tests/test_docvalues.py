@@ -117,17 +117,10 @@ def test_filtered_topk_exact_vs_relational(spark, corpus, queries, indexed):
 
 
 def test_filtered_point_path_and_and_mode(spark, corpus, queries, indexed):
+    """AND mode composes with the filter: relational twin = docs matching
+    every query term, restricted to the attribute. (Filtered queries of
+    any batch size are served by the segment batch scorer.)"""
     seg = read_segments(spark, indexed)
-    want = _oracle(corpus, queries, F.col("lang") == "xx")
-    got_point = _rows(
-        segment_topk(seg, queries, k=5, index_dir=indexed, batch=False,
-                     prune=True, dv_filter={"lang": ["xx"]})
-    )
-    _assert_same_ranking(got_point, want)
-    # AND mode composes with the filter: relational twin = docs matching
-    # every query term, restricted to the attribute
-    from similaripy_spark.fulltext.query import bm25_topk as _q
-
     keep = corpus.filter(F.col("lang") == "en").select("doc_id")
     w = bm25_weights(build_postings(corpus)).join(keep, "doc_id", "semi")
     qt = queries.select(

@@ -98,6 +98,28 @@ def test_postings_mapside_equals_sql_plan(spark, pages):
     )
 
 
+def _count_terms_both(pdf):
+    """(Arrow kernel rows, pandas reference rows) for one (doc_id, text)
+    frame fed to both as three batches; both sorted by (doc_id, term)."""
+    import pyarrow as pa
+
+    from similaripy_spark.fulltext.postings import _count_terms_arrow
+    from tests.pandas_kernels import count_terms_pandas
+
+    n = max(1, -(-len(pdf) // 3))
+    parts = [pdf.iloc[i:i + n] for i in range(0, len(pdf), n)]
+    arrow = pa.Table.from_batches(list(_count_terms_arrow(
+        [pa.RecordBatch.from_pandas(p, preserve_index=False)
+         for p in parts]
+    ))).to_pandas()
+    ref = pd.concat(count_terms_pandas(parts), ignore_index=True)
+
+    def canon(df):
+        return df.sort_values(["doc_id", "term"]).reset_index(drop=True)
+
+    return canon(arrow), canon(ref)
+
+
 def test_postings_null_text_is_empty_doc(spark):
     """A nullable text column (valid in an evolved Iceberg table) must
     behave like empty text in BOTH kernels, not feed NaN-cast garbage
@@ -106,15 +128,27 @@ def test_postings_null_text_is_empty_doc(spark):
         [(0, "alpha beta alpha"), (1, None), (2, ""), (3, "gamma")],
         "doc_id long, text string",
     )
-    for engine in ("arrow", "pandas"):
-        out = (
-            build_postings(df, engine=engine)
-            .toPandas()
-            .sort_values(["doc_id", "term"])
-            .reset_index(drop=True)
-        )
-        assert sorted(out["doc_id"].unique()) == [0, 3], engine
-        assert out[out.doc_id == 0]["tf"].sum() == 3, engine
+    outs = {"spark": build_postings(df).toPandas()}
+    outs["arrow"], outs["pandas"] = _count_terms_both(df.toPandas())
+    for name, out in outs.items():
+        assert sorted(out["doc_id"].unique()) == [0, 3], name
+        assert out[out.doc_id == 0]["tf"].sum() == 3, name
+
+
+def test_count_terms_arrow_matches_pandas_reference(pages_pd):
+    """The Arrow tokenize+count kernel emits exactly the rows of the pandas
+    reference kernel (tests/pandas_kernels.py), same values and dtypes.
+    Hand rows add case, punctuation, digits and empty/null text."""
+    extra = pd.DataFrame({
+        "doc_id": np.arange(N_DOCS, N_DOCS + 4, dtype=np.int64),
+        "text": ["Hello, WORLD! hello--world 42x", "  ÉTÉ été  ", "", None],
+    })
+    arrow, ref = _count_terms_both(
+        pd.concat([pages_pd[["doc_id", "text"]], extra], ignore_index=True)
+    )
+    assert len(ref) > N_DOCS
+    assert ref[ref.doc_id == N_DOCS]["tf"].max() == 2  # "hello" twice
+    pd.testing.assert_frame_equal(arrow, ref)
 
 
 def test_bm25_topk_rank_identical_to_oracle(spark, pages, pages_pd):

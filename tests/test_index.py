@@ -1,5 +1,6 @@
-"""Codec round-trip, SPIMI build, checkpoint/resume, and segment-query
-parity (exhaustive + Block-Max MaxScore pruned) vs the relational SQL path."""
+"""Codec round-trip, SPIMI build, checkpoint/resume, and query parity (the
+segment batch scorer and the term-major Block-Max MaxScore path) vs the
+relational SQL path."""
 
 from __future__ import annotations
 
@@ -21,7 +22,8 @@ from similaripy_spark.fulltext.index_build import (
 )
 from similaripy_spark.fulltext.postings import build_postings
 from similaripy_spark.fulltext.query import bm25_topk
-from similaripy_spark.fulltext.wand import segment_topk
+from similaripy_spark.fulltext.index_merge import merge_to_term_major
+from similaripy_spark.fulltext.wand import segment_topk, term_major_topk
 from similaripy_spark.fulltext.weights import bm25_weights
 from similaripy_spark.sources.pages import generate_pages, generate_queries_pandas
 
@@ -72,6 +74,32 @@ def built(spark, tmp_path_factory):
     return d, meta, pages
 
 
+def _merged_copy(spark, src: str, dst: str) -> str:
+    """``src`` copied to ``dst`` and merged to the term-major layout, so
+    the point path can run without touching the shared fixture index."""
+    import shutil
+
+    shutil.copytree(src, dst)
+    merge_to_term_major(spark, dst, n_buckets=8)
+    return dst
+
+
+@pytest.fixture(scope="module")
+def merged(spark, built, tmp_path_factory):
+    return _merged_copy(
+        spark, built[0], str(tmp_path_factory.mktemp("merged") / "idx")
+    )
+
+
+def _point_or_batch(spark, mode, d, queries, k, merged_dir=None):
+    """'batch': the segment batch scorer; 'maxscore': the term-major
+    Block-Max MaxScore path over ``merged_dir``."""
+    if mode == "batch":
+        return segment_topk(read_segments(spark, d), queries, k=k,
+                            index_dir=d)
+    return term_major_topk(spark, merged_dir, queries, k=k)
+
+
 def test_meta_and_lineage(built):
     d, meta, _ = built
     assert meta["n_docs"] == N_DOCS
@@ -117,9 +145,9 @@ def test_segments_wellformed(spark, built):
 
 @pytest.mark.parametrize(
     "mode",
-    ["batch", "maxscore", "exhaustive"],
+    ["batch", "maxscore"],
 )
-def test_segment_query_matches_sql_path(spark, built, mode):
+def test_segment_query_matches_sql_path(spark, built, merged, mode):
     d, meta, pages = built
     queries_pd = generate_queries_pandas(40, vocab_size=VOCAB)
     queries = spark.createDataFrame(queries_pd)
@@ -131,12 +159,8 @@ def test_segment_query_matches_sql_path(spark, built, mode):
         .sort_values(["query_id", "rank"])
         .reset_index(drop=True)
     )
-    kwargs = dict(
-        batch=(mode == "batch"), prune=(mode == "maxscore")
-    )
     got = (
-        segment_topk(read_segments(spark, d), queries, k=10, index_dir=d,
-                     **kwargs)
+        _point_or_batch(spark, mode, d, queries, 10, merged)
         .toPandas()
         .sort_values(["query_id", "rank"])
         .reset_index(drop=True)
@@ -177,7 +201,8 @@ def test_segment_query_weighted_matches_sql_path(spark, built):
     )
     assert list(got["doc_id"]) == list(expected["doc_id"])
     np.testing.assert_allclose(got["score"], expected["score"], rtol=1e-4)
-    with pytest.raises(ValueError):
+    # the query-at-a-time segment scorer is gone, and its switch with it
+    with pytest.raises(TypeError):
         segment_topk(read_segments(spark, d), queries, k=10,
                      query_weighted=True, batch=False, index_dir=d)
 
@@ -231,11 +256,11 @@ def test_segment_topk_index_dir_runs_no_discovery_job(spark, built):
 
 
 @pytest.mark.parametrize("k", [100, 1000])
-def test_segment_query_large_k(spark, built, k):
+def test_segment_query_large_k(spark, built, merged, k):
     """Deep paging: rank identity vs the relational path at k=100 and
     k=1000 (beyond the reference's k default; k >= n_docs of a shard makes
     every candidate a keeper, exercising the kk == span branch of the
-    batch scorer and the full-merge branch of MaxScore)."""
+    batch scorer and the full-merge branch of the term-major MaxScore)."""
     d, meta, pages = built
     queries = spark.createDataFrame(
         generate_queries_pandas(10, vocab_size=VOCAB)
@@ -244,50 +269,90 @@ def test_segment_query_large_k(spark, built, k):
         bm25_topk(bm25_weights(build_postings(pages)), queries, k=k)
         .toPandas().sort_values(["query_id", "rank"]).reset_index(drop=True)
     )
-    for kwargs in (dict(batch=True), dict(batch=False, prune=True)):
+    for mode in ("batch", "maxscore"):
         got = (
-            segment_topk(read_segments(spark, d), queries, k=k,
-                         index_dir=d, **kwargs)
+            _point_or_batch(spark, mode, d, queries, k, merged)
             .toPandas().sort_values(["query_id", "rank"])
             .reset_index(drop=True)
         )
-        assert list(got["doc_id"]) == list(expected["doc_id"]), kwargs
+        assert list(got["doc_id"]) == list(expected["doc_id"]), mode
         np.testing.assert_allclose(got["score"], expected["score"],
                                    rtol=1e-4)
 
 
-def test_encoder_parity(spark, tmp_path):
-    """All three block encoders commit byte-identical segments on the same
-    corpus: 'arrow' (default — in-kernel lexsort over dictionary codes, no
-    JVM row sort in the plan), 'arrow_stream' (streams over JVM-presorted
-    partitions), 'pandas' (original twin). Compared after orderBy — row
-    order inside files is the only thing the encoders may differ on."""
-    pages = generate_pages(spark, N_DOCS, vocab_size=VOCAB)
+def test_encoder_parity():
+    """The Arrow block encoder (in-kernel lexsort over UNSORTED input)
+    commits byte-identical blocks to the pandas reference encoder over the
+    same rows SORTED by (shard, term, doc_id), with and without the raw
+    scheme's derived-bound function. Both sides get several batches: the
+    reference carries its tail group across them. Compared after sorting
+    by (shard, term, block_id) — emission order is the only thing the
+    encoders may differ on."""
+    import functools
 
-    def seg_pdf(d):
-        return (
-            read_segments(spark, d)
-            .orderBy("shard", "term", "block_id")
-            .toPandas().reset_index(drop=True)
-        )
+    import pyarrow as pa
 
-    dirs = {}
-    for enc in ("arrow", "arrow_stream", "pandas"):
-        d = str(tmp_path / enc)
-        IndexBuilder(d, shard_size=256, n_groups=2, encoder=enc).build(pages)
-        dirs[enc] = seg_pdf(d)
-    assert len(dirs["arrow"]) > 0
-    assert dirs["arrow"].equals(dirs["arrow_stream"])
-    assert dirs["arrow"].equals(dirs["pandas"])
+    from similaripy_spark.fulltext.index_build import (
+        BLOCK_SIZE,
+        _encode_partition_arrow_unsorted,
+    )
+    from similaripy_spark.fulltext.weights import tf_part_np
+    from tests.pandas_kernels import encode_partition_pandas
+
+    rng = np.random.default_rng(5)
+    parts = []
+    for shard in range(3):
+        for t in range(40):
+            # hot terms span several blocks; rare ones a partial block
+            df = int(rng.integers(300, 500)) if t < 4 else int(
+                rng.integers(1, 60))
+            docs = rng.choice(512, size=df, replace=False) + shard * 512
+            parts.append(pd.DataFrame({
+                "shard": np.int32(shard),
+                "term": f"t{t:03d}",
+                "doc_id": docs.astype(np.int64),
+                "tf": rng.integers(1, 9, size=df).astype(np.int32),
+                "weight": rng.integers(5, 400, size=df).astype(np.float32),
+            }))
+    rows = pd.concat(parts, ignore_index=True)
+    shuffled = rows.sample(frac=1.0, random_state=3).reset_index(drop=True)
+    ordered = rows.sort_values(["shard", "term", "doc_id"]).reset_index(
+        drop=True)
+
+    def batches(pdf, n):
+        return [pdf.iloc[i:i + n] for i in range(0, len(pdf), n)]
+
+    def canon(pdf):
+        return pdf.sort_values(["shard", "term", "block_id"]).reset_index(
+            drop=True)
+
+    for bfn in (None, functools.partial(tf_part_np, k1=1.2, b=0.75,
+                                        avgdl=120.0)):
+        ref = canon(pd.concat(
+            encode_partition_pandas(batches(ordered, 1000), BLOCK_SIZE,
+                                    bfn),
+            ignore_index=True,
+        ))
+        arrow = canon(pa.Table.from_batches(list(
+            _encode_partition_arrow_unsorted(
+                [pa.RecordBatch.from_pandas(b, preserve_index=False)
+                 for b in batches(shuffled, 1000)],
+                BLOCK_SIZE, bfn,
+            )
+        )).to_pandas())
+        assert len(ref) > 3 * 40  # hot terms produced multi-block lists
+        assert list(arrow.columns) == list(ref.columns)
+        for col in ref.columns:
+            assert list(arrow[col]) == list(ref[col]), (col, bfn)
 
 
 def test_factored_vs_prod_scheme_parity(spark, tmp_path):
-    """weight_scheme='factored' (store tf-part, idf at query time — the
-    default) must be rank-identical to weight_scheme='prod' (store idf×tf
-    products, round-3 format) on the same corpus, scores equal within
-    float32-storage tolerance. The factored index stores strictly positive
-    block bounds; the prod one stores signed products — both must agree
-    through every scorer."""
+    """weight_scheme='factored' (store tf-part, idf at query time) must be
+    rank-identical to weight_scheme='prod' (store idf×tf products, round-3
+    format) on the same corpus, scores equal within float32-storage
+    tolerance. The factored index stores strictly positive block bounds;
+    the prod one stores signed products — both must agree through the
+    segment batch scorer and the term-major MaxScore path."""
     d_f, d_p = str(tmp_path / "fac"), str(tmp_path / "prd")
     pages = generate_pages(spark, N_DOCS, vocab_size=VOCAB)
     IndexBuilder(d_f, shard_size=256, n_groups=2,
@@ -303,24 +368,20 @@ def test_factored_vs_prod_scheme_parity(spark, tmp_path):
     queries = spark.createDataFrame(
         generate_queries_pandas(40, vocab_size=VOCAB)
     )
-    for mode_kwargs in (
-        dict(batch=True),
-        dict(batch=False, prune=True),
-        dict(batch=False, prune=False),
-    ):
+    m_f = _merged_copy(spark, d_f, str(tmp_path / "fac_merged"))
+    m_p = _merged_copy(spark, d_p, str(tmp_path / "prd_merged"))
+    for mode in ("batch", "maxscore"):
         a = (
-            segment_topk(read_segments(spark, d_f), queries, k=10,
-                         index_dir=d_f, **mode_kwargs)
+            _point_or_batch(spark, mode, d_f, queries, 10, m_f)
             .toPandas().sort_values(["query_id", "rank"])
             .reset_index(drop=True)
         )
         b = (
-            segment_topk(read_segments(spark, d_p), queries, k=10,
-                         index_dir=d_p, **mode_kwargs)
+            _point_or_batch(spark, mode, d_p, queries, 10, m_p)
             .toPandas().sort_values(["query_id", "rank"])
             .reset_index(drop=True)
         )
-        assert list(a["doc_id"]) == list(b["doc_id"]), mode_kwargs
+        assert list(a["doc_id"]) == list(b["doc_id"]), mode
         np.testing.assert_allclose(a["score"], b["score"], rtol=1e-4)
 
 
@@ -328,8 +389,9 @@ def test_segments_with_idf_serve_path_parity(spark, tmp_path):
     """segments_with_idf pre-joins idf onto a factored index's segments
     (one-time, at load) — scoring through it must be IDENTICAL (doc ids
     and float-exact scores: same kernel arithmetic, only the idf lookup
-    source differs) to the per-batch query-side annotation, across the
-    batch scorer, MaxScore, and exhaustive paths."""
+    source differs) to the per-batch query-side annotation. Pre-annotated
+    segments feed only the segment batch scorer; the term-major path reads
+    the merged layout."""
     from similaripy_spark.fulltext.wand import segments_with_idf
 
     d = str(tmp_path / "fac_serve")
@@ -343,25 +405,20 @@ def test_segments_with_idf_serve_path_parity(spark, tmp_path):
     plain = read_segments(spark, d)
     served = segments_with_idf(plain, d)
     assert "idf" in served.columns and "idf" not in plain.columns
-    for mode_kwargs in (
-        dict(batch=True),
-        dict(batch=False, prune=True),
-        dict(batch=False, prune=False),
-    ):
-        a = (
-            segment_topk(plain, queries, k=10, index_dir=d, **mode_kwargs)
-            .toPandas().sort_values(["query_id", "rank"])
-            .reset_index(drop=True)
-        )
-        b = (
-            segment_topk(served, queries, k=10, index_dir=d, **mode_kwargs)
-            .toPandas().sort_values(["query_id", "rank"])
-            .reset_index(drop=True)
-        )
-        assert list(a["doc_id"]) == list(b["doc_id"]), mode_kwargs
-        np.testing.assert_array_equal(
-            a["score"].to_numpy(), b["score"].to_numpy()
-        )
+    a = (
+        segment_topk(plain, queries, k=10, index_dir=d)
+        .toPandas().sort_values(["query_id", "rank"])
+        .reset_index(drop=True)
+    )
+    b = (
+        segment_topk(served, queries, k=10, index_dir=d)
+        .toPandas().sort_values(["query_id", "rank"])
+        .reset_index(drop=True)
+    )
+    assert list(a["doc_id"]) == list(b["doc_id"])
+    np.testing.assert_array_equal(
+        a["score"].to_numpy(), b["score"].to_numpy()
+    )
 
 
 def test_resume_adopts_committed_scheme(spark, tmp_path):

@@ -7,8 +7,6 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from pyspark.sql import functions as F
-
 from similaripy_spark.fulltext.index_build import (
     IndexBuilder,
     read_meta,
@@ -92,26 +90,6 @@ def test_term_major_topk_matches_sql(spark, built):
     )
     assert list(capped["doc_id"]) == list(expected["doc_id"])
     np.testing.assert_allclose(capped["score"], expected["score"], rtol=1e-4)
-
-
-def test_bucket_topk_matches_sql(spark, built):
-    """The per-term-bucket cogroup batch path (partial additive scores per
-    bucket, merged relationally) is rank-identical to the SQL path."""
-    from similaripy_spark.fulltext.wand import bucket_topk
-
-    d, pages = built
-    queries_pd = generate_queries_pandas(40, vocab_size=VOCAB)
-    queries = spark.createDataFrame(queries_pd)
-    expected = (
-        bm25_topk(bm25_weights(build_postings(pages)), queries, k=10)
-        .toPandas().sort_values(["query_id", "rank"]).reset_index(drop=True)
-    )
-    got = (
-        bucket_topk(spark, d, queries, k=10, n_buckets=16)
-        .toPandas().sort_values(["query_id", "rank"]).reset_index(drop=True)
-    )
-    assert list(got["doc_id"]) == list(expected["doc_id"])
-    np.testing.assert_allclose(got["score"], expected["score"], rtol=1e-4)
 
 
 def test_shard_size_auto_derivation(spark, tmp_path):
@@ -213,46 +191,3 @@ def test_decode_segments_bulk_speedup():
         f"bulk decode only {loop_s / bulk_s:.1f}x faster "
         f"({bulk_s * 1e3:.1f} ms vs {loop_s * 1e3:.1f} ms)"
     )
-
-
-def test_bucket_topk_pruned_exact_and_fires(spark, built):
-    """Bound-then-refine (VERDICT r3 item 5): on the Zipf corpus (hot terms
-    with df≈N ⇒ negative idf weights — the adversarial regime) the pruned
-    bucket path must be rank- AND score-identical to the exhaustive bucket
-    scan and to the doc-sharded path A, while actually classifying some
-    (query, term) pairs non-essential."""
-    from similaripy_spark.fulltext.wand import bucket_topk, essential_split
-
-    d, pages = built
-    queries_pd = generate_queries_pandas(120, vocab_size=VOCAB, seed=91)
-    queries = spark.createDataFrame(queries_pd)
-
-    exhaustive = (
-        bucket_topk(spark, d, queries, k=10, prune=False)
-        .toPandas().sort_values(["query_id", "rank"]).reset_index(drop=True)
-    )
-    pruned = (
-        bucket_topk(spark, d, queries, k=10, prune=True)
-        .toPandas().sort_values(["query_id", "rank"]).reset_index(drop=True)
-    )
-    assert list(pruned["query_id"]) == list(exhaustive["query_id"])
-    assert list(pruned["doc_id"]) == list(exhaustive["doc_id"])
-    np.testing.assert_allclose(pruned["score"], exhaustive["score"], rtol=1e-9)
-
-    patha = (
-        segment_topk(read_segments(spark, d), queries, k=10, index_dir=d)
-        .toPandas().sort_values(["query_id", "rank"]).reset_index(drop=True)
-    )
-    assert list(pruned["doc_id"]) == list(patha["doc_id"])
-    np.testing.assert_allclose(pruned["score"], patha["score"], rtol=1e-4)
-
-    qterms = (
-        queries.select("query_id", F.explode("terms").alias("term"))
-        .distinct()
-        .withColumn("bucket", F.crc32(F.col("term")) % 16)
-    )
-    split = essential_split(spark, d, qterms, 10).cache()
-    n_ne = split.filter(~F.col("essential")).count()
-    n_all = split.count()
-    assert n_ne > 0, "pruning never fired on the Zipf corpus"
-    print(f"non-essential pairs: {n_ne}/{n_all}")

@@ -143,9 +143,6 @@ def test_empty_and_null_not_terms_are_noops(spark, corpus, indexed):
 
 
 def test_not_terms_unsupported_paths_raise(spark, queries, indexed):
-    seg = read_segments(spark, indexed)
-    with pytest.raises(ValueError):
-        segment_topk(seg, queries, k=K, index_dir=indexed, batch=False)
     with pytest.raises(ValueError):
         open_index(spark, indexed, cache=False).topk(
             queries, k=K, path="term_major"

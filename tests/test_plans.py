@@ -86,6 +86,33 @@ def test_s_plus_exchange_budget(spark, li_matrix):
     assert n <= 8, f"exchange count grew to {n}:\n{physical_plan(out)}"
 
 
+def test_s_plus_exchange_budget_entry_input(spark):
+    """Entry-shaped input: ``__spark_entry__._li_matrix`` clusters lineitem
+    by orderkey below its aggregate at the session's
+    ``spark.sql.shuffle.partitions``, the same count the kernel's own row
+    repartition uses, so that repartition elides and the cosine plan has
+    exactly 6 Exchange nodes (one full-matrix exchange per join side).
+    Broadcast joins are disabled so the plan has the shape it takes once
+    the join sides outgrow the broadcast threshold. Building the input at a
+    different partition count than the kernel's brings exchanges back."""
+    import __spark_entry__ as E
+
+    conf = spark.conf
+    n_part = conf.get("spark.sql.shuffle.partitions")
+    bcast = conf.get("spark.sql.autoBroadcastJoinThreshold")
+    conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        out = sps.cosine(E._li_matrix(spark, SF), k=10)
+        n = count_exchanges(out)
+        assert n == 6, f"exchange count {n}, expected 6:\n{physical_plan(out)}"
+        m = E._li_matrix(spark, SF)
+        conf.set("spark.sql.shuffle.partitions", str(2 * int(n_part)))
+        assert count_exchanges(sps.cosine(m, k=10)) > 6
+    finally:
+        conf.set("spark.sql.shuffle.partitions", n_part)
+        conf.set("spark.sql.autoBroadcastJoinThreshold", bcast)
+
+
 def test_matrix_weighting_skew_safe_plan_shapes(spark, li_matrix):
     """tfidf/bm25/normalize never window-partition by a corpus-sized key:
     term stats are groupBy aggregates joined back (map-side combine + AQE

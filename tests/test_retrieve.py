@@ -25,8 +25,7 @@ def built(spark, tmp_path_factory):
 
 def test_route_pure():
     assert route(5, has_merged=True) == "term_major"
-    # measured: the shard sweep dominates beyond point batches; the bucket
-    # path is never auto-chosen (wand.bucket_topk docstring)
+    # measured: the shard sweep dominates beyond point batches
     assert route(500, has_merged=True) == "segment"
     assert route(10_000, has_merged=True) == "segment"
     # without the merged layout only the segment path exists
@@ -52,14 +51,12 @@ def test_paths_rank_identical(spark, built, n_queries):
             .sort_values(["query_id", "rank"])
             .reset_index(drop=True)
         )
-        for p in ("segment", "bucket", "term_major")
+        for p in ("segment", "term_major")
     }
-    base = frames["segment"]
-    for p in ("bucket", "term_major"):
-        got = frames[p]
-        assert list(got["query_id"]) == list(base["query_id"]), p
-        assert list(got["doc_id"]) == list(base["doc_id"]), p
-        np.testing.assert_allclose(got["score"], base["score"], rtol=1e-4)
+    base, got = frames["segment"], frames["term_major"]
+    assert list(got["query_id"]) == list(base["query_id"])
+    assert list(got["doc_id"]) == list(base["doc_id"])
+    np.testing.assert_allclose(got["score"], base["score"], rtol=1e-4)
 
 
 def test_auto_routing_matches_forced(spark, built):
@@ -86,7 +83,7 @@ def test_missing_merged_rejected(spark, tmp_path):
     assert topk(spark, d, queries, k=5).count() > 0
     # …but an explicit merged-layout path is an error
     with pytest.raises(ValueError, match="merged layout"):
-        topk(spark, d, queries, k=5, path="bucket")
+        topk(spark, d, queries, k=5, path="term_major")
 
 
 def test_text_queries_tokenized_like_build(spark, built):
@@ -181,6 +178,7 @@ def test_and_mode_relational_parity(spark, built):
     from similaripy_spark.fulltext.wand import (
         segment_topk,
         segments_with_idf,
+        term_major_topk,
     )
     from similaripy_spark.fulltext.weights import bm25_weights
     from similaripy_spark.fulltext.postings import build_postings
@@ -219,18 +217,22 @@ def test_and_mode_relational_parity(spark, built):
     assert list(got["query_id"]) == list(exp["query_id"])
     np.testing.assert_allclose(got["score"], exp["score"], rtol=1e-4)
 
-    # point path + serve path parity
+    # serve path (idf-annotated segments) + term-major point path parity
     meta = read_meta(built)
     sids = list(range(int(meta["n_shards"])))
     seg = segments_with_idf(read_segments(spark, built), built)
-    for kwargs in (dict(batch=False), dict(batch=True)):
+    alts = {
+        "segment": segment_topk(seg, queries, k=10, shard_ids=sids,
+                                index_dir=built, mode="and"),
+        "term_major": term_major_topk(spark, built, queries, k=10,
+                                      mode="and"),
+    }
+    for name, df in alts.items():
         alt = (
-            segment_topk(seg, queries, k=10, shard_ids=sids,
-                         index_dir=built, mode="and", **kwargs)
-            .toPandas().sort_values(["query_id", "rank"])
+            df.toPandas().sort_values(["query_id", "rank"])
             .reset_index(drop=True)
         )
-        assert list(alt["doc_id"]) == list(got["doc_id"]), kwargs
+        assert list(alt["doc_id"]) == list(got["doc_id"]), name
 
 
 def test_and_mode_term_major_parity(spark, built):
@@ -258,8 +260,6 @@ def test_and_mode_term_major_parity(spark, built):
     np.testing.assert_allclose(tm["score"], seg["score"], rtol=1e-6)
     # the absent-term query returned nothing on either path
     assert 0 not in set(seg["query_id"])
-    with pytest.raises(ValueError, match="bucket"):
-        topk(spark, built, queries, k=10, mode="and", path="bucket")
 
 
 def test_open_index_handle_parity(spark, built):
@@ -311,28 +311,42 @@ def test_open_index_raw_text_queries(spark, built):
     assert list(got["doc_id"]) == list(want["doc_id"])
 
 
-def test_bmw_scorer_point_path_parity(spark, built):
-    """scorer='bmw' through the term-major point path must equal the
-    default MaxScore path row-for-row (measured-loss kernel kept available;
-    wand._score_bmw docstring carries the verdict)."""
-    from similaripy_spark.fulltext.wand import term_major_topk
+def test_removed_query_options_raise(spark, built, tmp_path):
+    """The bucket path, the term-major scorer choice, the segment path's
+    query-at-a-time loop and the non-default block encoders are gone: an
+    option that selected one now raises instead of silently running the
+    default."""
+    from similaripy_spark.fulltext.append import append_to_index
+    from similaripy_spark.fulltext.index_build import read_segments
+    from similaripy_spark.fulltext.postings import build_postings
+    from similaripy_spark.fulltext.retrieve import open_index
+    from similaripy_spark.fulltext.wand import segment_topk, term_major_topk
 
     queries = spark.createDataFrame(
-        generate_queries_pandas(12, vocab_size=VOCAB)
+        generate_queries_pandas(4, vocab_size=VOCAB)
     )
-    a = (
-        term_major_topk(spark, built, queries, k=10, scorer="bmw")
-        .toPandas().sort_values(["query_id", "rank"]).reset_index(drop=True)
-    )
-    b = (
-        term_major_topk(spark, built, queries, k=10, scorer="maxscore")
-        .toPandas().sort_values(["query_id", "rank"]).reset_index(drop=True)
-    )
-    assert list(a["query_id"]) == list(b["query_id"])
-    assert list(a["doc_id"]) == list(b["doc_id"])
-    np.testing.assert_allclose(a["score"], b["score"], rtol=1e-6)
-    with pytest.raises(ValueError, match="scorer"):
-        term_major_topk(spark, built, queries, k=10, scorer="wand2")
+    h = open_index(spark, built, cache=False)
+    with pytest.raises(ValueError, match="unknown path 'bucket'"):
+        h.topk(queries, k=10, path="bucket")
+    with pytest.raises(ValueError, match="unknown path 'bucket'"):
+        topk(spark, built, queries, k=10, mode="and", path="bucket")
+    for scorer in ("bmw", "maxscore"):
+        with pytest.raises(TypeError, match="scorer"):
+            term_major_topk(spark, built, queries, k=10, scorer=scorer)
+    with pytest.raises(TypeError, match="prune"):
+        term_major_topk(spark, built, queries, k=10, prune=False)
+    seg = read_segments(spark, built)
+    for opt in ("batch", "prune"):
+        with pytest.raises(TypeError, match=opt):
+            segment_topk(seg, queries, k=10, index_dir=built, **{opt: True})
+    for enc in ("arrow", "arrow_stream", "pandas"):
+        with pytest.raises(TypeError, match="encoder"):
+            IndexBuilder(str(tmp_path / enc), encoder=enc)
+    with pytest.raises(TypeError, match="encoder"):
+        append_to_index(spark, built, pages=None, encoder="arrow")
+    pages = generate_pages(spark, 10, vocab_size=VOCAB)
+    with pytest.raises(TypeError, match="engine"):
+        build_postings(pages, engine="pandas")
 
 
 def test_describe_index(spark, built):

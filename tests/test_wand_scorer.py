@@ -163,60 +163,21 @@ def test_batch_and_mode_matches_intersect():
         np.testing.assert_allclose(sub["score"], s1, rtol=1e-9)
 
 
-@pytest.mark.parametrize("neg_shift", [0.0, 1.5, 3.5])
-@pytest.mark.parametrize("seed", [1, 2, 3])
-def test_bmw_matches_exhaustive(seed, neg_shift):
-    """Block-Max WAND (best-first segment scoring) must be rank- and
-    score-exact vs the exhaustive scan, including the all-negative hot-term
-    regime where upper bounds clamp to 0."""
-    from similaripy_spark.fulltext.wand import _score_bmw
-
-    rng = np.random.default_rng(seed)
-    seg = make_shard(rng, neg_shift=neg_shift)
-    terms = sorted(seg["term"].unique())
-    idx_e, idx_b = _ShardIndex(seg), _ShardIndex(seg)
-    for _ in range(120):
-        qt = list(rng.choice(terms, size=int(rng.integers(1, 7)), replace=False))
-        k = int(rng.integers(1, 20))
-        d1, s1 = _local_topk(*_score_exhaustive(idx_e, qt), k)
-        d2, s2 = _local_topk(*_score_bmw(idx_b, qt, k), k)
-        assert np.array_equal(d1, d2), (
-            f"qt={qt} k={k}: exh={list(zip(d1, s1))[:5]} "
-            f"bmw={list(zip(d2, s2))[:5]}"
-        )
-        np.testing.assert_allclose(s1, s2, rtol=1e-6)
-
-
-def test_bmw_factored_negative_idf():
-    """BMW under a factored index with negative idf multipliers: term_meta
-    flips the stored bounds; UB clamps them at 0. Must equal exhaustive."""
-    from similaripy_spark.fulltext.wand import _score_bmw
-
+def test_maxscore_factored_negative_idf():
+    """Block-Max MaxScore under a factored index with negative idf
+    multipliers: term_meta flips the stored bounds (effective max = idf ×
+    stored min). Must equal the exhaustive scan."""
     rng = np.random.default_rng(9)
     seg = make_shard(rng, neg_shift=0.0)
     # stored weights must be positive tf-parts for the factored contract
     terms = sorted(seg["term"].unique())
     idf = {t: (-2.5 if i % 3 == 0 else 1.0 + i * 0.01)
            for i, t in enumerate(terms)}
-    idx_e, idx_b = _ShardIndex(seg, idf=idf), _ShardIndex(seg, idf=idf)
+    idx_e, idx_m = _ShardIndex(seg, idf=idf), _ShardIndex(seg, idf=idf)
     for _ in range(60):
         qt = list(rng.choice(terms, size=int(rng.integers(1, 6)), replace=False))
         k = int(rng.integers(1, 15))
         d1, s1 = _local_topk(*_score_exhaustive(idx_e, qt), k)
-        d2, s2 = _local_topk(*_score_bmw(idx_b, qt, k), k)
+        d2, s2 = _local_topk(*_score_maxscore(idx_m, qt, k), k)
         assert np.array_equal(d1, d2), f"qt={qt} k={k}"
         np.testing.assert_allclose(s1, s2, rtol=1e-6)
-
-
-def test_bmw_unknown_and_single_term():
-    from similaripy_spark.fulltext.wand import _score_bmw
-
-    rng = np.random.default_rng(7)
-    seg = make_shard(rng)
-    idx = _ShardIndex(seg)
-    d, s = _score_bmw(idx, ["nope"], 5)
-    assert len(d) == 0 and len(s) == 0
-    d1, s1 = _local_topk(*_score_exhaustive(idx, ["t000"]), 5)
-    d2, s2 = _local_topk(*_score_bmw(idx, ["t000"], 5), 5)
-    assert np.array_equal(d1, d2)
-    np.testing.assert_allclose(s1, s2, rtol=1e-6)
