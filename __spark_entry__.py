@@ -44,8 +44,9 @@ def _spread(spark, df, path):
     only local paths are supported. On object storage the check cannot
     list the table: os.path.isdir is False for a URI, and pyarrow then
     either raises on a scheme it does not know (s3a:// gives ArrowInvalid,
-    a ValueError the OSError handler below does not catch) or reads the
-    footers outside Spark's credentials and configuration."""
+    a ValueError) or reads the footers outside Spark's credentials and
+    configuration. Both errors leave ``df`` unchanged: the spread is an
+    optimization, never a precondition of the scan."""
     par = spark.sparkContext.defaultParallelism
     try:
         import pyarrow.parquet as pq
@@ -63,7 +64,7 @@ def _spread(spark, df, path):
                     return df
         else:
             groups = pq.ParquetFile(path).metadata.num_row_groups
-    except OSError:
+    except (OSError, ValueError):
         return df
     if groups >= par:
         return df

@@ -35,6 +35,7 @@ from __future__ import annotations
 import os
 
 import numpy as np
+import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -67,12 +68,17 @@ def delete_docs(
             # driver-side dataset read to every query batch)
             raise ValueError("delete_docs: empty doc_id set")
     else:
-        ids = [int(x) for x in doc_ids]
-        if not ids:
+        ids = np.unique(np.asarray([int(x) for x in doc_ids], np.int64))
+        if not len(ids):
             raise ValueError("delete_docs: empty doc_id set")
+        # dedup on the driver and write from a pandas frame: it plans as a
+        # one-task LocalTableScan. A Python-list frame plans as a PythonRDD
+        # (one Python task per core, each paying the worker's per-task
+        # fixed cost) plus a distinct exchange — for a list already in
+        # driver memory.
         df = spark.createDataFrame(
-            [(i,) for i in ids], "doc_id long"
-        ).distinct()
+            pd.DataFrame({"doc_id": ids}), "doc_id long"
+        ).coalesce(1)
     path = os.path.join(index_dir, f"tombstones_epoch_{epoch}")
     tmp = commit.stage_path(path)
     df.write.mode("overwrite").parquet(tmp)

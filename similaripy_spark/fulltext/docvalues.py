@@ -244,8 +244,13 @@ def _pack_dict_codes(
     """(shard, base_doc, n, codes) rows: dense per-shard uint16 arrays
     coding ``field`` against the given ordered dictionary (code i+1 =
     vals[i]; 0 = NULL / absent)."""
+    # from pandas: plans as LocalTableScan, not a PythonRDD of Python tasks
+    # that only unpickle the dictionary
     code_df = spark.createDataFrame(
-        [(v, i + 1) for i, v in enumerate(vals)],
+        pd.DataFrame({
+            "__dv_value": vals,
+            "__dv_code": np.arange(1, len(vals) + 1, dtype=np.int32),
+        }),
         T.StructType(
             [
                 T.StructField("__dv_value", T.StringType(), False),

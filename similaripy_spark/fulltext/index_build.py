@@ -116,10 +116,12 @@ def _encode_partition_arrow_unsorted(batches, block_size: int,
 
     Memory safety at scale, by input layout (ADVICE r4: keep this in sync
     with ``_segment_plan``): on the SHUFFLE path the plan hash-partitions
-    on (shard, term-salt) into ≥ SIMILARIPY_BUILD_PARTS_PER_SHARD (default
-    1) partitions per shard, so a partition buffers at most a few shards'
-    payloads, each bounded by ``shard_size`` — a deployment knob, not
-    data-dependent; corpus growth adds partitions, not partition size. On
+    on (shard, term-salt) into ``max(per_shard × n_shards, cores)``
+    partitions (per_shard = SIMILARIPY_BUILD_PARTS_PER_SHARD, default 1),
+    so a partition buffers at most a few shards' payloads, each bounded by
+    ``shard_size`` — a deployment knob, not data-dependent; the cores
+    floor only ever adds partitions (smaller ones), and corpus growth adds
+    partitions, not partition size. On
     the ALIGNED path there is no exchange, so the buffered size is the
     INPUT partition — bounded only by the caller's corpus layout (one
     parquet split of complete shards). An aligned corpus with unusually
@@ -318,6 +320,9 @@ class IndexBuilder:
         self._bounds_avgdl: float | None = None
         #: per-phase build wall (ms), reset per build_from_postings run
         self._phase_ms: dict[str, int] = {}
+        #: encoder partition count of the last segment plan (None: aligned
+        #: layout or no group built) — published beside the phases
+        self._segment_parts: int | None = None
 
     # --- lineage helpers --------------------------------------------------
     def _lineage_path(self, group: int) -> str:
@@ -408,6 +413,7 @@ class IndexBuilder:
         meta_path = os.path.join(self.index_dir, "meta.json")
         run_id = uuid.uuid4().hex[:12]
         self._phase_ms: dict[str, int] = {}
+        self._segment_parts = None
         t_build0 = time.monotonic()
 
         resumed_meta = None
@@ -523,7 +529,10 @@ class IndexBuilder:
             )
             self.commit.publish_json(
                 os.path.join(self.index_dir, "lineage", "build_metrics.json"),
-                {"run_id": run_id, "phase_ms": dict(self._phase_ms)},
+                # segment_parts stays top-level: every phase_ms key is
+                # read as a wall-time phase
+                {"run_id": run_id, "phase_ms": dict(self._phase_ms),
+                 "segment_parts": self._segment_parts},
             )
             if os.environ.get("SIMILARIPY_BUILD_METRICS_STDERR") == "1":
                 print(f"build phases: {self._phase_ms}", file=sys.stderr)
@@ -621,17 +630,29 @@ class IndexBuilder:
         """repartition(shard, term-salt) → Arrow block encode (the encoder
         lexsorts its partition in-kernel: no JVM row sort in the plan).
 
-        Partition count: ≥1 per shard and ≥4× the core count. The term salt
-        splits each shard into 4 sub-keys, so even n_parts == n_shards hash
-        partitioning balances well (4S balls into S bins; worst bin ~3
-        shards, amortized when tasks/core ≥ 4). Over-provisioning beyond
-        that costs real money: every extra task pays scheduler dispatch,
-        a python-worker Arrow stream setup, and its own parquet file opens
-        — measured at 300k docs/64 shards: 256 partitions → 64 cut the
-        8-core segment job ~11% and the 2-core one ~18%. At cluster scale
-        n_shards ≫ 4×cores, so the count degenerates to one task per shard
-        — the natural unit, since the encoder buffers per-partition memory
-        bounded by shards-per-partition × shard_size."""
+        Partition count: ``max(per_shard × n_shards, cores)`` — one task
+        per shard (the positional sidecar's rule, positional.py), never
+        fewer tasks than cores. The term salt splits each shard into 4
+        sub-keys, so even n_parts == n_shards hash partitioning balances
+        well (4S balls into S bins; worst bin ~3 shards).
+
+        Every extra task costs more than its dispatch: each Python task
+        pays ~0.2 CPU-s of worker fixed cost before it runs any engine
+        code (PySpark's ``setup_spark_files`` calls
+        ``importlib.invalidate_caches()`` per task, which re-reads the
+        pyspark.zip directory once per cached zipimporter — measured on 4
+        cores, Python 3.11: a ``mapInArrow`` identity job cost 2.9-3.2
+        Python CPU-s at 16 tasks vs 0.8-0.9 s at 4, workers reused), plus
+        its own parquet file opens under ``partitionBy(group)``. The old
+        floor of 4× cores (and 8) bought load balance that small builds
+        did not need: an 8-shard build and a 2-shard append epoch each ran
+        16 encoder tasks on 4 cores, most of them near-empty, and the
+        fixed cost dominated the build's Python CPU. When n_shards ≥
+        4×cores the count is unchanged (one task per shard — the natural
+        unit, since the encoder buffers per-partition memory bounded by
+        shards-per-partition × shard_size), and so is every large-index
+        measurement: at 300k docs/64 shards, 256 partitions → 64 cut the
+        8-core segment job ~11% and the 2-core one ~18%."""
         bs = self.block_size
 
         # the exchange/sort payload is exactly what the encoder consumes:
@@ -670,14 +691,16 @@ class IndexBuilder:
         if self.input_layout == "aligned":
             # input partitions already hold complete shards (narrow lineage
             # preserved through build_postings): no exchange at all — the
-            # encoder forms the posting lists in place
+            # encoder forms the posting lists in place, so the count is the
+            # caller's input layout and none is planned here
+            self._segment_parts = None
             return encode(weighted)
         per_shard = int(os.environ.get("SIMILARIPY_BUILD_PARTS_PER_SHARD", "1"))
         n_parts = max(
             per_shard * max(n_shards_in, 1),
-            4 * weighted.sparkSession.sparkContext.defaultParallelism,
-            8,
+            weighted.sparkSession.sparkContext.defaultParallelism,
         )
+        self._segment_parts = n_parts
         return encode(
             weighted.repartition(
                 n_parts, F.col("shard"), F.crc32(F.col("term")) % 4

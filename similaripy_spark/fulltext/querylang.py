@@ -52,6 +52,8 @@ from __future__ import annotations
 import re
 from functools import reduce
 
+import pandas as pd
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -200,8 +202,14 @@ def search(
             handle = IndexHandle(
                 spark, index_dir, cache=False, annotate_segments=False
             )
+        # one-row frames come from pandas so they plan as LocalTableScan,
+        # not a PythonRDD of Python tasks that only unpickle the row
         qdf = spark.createDataFrame(
-            [(int(query_id), p["terms"], p["not_terms"] or None)],
+            pd.DataFrame({
+                "query_id": [int(query_id)],
+                "terms": [p["terms"]],
+                "not_terms": [p["not_terms"] or None],
+            }),
             T.StructType(
                 [
                     T.StructField("query_id", T.LongType(), False),
@@ -233,7 +241,8 @@ def search(
     phrase_sets = []
     for i, ph in enumerate(p["phrases"]):
         pq = spark.createDataFrame(
-            [(i, ph)], "query_id long, terms array<string>"
+            pd.DataFrame({"query_id": [i], "terms": [ph]}),
+            "query_id long, terms array<string>",
         )
         phrase_sets.append(
             phrase_topk_pos(spark, index_dir, pq, k=1 << 62)

@@ -29,6 +29,9 @@ from __future__ import annotations
 
 import os
 
+import numpy as np
+import pandas as pd
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -309,8 +312,13 @@ class IndexHandle:
 
         spark = self.spark
         if not isinstance(seed_ids, DataFrame):
+            # a pandas frame plans as LocalTableScan; a Python list would
+            # plan as a PythonRDD (Python tasks that only unpickle ids)
             seed_ids = spark.createDataFrame(
-                [(int(i),) for i in seed_ids], "doc_id long"
+                pd.DataFrame({"doc_id": np.asarray(
+                    [int(i) for i in seed_ids], np.int64
+                )}),
+                "doc_id long",
             )
         seeds = pages.join(
             F.broadcast(seed_ids.select("doc_id").distinct()),

@@ -44,7 +44,7 @@ import os
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -866,6 +866,20 @@ def _score_batch(
     return pd.concat(out_parts, ignore_index=True)
 
 
+def _shard_frame(spark: SparkSession, shard_ids: list) -> DataFrame:
+    """The broadcast shard list of ``segment_topk`` as a ``LocalTableScan``.
+
+    Keep it a pandas frame: a Python-list ``createDataFrame`` plans as
+    ``Scan ExistingRDD`` (a PythonRDD), so every query batch would spend
+    one Python task per core just to unpickle the shard ids, each paying
+    the worker's ~0.2 CPU-s per-task fixed cost (index_build._segment_plan).
+    """
+    return spark.createDataFrame(
+        pd.DataFrame({"shard": np.asarray(shard_ids, dtype=np.int32)}),
+        "shard int",
+    )
+
+
 def segment_topk(
     segments: DataFrame,
     queries: DataFrame,
@@ -1014,7 +1028,7 @@ def segment_topk(
             r["shard"] for r in segments.select("shard").distinct().collect()
         ]
     shards_list = [int(s) for s in shard_ids]
-    shards = spark.createDataFrame([(s,) for s in shards_list], "shard int")
+    shards = _shard_frame(spark, shards_list)
     qcols = (
         ["query_id", "terms"]
         + (["weights"] if query_weighted else [])
@@ -1077,9 +1091,7 @@ def segment_topk(
             # pass-1 sampling: prune BOTH sides to the sampled shards so
             # the un-sampled shards' segment rows never reach Python
             seg = seg.filter(F.col("shard").isin(shard_subset))
-            sh = spark.createDataFrame(
-                [(s,) for s in shard_subset], "shard int"
-            )
+            sh = _shard_frame(spark, shard_subset)
         qx = qdf.select(*qdf_cols).crossJoin(F.broadcast(sh))
         return (
             seg.groupby("shard")

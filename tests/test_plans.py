@@ -113,6 +113,32 @@ def test_s_plus_exchange_budget_entry_input(spark):
         conf.set("spark.sql.autoBroadcastJoinThreshold", bcast)
 
 
+def test_spread_object_store_path_returns_df_unchanged(spark, tmp_path):
+    """``_spread`` reads footers through the local filesystem; on an
+    object-store URI pyarrow raises ArrowInvalid (a ValueError), which must
+    leave the scan as it is. Local paths keep their behaviour: a
+    one-row-group file is spread over the cores, a table with one file per
+    core is not."""
+    import pandas as pd
+
+    import __spark_entry__ as E
+
+    df = spark.range(10)
+    assert E._spread(spark, df, "s3a://bucket/t.parquet") is df
+
+    par = spark.sparkContext.defaultParallelism
+    one = str(tmp_path / "one.parquet")
+    pd.DataFrame({"x": range(10)}).to_parquet(one)
+    spread = E._spread(spark, spark.read.parquet(one), one)
+    assert spread.rdd.getNumPartitions() == par
+    many = tmp_path / "many"
+    many.mkdir()
+    for i in range(par):
+        pd.DataFrame({"x": [i]}).to_parquet(many / f"part-{i}.parquet")
+    scan = spark.read.parquet(str(many))
+    assert E._spread(spark, scan, str(many)) is scan
+
+
 def test_matrix_weighting_skew_safe_plan_shapes(spark, li_matrix):
     """tfidf/bm25/normalize never window-partition by a corpus-sized key:
     term stats are groupBy aggregates joined back (map-side combine + AQE
