@@ -95,20 +95,26 @@ def merged_n_buckets(index_dir: str, default: int = 64) -> int:
         return default
 
 
+def open_merged(spark: SparkSession, index_dir: str) -> DataFrame:
+    """The merged layout as one relation. Opening it lists every
+    ``term_bucket=`` directory: at the default 64 buckets (above Spark's
+    32-path parallel-discovery threshold) that is a listing job plus a
+    schema job, so a server opens it once and filters it per call
+    (``read_merged_for_terms``)."""
+    return spark.read.parquet(os.path.join(index_dir, "merged"))
+
+
 def read_merged_for_terms(
-    spark: SparkSession,
-    index_dir: str,
-    terms: list[str],
-    n_buckets: int | None = None,
+    merged: DataFrame, terms: list[str], n_buckets: int
 ) -> DataFrame:
-    """Partition-pruned scan: only the buckets of the requested terms are
-    read (visible as PartitionFilters in .explain)."""
+    """Bucket-and-term filter over an opened merged relation
+    (``open_merged``): only the requested terms' buckets are read, visible
+    as PartitionFilters in .explain. ``n_buckets`` must be the count the
+    layout was written with (``merged_n_buckets``); a wrong one prunes the
+    wrong partitions. Runs no Spark job."""
     import zlib
 
-    if n_buckets is None:
-        n_buckets = merged_n_buckets(index_dir)
     buckets = sorted({zlib.crc32(t.encode()) % n_buckets for t in terms})
-    merged = spark.read.parquet(os.path.join(index_dir, "merged"))
     return merged.filter(
         F.col("term_bucket").isin(buckets) & F.col("term").isin(list(terms))
     )

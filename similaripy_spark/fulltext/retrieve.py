@@ -18,11 +18,14 @@ call while s_plus.h picks blocked vs single-pass accumulation internally
 
 ``topk(spark, index_dir, queries)`` routes on the query-batch size and the
 index's own metadata (``meta.json`` for the shard list — no per-call
-shard-discovery job — and ``merged/_meta.json`` for the bucket count). Every
-path returns the same (query_id, doc_id, score, rank) with the same
-deterministic tie rule (score DESC, doc_id ASC), so routing is a pure
-physical choice — parity across the routing boundaries is pinned in
-tests/test_retrieve.py.
+shard-discovery job — and ``merged/_meta.json`` for the bucket count). The
+route probe collects at most ``point_cutoff + 1`` query rows; a point batch
+is then served from those rows (the query side plans as a local scan), over
+the merged and idf relations the handle opened once, and each query's ranks
+come out of its scoring kernel. Every path returns the same (query_id,
+doc_id, score, rank) with the same deterministic tie rule (score DESC,
+doc_id ASC), so routing is a pure physical choice — parity across the
+routing boundaries is pinned in tests/test_retrieve.py.
 """
 
 from __future__ import annotations
@@ -37,9 +40,9 @@ from pyspark.sql import functions as F
 
 from similaripy_spark.fulltext.index_build import read_meta, read_segments
 from similaripy_spark.fulltext.wand import (
+    TermMajorIndex,
     segment_topk,
     segments_with_idf,
-    term_major_topk,
 )
 
 #: point-batch cutoff: at ≤32 queries the per-query term-major groups cost
@@ -90,12 +93,24 @@ class IndexHandle:
       ``idf`` join onto the segment relation (``segments_with_idf`` —
       measured +30% wall per 10k-query batch when paid per call instead),
       with the annotated segments persisted (``cache=True``) so repeated
-      batches read memory, not parquet.
+      batches read memory, not parquet;
+    * on a merged index, the term-major state (``wand.TermMajorIndex``):
+      the merged relation (its 64-bucket listing is a Spark job), the
+      bucket count from ``merged/_meta.json`` and the idf relation over
+      ``term_stats``. It is opened at ``.warm()`` or at the first
+      term-major call, never at construction, so a handle over an
+      unmerged index launches no job for it.
 
     Every ``.topk()`` batch then reuses the loaded state. Constructing the
     handle runs NO Spark job (reads are lazy; persist is lazy) — call
-    ``.warm()`` to materialize the segment cache eagerly, ``.close()`` (or
-    use it as a context manager) to release it.
+    ``.warm()`` to materialize the segment cache and open the term-major
+    state eagerly, ``.close()`` (or use it as a context manager) to
+    release it.
+
+    The handle is a snapshot of the index it opened: ``append_to_index``
+    renames ``merged/`` away and changes the corpus statistics, so reopen
+    after an append. Deletes need no reopen: both paths re-read the
+    tombstones on every call.
 
     One-shot convenience: ``retrieve.topk`` is this handle with
     ``cache=False, annotate_segments=False`` — a single uncached call
@@ -124,11 +139,20 @@ class IndexHandle:
             segments = segments_with_idf(segments, index_dir)
         self._cached = cache
         self.segments = segments.persist() if cache else segments
+        self._term_major = None
+
+    def _open_term_major(self) -> TermMajorIndex:
+        if self._term_major is None:
+            self._term_major = TermMajorIndex(self.spark, self.index_dir)
+        return self._term_major
 
     def warm(self) -> "IndexHandle":
-        """Materialize the (annotated) segment cache now, so the first
-        query batch doesn't pay the load."""
+        """Materialize the (annotated) segment cache now, and open the
+        term-major state of a merged index, so the first query batch of
+        either route doesn't pay the load."""
         self.segments.count()
+        if self.has_merged:
+            self._open_term_major()
         return self
 
     def topk(
@@ -166,8 +190,11 @@ class IndexHandle:
         ``path`` forces 'segment' | 'term_major' (parity testing / expert
         override). Weighted queries (``weights`` column)
         are only supported by the batch scorer, so they always route to
-        'segment'. Routing counts the query batch — one action over the
-        (small) query side only; pass ``path`` to skip even that.
+        'segment'. Routing collects at most ``point_cutoff + 1`` rows of
+        ``(query_id, terms)`` — one action over the (small) query side
+        only, which a point batch reuses as its query side; pass ``path``
+        to skip even that (a forced term-major call then collects the
+        batch's distinct terms instead).
         """
         queries = _ensure_terms(queries)
         if mode not in ("or", "and"):
@@ -190,14 +217,19 @@ class IndexHandle:
                 "not_terms (MUST_NOT) is served by the segment batch "
                 f"scorer; path={path!r} does not support it"
             )
+        rows = None
         if (query_weighted or min_match is not None or filter is not None
                 or has_not):
             path = "segment"
         elif path is None:
             # routing only needs "≤ point_cutoff?" — the limit makes the
-            # probe CollectLimit-cheap on arbitrarily large batches
-            n_q = queries.limit(point_cutoff + 1).count()
-            path = route(n_q, self.has_merged, point_cutoff)
+            # probe CollectLimit-cheap on arbitrarily large batches, and a
+            # point batch's rows are all the term-major path needs
+            rows = [
+                tuple(r) for r in queries.select("query_id", "terms")
+                .limit(point_cutoff + 1).collect()
+            ]
+            path = route(len(rows), self.has_merged, point_cutoff)
         elif path != "segment" and not self.has_merged:
             raise ValueError(
                 f"path={path!r} needs the term-major merged layout; run "
@@ -217,8 +249,8 @@ class IndexHandle:
                 min_match=min_match,
                 dv_filter=filter,
             )
-        return term_major_topk(
-            self.spark, self.index_dir, queries, k=k, mode=mode
+        return self._open_term_major().topk(
+            queries, k, mode=mode, rows=rows
         )
 
     def search(self, q: str, k: int = 10, query_id: int = 0) -> DataFrame:

@@ -8,6 +8,8 @@ Distributed shape:
   shard against that shard's posting blocks in one Arrow pass.
 * **Local top-k, global merge**: each shard emits its local top-k per query
   (global top-k ⊆ union of shard top-k); a windowed top-k merges them.
+  The term-major point path needs no merge: a query's group holds every
+  block of its terms, so its kernel emits the final ranks.
 
 Two query paths, each with its own exact scorer (``retrieve.route`` picks
 the path):
@@ -483,6 +485,12 @@ _EMPTY_RESULT = {
     "doc_id": pd.Series(dtype="int64"),
     "score": pd.Series(dtype="float64"),
 }
+
+_RANKED_SCHEMA = T.StructType(
+    _RESULT_SCHEMA.fields + [T.StructField("rank", T.IntegerType(), False)]
+)
+
+_EMPTY_RANKED = {**_EMPTY_RESULT, "rank": pd.Series(dtype="int32")}
 
 
 def _attach_idfs(queries: DataFrame, idf_df: DataFrame) -> DataFrame:
@@ -1163,6 +1171,138 @@ def segment_topk(
     return out.select("query_id", "doc_id", "score", "rank")
 
 
+class TermMajorIndex:
+    """The per-index state of the term-major point path, opened once.
+
+    Opening reads ``meta.json`` and ``merged/_meta.json`` (driver-side
+    file reads) and opens two relations: the merged layout
+    (``index_merge.open_merged``, whose file listing is a Spark job at 64
+    buckets) and, for RAW and FACTORED indexes, the ``(term, idf)`` table
+    over ``term_stats``. Every ``topk`` call then filters them to the
+    batch's terms. Tombstones are re-read per call (``delete_docs`` leaves
+    the layout in place and takes effect at once); an append renames
+    ``merged/`` away, so an opened instance is a snapshot of one layout.
+    """
+
+    def __init__(self, spark: SparkSession, index_dir: str,
+                 n_buckets: int | None = None):
+        from similaripy_spark.fulltext.index_build import read_meta
+        from similaripy_spark.fulltext.index_merge import (
+            merged_n_buckets,
+            open_merged,
+        )
+
+        self.index_dir = index_dir
+        meta = read_meta(index_dir)
+        self.merged = open_merged(spark, index_dir)
+        self.n_buckets = (
+            merged_n_buckets(index_dir) if n_buckets is None else n_buckets
+        )
+        scheme = meta.get("weight_scheme", "prod")
+        self.idf = (
+            _index_idf_table(spark, index_dir)
+            if scheme in ("factored", "raw") else None
+        )
+        self.raw_params = (
+            _raw_params_from_meta(meta) if scheme == "raw" else None
+        )
+
+    def topk(
+        self,
+        queries: DataFrame,
+        k: int = 10,
+        *,
+        mode: str = "or",
+        rows: list | None = None,
+        max_pruned_terms: int = 10_000,
+    ) -> DataFrame:
+        """See :func:`term_major_topk`. ``rows``: the batch's
+        ``(query_id, terms)`` rows when the caller has already collected
+        them (``IndexHandle.topk``'s route probe); the query side is then
+        built from pandas and needs no Spark job."""
+        from similaripy_spark.fulltext.index_build import read_meta
+        from similaripy_spark.fulltext.index_merge import (
+            read_merged_for_terms,
+        )
+
+        if mode not in ("or", "and"):
+            raise ValueError(f"mode must be 'or' or 'and', got {mode!r}")
+        spark = self.merged.sparkSession
+        if rows is not None:
+            qt = (
+                pd.DataFrame(rows, columns=["query_id", "term"])
+                .explode("term").dropna().drop_duplicates()
+            )
+            qt["query_id"] = qt["query_id"].astype(np.int64)
+            schema = "query_id long, term string"
+            if mode == "and":
+                qt["nreq"] = (qt.groupby("query_id")["term"]
+                              .transform("size").astype(np.int32))
+                schema += ", nreq int"
+            # a pandas frame plans as LocalTableScan (no Python task);
+            # one partition: its broadcast is one task, not one per core
+            qterms = spark.createDataFrame(qt, schema).coalesce(1)
+            terms = sorted(qt["term"].unique())
+        else:
+            uterms = F.array_distinct(F.array_compact("terms"))
+            qterms = queries.select(
+                "query_id",
+                *([F.size(uterms).alias("nreq")] if mode == "and" else []),
+                F.explode(uterms).alias("term"),
+            )
+            terms = [
+                r["term"] for r in qterms.select("term").distinct()
+                .limit(max_pruned_terms + 1).collect()
+            ]
+        if len(terms) > max_pruned_terms:
+            terms = None  # too many literals: semi-join instead
+        if self.idf is not None:
+            idf = (self.idf if terms is None
+                   else self.idf.filter(F.col("term").isin(terms)))
+            qterms = qterms.join(idf, "term", "left")
+        if terms is not None:
+            blocks = read_merged_for_terms(self.merged, terms, self.n_buckets)
+            joined = blocks.join(F.broadcast(qterms), "term")
+        else:
+            blocks = self.merged.join(
+                qterms.select("term").distinct(), "term", "left_semi"
+            )
+            joined = blocks.join(qterms, "term")
+
+        raw_params = self.raw_params
+        tomb = _tomb_for(self.index_dir, read_meta(self.index_dir))
+
+        def score_query(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+            seg = pdf.drop_duplicates(subset=["term", "shard", "block_id"])
+            idf = None
+            if "idf" in pdf.columns:
+                idf = dict(zip(
+                    pdf["term"],
+                    np.nan_to_num(pdf["idf"].to_numpy(np.float64), nan=0.0),
+                ))
+            idx = _ShardIndex(seg, idf=idf, raw=raw_params, tomb=tomb)
+            uterms = list(dict.fromkeys(pdf["term"]))
+            if "nreq" in pdf.columns:
+                if len(uterms) < int(pdf["nreq"].iloc[0]):
+                    return pd.DataFrame(_EMPTY_RANKED)
+                docs, scores = _score_intersect(idx, uterms)
+            else:
+                docs, scores = _score_maxscore(idx, uterms, k)
+            # the group holds every block of this query's terms, so its
+            # local top-k IS the query's top-k: rank it here
+            docs, scores = _local_topk(docs, scores, k)
+            return pd.DataFrame({
+                "query_id": np.full(len(docs), key[0], np.int64),
+                "doc_id": docs,
+                "score": scores,
+                "rank": np.arange(1, len(docs) + 1, dtype=np.int32),
+            })
+
+        return joined.groupby("query_id").applyInPandas(
+            score_query, schema=_RANKED_SCHEMA
+        )
+
+
 def term_major_topk(
     spark,
     index_dir: str,
@@ -1175,22 +1315,36 @@ def term_major_topk(
     """Point-query path over the term-major merged layout: bucket-pruned scan
     of exactly the queried terms' blocks, then one scoring pass per query.
 
+    Opens a :class:`TermMajorIndex` for this one call; a server holds one
+    (``retrieve.IndexHandle`` does) so the layout listing and the idf
+    relation are paid once per index, not per call.
+
+    Per call: one driver collect of the batch's distinct terms (capped at
+    ``max_pruned_terms``; ``IndexHandle.topk`` passes the rows its route
+    probe already collected, so its point calls need none). The terms
+    drive the bucket-and-term filter on the merged relation and restrict
+    the idf relation before the join, so the ``term_stats`` scan pushes
+    ``term IN (...)`` and the broadcast holds at most one row per queried
+    term. Above the cap the scan degrades to a semi-join on the query
+    terms (row-level pruning only, no partition pruning, but safe at any
+    batch size).
+
+    Each query's group holds every block of its terms, so the kernel's
+    local top-k is that query's exact top-k: the kernel emits ``rank``
+    1..n in (score DESC, doc_id ASC) order and there is no global top-k
+    (no window, no second exchange). Returns (query_id, doc_id, score,
+    rank) like every path.
+
     ``mode='and'``: rarest-first posting-list intersection inside the
     per-query group (every queried term's full posting list is shipped
     there, so the intersection is complete). Query terms absent from the
     index vanish at the blocks⋈terms join, so the query's distinct term
-    count is attached BEFORE the join (``nreq``) — a group holding fewer
-    distinct terms than nreq returns empty, the strict-AND contract.
+    count rides along on the query side (``nreq``) — a group holding
+    fewer distinct terms than nreq returns empty, the strict-AND contract.
 
     Best when the query batch is small and selective (the blocks of each
     query's terms are shipped to that query's group). For large batches use
     ``segment_topk`` — it amortizes decode per shard instead.
-
-    The partition-pruning ``isin`` literal list requires collecting the
-    distinct query terms to the driver; the collect is capped at
-    ``max_pruned_terms`` — above the cap the scan degrades to a semi-join
-    on the query terms (row-level pruning only, no partition pruning, but
-    safe at any batch size).
 
     OR queries are scored by Block-Max MaxScore (``_score_maxscore``).
     Block-Max WAND, run as best-first doc-range scoring, measured ~1.5×
@@ -1198,74 +1352,6 @@ def term_major_topk(
     unclamped idf makes hot terms' weights negative, so their blocks add 0
     to every upper bound yet must still be decoded for every visited range.
     """
-    from similaripy_spark.fulltext.index_merge import (
-        merged_n_buckets,
-        read_merged_for_terms,
+    return TermMajorIndex(spark, index_dir, n_buckets).topk(
+        queries, k, mode=mode, max_pruned_terms=max_pruned_terms
     )
-
-    if mode not in ("or", "and"):
-        raise ValueError(f"mode must be 'or' or 'and', got {mode!r}")
-    if n_buckets is None:
-        n_buckets = merged_n_buckets(index_dir)
-    qterms = queries.select("query_id", F.explode("terms").alias("term"))
-    qn = (
-        qterms.groupBy("query_id")
-        .agg(F.countDistinct("term").alias("nreq"))
-        if mode == "and" else None
-    )
-    from similaripy_spark.fulltext.index_build import read_meta
-
-    meta = read_meta(index_dir)
-    factored = _index_is_factored(index_dir)
-    raw_params = None
-    if factored:
-        if meta.get("weight_scheme") == "raw":
-            raw_params = _raw_params_from_meta(meta)
-        qterms = qterms.join(_index_idf_table(spark, index_dir), "term",
-                             "left")
-    tomb = _tomb_for(index_dir, meta)
-    dterms = qterms.select("term").distinct()
-    term_rows = dterms.limit(max_pruned_terms + 1).collect()
-    if len(term_rows) <= max_pruned_terms:
-        terms = [r["term"] for r in term_rows]
-        blocks = read_merged_for_terms(spark, index_dir, terms, n_buckets)
-        joined = blocks.join(F.broadcast(qterms), "term")
-    else:
-        merged = spark.read.parquet(os.path.join(index_dir, "merged"))
-        blocks = merged.join(dterms, "term", "left_semi")
-        joined = blocks.join(qterms, "term")
-    if qn is not None:
-        joined = joined.join(F.broadcast(qn), "query_id")
-
-    def score_query(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        qid = key[0]
-        seg = pdf.drop_duplicates(subset=["term", "shard", "block_id"])
-        idf = None
-        if "idf" in pdf.columns:
-            idf = {
-                t: (0.0 if v is None or (isinstance(v, float) and v != v)
-                    else float(v))
-                for t, v in zip(pdf["term"], pdf["idf"])
-            }
-        idx = _ShardIndex(seg, idf=idf, raw=raw_params, tomb=tomb)
-        uterms = list(dict.fromkeys(pdf["term"]))
-        if "nreq" in pdf.columns:
-            if len(uterms) < int(pdf["nreq"].iloc[0]):
-                return pd.DataFrame(_EMPTY_RESULT)
-            docs, scores = _score_intersect(idx, uterms)
-        else:
-            docs, scores = _score_maxscore(idx, uterms, k)
-        docs, scores = _local_topk(docs, scores, k)
-        return pd.DataFrame(
-            {"query_id": np.full(len(docs), qid, np.int64),
-             "doc_id": docs, "score": scores}
-        )
-
-    local = joined.groupby("query_id").applyInPandas(
-        score_query, schema=_RESULT_SCHEMA
-    )
-    out = top_k(
-        local, k, group="query_id", order_value="score", tiebreak="doc_id",
-        keep_rank=True,
-    )
-    return out.select("query_id", "doc_id", "score", "rank")

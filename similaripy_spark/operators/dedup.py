@@ -78,6 +78,24 @@ def dedup_exact(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id")
     )
 
 
+def require_one_row_per_doc(doc_ids, kernel: str) -> None:
+    """Precondition of the Arrow text kernels (``word_shingles``,
+    ``minhash_signatures``, ``winnow_fingerprints``): each doc is ONE row.
+    The kernels shingle, dedup and take minima per row, which is only
+    the per-doc result when no doc spans two rows. Checked per batch with
+    one hash pass over its doc ids (O(batch)); a doc split across two
+    batches or partitions is not detected."""
+    import pandas as pd
+
+    ids = pd.Index(doc_ids)
+    if ids.has_duplicates:
+        raise ValueError(
+            f"{kernel} requires one row per doc: doc_id "
+            f"{ids[ids.duplicated()][0]} is on more than one row; "
+            "concatenate each doc's text first"
+        )
+
+
 def word_shingles(
     docs: DataFrame, n: int = 3, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
@@ -90,7 +108,12 @@ def word_shingles(
     a global distinct exchange on the shingle stream; per-doc distinct IS
     global distinct because the key contains doc_id). Identical rows to
     the windowed-lead/distinct plan — parity-pinned by test and by the
-    unchanged SQL oracle twins."""
+    unchanged SQL oracle twins.
+
+    Precondition: each doc is one row of ``docs`` (the per-row dedup is
+    only the per-doc dedup then). It must hold globally; the kernel checks
+    it per Arrow batch and raises ValueError on a repeated doc_id
+    (``require_one_row_per_doc``)."""
     src = docs.select(
         F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
     )
@@ -118,6 +141,10 @@ def _word_shingles_kernel(n: int):
             nrows = b.num_rows
             if nrows == 0:
                 continue
+            doc_ids = b.column(
+                b.schema.get_field_index("doc_id")
+            ).to_numpy(zero_copy_only=False)
+            require_one_row_per_doc(doc_ids, "word_shingles")
             text = pc.fill_null(b.column(b.schema.get_field_index("text")), "")
             toks = pc.split_pattern_regex(pc.utf8_lower(text), TOKEN_SPLIT_RE)
             n_per = pc.list_value_length(toks).to_numpy(
@@ -145,9 +172,6 @@ def _word_shingles_kernel(n: int):
             ukey = np.unique(sdoc * np.int64(max(len(uniques), 1)) + codes)
             u_doc = ukey // max(len(uniques), 1)
             u_code = ukey % max(len(uniques), 1)
-            doc_ids = b.column(
-                b.schema.get_field_index("doc_id")
-            ).to_numpy(zero_copy_only=False)
             yield pa.RecordBatch.from_arrays(
                 [
                     pa.array(doc_ids[u_doc], type=pa.int64()),
@@ -228,7 +252,12 @@ def minhash_signatures(
     back to the JVM for an n_hashes-min groupBy + unpivot). Identical
     integer arithmetic (hashlib md5 ≡ Spark md5; the polynomial and the
     min are exact int64) — pinned against the JVM expression pipeline by
-    test and by the unchanged DuckDB oracle."""
+    test and by the unchanged DuckDB oracle.
+
+    Precondition: each doc is one row of ``docs``, as for
+    ``word_shingles`` (whose kernel this one runs): a doc split over two
+    rows would emit two signatures. It must hold globally and is checked
+    per Arrow batch only (ValueError on a repeated doc_id)."""
     src = docs.select(
         F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
     )

@@ -169,7 +169,12 @@ def winnow_fingerprints(
     one ``mapInArrow`` kernel with ZERO shuffles (the old plan exploded
     every token through a (doc_id, pos) window exchange plus a global
     distinct). Identical int64 arithmetic (hashlib md5 ≡ Spark md5);
-    parity-pinned against the JVM window pipeline by test."""
+    parity-pinned against the JVM window pipeline by test.
+
+    Precondition: each doc is one row of ``docs`` (the per-row distinct is
+    only the per-doc distinct then). It must hold globally; the kernel
+    checks it per Arrow batch and raises ValueError on a repeated doc_id
+    (``dedup.require_one_row_per_doc``)."""
     src = docs.select(
         F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
     )
@@ -190,6 +195,7 @@ def _winnow_arrow_kernel(kgram: int, window: int):
     import numpy as np
 
     from similaripy_spark.fulltext.tokenizer import TOKEN_SPLIT_RE
+    from similaripy_spark.operators.dedup import require_one_row_per_doc
 
     def kernel(batches):
         import pyarrow as pa
@@ -199,6 +205,10 @@ def _winnow_arrow_kernel(kgram: int, window: int):
             nrows = b.num_rows
             if nrows == 0:
                 continue
+            doc_ids = b.column(
+                b.schema.get_field_index("doc_id")
+            ).to_numpy(zero_copy_only=False)
+            require_one_row_per_doc(doc_ids, "winnow_fingerprints")
             text = pc.fill_null(b.column(b.schema.get_field_index("text")), "")
             toks = pc.split_pattern_regex(pc.utf8_lower(text), TOKEN_SPLIT_RE)
             n_per = pc.list_value_length(toks).to_numpy(
@@ -249,9 +259,6 @@ def _winnow_arrow_kernel(kgram: int, window: int):
             ukey = np.unique(kdoc * np.int64(1 << 31) + win_min)
             u_doc = ukey >> 31
             u_fp = ukey & ((1 << 31) - 1)
-            doc_ids = b.column(
-                b.schema.get_field_index("doc_id")
-            ).to_numpy(zero_copy_only=False)
             yield pa.RecordBatch.from_arrays(
                 [
                     pa.array(doc_ids[u_doc], type=pa.int64()),

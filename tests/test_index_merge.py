@@ -16,6 +16,7 @@ from similaripy_spark.fulltext.index_merge import (
     decode_segments,
     merge_indexes,
     merge_to_term_major,
+    open_merged,
     read_merged_for_terms,
 )
 from similaripy_spark.fulltext.postings import build_postings
@@ -58,7 +59,7 @@ def test_decode_roundtrip(spark, built):
 def test_merged_pruned_scan(spark, built):
     d, _ = built
     terms = ["t000001", "t000042"]
-    df = read_merged_for_terms(spark, d, terms, n_buckets=16)
+    df = read_merged_for_terms(open_merged(spark, d), terms, n_buckets=16)
     got_terms = {r["term"] for r in df.select("term").distinct().collect()}
     assert got_terms == set(terms)
     # partition pruning visible in the plan

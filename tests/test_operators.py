@@ -393,6 +393,27 @@ def test_winnow_fingerprints(spark, dup_docs):
     assert set(map(tuple, fp.values.tolist())) == set(map(tuple, fp2.values.tolist()))
 
 
+@pytest.mark.parametrize("kernel", [
+    lambda d: dedup.word_shingles(d, n=2),
+    lambda d: dedup.minhash_signatures(d, 4, n=2),
+    lambda d: textstats.winnow_fingerprints(d, kgram=2, window=2),
+], ids=["word_shingles", "minhash_signatures", "winnow_fingerprints"])
+def test_text_kernels_reject_multi_row_docs(spark, kernel):
+    """The per-row dedup of the Arrow text kernels is only per-doc when
+    each doc is one row: a batch carrying a doc_id twice must raise, not
+    emit a second shingle set / signature / fingerprint set for it."""
+    rows = [(1, "alpha beta gamma"), (2, "beta gamma delta"),
+            (1, "gamma delta epsilon")]
+    multi = spark.createDataFrame(rows, "doc_id long, text string")
+    with pytest.raises(Exception, match="requires one row per doc"):
+        kernel(multi.coalesce(1)).collect()
+    # the same text as one row per doc passes
+    one = multi.groupBy("doc_id").agg(
+        F.concat_ws(" ", F.collect_list("text")).alias("text")
+    )
+    assert {r["doc_id"] for r in kernel(one.coalesce(1)).collect()} == {1, 2}
+
+
 # --- multimodal --------------------------------------------------------------
 
 @pytest.fixture(scope="module")

@@ -259,3 +259,39 @@ def test_dv_filter_adds_no_exchange(spark, tmp_path):
     assert filt.count("Exchange") == plain.count("Exchange")
     assert filt.count("Scan parquet") == plain.count("Scan parquet") + 1
     assert "Union" in filt and "Union" not in plain
+
+
+def test_point_topk_plan_ranks_in_kernel(spark, tmp_path):
+    """A 16-query auto-routed point call on an open handle: the only
+    shuffle is the per-query exchange into the scoring kernel, which
+    emits the ranks itself (no Window, no second exchange for a global
+    top-k), and the idf relation is filtered to the queried terms, so the
+    ``term_stats`` scan pushes ``In(term, ...)``."""
+    import re
+
+    from similaripy_spark.fulltext.index_build import IndexBuilder
+    from similaripy_spark.fulltext.index_merge import merge_to_term_major
+    from similaripy_spark.fulltext.retrieve import open_index
+    from similaripy_spark.sources.pages import (
+        generate_pages,
+        generate_queries_pandas,
+    )
+
+    d = str(tmp_path / "idx")
+    IndexBuilder(d, shard_size=128, n_groups=2).build(
+        generate_pages(spark, 512, vocab_size=200)
+    )
+    merge_to_term_major(spark, d)
+    q = spark.createDataFrame(generate_queries_pandas(16, vocab_size=200))
+    with open_index(spark, d).warm() as h:
+        df = h.topk(q, k=10)
+        plan = physical_plan(df)
+        assert count_exchanges(df) == 1, plan
+        assert "Window" not in plan, plan
+        # the idf side reads (term, df) of term_stats; the path in the
+        # scan node is truncated, its read schema is not
+        scans = [ln for ln in plan.splitlines()
+                 if "ReadSchema: struct<term:string,df:bigint>" in ln]
+        assert len(scans) == 1, plan
+        assert re.search(r"PushedFilters: \[.*In\(term, ", scans[0]), scans
+        assert df.count() > 0

@@ -37,26 +37,67 @@ def test_merged_meta_records_buckets(built):
     assert merged_n_buckets(built) == 16
 
 
+@pytest.fixture(scope="module")
+def dup_built(spark, tmp_path_factory):
+    """Every doc twice (ids i and i + 450): each doc's score ties exactly
+    with its twin's, so ranks rest on the doc_id tie rule."""
+    from pyspark.sql import functions as F
+
+    d = str(tmp_path_factory.mktemp("ridx_dup"))
+    base = generate_pages(spark, 450, vocab_size=VOCAB)
+    pages = base.unionByName(
+        base.withColumn("doc_id", F.col("doc_id") + 450)
+    )
+    IndexBuilder(d, shard_size=256, n_groups=3).build(pages)
+    merge_to_term_major(spark, d, n_buckets=16)
+    return d, pages
+
+
+def _ranked(df):
+    return (
+        df.toPandas().sort_values(["query_id", "rank"]).reset_index(drop=True)
+    )
+
+
 @pytest.mark.parametrize("n_queries", [8, 200])
-def test_paths_rank_identical(spark, built, n_queries):
+def test_paths_rank_identical(spark, built, dup_built, n_queries):
     """Every physical path must return the same ranks and scores — routing
-    is a physical choice, never a semantic one."""
+    is a physical choice, never a semantic one. On the duplicate-doc
+    corpus scores tie exactly: the term-major kernel's own ranks must
+    follow the same (score DESC, doc_id ASC) rule as the segment path's
+    global merge and the relational ``bm25_topk``, in both modes."""
+    from similaripy_spark.fulltext.postings import build_postings
+    from similaripy_spark.fulltext.query import bm25_topk
+    from similaripy_spark.fulltext.weights import bm25_weights
+
     queries = spark.createDataFrame(
         generate_queries_pandas(n_queries, vocab_size=VOCAB)
     )
     frames = {
-        p: (
-            topk(spark, built, queries, k=10, path=p)
-            .toPandas()
-            .sort_values(["query_id", "rank"])
-            .reset_index(drop=True)
-        )
+        p: _ranked(topk(spark, built, queries, k=10, path=p))
         for p in ("segment", "term_major")
     }
     base, got = frames["segment"], frames["term_major"]
     assert list(got["query_id"]) == list(base["query_id"])
     assert list(got["doc_id"]) == list(base["doc_id"])
     np.testing.assert_allclose(got["score"], base["score"], rtol=1e-4)
+
+    d, pages = dup_built
+    key = ["query_id", "rank", "doc_id"]
+    want = _ranked(
+        bm25_topk(bm25_weights(build_postings(pages)), queries, k=10)
+    )
+    assert want.duplicated(["query_id", "score"]).any()  # exact ties
+    for p in ("segment", "term_major"):
+        got = _ranked(topk(spark, d, queries, k=10, path=p))
+        assert got[key].values.tolist() == want[key].values.tolist(), p
+        np.testing.assert_allclose(got["score"], want["score"], rtol=1e-6)
+    seg_and, tm_and = (
+        _ranked(topk(spark, d, queries, k=10, mode="and", path=p))
+        for p in ("segment", "term_major")
+    )
+    assert seg_and.duplicated(["query_id", "score"]).any()
+    assert tm_and[key].values.tolist() == seg_and[key].values.tolist()
 
 
 def test_auto_routing_matches_forced(spark, built):
@@ -260,6 +301,17 @@ def test_and_mode_term_major_parity(spark, built):
     np.testing.assert_allclose(tm["score"], seg["score"], rtol=1e-6)
     # the absent-term query returned nothing on either path
     assert 0 not in set(seg["query_id"])
+
+    # alone, it is an empty frame that still has the rank column, on the
+    # auto-routed handle and on the forced path
+    from similaripy_spark.fulltext.retrieve import open_index
+
+    absent = spark.createDataFrame(qpd.head(1))
+    with open_index(spark, built, cache=False) as h:
+        for path in (None, "term_major"):
+            df = h.topk(absent, k=10, mode="and", path=path)
+            assert df.columns == ["query_id", "doc_id", "score", "rank"]
+            assert df.collect() == []
 
 
 def test_open_index_handle_parity(spark, built):

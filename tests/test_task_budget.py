@@ -5,7 +5,8 @@ Every Python task pays a fixed worker cost before it runs any engine code
 query batch launches is part of its speed. These tests pin it: the build
 encoder runs ``max(shards, cores)`` tasks, the driver-side shard and
 tombstone lists plan as local scans (no PythonRDD), and a list delete
-launches no stage wider than one task.
+launches no stage wider than one task. A point query on an open handle
+pays the merged layout's listing once per handle, not per call.
 """
 
 from __future__ import annotations
@@ -23,15 +24,20 @@ from pyspark.sql import functions as F
 from similaripy_spark.fulltext.append import append_to_index
 from similaripy_spark.fulltext.delete import delete_docs, read_tombstones
 from similaripy_spark.fulltext.index_build import IndexBuilder, read_segments
+from similaripy_spark.fulltext.index_merge import merge_to_term_major
+from similaripy_spark.fulltext.retrieve import open_index
 from similaripy_spark.fulltext.wand import segment_topk
-from similaripy_spark.sources.pages import generate_pages
+from similaripy_spark.sources.pages import (
+    generate_pages,
+    generate_queries_pandas,
+)
 
 SHARD = 64
 
 
-def _stage_tasks(spark, fn) -> list[int]:
-    """Run ``fn`` inside a fresh job group; return the task count of every
-    stage its jobs ran."""
+def _job_stage_tasks(spark, fn) -> list[list[int]]:
+    """Run ``fn`` inside a fresh job group; return, per job it ran, the
+    task count of each of the job's stages."""
     sc = spark.sparkContext
     group = f"task-budget-{uuid.uuid4().hex[:8]}"
     sc.setJobGroup(group, group)
@@ -41,14 +47,20 @@ def _stage_tasks(spark, fn) -> list[int]:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     tracker = sc.statusTracker()
-    tasks = []
+    jobs = []
     for j in sorted(tracker.getJobIdsForGroup(group)):
-        for s in tracker.getJobInfo(j).stageIds:
-            info = tracker.getStageInfo(s)
-            if info is not None:
-                tasks.append(info.numTasks)
-    assert tasks, "no Spark job ran inside the group"
-    return tasks
+        jobs.append([
+            info.numTasks
+            for info in map(tracker.getStageInfo, tracker.getJobInfo(j).stageIds)
+            if info is not None
+        ])
+    assert jobs, "no Spark job ran inside the group"
+    return jobs
+
+
+def _stage_tasks(spark, fn) -> list[int]:
+    """The task count of every stage the jobs of ``fn`` ran."""
+    return [t for job in _job_stage_tasks(spark, fn) for t in job]
 
 
 def _pages(spark, n_docs):
@@ -130,3 +142,30 @@ def test_segment_topk_plans_no_python_rdd(spark, sixteen_shards, k, deep):
     assert "LocalTableScan" in plan
     assert "Scan ExistingRDD" not in plan, plan
     df.collect()
+
+
+def test_point_topk_on_open_handle_job_budget(spark, tmp_path):
+    """A 16-query auto-routed point call on a warm handle over the default
+    64-bucket layout: the handle already listed ``merged/`` (a 64-task
+    job above Spark's 32-path parallel-discovery threshold) and opened the
+    idf relation, the route probe's rows are the query side, and the
+    kernel ranks, so the call runs at most 6 jobs, none wider than the
+    shuffle partitions (the listing job was 64 tasks wide)."""
+    d = str(tmp_path / "idx")
+    IndexBuilder(d, shard_size=SHARD, n_groups=2).build(
+        generate_pages(spark, 8 * SHARD, vocab_size=200)
+    )
+    merge_to_term_major(spark, d)
+    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    with open_index(spark, d) as h:
+
+        def call(seed):
+            q = spark.createDataFrame(
+                generate_queries_pandas(16, vocab_size=200, seed=seed)
+            )
+            return h.topk(q, k=10).collect()
+
+        assert call(1)  # the warm call
+        jobs = _job_stage_tasks(spark, lambda: call(2))
+    assert len(jobs) <= 6, jobs
+    assert max(t for job in jobs for t in job) <= parts, jobs

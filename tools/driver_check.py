@@ -2,11 +2,14 @@
 Spark and its oracle_sql() twin on DuckDB over the same sf dir; compare
 row-count, schema width, and an order-insensitive value comparison.
 
-Usage: PYTHONPATH=/root/repo python tools/driver_check.py [sf_dir] [name ...]
+Usage: python tools/driver_check.py [sf_dir] [name ...]
+
+Imports the package from the checkout the script sits in.
 """
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
@@ -14,7 +17,12 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+# the driver and the executors' Python workers import this checkout
+sys.path.insert(0, REPO)
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (REPO, os.environ.get("PYTHONPATH")) if p
+)
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",

@@ -1,6 +1,6 @@
 """Dump .explain('formatted') for declared queries to plans/<tag>/<name>.txt.
 
-Usage: PYTHONPATH=/root/repo python tools/explain_dump.py <tag> [sf_dir] [name ...]
+Usage: python tools/explain_dump.py <tag> [sf_dir] [name ...]
 
 Writes plans/<tag>/<name>_<suffix>.txt where suffix is the tag's last path
 element convention (the caller passes e.g. r06/before → files land in
@@ -12,9 +12,12 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
-
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+# the driver and the executors' Python workers import this checkout
+sys.path.insert(0, REPO)
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (REPO, os.environ.get("PYTHONPATH")) if p
+)
 
 
 def main() -> None:
