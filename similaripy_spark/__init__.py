@@ -17,31 +17,12 @@ No code is copied from the reference; file:line citations in docstrings point at
 the behavior being reproduced.
 """
 
-from similaripy_spark.functions.normalization import (
-    normalize,
-    tfidf,
-    bm25,
-    bm25plus,
-)
-from similaripy_spark.functions.similarity import (
-    dot_product,
-    cosine,
-    asymmetric_cosine,
-    tversky,
-    jaccard,
-    dice,
-    p3alpha,
-    rp3beta,
-    s_plus,
-)
+import importlib
 
 __version__ = "0.1.0"
 
-__all__ = [
-    "normalize",
-    "tfidf",
-    "bm25",
-    "bm25plus",
+_NORMALIZATION = ("normalize", "tfidf", "bm25", "bm25plus")
+_SIMILARITY = (
     "dot_product",
     "cosine",
     "asymmetric_cosine",
@@ -51,4 +32,19 @@ __all__ = [
     "p3alpha",
     "rp3beta",
     "s_plus",
-]
+)
+__all__ = [*_NORMALIZATION, *_SIMILARITY]
+
+
+def __getattr__(name: str):
+    """Lazy re-exports (PEP 562): importing the package (as the worker
+    daemon ``similaripy_spark.pyworker`` does) loads no pyspark."""
+    if name in _NORMALIZATION:
+        module = "similaripy_spark.functions.normalization"
+    elif name in _SIMILARITY:
+        module = "similaripy_spark.functions.similarity"
+    else:
+        raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
+    value = getattr(importlib.import_module(module), name)
+    globals()[name] = value
+    return value

@@ -637,13 +637,15 @@ class IndexBuilder:
         well (4S balls into S bins; worst bin ~3 shards).
 
         Every extra task costs more than its dispatch: each Python task
-        pays ~0.2 CPU-s of worker fixed cost before it runs any engine
-        code (PySpark's ``setup_spark_files`` calls
-        ``importlib.invalidate_caches()`` per task, which re-reads the
-        pyspark.zip directory once per cached zipimporter — measured on 4
-        cores, Python 3.11: a ``mapInArrow`` identity job cost 2.9-3.2
-        Python CPU-s at 16 tasks vs 0.8-0.9 s at 4, workers reused), plus
-        its own parquet file opens under ``partitionBy(group)``. The old
+        pays a worker fixed cost before it runs any engine code, plus its
+        own parquet file opens under ``partitionBy(group)``. That cost was
+        ~0.2 CPU-s while workers imported pyspark from pyspark.zip (the
+        per-task ``importlib.invalidate_caches()`` re-read the zip's
+        directory once per cached zipimporter); with the
+        ``similaripy_spark.pyworker`` daemon of local sessions it is
+        ~0.02 CPU-s (4 cores, Python 3.11: a 16-task ``mapInArrow``
+        identity job cost 0.29-0.36 Python CPU-s, against 3.0-3.8 s
+        before). The old
         floor of 4× cores (and 8) bought load balance that small builds
         did not need: an 8-shard build and a 2-shard append epoch each ran
         16 encoder tasks on 4 cores, most of them near-empty, and the

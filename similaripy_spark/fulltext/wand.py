@@ -651,7 +651,11 @@ def _score_batch(
     # terms, keep those present in this shard, dedupe (query, term) pairs —
     # the only remaining Python loops run over DISTINCT terms, not over
     # (query × term) pairs (this loop dominated query-side scaling) -------
+    # null elements match nothing: drop them before pd.factorize, which
+    # codes None as -1 (present[-1] would wrap to the last distinct term)
     term_lists = [np.asarray(t, dtype=object) for t in q_pdf["terms"]]
+    nonnull = [pd.notna(t) for t in term_lists]
+    term_lists = [t[m] for t, m in zip(term_lists, nonnull)]
     qlens = np.array([len(t) for t in term_lists], np.int64)
     if qlens.sum() == 0:
         return pd.DataFrame(_EMPTY_RESULT)
@@ -668,6 +672,7 @@ def _score_batch(
             else np.zeros(0, dtype=object)
             for t in q_pdf["not_terms"]
         ]
+        nt_lists = [t[pd.notna(t)] for t in nt_lists]
         if sum(len(t) for t in nt_lists) == 0:
             nt_lists = None
     # AND mode: a doc qualifies only when its per-cell distinct-term match
@@ -724,14 +729,16 @@ def _score_batch(
         # parity is validated here: a mismatch whose totals coincide would
         # otherwise silently shift qw mass across queries (ADVICE r2)
         wlens = np.array([len(w) for w in q_pdf["weights"]], np.int64)
-        if not np.array_equal(wlens, qlens):
-            bad = int(np.flatnonzero(wlens != qlens)[0])
+        tlens = np.array([len(m) for m in nonnull], np.int64)
+        if not np.array_equal(wlens, tlens):
+            bad = int(np.flatnonzero(wlens != tlens)[0])
             raise ValueError(
                 f"query_id={qids_all[bad]}: weights length {wlens[bad]} != "
-                f"terms length {qlens[bad]}"
+                f"terms length {tlens[bad]}"
             )
         all_qw = np.concatenate(
-            [np.asarray(w, np.float64) for w in q_pdf["weights"]]
+            [np.asarray(w, np.float64)[m]
+             for w, m in zip(q_pdf["weights"], nonnull)]
         )
         pair_key, inv = np.unique(key, return_inverse=True)
         pair_qw = np.bincount(inv, weights=all_qw[keep],

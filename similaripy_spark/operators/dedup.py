@@ -80,11 +80,11 @@ def dedup_exact(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id")
 
 def require_one_row_per_doc(doc_ids, kernel: str) -> None:
     """Precondition of the Arrow text kernels (``word_shingles``,
-    ``minhash_signatures``, ``winnow_fingerprints``): each doc is ONE row.
-    The kernels shingle, dedup and take minima per row, which is only
-    the per-doc result when no doc spans two rows. Checked per batch with
-    one hash pass over its doc ids (O(batch)); a doc split across two
-    batches or partitions is not detected."""
+    ``minhash_signatures``, ``winnow_fingerprints``, ``simhash``): each doc
+    is ONE row. The kernels shingle, dedup, vote and take minima per row,
+    which is only the per-doc result when no doc spans two rows. Checked
+    per batch with one hash pass over its doc ids (O(batch)); a doc split
+    across two batches or partitions is not detected."""
     import pandas as pd
 
     ids = pd.Index(doc_ids)
@@ -406,7 +406,13 @@ def simhash(
     stage). Identical output by construction: the kernel evaluates the
     SAME integer arithmetic (hashlib md5 == Spark md5; the mix chain is
     pure int64; signed tf sums are exact) — pinned against the JVM
-    expression path by test."""
+    expression path by test.
+
+    Precondition: each doc is one row of ``docs`` (the kernel sums each
+    row's votes into its own signature). It must hold globally; the
+    unigram kernel checks it per Arrow batch and raises ValueError on a
+    repeated doc_id (``require_one_row_per_doc``), and ``n > 1`` inherits
+    the same check from ``word_shingles``."""
     if n > 1:
         toks = word_shingles(
             docs, n=n, text_col=text_col, id_col=id_col
@@ -463,6 +469,10 @@ def _simhash_arrow_kernel(bits: int):
             n = b.num_rows
             if n == 0:
                 continue
+            doc_ids = b.column(
+                b.schema.get_field_index("doc_id")
+            ).to_numpy(zero_copy_only=False)
+            require_one_row_per_doc(doc_ids, "simhash")
             text = pc.fill_null(b.column(b.schema.get_field_index("text")), "")
             toks = pc.split_pattern_regex(pc.utf8_lower(text), TOKEN_SPLIT_RE)
             n_per = pc.list_value_length(toks).to_numpy(
@@ -502,9 +512,6 @@ def _simhash_arrow_kernel(bits: int):
             sim = ((grid > 0) * bitvals).sum(axis=1, dtype=np.int64)
             # only docs with ≥1 token appear (matches the groupBy plan)
             present = np.unique(doc_idx)
-            doc_ids = b.column(
-                b.schema.get_field_index("doc_id")
-            ).to_numpy(zero_copy_only=False)
             yield pa.RecordBatch.from_arrays(
                 [
                     pa.array(doc_ids[present], type=pa.int64()),

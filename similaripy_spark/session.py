@@ -2,7 +2,23 @@
 
 Local-mode testing runs on ``local[N]``; the configs below are the ones that
 also matter on a real multi-executor cluster (AQE, shuffle partition sizing,
-Arrow for pandas UDFs). Nothing here is local-mode-only.
+Arrow for pandas UDFs).
+
+One setting is for local masters only (``local_worker_conf``): the Python
+worker daemon. Every ``mapInArrow``/``applyInPandas`` task runs in a
+PySpark worker, and before each task PySpark calls
+``importlib.invalidate_caches()``. With pyspark imported from
+``$SPARK_HOME/python/lib/pyspark.zip`` and the spark-core jar on the path,
+that call re-reads the zip's directory once per imported sub-package and
+the 15 MB jar's twice: 0.12-0.23 CPU-s per task on Python 3.11 (4-core
+machine) before any engine code runs. The daemon ``similaripy_spark.pyworker``
+imports pyspark from the unpacked ``$SPARK_HOME/python`` of the same
+install instead, drops the jar from the path and then runs the stock
+``pyspark.daemon``; the call then costs under 1 ms. Local workers can
+import the package when the daemon starts because its root is put on
+their ``PYTHONPATH``. Other masters keep the stock daemon: their executors
+may get the package only through ``--py-files``, which a worker adds to
+its path per task, after the daemon has started.
 """
 
 from __future__ import annotations
@@ -10,6 +26,22 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+def local_worker_conf(master: str, repo_root: str, py_path: str) -> dict:
+    """Worker settings for ``master``: for ``local[...]`` and
+    ``local-cluster[...]`` (the executors run on the driver's machine and
+    see its files) the package root goes first on the workers' ``PYTHONPATH``
+    and the Python daemon is ``similaripy_spark.pyworker``; any other
+    master gets none and keeps ``pyspark.daemon``."""
+    if not master.startswith(("local[", "local-cluster[")):
+        return {}
+    return {
+        "spark.executorEnv.PYTHONPATH": os.pathsep.join(
+            p for p in (repo_root, py_path) if p
+        ),
+        "spark.python.daemon.module": "similaripy_spark.pyworker",
+    }
 
 
 def get_spark(
@@ -36,8 +68,7 @@ def get_spark(
     # mini-cluster (4 worker JVMs x 2 cores), the structurally faithful
     # stand-in for a multi-executor cluster on one box: shuffles cross
     # JVM boundaries over netty and each executor owns its own heap/GC,
-    # unlike local[N]'s single shared JVM. Executors import the package
-    # themselves, so PYTHONPATH must reach them via executorEnv.
+    # unlike local[N]'s single shared JVM.
     master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{parallelism}]")
     builder = (
         SparkSession.builder.master(master)
@@ -65,14 +96,11 @@ def get_spark(
         # falls back per-partition when it does not.
         .config("spark.sql.join.preferSortMergeJoin", "false")
     )
-    if master.startswith("local-cluster"):
-        repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        py_path = os.environ.get("PYTHONPATH", "")
-        builder = builder.config(
-            "spark.executorEnv.PYTHONPATH",
-            repo_root + (os.pathsep + py_path if py_path else ""),
-        )
-    for k, v in (extra_conf or {}).items():
+    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    worker_conf = local_worker_conf(
+        master, repo_root, os.environ.get("PYTHONPATH", "")
+    )
+    for k, v in {**worker_conf, **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -397,11 +397,14 @@ def test_winnow_fingerprints(spark, dup_docs):
     lambda d: dedup.word_shingles(d, n=2),
     lambda d: dedup.minhash_signatures(d, 4, n=2),
     lambda d: textstats.winnow_fingerprints(d, kgram=2, window=2),
-], ids=["word_shingles", "minhash_signatures", "winnow_fingerprints"])
+    lambda d: dedup.simhash(d),
+], ids=["word_shingles", "minhash_signatures", "winnow_fingerprints",
+        "simhash"])
 def test_text_kernels_reject_multi_row_docs(spark, kernel):
     """The per-row dedup of the Arrow text kernels is only per-doc when
     each doc is one row: a batch carrying a doc_id twice must raise, not
-    emit a second shingle set / signature / fingerprint set for it."""
+    emit a second shingle set / signature / fingerprint set / simhash
+    for it."""
     rows = [(1, "alpha beta gamma"), (2, "beta gamma delta"),
             (1, "gamma delta epsilon")]
     multi = spark.createDataFrame(rows, "doc_id long, text string")

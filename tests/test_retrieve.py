@@ -99,6 +99,24 @@ def test_paths_rank_identical(spark, built, dup_built, n_queries):
     assert seg_and.duplicated(["query_id", "score"]).any()
     assert tm_and[key].values.tolist() == seg_and[key].values.tolist()
 
+    # a null term matches nothing on every path: query 1 ranks as if it
+    # held only its non-null term, and the empty query 0 returns no rows
+    schema = "query_id long, terms array<string>"
+    nulls = spark.createDataFrame([(0, []), (1, ["t000001", None])], schema)
+    clean = spark.createDataFrame([(0, []), (1, ["t000001"])], schema)
+    weights = bm25_weights(build_postings(pages))
+    want = _ranked(bm25_topk(weights, clean, k=10))
+    assert len(want) and set(want["query_id"]) == {1}
+    frames = {
+        "bm25_topk": bm25_topk(weights, nulls, k=10),
+        **{p: topk(spark, d, nulls, k=10, path=p)
+           for p in ("segment", "term_major")},
+    }
+    for name, df in frames.items():
+        got = _ranked(df)
+        assert got[key].values.tolist() == want[key].values.tolist(), name
+        np.testing.assert_allclose(got["score"], want["score"], rtol=1e-6)
+
 
 def test_auto_routing_matches_forced(spark, built):
     queries = spark.createDataFrame(

@@ -4,6 +4,12 @@ Produces dist/similaripy_spark.zip containing the package (no tests) —
 ship with:
 
     spark-submit --py-files dist/similaripy_spark.zip tools/index_job.py ...
+
+Executors that get the package this way run the stock ``pyspark.daemon``:
+``session.get_spark`` sets the ``similaripy_spark.pyworker`` daemon only
+for ``local[...]`` and ``local-cluster[...]`` masters. A PySpark worker
+puts ``--py-files`` on ``sys.path`` when a task starts, after the daemon is
+running, so a daemon module cannot be imported from them.
 """
 
 from __future__ import annotations
