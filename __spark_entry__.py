@@ -299,7 +299,7 @@ def _q_bm25_index_topk(spark, sf_dir):
     """BM25 top-10 through the FULL index engine: build a raw SPIMI
     index (doc-sharded posting blocks storing tf and dl; the tf-part is
     derived and idf applied at query time from term_stats —
-    index_build.IndexBuilder, the weight_scheme='raw' default) from the
+    index_build.IndexBuilder) from the
     documents table, query
     it with the auto-routed front-end (retrieve.topk → segment scorer).
 
@@ -465,7 +465,7 @@ def _q_bm25_collapse_topk(spark, sf_dir):
     """FIELD COLLAPSING (docvalues.collapse_topk — Lucene collapse): the
     BM25 top-10 with at most ONE doc per `source` value — one result per
     site. Every match is scored relationally with index stats (exact
-    float64, weight-scheme independent), the per-(query, value)
+    float64), the per-(query, value)
     row_number keeps each value's best doc, the global top-k ranks the
     survivors — a kernel top-k-then-collapse would be inexact. Oracle:
     the same double window off the documents table."""
@@ -567,7 +567,7 @@ def _q_bm25_search_topk(spark, sf_dir):
     ranked term, a MUST_NOT, and a numeric doc-values range — composed by
     the phrase path: positional match set ∩ NOT anti-join ∩ range filter,
     survivors scored relationally over the distinct ranked terms with the
-    index's own stats (float64, independent of stored weight scheme). The
+    index's own stats (float64). The
     SQL oracle states the same composition: adjacency regexp, NOT
     anti-join, BETWEEN, sum of whole-corpus BM25 weights."""
     import tempfile
@@ -790,7 +790,7 @@ def _q_bm25_and_topk(spark, sf_dir):
 
 def _q_bm25_append_topk(spark, sf_dir):
     """BM25 top-10 through APPEND-ONLY ingestion (fulltext/append.py —
-    round 5): build a weight_scheme='raw' index over the first shard-aligned
+    round 5): build an index over the first shard-aligned
     half of the documents table, append_to_index the rest, query through
     the public handle. Raw blocks store (tf, dl); the kernel derives the
     tf-part at the MERGED corpus avgdl and term_stats idf is recomputed, so
@@ -817,8 +817,7 @@ def _q_bm25_append_topk(spark, sf_dir):
     # shard-aligned split near the middle (appends may only open NEW shards)
     b = max(((int(hi) + 1) // 2) // shard * shard, shard)
     d = tempfile.mkdtemp(prefix="entry_idx_append_")
-    IndexBuilder(d, shard_size=shard, n_groups=2,
-                 weight_scheme="raw").build(
+    IndexBuilder(d, shard_size=shard, n_groups=2).build(
         docs.filter(F.col("doc_id") < b)
     )
     append_to_index(spark, d, pages=docs.filter(F.col("doc_id") >= b),

@@ -8,9 +8,8 @@ public serve surface (``retrieve``):
   once, ``.topk()`` per batch);
 * ``topk(spark, index_dir, queries)`` — one-shot convenience;
 * ``append_to_index(spark, index_dir, pages)`` — exact append-only
-  ingestion for ``weight_scheme='raw'`` indexes (blocks store (tf, dl);
-  corpus scalars and idf applied at read time, so committed blocks never
-  go stale — append.py);
+  ingestion (blocks store (tf, dl); corpus scalars and idf applied at read
+  time, so committed blocks never go stale — append.py);
 * ``phrase_topk(spark, index_dir, pages, queries)`` — exact phrase
   retrieval: AND posting-list intersection for candidates, codegen
   token-adjacency regexp against the pages relation, BM25 ranking;

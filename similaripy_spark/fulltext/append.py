@@ -1,13 +1,11 @@
 """Append-only ingestion: grow a committed index without rewriting it.
 
-The 'raw' weight scheme makes this EXACT. BM25 has three corpus-global
-inputs — idf (from term_stats), N and avgdl — and one doc-local factor.
-A 'factored' index bakes avgdl into its stored tf-parts, so appending
-documents (which shifts avgdl) would leave every committed block slightly
-stale; ``index_merge.merge_indexes`` handles that by decoding and
-re-weighting everything — a rebuild. A 'raw' index stores (tf, dl) and
-derives the tf-part in the query kernel at the CURRENT avgdl
-(wand._ShardIndex), so an append is just:
+The index format makes this EXACT. BM25 has three corpus-global inputs —
+idf (from term_stats), N and avgdl — and one doc-local factor, the
+tf-part, which depends on avgdl. Blocks store (tf, dl) and the query
+kernel derives the tf-part at the CURRENT avgdl (wand._ShardIndex), so
+appending documents (which shifts avgdl and idf) leaves no committed
+block stale, and an append is just:
 
 1. delta doc_stats epoch (staged, validated, committed) — new documents
    must land in NEW shards (min doc_id ≥ n_shards × shard_size), so no
@@ -24,7 +22,7 @@ derives the tf-part in the query kernel at the CURRENT avgdl
 4. meta.json swap: N, sum_dl → avgdl, n_shards, n_groups, epochs. Readers
    pick up the new scalars atomically (publish_json); ``bounds_avgdl``
    stays PINNED at the first build's value — block score bounds are
-   ratio-scaled at read time (wand._ShardIndex.term_meta), so MaxScore/BMW
+   ratio-scaled at read time (wand._ShardIndex.term_meta), so MaxScore
    pruning stays exact under any drift.
 
 Equivalence contract (pinned in tests/test_append.py):
@@ -37,14 +35,6 @@ miss appended documents, so a successful append RENAMES it to
 ``merged_stale_epoch<E>`` (never deletes); re-run
 ``index_merge.merge_to_term_major`` to rebuild it. Open ``IndexHandle``s
 hold the pre-append meta/segment cache — reopen after an append.
-
-Cost of the capability — MEASURED (100k docs / 50k vocab, 10k-query
-batch, local[8], warm, 2026-08-18): build factored 12.0 s vs raw 9.7 s
-(raw is FASTER — its weighting pass is a pure projection, no expression
-work in the segment job); query batch factored 15.7 s vs raw 15.5 s
-(parity — the per-decode tf varint expansion + tf-part arithmetic is
-noise next to the shard sweep). Choosing append-capability costs nothing
-at serve time.
 
 Reference parity note: the reference (bogliosimone/similaripy) has no
 incremental path at all — its CSR matrices are rebuilt per call
@@ -79,8 +69,8 @@ def append_to_index(
     n_docs: int | None = None,
     input_layout: str = "shuffle",
 ) -> dict:
-    """Append new documents to a committed 'raw'-scheme index; returns the
-    updated meta dict. Pass ``pages`` (doc_id, text[, lang]) or a
+    """Append new documents to a committed index; returns the updated meta
+    dict. Pass ``pages`` (doc_id, text[, lang]) or a
     pre-tokenized ``postings`` relation (doc_id, term, tf, dl).
 
     Every appended doc_id must be ≥ ``n_shards × shard_size`` (the next
@@ -90,16 +80,6 @@ def append_to_index(
     semantics — empty docs count if the caller says so).
     """
     meta = read_meta(index_dir)
-    scheme = meta.get("weight_scheme", "prod")
-    if scheme != "raw":
-        raise ValueError(
-            f"append_to_index requires weight_scheme='raw' (got "
-            f"{scheme!r}): '{scheme}' blocks bake corpus stats that an "
-            "append would leave stale — use index_merge.merge_indexes "
-            "(decode + re-weight) for those, or rebuild with "
-            "IndexBuilder(weight_scheme='raw') to make the index "
-            "append-capable"
-        )
     shard_size = int(meta["shard_size"])
     base_shard = int(meta["n_shards"])
     base_group = int(meta["n_groups"])
@@ -127,13 +107,12 @@ def append_to_index(
 
     builder = IndexBuilder(
         index_dir,
-        k1=float(meta.get("k1", 1.2)),
-        b=float(meta.get("b", 0.75)),
+        k1=float(meta["k1"]),
+        b=float(meta["b"]),
         block_size=int(meta["block_size"]),
         shard_size=shard_size,
         n_groups=int(n_groups),
         input_layout=input_layout,
-        weight_scheme="raw",
         # match the base index's backend: rename-committed delta groups
         # beside pointer-committed ones would be invisible to readers
         # (resolve_artifact_multi returns only pointer entries)
@@ -142,7 +121,7 @@ def append_to_index(
     builder.group_base = base_group
     # block bounds stay comparable across epochs: encode them at the SAME
     # pinned avgdl the original build used (readers ratio-scale to current)
-    builder._bounds_avgdl = float(meta.get("bounds_avgdl", meta["avgdl"]))
+    builder._bounds_avgdl = float(meta["bounds_avgdl"])
     t0 = time.monotonic()
 
     # ---- phase 1: delta doc_stats (staged → validated → committed) ------
@@ -188,10 +167,7 @@ def append_to_index(
     delta_shards = int(m["max_shard"]) - base_shard + 1
 
     # ---- phase 2: delta segment groups (same job shape as a build) ------
-    weighted = postings.select(
-        "doc_id", "term", "tf", "dl",
-        F.col("dl").cast("double").alias("weight"),
-    ).withColumn("shard", (F.col("doc_id") / shard_size).cast("int"))
+    weighted = builder._weighted(postings)
     done = builder.committed_groups()
     pending = [
         g for g in range(base_group, base_group + int(n_groups))
@@ -205,8 +181,7 @@ def append_to_index(
     builder._write_term_stats(spark)
 
     # ---- phase 4: meta swap (atomic publish) -----------------------------
-    sum_dl0 = float(meta.get("sum_dl", meta["avgdl"] * meta["n_docs"]))
-    sum_dl = sum_dl0 + float(m["sum_dl"] or 0.0)
+    sum_dl = float(meta["sum_dl"]) + float(m["sum_dl"] or 0.0)
     n_total = int(meta["n_docs"]) + n_delta
     new_meta = dict(meta)
     new_meta.update(
@@ -214,7 +189,6 @@ def append_to_index(
             "n_docs": n_total,
             "sum_dl": sum_dl,
             "avgdl": sum_dl / max(n_total, 1),
-            "bounds_avgdl": float(meta.get("bounds_avgdl", meta["avgdl"])),
             "n_shards": max(base_shard, int(m["max_shard"]) + 1),
             "n_groups": base_group + int(n_groups),
             "n_epochs": epoch + 1,

@@ -136,8 +136,8 @@ def compact_index(
     committed blocks (one vectorized pass — index_merge.decode_segments),
     anti-join the tombstones, rebuild through the checkpoint-resumable
     builder with EXACT post-deletion corpus stats (df, N, avgdl all
-    recomputed). The output carries no tombstone epochs; on the 'raw'
-    scheme it remains append-capable with freshly pinned bounds_avgdl."""
+    recomputed). The output carries no tombstone epochs and stays
+    append-capable, with freshly pinned bounds_avgdl."""
     from similaripy_spark.fulltext.append import read_doc_stats_all
     from similaripy_spark.fulltext.index_build import read_segments
     from similaripy_spark.fulltext.index_merge import decode_segments
@@ -155,7 +155,6 @@ def compact_index(
         block_size=meta["block_size"],
         shard_size=meta["shard_size"],
         n_groups=meta["n_groups"],
-        weight_scheme=meta.get("weight_scheme", "prod"),
         # carried so a later append_to_index keeps filtering the delta —
         # dropping it silently broke build(A∪B) == build(A);append(B)
         # after any compaction of a language-filtered index

@@ -1051,7 +1051,7 @@ def collapse_topk(
     Exact by construction: every match is scored RELATIONALLY with the
     index's own statistics (decoded tf blocks under term pushdown ⋈
     doc_stats(dl) → bm25_tf_part at the index's (k1, b, avgdl) ⋈
-    idf_table — float64, weight-scheme independent), the per-value
+    idf_table — float64), the per-value
     row_number keeps the best ``per_value`` docs of each (query, value)
     group under the engine tie rule, and the global top-k ranks the
     survivors. A kernel top-k then collapse would be INEXACT (a value's

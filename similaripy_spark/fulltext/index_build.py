@@ -41,6 +41,7 @@ cheap second shuffle of the compressed blocks — index_merge.py.
 
 from __future__ import annotations
 
+import functools
 import json
 import math
 import os
@@ -61,7 +62,7 @@ from similaripy_spark.fulltext.commit import (
     resolve_artifact_multi,
 )
 from similaripy_spark.fulltext.postings import build_postings, doc_lengths
-from similaripy_spark.fulltext.weights import bm25_tf_part, bm25_weights
+from similaripy_spark.fulltext.weights import tf_part_np
 
 BLOCK_SIZE = 128
 
@@ -99,8 +100,7 @@ SEGMENT_SCHEMA = T.StructType(
 )
 
 
-def _encode_partition_arrow_unsorted(batches, block_size: int,
-                                     bounds_fn=None):
+def _encode_partition_arrow_unsorted(batches, block_size: int, bounds_fn):
     """The block encoder. Arrow over UNSORTED partitions: buffer the
     partition, dictionary-encode terms, one ``np.lexsort`` by (shard,
     term-code, doc_id), then encode each (shard, term) group into blocks.
@@ -116,9 +116,8 @@ def _encode_partition_arrow_unsorted(batches, block_size: int,
 
     Memory safety at scale, by input layout (ADVICE r4: keep this in sync
     with ``_segment_plan``): on the SHUFFLE path the plan hash-partitions
-    on (shard, term-salt) into ``max(per_shard × n_shards, cores)``
-    partitions (per_shard = SIMILARIPY_BUILD_PARTS_PER_SHARD, default 1),
-    so a partition buffers at most a few shards' payloads, each bounded by
+    on (shard, term-salt) into ``max(n_shards, cores)`` partitions, so a
+    partition buffers at most a few shards' payloads, each bounded by
     ``shard_size`` — a deployment knob, not data-dependent; the cores
     floor only ever adds partitions (smaller ones), and corpus growth adds
     partitions, not partition size. On
@@ -169,15 +168,15 @@ def _encode_partition_arrow_unsorted(batches, block_size: int,
                       tf[s:e], w32[s:e])
 
 
-def _encode_sorted_cols_factory(block_size: int, bounds_fn=None):
+def _encode_sorted_cols_factory(block_size: int, bounds_fn):
     """The (shard,term)-grouped column → block-rows encoder of
     ``_encode_partition_arrow_unsorted``.
 
-    ``bounds_fn(tfs, w32) -> float32 scores``: when given, per-block
-    max_score/min_score bounds are computed over ITS output instead of the
-    stored w32 payload — the 'raw' weight scheme stores dl in the weights
-    column but needs bounds over the derived tf-part (weights.tf_part_np
-    at the index's pinned bounds_avgdl)."""
+    ``bounds_fn(tfs, w32) -> float32 scores``: per-block
+    max_score/min_score bounds are computed over ITS output, not over the
+    stored w32 payload — blocks store dl in the weights column, and the
+    bounds are over the derived tf-part (weights.tf_part_np at the index's
+    pinned bounds_avgdl)."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -198,7 +197,7 @@ def _encode_sorted_cols_factory(block_size: int, bounds_fn=None):
         block_ends = np.append(block_starts[1:], n)
         block_n = block_ends - block_starts
         block_id = (pos_in_group[block_starts] // block_size).astype(np.int32)
-        bscore = w32 if bounds_fn is None else bounds_fn(tfs, w32)
+        bscore = bounds_fn(tfs, w32)
         max_score = np.maximum.reduceat(bscore, block_starts)
         min_score = np.minimum.reduceat(bscore, block_starts)
         deltas = np.empty(n, dtype=np.int64)
@@ -243,6 +242,16 @@ class IndexBuilder:
       segments/group=G/         parquet, one commit unit per shard-group
       term_stats/               parquet (term, df, max_weight)
       lineage/group_G.json      commit manifests (stage metrics inside)
+
+    Blocks store (tf, dl): dl rides in the weights column and tf in every
+    block. The query kernels derive the doc-local tf-part from them at the
+    CURRENT corpus avgdl and apply idf from term_stats — the reference's
+    stats-pass/weight-pass separation (normalization.pyx:309-334) — so the
+    segment job needs no term-stats aggregate or join, and an append
+    shifts avgdl/idf with zero rewrite of committed blocks (append.py).
+    Block score bounds are encoded at the pinned meta ``bounds_avgdl`` and
+    ratio-scaled at read time, so MaxScore pruning stays exact under any
+    corpus drift.
     """
 
     def __init__(
@@ -257,17 +266,11 @@ class IndexBuilder:
         lang: str | None = None,
         commit: CommitProtocol | None = None,
         input_layout: str = "shuffle",
-        weight_scheme: str = "raw",
     ):
         if input_layout not in ("shuffle", "aligned"):
             raise ValueError(
                 f"input_layout must be 'shuffle' or 'aligned', got "
                 f"{input_layout!r}"
-            )
-        if weight_scheme not in ("factored", "prod", "raw"):
-            raise ValueError(
-                f"weight_scheme must be 'factored', 'prod' or 'raw', got "
-                f"{weight_scheme!r}"
             )
         #: all artifact publishes go through the commit protocol — the
         #: local-FS rename backend here, an object-store pointer-swap
@@ -290,28 +293,6 @@ class IndexBuilder:
         #: check, failing the build instead of silently corrupting posting
         #: lists.
         self.input_layout = input_layout
-        #: 'raw' (default since round 6): stores dl itself in the weights
-        #: column (tf already rides in every block): the doc-local tf-part
-        #: is derived IN the query kernel from (tf, dl) and the CURRENT
-        #: corpus avgdl, which makes append-only ingestion exact —
-        #: appending documents shifts avgdl/idf, and a raw index re-reads
-        #: both at query time with zero rewrite of committed blocks
-        #: (append.py). Block score bounds are encoded at the pinned meta
-        #: bounds_avgdl and ratio-scaled at read time, so MaxScore/BMW
-        #: pruning stays exact under any corpus drift. Measured at the
-        #: bench shape (100k docs, aligned, local[32]): raw builds ~10-25%
-        #: faster than factored (no weighting expression in the segment
-        #: job) at query-throughput parity — and it makes the append
-        #: capability the default. 'factored': blocks store the doc-local
-        #: BM25 factor (tf saturation × length norm); idf applied at query
-        #: time from term_stats — the reference's stats-pass/weight-pass
-        #: separation (normalization.pyx:309-334); like 'raw' the segment
-        #: job needs NO term-stats aggregate or join, but appends must
-        #: rewrite nothing only as long as avgdl is pinned. 'prod' stores
-        #: idf×tf products in the blocks (round-3 format; query-time idf
-        #: not needed, but the build pays a vocabulary-sized stats join
-        #: and aligned mode must broadcast it).
-        self.weight_scheme = weight_scheme
         #: first group id this builder commits (append epochs build their
         #: delta groups at base = existing n_groups_total; plain builds: 0)
         self.group_base = 0
@@ -392,16 +373,14 @@ class IndexBuilder:
            no posting explosion) written to parquet with the corpus scalars
            observed on the same action. Without pages, a ``groupBy(doc_id)``
            over the postings (map-side combinable);
-        2. segments: the one big job — weight expression with the corpus
-           scalars as literals ('prod' scheme adds the term-df aggregate ⋈;
-           unhinted, AQE broadcast-converts when small), repartition(shard,
-           term-salt) → sort → Arrow encode → ``partitionBy(group)`` staged
-           write; every pending group then publishes independently (rename +
-           lineage manifest);
+        2. segments: the one big job — the (tf, dl) projection,
+           repartition(shard, term-salt) → Arrow encode →
+           ``partitionBy(group)`` staged write; every pending group then
+           publishes independently (rename + lineage manifest);
         3. term_stats: Σn / max / min over committed block metadata.
 
-        On the default factored scheme with ``pages``, the postings relation
-        has exactly ONE consumer (the segment job), so it is never persisted:
+        With ``pages``, the postings relation has exactly ONE consumer (the
+        segment job), so it is never persisted:
         tokenize runs once, streamed straight into the shard exchange —
         no 10^?-row cache encode/decode, which on a bandwidth-bound box is
         the difference between the doc_stats phase scaling and not (measured
@@ -418,29 +397,24 @@ class IndexBuilder:
 
         resumed_meta = None
         if resume and self.commit.exists(meta_path):
-            resumed_meta = self.commit.read_json(meta_path)
+            resumed_meta = check_weight_scheme(
+                self.commit.read_json(meta_path), self.index_dir
+            )
             self.shard_size = int(resumed_meta["shard_size"])
             # a resumed build must keep EVERY committed-groups parameter —
-            # mixing weight schemes would be silently wrong at query time;
             # a changed n_groups would remap shard→group so the pending
             # groups cover the wrong shard residues (some shards never
             # built, the committed-groups==n_groups gate still passing);
-            # changed k1/b would mix inconsistently-weighted blocks
-            self.weight_scheme = resumed_meta.get("weight_scheme", "prod")
-            if "n_groups" in resumed_meta:
-                self.n_groups = int(resumed_meta["n_groups"])
-            if "k1" in resumed_meta:
-                self.k1 = float(resumed_meta["k1"])
-            if "b" in resumed_meta:
-                self.b = float(resumed_meta["b"])
-            if "block_size" in resumed_meta:
-                self.block_size = int(resumed_meta["block_size"])
+            # changed k1/b would mix inconsistently-bounded blocks
+            self.n_groups = int(resumed_meta["n_groups"])
+            self.k1 = float(resumed_meta["k1"])
+            self.b = float(resumed_meta["b"])
+            self.block_size = int(resumed_meta["block_size"])
 
         # persist only when the plan reads the postings more than once:
-        # stats-from-postings (no pages), or the 'prod' scheme's term-df
-        # aggregate + join (two consumers in one job); 'factored' and 'raw'
-        # have exactly one consumer (the segment job)
-        reuse = pages is None or self.weight_scheme == "prod"
+        # stats-from-postings (no pages) — with pages the segment job is
+        # the one consumer
+        reuse = pages is None
         if reuse:
             postings = postings.persist()
         try:
@@ -455,9 +429,7 @@ class IndexBuilder:
             n_shards = int(meta["n_shards"])
 
             if self._bounds_avgdl is None:
-                self._bounds_avgdl = float(
-                    meta.get("bounds_avgdl", meta["avgdl"])
-                )
+                self._bounds_avgdl = float(meta["bounds_avgdl"])
 
             done = self.committed_groups() if resume else set()
             base = self.group_base
@@ -465,39 +437,7 @@ class IndexBuilder:
                 g for g in range(base, base + self.n_groups) if g not in done
             ]
             if pending:
-                if self.weight_scheme == "raw":
-                    # dl IS the stored weight — no weighting expression at
-                    # all (tf-part derived in the query kernel); the segment
-                    # job's only wide exchange is the doc→shard repartition
-                    weighted = postings.select(
-                        "doc_id", "term", "tf", "dl",
-                        F.col("dl").cast("double").alias("weight"),
-                    )
-                elif self.weight_scheme == "factored":
-                    # doc-local factor only — no term-stats aggregate, no
-                    # join: the weighting stage is map-side on BOTH
-                    # layouts, and the aligned path keeps its narrow
-                    # lineage without any broadcast
-                    weighted = bm25_tf_part(
-                        postings,
-                        k1=self.k1,
-                        b=self.b,
-                        avgdl=float(meta["avgdl"]),
-                    )
-                else:
-                    weighted = bm25_weights(
-                        postings,
-                        k1=self.k1,
-                        b=self.b,
-                        n_docs=int(meta["n_docs"]),
-                        avgdl=float(meta["avgdl"]),
-                        # aligned mode must not let the stats join re-hash
-                        # the postings stream (see _segment_plan)
-                        broadcast_stats=self.input_layout == "aligned",
-                    )
-                weighted = weighted.withColumn(
-                    "shard", (F.col("doc_id") / self.shard_size).cast("int")
-                )
+                weighted = self._weighted(postings)
                 if fail_after_groups is not None:
                     # deterministic sequential mode for the crash-injection
                     # test (FIXTURES.md §6) — one commit unit per job
@@ -609,7 +549,7 @@ class IndexBuilder:
             # avgdl*N reconstruction
             "sum_dl": float(m["sum_dl"] or 0.0),
             # the avgdl block score bounds are encoded at (pinned forever;
-            # readers ratio-scale bounds to the current avgdl — raw scheme)
+            # readers ratio-scale bounds to the current avgdl)
             "bounds_avgdl": avgdl,
             "n_shards": int(m["max_shard"] or 0) + 1,
             "shard_size": self.shard_size,
@@ -619,18 +559,28 @@ class IndexBuilder:
             "n_groups": self.n_groups,
             "lang": self.lang,
             "input_layout": self.input_layout,
-            "weight_scheme": self.weight_scheme,
+            "weight_scheme": "raw",
         }
         self.commit.publish_json(
             os.path.join(self.index_dir, "meta.json"), meta
         )
         return meta
 
+    def _weighted(self, postings: DataFrame) -> DataFrame:
+        """The segment job's input: dl IS the stored weight, so there is no
+        weighting expression at all (the tf-part is derived in the query
+        kernel) — a map-side projection, so the job's only wide exchange
+        is the doc→shard repartition (none on the aligned layout)."""
+        return postings.select(
+            "doc_id", "term", "tf", "dl",
+            F.col("dl").cast("double").alias("weight"),
+        ).withColumn("shard", (F.col("doc_id") / self.shard_size).cast("int"))
+
     def _segment_plan(self, weighted: DataFrame, n_shards_in: int):
         """repartition(shard, term-salt) → Arrow block encode (the encoder
         lexsorts its partition in-kernel: no JVM row sort in the plan).
 
-        Partition count: ``max(per_shard × n_shards, cores)`` — one task
+        Partition count: ``max(n_shards, cores)`` — one task
         per shard (the positional sidecar's rule, positional.py), never
         fewer tasks than cores. The term salt splits each shard into 4
         sub-keys, so even n_parts == n_shards hash partitioning balances
@@ -667,20 +617,14 @@ class IndexBuilder:
             F.col("weight").cast("float").alias("weight"),
         )
 
-        # 'raw' scheme: blocks store dl in the weights column; the block
-        # score bounds are computed over the derived tf-part at the index's
-        # pinned bounds_avgdl (meta.json) — valid for any later corpus
-        # avgdl via the query-side ratio scaling (wand._ShardIndex)
-        bfn = None
-        if self.weight_scheme == "raw":
-            import functools
-
-            from similaripy_spark.fulltext.weights import tf_part_np
-
-            bfn = functools.partial(
-                tf_part_np, k1=self.k1, b=self.b,
-                avgdl=float(self._bounds_avgdl),
-            )
+        # blocks store dl in the weights column; the block score bounds
+        # are computed over the derived tf-part at the index's pinned
+        # bounds_avgdl (meta.json) — valid for any later corpus avgdl via
+        # the query-side ratio scaling (wand._ShardIndex)
+        bfn = functools.partial(
+            tf_part_np, k1=self.k1, b=self.b,
+            avgdl=float(self._bounds_avgdl),
+        )
 
         def encode(df):
             return df.mapInArrow(
@@ -697,10 +641,8 @@ class IndexBuilder:
             # caller's input layout and none is planned here
             self._segment_parts = None
             return encode(weighted)
-        per_shard = int(os.environ.get("SIMILARIPY_BUILD_PARTS_PER_SHARD", "1"))
         n_parts = max(
-            per_shard * max(n_shards_in, 1),
-            weighted.sparkSession.sparkContext.defaultParallelism,
+            n_shards_in, weighted.sparkSession.sparkContext.defaultParallelism
         )
         self._segment_parts = n_parts
         return encode(
@@ -1004,8 +946,33 @@ def read_segments(spark: SparkSession, index_dir: str) -> DataFrame:
     return spark.read.parquet(seg_dir)
 
 
+def check_weight_scheme(meta: dict, index_dir: str) -> dict:
+    """The index format check, run on every meta.json an opener reads
+    (``read_meta``, and a resumed build's read through the commit
+    protocol). Returns ``meta``.
+
+    Only ``weight_scheme == "raw"`` is served: blocks store (tf, dl) and
+    the kernels derive the BM25 weight at read time. The removed
+    'factored' (stored tf-parts) and 'prod' (stored idf×tf products)
+    formats, and round-3 metas with no weight_scheme field (those were
+    'prod'), raise ValueError — decoding their payloads as (tf, dl)
+    would return wrong scores without any error."""
+    scheme = meta.get("weight_scheme")
+    if scheme != "raw":
+        name = (
+            repr(scheme) if scheme is not None
+            else "'prod' (meta.json has no weight_scheme field)"
+        )
+        raise ValueError(
+            f"index {index_dir} uses the legacy weight_scheme {name}; only "
+            "'raw' indexes can be served — rebuild it with IndexBuilder"
+        )
+    return meta
+
+
 def read_meta(index_dir: str) -> dict:
-    return json.load(open(os.path.join(index_dir, "meta.json")))
+    with open(os.path.join(index_dir, "meta.json")) as f:
+        return check_weight_scheme(json.load(f), index_dir)
 
 
 #: static — pinned so readers skip the per-call schema-inference job
@@ -1079,7 +1046,6 @@ def describe_index(spark: SparkSession, index_dir: str) -> dict:
         "n_shards": int(meta["n_shards"]),
         "shard_size": int(meta["shard_size"]),
         "avgdl": float(meta["avgdl"]),
-        "weight_scheme": meta.get("weight_scheme", "prod"),
         "n_postings": int(row["n_postings"] or 0),
         "n_blocks": int(row["n_blocks"] or 0),
         "n_shards_nonempty": int(row["n_shards_nonempty"] or 0),

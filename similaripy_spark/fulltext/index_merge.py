@@ -189,10 +189,6 @@ def merge_indexes(
         block_size=ref_meta["block_size"],
         shard_size=ref_meta["shard_size"],
         n_groups=ref_meta["n_groups"],
-        # keep the source scheme: factored blocks re-encode the new
-        # avgdl-dependent tf-part, and the new corpus' idf applies itself
-        # at query time from the rebuilt term_stats
-        weight_scheme=ref_meta.get("weight_scheme", "prod"),
     )
     kwargs.update(builder_kwargs)
     builder = IndexBuilder(out_dir, **kwargs)

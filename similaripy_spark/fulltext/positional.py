@@ -720,7 +720,6 @@ def phrase_topk_pos(
         k=1 << 62,
         mode="and",
         index_dir=index_dir,
-        weight_scheme=meta.get("weight_scheme", "prod"),
         deep_paging=False,
     ).select("query_id", "doc_id", "score")
     # phrase offsets: (query_id, offset, term); n_off = phrase length

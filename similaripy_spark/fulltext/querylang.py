@@ -30,8 +30,8 @@ one string per call, the interactive-search server path:
   terms with the index's own statistics — decoded (tf) blocks
   (term-pushdown scan) ⋈ doc_stats(dl) → bm25_tf_part at the index's
   (k1, b, avgdl) ⋈ idf_table(term_stats, N) — exact float64 reference
-  BM25, independent of the stored weight scheme (tf rides in every block
-  precisely so readers can re-derive weights). NOT terms anti-join,
+  BM25, independent of the kernels' float32 rounding (tf rides in every
+  block precisely so readers can re-derive weights). NOT terms anti-join,
   doc-values filters apply via docvalues.filter_docs (the relational twin
   of the kernel matcher), standard (score DESC, doc_id ASC) tie rule.
   Cost is linear in the phrase match sets and the ranked terms' posting

@@ -72,26 +72,24 @@ class _ShardIndex:
     term are stored as contiguous row slices in (shard, block_id) order, so
     docIDs stay globally ascending even in the term-major merged layout.
 
-    ``idf``: term → multiplier for FACTORED indexes (blocks store only the
-    doc-local BM25 factor; meta.json weight_scheme='factored'). Decoded
-    weights are scaled per term and block/term score bounds are adjusted —
-    the stored tf-part is strictly positive, so a negative idf (unclamped
-    reference semantics, df > N/2) flips each bound to the opposite
-    extreme: effective max = idf × stored_min, effective min = idf ×
-    stored_max. Every scorer then runs unchanged and stays exact.
+    Blocks store dl in the weights column and tf in every block.
 
-    ``raw``: params dict for RAW indexes (meta.json weight_scheme='raw' —
-    blocks store dl in the weights column and tf in every block): decode
-    derives the tf-part from (tf, dl) at the CURRENT corpus ``avgdl`` —
-    this is what makes append-only ingestion exact, committed blocks never
-    go stale. Stored block bounds were encoded at the pinned
-    ``bounds_avgdl``; the tf-part is monotone increasing in avgdl and its
-    drift is bounded by the avgdl ratio r (worst case tf + k1*(1-b) → 0),
-    so scaling stored maxima by max(1, r) and minima by min(1, r) keeps
-    every bound valid — pruning stays exact, merely a little looser until
-    a reweight re-pins the bounds. ``raw`` requires ``idf`` (the factored
-    idf plumbing is shared). Keys: k1, b, avgdl, bounds_avgdl,
-    delta (optional).
+    ``raw``: the kernel params (keys: k1, b, avgdl, bounds_avgdl, delta
+    optional). Decode derives the doc-local tf-part from (tf, dl) at the
+    CURRENT corpus ``avgdl`` — this is what makes append-only ingestion
+    exact, committed blocks never go stale. Stored block bounds were
+    encoded at the pinned ``bounds_avgdl``; the tf-part is monotone
+    increasing in avgdl and its drift is bounded by the avgdl ratio r
+    (worst case tf + k1*(1-b) → 0), so scaling stored maxima by max(1, r)
+    and minima by min(1, r) keeps every bound valid — pruning stays exact,
+    merely a little looser until a reweight re-pins the bounds.
+
+    ``idf``: term → multiplier. Decoded tf-parts are scaled per term and
+    block/term score bounds are adjusted — the tf-part is strictly
+    positive, so a negative idf (unclamped reference semantics, df > N/2)
+    flips each bound to the opposite extreme: effective max = idf ×
+    stored_min, effective min = idf × stored_max. Every scorer then runs
+    unchanged and stays exact.
 
     ``tomb``: SORTED int64 array of tombstoned doc_ids (delete.py).
     Deleted docs are dropped AT DECODE TIME — the single choke point every
@@ -102,8 +100,8 @@ class _ShardIndex:
     stays exact, merely a little looser until delete.compact_index.
     """
 
-    def __init__(self, seg: pd.DataFrame, idf: dict | None = None,
-                 raw: dict | None = None, tomb=None, dv=None):
+    def __init__(self, seg: pd.DataFrame, idf: dict, raw: dict,
+                 tomb=None, dv=None):
         self._idf = idf
         self._raw = raw
         self._tomb = tomb if tomb is not None and len(tomb) else None
@@ -112,22 +110,16 @@ class _ShardIndex:
         # Applied in _live_mask (the decode choke point), so every scorer
         # is exact over the filtered corpus, same argument as tombstones.
         self._dv = dv if dv else None
-        self._bs_up = self._bs_dn = 1.0
-        if raw is not None:
-            if idf is None:
-                raise ValueError(
-                    "raw-scheme scoring requires the per-term idf map"
-                )
-            r = float(raw["avgdl"]) / float(raw["bounds_avgdl"])
-            self._bs_up, self._bs_dn = max(1.0, r), min(1.0, r)
-            if r != 1.0:
-                # stored bounds and kernel scores each round through
-                # float32 at DIFFERENT avgdls, so a decoded score can
-                # exceed the exact-math-scaled bound by an ULP; widen by
-                # 1e-6 relative (≈8 f32 ULPs) — bounds stay valid, just
-                # marginally looser (values are positive tf-parts)
-                self._bs_up *= 1.0 + 1e-6
-                self._bs_dn *= 1.0 - 1e-6
+        r = float(raw["avgdl"]) / float(raw["bounds_avgdl"])
+        self._bs_up, self._bs_dn = max(1.0, r), min(1.0, r)
+        if r != 1.0:
+            # stored bounds and kernel scores each round through float32
+            # at DIFFERENT avgdls, so a decoded score can exceed the
+            # exact-math-scaled bound by an ULP; widen by 1e-6 relative
+            # (≈8 f32 ULPs) — bounds stay valid, just marginally looser
+            # (values are positive tf-parts)
+            self._bs_up *= 1.0 + 1e-6
+            self._bs_dn *= 1.0 - 1e-6
         codes, uniques = pd.factorize(seg["term"], sort=False)
         order = np.lexsort(
             (seg["block_id"].to_numpy(), seg["shard"].to_numpy(), codes)
@@ -145,10 +137,7 @@ class _ShardIndex:
         self._mins = seg["min_score"].to_numpy(np.float32)[order]
         self._dd = seg["doc_deltas"].to_numpy(dtype=object)[order]
         self._ww = seg["weights"].to_numpy(dtype=object)[order]
-        self._tt = (
-            seg["tfs"].to_numpy(dtype=object)[order]
-            if raw is not None else None
-        )
+        self._tt = seg["tfs"].to_numpy(dtype=object)[order]
         self._groups = self._slice  # membership checks elsewhere
         self._cache: dict[str, tuple[np.ndarray, np.ndarray]] = {}
 
@@ -157,24 +146,16 @@ class _ShardIndex:
 
     def term_meta(self, term):
         """(tmax, tmin, block first_docs, max_docs, max_scores) or None.
-        Factored indexes: bounds are idf-adjusted here so the MaxScore
-        pruning logic stays oblivious to the storage scheme."""
+        Bounds are idf-adjusted here so the MaxScore pruning logic stays
+        oblivious to the storage format."""
         se = self._slice.get(term)
         if se is None:
             return None
         s, e = se
-        # raw scheme: stored bounds were encoded at bounds_avgdl — the
-        # one-sided ratio scaling keeps them valid at the current avgdl
+        # stored bounds were encoded at bounds_avgdl — the one-sided ratio
+        # scaling keeps them valid at the current avgdl
         maxs = self._maxs[s:e].astype(np.float64) * self._bs_up
         mins = self._mins[s:e].astype(np.float64) * self._bs_dn
-        if self._idf is None:
-            return (
-                float(maxs.max()),
-                float(mins.min()),
-                self._first[s:e],
-                self._maxd[s:e],
-                maxs,
-            )
         i = float(self._idf.get(term, 0.0))
         # bounds stay float64: a float32 round-down of an upper bound could
         # make block skipping inexact
@@ -200,22 +181,20 @@ class _ShardIndex:
         docs = codec.decode_doc_blocks(
             [self._dd[r] for r in rows], ns, self._first[rows]
         )
-        weights = np.frombuffer(
+        dls = np.frombuffer(
             b"".join(self._ww[r] for r in rows), dtype=np.float32
         ).astype(np.float64)
-        if self._raw is not None:
-            # stored weights are dl; derive the tf-part at the CURRENT
-            # avgdl (float32-rounded — bit-identical to what a factored
-            # build at this avgdl would have stored)
-            tfs = codec.decode_varints(
-                b"".join(self._tt[r] for r in rows), int(ns.sum())
-            )
-            weights = tf_part_np(
-                tfs, weights,
-                k1=float(self._raw["k1"]), b=float(self._raw["b"]),
-                avgdl=float(self._raw["avgdl"]),
-                delta=float(self._raw.get("delta", 0.0)),
-            ).astype(np.float64)
+        # stored weights are dl; derive the tf-part at the CURRENT avgdl
+        # (float32-rounded, like every stored BM25 weight of the engine)
+        tfs = codec.decode_varints(
+            b"".join(self._tt[r] for r in rows), int(ns.sum())
+        )
+        weights = tf_part_np(
+            tfs, dls,
+            k1=float(self._raw["k1"]), b=float(self._raw["b"]),
+            avgdl=float(self._raw["avgdl"]),
+            delta=float(self._raw.get("delta", 0.0)),
+        ).astype(np.float64)
         return docs, weights
 
     def _live_mask(self, docs: np.ndarray) -> "np.ndarray | None":
@@ -244,8 +223,8 @@ class _ShardIndex:
 
     def decode_blocks(self, term, block_mask: np.ndarray | None = None):
         """→ (docs int64 asc, weights float64) for selected blocks; weights
-        are idf-scaled on factored indexes. Full-term decodes are
-        memoized (scaled — idf is fixed for this instance)."""
+        are idf-scaled. Full-term decodes are memoized (scaled — idf is
+        fixed for this instance)."""
         s, e = self._slice[term]
         if block_mask is None:
             hit = self._cache.get(term)
@@ -255,8 +234,7 @@ class _ShardIndex:
         else:
             rows = np.arange(s, e)[block_mask]
         docs, weights = self._decode_rows(rows)
-        if self._idf is not None:
-            weights = weights * float(self._idf.get(term, 0.0))
+        weights = weights * float(self._idf.get(term, 0.0))
         keep = self._live_mask(docs)
         if keep is not None:
             docs, weights = docs[keep], weights[keep]
@@ -268,7 +246,7 @@ class _ShardIndex:
     def decode_terms(self, terms):
         """Bulk decode many terms at once → (docs, weights, spans) where
         spans[term] = (start, end) into the returned arrays; weights are
-        idf-scaled per span on factored indexes."""
+        idf-scaled per span."""
         spans = {}
         row_parts = []
         pos = 0
@@ -284,9 +262,8 @@ class _ShardIndex:
         if not row_parts:
             return np.zeros(0, np.int64), np.zeros(0, np.float64), spans
         docs, weights = self._decode_rows(np.concatenate(row_parts))
-        if self._idf is not None:
-            for t, (p0, p1) in spans.items():
-                weights[p0:p1] *= float(self._idf.get(t, 0.0))
+        for t, (p0, p1) in spans.items():
+            weights[p0:p1] *= float(self._idf.get(t, 0.0))
         keep = self._live_mask(docs)
         if keep is not None:
             # remap every span through the prefix-sum of the keep mask so
@@ -495,8 +472,8 @@ _EMPTY_RANKED = {**_EMPTY_RESULT, "rank": pd.Series(dtype="int32")}
 
 def _attach_idfs(queries: DataFrame, idf_df: DataFrame) -> DataFrame:
     """queries(query_id, terms, ...) → + ``idfs`` array<double> positionally
-    aligned with ``terms`` (factored indexes: the per-term idf the scorers
-    multiply into the stored doc-local factors).
+    aligned with ``terms`` (the per-term idf the scorers multiply into the
+    derived doc-local tf-parts).
 
     Distributed by construction: explode the (tiny) query side, join the
     V-row idf table — AQE broadcast-converts it when small, shuffle-joins at
@@ -528,20 +505,11 @@ def _idf_map_from_pdf(terms_col, idfs_col) -> dict:
     return idf
 
 
-def _index_is_factored(index_dir: str) -> bool:
-    """True for either query-time-idf scheme ('factored' or 'raw')."""
-    from similaripy_spark.fulltext.index_build import read_meta
-
-    return read_meta(index_dir).get("weight_scheme", "prod") in (
-        "factored", "raw",
-    )
-
-
-def _tomb_for(index_dir: str | None, meta: dict | None) -> "np.ndarray | None":
+def _tomb_for(index_dir: str, meta: dict) -> "np.ndarray | None":
     """Sorted tombstone doc_id array for kernel-side filtering, or None.
     Driver-side pyarrow read, gated on the meta flag so untombstoned
     indexes pay nothing."""
-    if index_dir is None or not (meta or {}).get("n_tombstone_epochs"):
+    if not meta.get("n_tombstone_epochs"):
         return None
     from similaripy_spark.fulltext.delete import tombstone_array
 
@@ -549,20 +517,18 @@ def _tomb_for(index_dir: str | None, meta: dict | None) -> "np.ndarray | None":
 
 
 def _raw_params_from_meta(meta: dict) -> dict:
-    """Kernel params for 'raw' indexes: the current corpus avgdl (applied
-    to every decode) and the pinned bounds_avgdl the block bounds were
-    encoded at (legacy metas without the field never drifted — they were
-    written before append existed, so avgdl is the encode-time value)."""
+    """Kernel params: the current corpus avgdl (applied to every decode)
+    and the pinned bounds_avgdl the block bounds were encoded at."""
     return {
-        "k1": float(meta.get("k1", 1.2)),
-        "b": float(meta.get("b", 0.75)),
+        "k1": float(meta["k1"]),
+        "b": float(meta["b"]),
         "avgdl": float(meta["avgdl"]),
-        "bounds_avgdl": float(meta.get("bounds_avgdl", meta["avgdl"])),
+        "bounds_avgdl": float(meta["bounds_avgdl"]),
     }
 
 
 def _index_idf_table(spark, index_dir: str) -> DataFrame:
-    """(term, idf) for a factored index — term_stats df × the meta n_docs."""
+    """(term, idf) of an index — term_stats df × the meta n_docs."""
     from similaripy_spark.fulltext.index_build import (
         read_meta,
         read_term_stats,
@@ -576,8 +542,7 @@ def _index_idf_table(spark, index_dir: str) -> DataFrame:
 
 
 def segments_with_idf(segments: DataFrame, index_dir: str) -> DataFrame:
-    """Serve-path annotation for RAW and FACTORED indexes: join the
-    per-term ``idf`` onto the segment relation ONCE, at index-load time, so
+    """Serve-path annotation: join the per-term ``idf`` onto the segment relation ONCE, at index-load time, so
     every subsequent ``segment_topk`` batch skips the per-batch query-side
     annotation (posexplode → V-row join → collect_list regroup — two extra
     exchanges per batch, measured +30% wall on a 10k-query batch at
@@ -591,9 +556,7 @@ def segments_with_idf(segments: DataFrame, index_dir: str) -> DataFrame:
     way the cost is paid once per load and amortized over every batch an
     index server answers. A per-batch caller that loads segments fresh each
     time should NOT use this at large V (the query-side annotation only
-    ever touches the tiny batch). No-op on 'prod' indexes."""
-    if not _index_is_factored(index_dir):
-        return segments
+    ever touches the tiny batch)."""
     idf_df = _index_idf_table(segments.sparkSession, index_dir)
     return segments.join(idf_df, "term", "left")
 
@@ -601,7 +564,7 @@ def segments_with_idf(segments: DataFrame, index_dir: str) -> DataFrame:
 #: score+match grid budget per worker (bytes): the two per-chunk dense
 #: grids must stay L3-resident PER CORE on a fully loaded socket — 1.2 MB
 #: lands chunk=16 at the default 4.7k-doc shard span (measured optimum;
-#: sweep in _score_batch). Override per-run with SIMILARIPY_SCORER_CHUNK.
+#: sweep in _score_batch).
 _GRID_TARGET_BYTES = 1_200_000
 
 #: deep-paging auto-cutover: below this k the one-pass merge volume is cheap
@@ -765,24 +728,20 @@ def _score_batch(
     span = int(docs.max()) - d_min + 1
     local = docs - d_min
     if chunk is None:
-        env = os.environ.get("SIMILARIPY_SCORER_CHUNK")
-        if env is not None:
-            chunk = int(env)
-        else:
-            # Cache-resident grids: the per-chunk score+match grids
-            # (chunk × span × 8 B × 2) are zeroed, scattered into, and
-            # re-read every chunk — total grid traffic is n_q × span,
-            # INDEPENDENT of chunk size, so the only lever is where that
-            # traffic lands. Sized per-core-L3-resident it never touches
-            # DRAM; at the old fixed chunk=256 (≈19 MB of grid per worker
-            # at 4.7k-doc shards) it all did, and the scorer was the
-            # engine's DRAM-bandwidth hog. Measured, 300k-doc corpus, 30k
-            # queries: local[8] 118.8 s → 78.5 s (chunk 256 → 16, +34%
-            # throughput); local[2] improves 21%, and the 2→8-core query
-            # scaling pair goes 0.75 → ~0.90 because 8 concurrent workers
-            # no longer fight for the socket's memory bandwidth. Sweep:
-            # 256→118.8, 64→85.2, 32→84.5, 16→78.5, 8→79.3, 4→116.3 s.
-            chunk = int(max(8, min(256, _GRID_TARGET_BYTES // (span * 16))))
+        # Cache-resident grids: the per-chunk score+match grids
+        # (chunk × span × 8 B × 2) are zeroed, scattered into, and re-read
+        # every chunk — total grid traffic is n_q × span, INDEPENDENT of
+        # chunk size, so the only lever is where that traffic lands. Sized
+        # per-core-L3-resident it never touches DRAM; at the old fixed
+        # chunk=256 (≈19 MB of grid per worker at 4.7k-doc shards) it all
+        # did, and the scorer was the engine's DRAM-bandwidth hog.
+        # Measured, 300k-doc corpus, 30k queries: local[8] 118.8 s →
+        # 78.5 s (chunk 256 → 16, +34% throughput); local[2] improves 21%,
+        # and the 2→8-core query scaling pair goes 0.75 → ~0.90 because 8
+        # concurrent workers no longer fight for the socket's memory
+        # bandwidth. Sweep: 256→118.8, 64→85.2, 32→84.5, 16→78.5, 8→79.3,
+        # 4→116.3 s.
+        chunk = int(max(8, min(256, _GRID_TARGET_BYTES // (span * 16))))
 
     out_parts = []
     for c0 in range(0, n_q, chunk):
@@ -899,10 +858,9 @@ def segment_topk(
     segments: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    shard_ids=None,
+    *,
+    index_dir: str,
     query_weighted: bool = False,
-    index_dir: str | None = None,
-    weight_scheme: str | None = None,
     deep_paging: bool | None = None,
     mode: str = "or",
     min_match: int | None = None,
@@ -917,8 +875,8 @@ def segment_topk(
     whole-corpus, the surviving top-k is EXACT over the filtered set. The
     predicate is applied at the decode choke point inside the kernel
     (docvalues.py), delivered per shard as sentinel segment rows riding
-    the existing cogroup — no broadcast of corpus-sized state. Requires
-    ``index_dir`` with a fresh docvalues sidecar (build_docvalues).
+    the existing cogroup — no broadcast of corpus-sized state. Requires a
+    fresh docvalues sidecar beside the index (build_docvalues).
 
     ``mode='or'`` (default) ranks any doc matching ≥1 query term (the BM25
     union semantics of the reference's sparse dot products); ``mode='and'``
@@ -945,19 +903,11 @@ def segment_topk(
     (``_score_batch``). Small selective batches belong on
     ``term_major_topk``, which ``retrieve.route`` picks for them.
 
-    Shard enumeration: pass ``shard_ids`` (``range(meta['n_shards'])``) or
-    ``index_dir`` (the shard count is read from ``meta.json``, a driver-side
-    file read — no job). Only a bare-DataFrame call with neither falls back
-    to a shard-discovery ``distinct().collect()`` job.
-
-    Weight scheme: a RAW index (meta.json weight_scheme='raw' — the
-    default build) stores tf and dl, a FACTORED one the doc-local BM25
-    factor; for both this function annotates the query batch with per-term
-    idf from term_stats (unless the segments already carry it —
-    ``segments_with_idf``) and the scorer applies it during decode.
-    Resolution: explicit ``weight_scheme`` wins, else ``index_dir``'s meta,
-    else 'prod' (round-3 format). Raw and factored scoring need
-    ``index_dir`` (for term_stats + n_docs).
+    ``index_dir`` is the index ``segments`` were read from: its
+    ``meta.json`` (a driver-side file read — no job) gives the shard list
+    and the corpus scalars the kernel derives the tf-part at, and its
+    term_stats the per-term idf the query batch is annotated with (unless
+    the segments already carry it — ``segments_with_idf``).
     """
     if mode not in ("or", "and"):
         raise ValueError(f"mode must be 'or' or 'and', got {mode!r}")
@@ -975,35 +925,17 @@ def segment_topk(
             "query_weighted=True requires a `weights` array column "
             "parallel to `terms`"
         )
-    spark = segments.sparkSession
-    meta = None
-    if index_dir is not None:
-        from similaripy_spark.fulltext.index_build import read_meta
+    from similaripy_spark.fulltext.index_build import read_meta
 
-        meta = read_meta(index_dir)
-    if weight_scheme is None:
-        weight_scheme = (meta or {}).get("weight_scheme", "prod")
-    # 'factored' and 'raw' indexes both apply the term-global idf at query
-    # time; 'raw' additionally derives the doc-local tf-part in the kernel
-    # from the stored (tf, dl) and the CURRENT corpus avgdl (exact under
-    # append-only ingestion — see append.py)
-    factored = weight_scheme in ("factored", "raw")
-    raw_params = None
-    if weight_scheme == "raw":
-        if meta is None:
-            raise ValueError(
-                "weight_scheme='raw' scoring needs index_dir (for "
-                "term_stats and the corpus scalars)"
-            )
-        raw_params = _raw_params_from_meta(meta)
+    spark = segments.sparkSession
+    meta = read_meta(index_dir)
+    # the kernel derives the doc-local tf-part from the stored (tf, dl) at
+    # the CURRENT corpus avgdl (exact under append-only ingestion — see
+    # append.py) and applies the term-global idf
+    raw_params = _raw_params_from_meta(meta)
     tomb = _tomb_for(index_dir, meta)
     dv_luts = None
     if dv_filter is not None:
-        if index_dir is None:
-            raise ValueError(
-                "dv_filter needs index_dir (the docvalues sidecar lives "
-                "beside the index)"
-            )
         from similaripy_spark.fulltext import docvalues as _dvmod
 
         dv_luts = _dvmod.resolve_filter(index_dir, dv_filter)
@@ -1017,13 +949,8 @@ def segment_topk(
     # segments pre-annotated with idf (segments_with_idf — the serve path)
     # need no per-batch query-side annotation: the kernel reads the idf
     # straight off the shard's own rows
-    seg_has_idf = factored and "idf" in segments.columns
-    if factored and not seg_has_idf:
-        if meta is None:
-            raise ValueError(
-                f"weight_scheme={weight_scheme!r} scoring needs index_dir "
-                "(for term_stats and n_docs)"
-            )
+    seg_has_idf = "idf" in segments.columns
+    if not seg_has_idf:
         from similaripy_spark.fulltext.index_build import read_term_stats
         from similaripy_spark.fulltext.weights import idf_table
 
@@ -1033,21 +960,12 @@ def segment_topk(
                 read_term_stats(spark, index_dir), int(meta["n_docs"])
             ),
         )
-    if shard_ids is None and meta is not None:
-        shard_ids = range(int(meta["n_shards"]))
-    if shard_ids is None:
-        # last resort (bare-DataFrame caller, no index_dir): distinct shard
-        # ids are tiny (n_docs / shard_size) but this IS a Spark job —
-        # engine-internal paths always pass shard_ids or index_dir.
-        shard_ids = [
-            r["shard"] for r in segments.select("shard").distinct().collect()
-        ]
-    shards_list = [int(s) for s in shard_ids]
+    shards_list = list(range(int(meta["n_shards"])))
     shards = _shard_frame(spark, shards_list)
     qcols = (
         ["query_id", "terms"]
         + (["weights"] if query_weighted else [])
-        + (["idfs"] if factored and not seg_has_idf else [])
+        + ([] if seg_has_idf else ["idfs"])
         + (["not_terms"] if "not_terms" in queries.columns else [])
     )
     def make_score_shard(k_emit: int, with_tau: bool):
@@ -1073,9 +991,7 @@ def segment_topk(
                          "doc_id": pd.Series(dtype="int64"),
                          "score": pd.Series(dtype="float64")}
                     )
-            if not factored:
-                idf = None
-            elif seg_has_idf:
+            if seg_has_idf:
                 idf = dict(zip(
                     seg_pdf["term"],
                     np.nan_to_num(
@@ -1184,8 +1100,7 @@ class TermMajorIndex:
     Opening reads ``meta.json`` and ``merged/_meta.json`` (driver-side
     file reads) and opens two relations: the merged layout
     (``index_merge.open_merged``, whose file listing is a Spark job at 64
-    buckets) and, for RAW and FACTORED indexes, the ``(term, idf)`` table
-    over ``term_stats``. Every ``topk`` call then filters them to the
+    buckets) and the ``(term, idf)`` table over ``term_stats``. Every ``topk`` call then filters them to the
     batch's terms. Tombstones are re-read per call (``delete_docs`` leaves
     the layout in place and takes effect at once); an append renames
     ``merged/`` away, so an opened instance is a snapshot of one layout.
@@ -1205,14 +1120,8 @@ class TermMajorIndex:
         self.n_buckets = (
             merged_n_buckets(index_dir) if n_buckets is None else n_buckets
         )
-        scheme = meta.get("weight_scheme", "prod")
-        self.idf = (
-            _index_idf_table(spark, index_dir)
-            if scheme in ("factored", "raw") else None
-        )
-        self.raw_params = (
-            _raw_params_from_meta(meta) if scheme == "raw" else None
-        )
+        self.idf = _index_idf_table(spark, index_dir)
+        self.raw_params = _raw_params_from_meta(meta)
 
     def topk(
         self,
@@ -1263,10 +1172,9 @@ class TermMajorIndex:
             ]
         if len(terms) > max_pruned_terms:
             terms = None  # too many literals: semi-join instead
-        if self.idf is not None:
-            idf = (self.idf if terms is None
-                   else self.idf.filter(F.col("term").isin(terms)))
-            qterms = qterms.join(idf, "term", "left")
+        idf = (self.idf if terms is None
+               else self.idf.filter(F.col("term").isin(terms)))
+        qterms = qterms.join(idf, "term", "left")
         if terms is not None:
             blocks = read_merged_for_terms(self.merged, terms, self.n_buckets)
             joined = blocks.join(F.broadcast(qterms), "term")
@@ -1281,12 +1189,10 @@ class TermMajorIndex:
 
         def score_query(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
             seg = pdf.drop_duplicates(subset=["term", "shard", "block_id"])
-            idf = None
-            if "idf" in pdf.columns:
-                idf = dict(zip(
-                    pdf["term"],
-                    np.nan_to_num(pdf["idf"].to_numpy(np.float64), nan=0.0),
-                ))
+            idf = dict(zip(
+                pdf["term"],
+                np.nan_to_num(pdf["idf"].to_numpy(np.float64), nan=0.0),
+            ))
             idx = _ShardIndex(seg, idf=idf, raw=raw_params, tomb=tomb)
             uterms = list(dict.fromkeys(pdf["term"]))
             if "nreq" in pdf.columns:

@@ -1,4 +1,6 @@
-"""BM25 weighting over postings — the index-build weighting pass.
+"""BM25 weighting over postings: the relational weighting pass
+(``bm25_weights`` — the path the index is checked against), plus the
+tf-part and idf pieces the index applies at read time.
 
 Reproduces the contract of ``inplace_normalize_csr_bm25plus``
 (normalization.pyx:260-334, transcribed in SURVEY.md §2.3) on the postings
@@ -39,7 +41,6 @@ def bm25_weights(
     logbase: float = math.e,
     n_docs: int | None = None,
     avgdl: float | None = None,
-    broadcast_stats: bool = False,
 ) -> DataFrame:
     """postings(doc_id, term, tf, dl) → + (weight double).
 
@@ -48,18 +49,8 @@ def bm25_weights(
     When BOTH ``n_docs`` and ``avgdl`` are given (the index builder already
     computed them from doc_stats) they become plan literals — no corpus agg,
     no crossJoin, one less pass over the postings.
-
-    ``broadcast_stats`` FORCES the term-stats broadcast. Only the aligned
-    index-build path sets it: there, preserving the postings partitioning is
-    a correctness requirement (a sort-merge fallback would re-hash the
-    stream by term and scatter each shard across partitions), so the
-    vocabulary must fit in executor memory — that mode is documented as
-    bounded-vocabulary; the default stays unhinted for web-scale vocabularies.
     """
-    stats = term_stats(postings)
-    p = postings.join(
-        F.broadcast(stats) if broadcast_stats else stats, "term"
-    )
+    p = postings.join(term_stats(postings), "term")
     if n_docs is not None and avgdl is not None:
         ndocs_col = F.lit(float(n_docs))
         avgdl_col = F.lit(float(avgdl))
@@ -96,16 +87,13 @@ def bm25_tf_part(
 
         weight = tf*(k1+1) / (tf + k1*((1-b) + b*dl/avgdl)) + delta
 
-    The term-global idf factor is applied at QUERY time from term_stats
-    (BM25 = idf(t) × this value — same factoring as the reference's
+    The term-global idf factor is joined on separately (``idf_table``;
+    BM25 = idf(t) × this value — same factoring as the reference's
     separate stats pass vs weighting pass, normalization.pyx:309-334).
-    This is the weighting pass of the ``weight_scheme='factored'`` index
-    build: it needs NO term-stats aggregate and NO join — not even an
-    unhinted one — so the segment job's only wide exchange is the doc→shard
-    repartition (zero exchange on the aligned layout), and the
-    bounded-vocabulary broadcast the aligned path used to require is gone
-    entirely. ``avgdl`` must be supplied (the builder has it from
-    doc_stats); it is a corpus scalar, not a vocabulary-sized table."""
+    Its callers score decoded index postings relationally, in float64:
+    ``docvalues.collapse_topk`` and the phrase composition of
+    ``querylang.search``. ``avgdl`` must be supplied (the index meta has
+    it); it is a corpus scalar, not a vocabulary-sized table."""
     if avgdl is None:
         raise ValueError("bm25_tf_part requires the avgdl corpus scalar")
     tf_ = tf_expr(
@@ -125,9 +113,9 @@ def idf_table(
     idf_mode: str = "bm25",
     logbase: float = math.e,
 ) -> DataFrame:
-    """term_stats(term, df, ...) → (term, idf double): the query-time side
-    of the factored scheme. V rows, computed once per query batch — joined
-    against the (tiny) exploded query terms, never against postings."""
+    """term_stats(term, df, ...) → (term, idf double): the query-time idf
+    of an index. V rows, computed once per query batch — joined against
+    the (tiny) exploded query terms, never against postings."""
     return term_stats.select(
         "term",
         idf_expr(
@@ -149,14 +137,13 @@ def tf_part_np(
 
         tf*(k1+1) / (tf + k1*((1-b) + b*dl/avgdl)) + delta
 
-    Shared by the 'raw' weight scheme's two consumers: the block encoder
-    (per-block score BOUNDS, computed at the index's pinned
+    Shared by the index's two consumers of the stored (tf, dl): the block
+    encoder (per-block score BOUNDS, computed at the index's pinned
     ``bounds_avgdl``) and the query kernels (exact scores at the CURRENT
-    ``avgdl`` — which is what makes append-without-rewrite exact: blocks
-    store (tf, dl) and the corpus scalar is applied at read time). The
-    result is rounded through float32 so a raw index scores bit-identically
-    to a factored index built at the same avgdl (which stores this value
-    as float32)."""
+    ``avgdl`` — which is what makes append-without-rewrite exact: the
+    corpus scalar is applied at read time). The result is rounded through
+    float32, the engine's stored-weight dtype (s_plus.pyx:237-238), so the
+    encoder's bounds and the kernels' scores round alike."""
     import numpy as np
 
     if avgdl is None:

@@ -47,33 +47,15 @@ def test_aligned_build_parity_and_plan(spark, tmp_path):
     pa, ps = _seg_pdf(spark, d_al), _seg_pdf(spark, d_sh)
     assert pa.equals(ps)
 
-    # plan (factored scheme, the default): the aligned segment job has NO
-    # exchange of ANY kind — not even a broadcast. The weighting is the
-    # doc-local tf-part only (no term-stats join), so the one web-scale
-    # caveat the prod scheme carried (vocabulary must fit in memory for
-    # the forced broadcast) is gone.
+    # plan: the aligned segment job has NO exchange of ANY kind — not even
+    # a broadcast. The weighting is the builder's (tf, dl) projection (no
+    # term-stats join), so the vocabulary never has to fit in memory.
     from similaripy_spark.fulltext.postings import build_postings
-    from similaripy_spark.fulltext.weights import bm25_tf_part, bm25_weights
-    from pyspark.sql import functions as F
 
-    w = bm25_tf_part(
-        build_postings(aligned_pages), avgdl=120.0
-    ).withColumn("shard", (F.col("doc_id") / SHARD).cast("int"))
+    w = b._weighted(build_postings(aligned_pages))
     plan = b._segment_plan(w, 6)._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
     assert "Broadcast" not in plan
-
-    # legacy prod scheme: the stats join stays broadcast (never a stream
-    # re-hash) and nothing above it repartitions the postings
-    wp = bm25_weights(
-        build_postings(aligned_pages), n_docs=N_DOCS, avgdl=120.0,
-        broadcast_stats=True,
-    ).withColumn("shard", (F.col("doc_id") / SHARD).cast("int"))
-    plan_p = b._segment_plan(wp, 6)._jdf.queryExecution().executedPlan().toString()
-    assert "hashpartitioning(shard" not in plan_p
-    assert "Exchange" not in plan_p.split("BroadcastExchange")[0].split(
-        "BroadcastHashJoin"
-    )[0]  # nothing above the join repartitions the stream
 
 
 def test_aligned_query_parity(spark, tmp_path):

@@ -1,18 +1,14 @@
-"""Append-only ingestion (fulltext/append.py) + the 'raw' weight scheme.
+"""Append-only ingestion (fulltext/append.py) over (tf, dl) blocks.
 
 Contract under test (append.py module docstring):
 
-* a 'raw' index scores BIT-identically to a 'factored' index built on the
-  same corpus (the kernel rounds its derived tf-part through float32 —
-  exactly what factored stores);
 * ``build(A); append(B)`` ≡ ``build(A ∪ B)`` — query results identical,
   df identical, corpus scalars identical (avgdl merged via sum_dl);
 * the term-major MaxScore path stays exact on a drifted index (block
   bounds were encoded at the pinned bounds_avgdl; the one-sided
   avgdl-ratio scaling + float32 cross-rounding widening keeps every bound
   valid);
-* appends into committed shards are rejected before anything commits;
-  non-raw schemes are rejected with a pointer to merge_indexes.
+* appends into committed shards are rejected before anything commits.
 
 The reference has no incremental path (its CSR stats are recomputed per
 call — similaripy/normalization.py); this is engine extension surface.
@@ -75,40 +71,19 @@ def _rows(df):
 
 @pytest.fixture(scope="module")
 def appended(spark, corpus, tmp_path_factory):
-    """build(A); append(B) plus the full-corpus twins for comparison."""
+    """build(A); append(B) plus the full-corpus twin for comparison."""
     d = tmp_path_factory.mktemp("append")
     full_raw = str(d / "full_raw")
-    full_fac = str(d / "full_fac")
     inc = str(d / "inc")
-    IndexBuilder(
-        full_raw, n_groups=4, weight_scheme="raw", shard_size=SHARD
-    ).build(corpus)
-    IndexBuilder(
-        full_fac, n_groups=4, weight_scheme="factored", shard_size=SHARD
-    ).build(corpus)
-    IndexBuilder(
-        inc, n_groups=4, weight_scheme="raw", shard_size=SHARD
-    ).build(corpus.filter(F.col("doc_id") < SPLIT))
+    IndexBuilder(full_raw, n_groups=4, shard_size=SHARD).build(corpus)
+    IndexBuilder(inc, n_groups=4, shard_size=SHARD).build(
+        corpus.filter(F.col("doc_id") < SPLIT)
+    )
     meta = append_to_index(
         spark, inc, pages=corpus.filter(F.col("doc_id") >= SPLIT),
         n_groups=3,
     )
-    return {"full_raw": full_raw, "full_fac": full_fac, "inc": inc,
-            "meta": meta}
-
-
-def test_raw_build_matches_factored_bitwise(spark, appended, queries):
-    """Fresh raw index ≡ fresh factored index: same float32 tf-parts,
-    same idf — scores identical to the comparison rounding."""
-    a = _rows(segment_topk(
-        read_segments(spark, appended["full_fac"]), queries, k=5,
-        index_dir=appended["full_fac"],
-    ))
-    b = _rows(segment_topk(
-        read_segments(spark, appended["full_raw"]), queries, k=5,
-        index_dir=appended["full_raw"],
-    ))
-    assert a == b and len(a) > 0
+    return {"full_raw": full_raw, "inc": inc, "meta": meta}
 
 
 def test_append_equals_full_build(spark, appended, queries):
@@ -155,9 +130,9 @@ def test_pruned_paths_exact_on_drifted_index(spark, appended, queries):
 
 def test_append_invalidates_merged_layout(spark, corpus, tmp_path):
     inc = str(tmp_path / "inc_merged")
-    IndexBuilder(
-        inc, n_groups=2, weight_scheme="raw", shard_size=SHARD
-    ).build(corpus.filter(F.col("doc_id") < SPLIT))
+    IndexBuilder(inc, n_groups=2, shard_size=SHARD).build(
+        corpus.filter(F.col("doc_id") < SPLIT)
+    )
     merge_to_term_major(spark, inc, n_buckets=8)
     assert os.path.isdir(os.path.join(inc, "merged"))
     append_to_index(
@@ -180,9 +155,9 @@ def test_append_serves_through_handle(spark, appended, queries):
 
 def test_append_rejects_docs_in_committed_shards(spark, corpus, tmp_path):
     inc = str(tmp_path / "inc_bad")
-    IndexBuilder(
-        inc, n_groups=2, weight_scheme="raw", shard_size=SHARD
-    ).build(corpus.filter(F.col("doc_id") < SPLIT))
+    IndexBuilder(inc, n_groups=2, shard_size=SHARD).build(
+        corpus.filter(F.col("doc_id") < SPLIT)
+    )
     with pytest.raises(ValueError, match="shard boundary"):
         append_to_index(
             spark, inc,
@@ -191,18 +166,6 @@ def test_append_rejects_docs_in_committed_shards(spark, corpus, tmp_path):
     # nothing committed: meta unchanged, no epoch dir
     assert read_meta(inc).get("n_epochs", 1) == 1
     assert not os.path.exists(os.path.join(inc, "doc_stats_epoch_1"))
-
-
-def test_append_rejects_non_raw_schemes(spark, corpus, tmp_path):
-    fac = str(tmp_path / "fac")
-    IndexBuilder(
-        fac, n_groups=2, weight_scheme="factored", shard_size=SHARD
-    ).build(corpus.filter(F.col("doc_id") < SPLIT))
-    with pytest.raises(ValueError, match="merge_indexes"):
-        append_to_index(
-            spark, fac, pages=corpus.filter(F.col("doc_id") >= SPLIT),
-            n_groups=2,
-        )
 
 
 def test_append_crash_resume(spark, corpus, queries, monkeypatch, tmp_path):
@@ -217,7 +180,7 @@ def test_append_crash_resume(spark, corpus, queries, monkeypatch, tmp_path):
     from similaripy_spark.fulltext.index_build import IndexBuilder as IB
 
     inc = str(tmp_path / "inc_crash")
-    IB(inc, n_groups=2, weight_scheme="raw", shard_size=SHARD).build(
+    IB(inc, n_groups=2, shard_size=SHARD).build(
         corpus.filter(F.col("doc_id") < SPLIT)
     )
     orig = IB._write_term_stats
@@ -241,7 +204,7 @@ def test_append_crash_resume(spark, corpus, queries, monkeypatch, tmp_path):
     # equality with the never-crashed incremental build
     clean = str(tmp_path / "inc_clean")
     monkeypatch.setattr(IB, "_write_term_stats", orig)
-    IB(clean, n_groups=2, weight_scheme="raw", shard_size=SHARD).build(
+    IB(clean, n_groups=2, shard_size=SHARD).build(
         corpus.filter(F.col("doc_id") < SPLIT)
     )
     append_to_index(spark, clean, pages=delta, n_groups=2)

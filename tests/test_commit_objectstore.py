@@ -25,7 +25,6 @@ from similaripy_spark.fulltext.commit import (
 from similaripy_spark.fulltext.index_build import (
     IndexBuilder,
     read_doc_stats,
-    read_meta,
     read_segments,
     read_term_stats,
 )
@@ -44,10 +43,8 @@ def _build(spark, d, commit, **kw):
 
 def _query_pdf(spark, d):
     q = spark.createDataFrame(generate_queries_pandas(40, vocab_size=VOCAB))
-    n_shards = read_meta(d)["n_shards"]
     return (
-        segment_topk(read_segments(spark, d), q, k=10,
-                     shard_ids=list(range(n_shards)), index_dir=d)
+        segment_topk(read_segments(spark, d), q, k=10, index_dir=d)
         .orderBy("query_id", "rank")
         .toPandas()
     )

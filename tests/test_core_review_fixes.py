@@ -93,7 +93,7 @@ def test_append_matches_pointer_committed_index(
     base = corpus.filter(F.col("doc_id") < 512)
     delta = corpus.filter(F.col("doc_id") >= 512)
     IndexBuilder(
-        d, n_groups=2, shard_size=256, weight_scheme="raw",
+        d, n_groups=2, shard_size=256,
         commit=ObjectStoreCommitProtocol(),
     ).build(base)
     assert isinstance(
@@ -130,7 +130,7 @@ def test_compact_carries_lang(spark, corpus, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("lang") / "idx")
     out = str(tmp_path_factory.mktemp("lang") / "compacted")
     IndexBuilder(
-        d, n_groups=2, shard_size=256, lang="en", weight_scheme="raw"
+        d, n_groups=2, shard_size=256, lang="en"
     ).build(corpus)
     delete_docs(spark, d, [2, 4])
     compact_index(spark, d, out)
@@ -207,7 +207,7 @@ def test_phrase_falls_back_to_pages_when_sidecar_stale(
     base = corpus.filter(F.col("doc_id") < 512)
     delta = corpus.filter(F.col("doc_id") >= 512)
     IndexBuilder(
-        d, n_groups=2, shard_size=256, weight_scheme="raw"
+        d, n_groups=2, shard_size=256
     ).build(base)
     build_positions(base, d)
     append_to_index(spark, d, delta)

@@ -180,7 +180,7 @@ def test_delete_on_raw_appended_index(spark, corpus, queries, tmp_path):
     from similaripy_spark.fulltext.append import append_to_index
 
     d = str(tmp_path / "raw_del")
-    IndexBuilder(d, n_groups=2, weight_scheme="raw", shard_size=256).build(
+    IndexBuilder(d, n_groups=2, shard_size=256).build(
         corpus.filter(F.col("doc_id") < 1024)
     )
     delete_docs(spark, d, [3, 13, 23])

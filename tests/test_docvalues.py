@@ -220,7 +220,7 @@ def test_append_docvalues_matches_rebuild(
     delta = pages.filter(F.col("doc_id") >= 1024)
     d = str(tmp_path_factory.mktemp("dvapp") / "idx")
     IndexBuilder(
-        d, n_groups=2, shard_size=256, weight_scheme="raw"
+        d, n_groups=2, shard_size=256
     ).build(base)
     build_docvalues(base, d, ["bucket", ("warc_ts", "numeric")])
     old_dict = load_dict(d, "bucket")
@@ -255,7 +255,7 @@ def test_stale_after_append_raises(spark, corpus, queries, tmp_path_factory):
     base = corpus.filter(F.col("doc_id") < 1024)
     delta = corpus.filter(F.col("doc_id") >= 1024)
     IndexBuilder(
-        d, n_groups=2, shard_size=256, weight_scheme="raw"
+        d, n_groups=2, shard_size=256
     ).build(base)
     build_docvalues(base, d, ["lang"])
     from similaripy_spark.fulltext.append import append_to_index
@@ -536,7 +536,7 @@ def test_partial_field_rebuild_on_moved_index_rejected(
     base = corpus.filter(F.col("doc_id") < 1024)
     delta = corpus.filter(F.col("doc_id") >= 1024)
     IndexBuilder(
-        d, n_groups=2, shard_size=256, weight_scheme="raw"
+        d, n_groups=2, shard_size=256
     ).build(base)
     build_docvalues(base, d, ["lang"])
     append_to_index(spark, d, delta)

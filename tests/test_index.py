@@ -16,7 +16,6 @@ from pyspark.sql import functions as F
 from similaripy_spark.fulltext import codec
 from similaripy_spark.fulltext.index_build import (
     IndexBuilder,
-    read_meta,
     read_segments,
     read_term_stats,
 )
@@ -207,34 +206,10 @@ def test_segment_query_weighted_matches_sql_path(spark, built):
                      query_weighted=True, batch=False, index_dir=d)
 
 
-def test_segment_topk_shard_ids_param(spark, built):
-    """Passing the known shard list (range(n_shards)) must match the
-    discovered-shards default — the param only changes shard ENUMERATION.
-    Both calls force weight_scheme='prod' (raw stored factors, no idf) so
-    the bare-DataFrame discovery fallback is exercisable on the factored
-    fixture index; the assertion compares the two enumeration paths, not
-    BM25 semantics (covered elsewhere)."""
-    d, meta, pages = built
-    queries = spark.createDataFrame(generate_queries_pandas(10, vocab_size=VOCAB))
-    seg = read_segments(spark, d)
-    a = (
-        segment_topk(seg, queries, k=10, weight_scheme="prod")
-        .orderBy("query_id", "rank").collect()
-    )
-    b = (
-        segment_topk(seg, queries, k=10, shard_ids=range(meta["n_shards"]),
-                     weight_scheme="prod")
-        .orderBy("query_id", "rank")
-        .collect()
-    )
-    assert a == b
-
-
 def test_segment_topk_index_dir_runs_no_discovery_job(spark, built):
     """segment_topk(index_dir=...) derives the shard list from meta.json —
-    a driver-side file read. Plan CONSTRUCTION must launch zero Spark jobs
-    (the discovery distinct().collect() is last-resort only), and results
-    must match the discovered default."""
+    a driver-side file read. Plan CONSTRUCTION must launch zero Spark jobs,
+    and results must match the relational SQL path."""
     d, meta, pages = built
     queries = spark.createDataFrame(generate_queries_pandas(10, vocab_size=VOCAB))
     seg = read_segments(spark, d)
@@ -245,14 +220,12 @@ def test_segment_topk_index_dir_runs_no_discovery_job(spark, built):
     after = set(tracker.getJobIdsForGroup(None))
     assert after == before, "plan construction launched a Spark job"
 
-    a = df.orderBy("query_id", "rank").collect()
-    b = (
-        segment_topk(seg, queries, k=10, shard_ids=range(meta["n_shards"]),
-                     index_dir=d)
-        .orderBy("query_id", "rank")
-        .collect()
+    got = df.toPandas().sort_values(["query_id", "rank"])
+    expected = (
+        bm25_topk(bm25_weights(build_postings(pages)), queries, k=10)
+        .toPandas().sort_values(["query_id", "rank"])
     )
-    assert a == b
+    assert list(got["doc_id"]) == list(expected["doc_id"])
 
 
 @pytest.mark.parametrize("k", [100, 1000])
@@ -283,11 +256,11 @@ def test_segment_query_large_k(spark, built, merged, k):
 def test_encoder_parity():
     """The Arrow block encoder (in-kernel lexsort over UNSORTED input)
     commits byte-identical blocks to the pandas reference encoder over the
-    same rows SORTED by (shard, term, doc_id), with and without the raw
-    scheme's derived-bound function. Both sides get several batches: the
-    reference carries its tail group across them. Compared after sorting
-    by (shard, term, block_id) — emission order is the only thing the
-    encoders may differ on."""
+    same rows SORTED by (shard, term, doc_id), bounds from the derived
+    tf-part function. Both sides get several batches: the reference
+    carries its tail group across them. Compared after sorting by (shard,
+    term, block_id) — emission order is the only thing the encoders may
+    differ on."""
     import functools
 
     import pyarrow as pa
@@ -326,67 +299,26 @@ def test_encoder_parity():
         return pdf.sort_values(["shard", "term", "block_id"]).reset_index(
             drop=True)
 
-    for bfn in (None, functools.partial(tf_part_np, k1=1.2, b=0.75,
-                                        avgdl=120.0)):
-        ref = canon(pd.concat(
-            encode_partition_pandas(batches(ordered, 1000), BLOCK_SIZE,
-                                    bfn),
-            ignore_index=True,
-        ))
-        arrow = canon(pa.Table.from_batches(list(
-            _encode_partition_arrow_unsorted(
-                [pa.RecordBatch.from_pandas(b, preserve_index=False)
-                 for b in batches(shuffled, 1000)],
-                BLOCK_SIZE, bfn,
-            )
-        )).to_pandas())
-        assert len(ref) > 3 * 40  # hot terms produced multi-block lists
-        assert list(arrow.columns) == list(ref.columns)
-        for col in ref.columns:
-            assert list(arrow[col]) == list(ref[col]), (col, bfn)
-
-
-def test_factored_vs_prod_scheme_parity(spark, tmp_path):
-    """weight_scheme='factored' (store tf-part, idf at query time) must be
-    rank-identical to weight_scheme='prod' (store idf×tf products, round-3
-    format) on the same corpus, scores equal within float32-storage
-    tolerance. The factored index stores strictly positive block bounds;
-    the prod one stores signed products — both must agree through the
-    segment batch scorer and the term-major MaxScore path."""
-    d_f, d_p = str(tmp_path / "fac"), str(tmp_path / "prd")
-    pages = generate_pages(spark, N_DOCS, vocab_size=VOCAB)
-    IndexBuilder(d_f, shard_size=256, n_groups=2,
-                 weight_scheme="factored").build(pages)
-    IndexBuilder(d_p, shard_size=256, n_groups=2,
-                 weight_scheme="prod").build(pages)
-    assert read_meta(d_f)["weight_scheme"] == "factored"
-    assert read_meta(d_p)["weight_scheme"] == "prod"
-    # factored blocks hold the positive doc-local factor only
-    seg_f = read_segments(spark, d_f)
-    assert seg_f.filter(F.col("min_score") <= 0).count() == 0
-
-    queries = spark.createDataFrame(
-        generate_queries_pandas(40, vocab_size=VOCAB)
-    )
-    m_f = _merged_copy(spark, d_f, str(tmp_path / "fac_merged"))
-    m_p = _merged_copy(spark, d_p, str(tmp_path / "prd_merged"))
-    for mode in ("batch", "maxscore"):
-        a = (
-            _point_or_batch(spark, mode, d_f, queries, 10, m_f)
-            .toPandas().sort_values(["query_id", "rank"])
-            .reset_index(drop=True)
+    bfn = functools.partial(tf_part_np, k1=1.2, b=0.75, avgdl=120.0)
+    ref = canon(pd.concat(
+        encode_partition_pandas(batches(ordered, 1000), BLOCK_SIZE, bfn),
+        ignore_index=True,
+    ))
+    arrow = canon(pa.Table.from_batches(list(
+        _encode_partition_arrow_unsorted(
+            [pa.RecordBatch.from_pandas(b, preserve_index=False)
+             for b in batches(shuffled, 1000)],
+            BLOCK_SIZE, bfn,
         )
-        b = (
-            _point_or_batch(spark, mode, d_p, queries, 10, m_p)
-            .toPandas().sort_values(["query_id", "rank"])
-            .reset_index(drop=True)
-        )
-        assert list(a["doc_id"]) == list(b["doc_id"]), mode
-        np.testing.assert_allclose(a["score"], b["score"], rtol=1e-4)
+    )).to_pandas())
+    assert len(ref) > 3 * 40  # hot terms produced multi-block lists
+    assert list(arrow.columns) == list(ref.columns)
+    for col in ref.columns:
+        assert list(arrow[col]) == list(ref[col]), col
 
 
 def test_segments_with_idf_serve_path_parity(spark, tmp_path):
-    """segments_with_idf pre-joins idf onto a factored index's segments
+    """segments_with_idf pre-joins idf onto an index's segments
     (one-time, at load) — scoring through it must be IDENTICAL (doc ids
     and float-exact scores: same kernel arithmetic, only the idf lookup
     source differs) to the per-batch query-side annotation. Pre-annotated
@@ -394,11 +326,9 @@ def test_segments_with_idf_serve_path_parity(spark, tmp_path):
     the merged layout."""
     from similaripy_spark.fulltext.wand import segments_with_idf
 
-    d = str(tmp_path / "fac_serve")
+    d = str(tmp_path / "serve")
     pages = generate_pages(spark, N_DOCS, vocab_size=VOCAB)
-    IndexBuilder(d, shard_size=256, n_groups=2,
-                 weight_scheme="factored").build(pages)
-    assert read_meta(d)["weight_scheme"] == "factored"
+    IndexBuilder(d, shard_size=256, n_groups=2).build(pages)
     queries = spark.createDataFrame(
         generate_queries_pandas(40, vocab_size=VOCAB)
     )
@@ -421,20 +351,61 @@ def test_segments_with_idf_serve_path_parity(spark, tmp_path):
     )
 
 
-def test_resume_adopts_committed_scheme(spark, tmp_path):
-    """A resumed build must keep the scheme of the already-committed groups
-    even if the resuming builder was constructed with a different one —
-    mixing factored and product blocks in one index would silently corrupt
-    scores."""
-    d = str(tmp_path / "mix")
-    pages = generate_pages(spark, 600, vocab_size=800)
-    with pytest.raises(RuntimeError, match="injected failure"):
-        IndexBuilder(d, shard_size=256, n_groups=3,
-                     weight_scheme="prod").build(pages, fail_after_groups=1)
-    b = IndexBuilder(d, shard_size=256, n_groups=3)  # default: factored
-    b.build(pages)
-    assert b.weight_scheme == "prod"
-    assert read_meta(d)["weight_scheme"] == "prod"
+@pytest.fixture(scope="module")
+def legacy_source(spark, tmp_path_factory):
+    """A small committed index whose meta.json each legacy case rewrites
+    (in a copy)."""
+    d = str(tmp_path_factory.mktemp("legacy") / "src")
+    pages = generate_pages(spark, 300, vocab_size=200)
+    IndexBuilder(d, shard_size=128, n_groups=2).build(pages)
+    return d, pages
+
+
+@pytest.mark.parametrize("scheme", ["prod", "factored", None])
+def test_legacy_weight_scheme_rejected(spark, legacy_source, tmp_path,
+                                       scheme):
+    """Only (tf, dl) blocks can be scored: a meta.json that names another
+    format — 'prod', 'factored', or no weight_scheme field at all (the
+    round-3 'prod' format) — must fail on every entry that opens the
+    index, never score with the wrong arithmetic."""
+    import json
+    import shutil
+
+    from similaripy_spark.fulltext.append import append_to_index
+    from similaripy_spark.fulltext.retrieve import IndexHandle, open_index
+
+    src, pages = legacy_source
+    d = str(tmp_path / "legacy")
+    shutil.copytree(src, d)
+    meta_path = os.path.join(d, "meta.json")
+    with open(meta_path) as f:
+        meta = json.load(f)
+    assert meta["weight_scheme"] == "raw"
+    if scheme is None:
+        del meta["weight_scheme"]
+    else:
+        meta["weight_scheme"] = scheme
+    with open(meta_path, "w") as f:
+        json.dump(meta, f)
+
+    queries = spark.createDataFrame(generate_queries_pandas(3, vocab_size=200))
+    entries = {
+        "open_index": lambda: open_index(spark, d),
+        "IndexHandle": lambda: IndexHandle(spark, d, cache=False),
+        "term_major_topk": lambda: term_major_topk(spark, d, queries, k=5),
+        "segment_topk": lambda: segment_topk(
+            read_segments(spark, d), queries, k=5, index_dir=d
+        ),
+        "append_to_index": lambda: append_to_index(spark, d, pages=pages),
+        "resumed build": lambda: IndexBuilder(
+            d, shard_size=128, n_groups=2
+        ).build(pages),
+    }
+    # the rejection names the format it found and says to rebuild
+    found = rf"weight_scheme '{scheme or 'prod'}'.*rebuild"
+    for name, call in entries.items():
+        with pytest.raises(ValueError, match=found):
+            call()
 
 
 def test_resume_after_injected_failure(spark, tmp_path):

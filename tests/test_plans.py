@@ -206,22 +206,19 @@ def test_selector_pushdown_into_join(spark, li_matrix):
 
 
 def test_factored_build_plan_has_no_stats_join(spark):
-    """The factored weighting stage is map-side only: the shuffle
-    build's physical plan contains exactly ONE exchange (the doc→shard
-    repartition) and NO aggregate or join before it — the vocabulary-sized
-    term-stats aggregate+join of the prod scheme is gone from the build
-    entirely (idf applies at query time)."""
+    """The build's weighting stage is a map-side projection — BM25 is
+    factored into idf × tf-part and both are applied at query time, so
+    blocks store (tf, dl): the shuffle build's physical plan contains
+    exactly ONE exchange (the doc→shard repartition) and NO aggregate or
+    join before it — no vocabulary-sized term-stats aggregate+join."""
     from similaripy_spark.fulltext.index_build import IndexBuilder
     from similaripy_spark.fulltext.postings import build_postings
-    from similaripy_spark.fulltext.weights import bm25_tf_part
     from similaripy_spark.sources.pages import generate_pages
 
     pages = generate_pages(spark, 500, vocab_size=400)
-    w = bm25_tf_part(build_postings(pages), avgdl=120.0).withColumn(
-        "shard", (F.col("doc_id") / 256).cast("int")
-    )
-    b = IndexBuilder("/tmp/unused_plan_test", shard_size=256, n_groups=2,
-                     weight_scheme="factored")
+    b = IndexBuilder("/tmp/unused_plan_test", shard_size=256, n_groups=2)
+    b._bounds_avgdl = 120.0
+    w = b._weighted(build_postings(pages))
     plan = physical_plan(b._segment_plan(w, 2))
     assert plan.count("Exchange") == 1  # the doc→shard repartition only
     assert "Join" not in plan

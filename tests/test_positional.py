@@ -176,7 +176,7 @@ def test_stale_after_append_and_rebuild(spark, tmp_path):
     )
     d = str(tmp_path / "ridx")
     IndexBuilder(
-        d, shard_size=64, n_groups=1, weight_scheme="raw"
+        d, shard_size=64, n_groups=1
     ).build(base)
     build_positions(base, d)
     q = spark.createDataFrame(
@@ -388,7 +388,7 @@ def test_append_positions_equals_rebuild(spark, tmp_path):
     )
     d = str(tmp_path / "aidx")
     IndexBuilder(
-        d, shard_size=64, n_groups=1, weight_scheme="raw"
+        d, shard_size=64, n_groups=1
     ).build(base)
     build_positions(base, d, block_size=16)
     delta = spark.createDataFrame(
@@ -421,7 +421,7 @@ def test_append_positions_equals_rebuild(spark, tmp_path):
         ).collect()
     }
     d2 = str(tmp_path / "aidx2")
-    IndexBuilder(d2, shard_size=64, n_groups=1, weight_scheme="raw").build(
+    IndexBuilder(d2, shard_size=64, n_groups=1).build(
         base.unionAll(delta)
     )
     build_positions(base.unionAll(delta), d2, block_size=16)

@@ -193,7 +193,7 @@ def test_deep_paging_two_pass_rank_identity(spark, tmp_path):
     IndexBuilder(d, shard_size=128, n_groups=4).build(pages)
     queries = spark.createDataFrame(generate_queries_pandas(30, vocab_size=900))
     seg = read_segments(spark, d)
-    common = dict(k=300, shard_ids=range(16), index_dir=d)
+    common = dict(k=300, index_dir=d)
     one = (
         segment_topk(seg, queries, deep_paging=False, **common)
         .toPandas().sort_values(["query_id", "rank"]).reset_index(drop=True)
@@ -230,10 +230,7 @@ def test_and_mode_relational_parity(spark, built):
     and the seg-side idf serve path gives identical rows."""
     from pyspark.sql import functions as F
 
-    from similaripy_spark.fulltext.index_build import (
-        read_meta,
-        read_segments,
-    )
+    from similaripy_spark.fulltext.index_build import read_segments
     from similaripy_spark.fulltext.wand import (
         segment_topk,
         segments_with_idf,
@@ -277,12 +274,10 @@ def test_and_mode_relational_parity(spark, built):
     np.testing.assert_allclose(got["score"], exp["score"], rtol=1e-4)
 
     # serve path (idf-annotated segments) + term-major point path parity
-    meta = read_meta(built)
-    sids = list(range(int(meta["n_shards"])))
     seg = segments_with_idf(read_segments(spark, built), built)
     alts = {
-        "segment": segment_topk(seg, queries, k=10, shard_ids=sids,
-                                index_dir=built, mode="and"),
+        "segment": segment_topk(seg, queries, k=10, index_dir=built,
+                                mode="and"),
         "term_major": term_major_topk(spark, built, queries, k=10,
                                       mode="and"),
     }
@@ -423,7 +418,10 @@ def test_describe_index(spark, built):
     """describe_index conservation laws: postings count equals the postings
     relation's row count, shard distribution brackets, merged metadata and
     build phases present; handle.describe() is the same dict."""
-    from similaripy_spark.fulltext.index_build import describe_index
+    from similaripy_spark.fulltext.index_build import (
+        describe_index,
+        read_meta,
+    )
     from similaripy_spark.fulltext.postings import build_postings
     from similaripy_spark.fulltext.retrieve import open_index
 
@@ -435,7 +433,7 @@ def test_describe_index(spark, built):
     assert 0 < sp["min"] <= sp["median"] <= sp["max"]
     assert d["n_shards_nonempty"] <= d["n_shards"]
     assert d["has_merged"] and d["merged_n_buckets"] == 16
-    assert d["weight_scheme"] == "raw"
+    assert read_meta(built)["weight_scheme"] == "raw"
     assert "segment_job" in (d.get("build_phase_ms") or {})
     with open_index(spark, built, cache=False) as h:
         assert h.describe() == d

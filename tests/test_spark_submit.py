@@ -77,6 +77,10 @@ def test_spark_submit_build_then_query(spark, tmp_path):
     built = json.loads(r.stdout.strip().splitlines()[-1])
     assert built["n_docs"] == 300 and built["positions"] is True
     assert built["docvalues"] == ["lang", "warc_ts"]
+    # the default build writes the one index format (append-capable)
+    from similaripy_spark.fulltext.index_build import read_meta
+
+    assert read_meta(index_p)["weight_scheme"] == "raw"
     # pointer backend really used: segments/ holds pointer objects
     assert any(
         f.endswith(".ptr.json")
@@ -261,8 +265,7 @@ def test_spark_submit_append_with_sidecars(spark, tmp_path):
     ]
     r = subprocess.run(
         base + ["build", "--pages", base_p, "--index", index_p,
-                "--groups", "2", "--shard-size", "256",
-                "--weight-scheme", "raw", "--positions",
+                "--groups", "2", "--shard-size", "256", "--positions",
                 "--docvalues", "lang"],
         capture_output=True, text=True, env=env, cwd=str(tmp_path),
         timeout=600,

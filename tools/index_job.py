@@ -52,15 +52,6 @@ def main(argv=None):
         "fan-out)",
     )
     b.add_argument("--groups", type=int, default=64)
-    b.add_argument(
-        "--weight-scheme", choices=["factored", "raw", "prod"],
-        default="factored",
-        help="factored (default): blocks store the doc-local BM25 factor, "
-        "idf applied at query time — no vocabulary-sized join anywhere in "
-        "the build; raw: blocks store (tf, dl), tf-part derived in-kernel "
-        "at the CURRENT avgdl — required for `append`; prod: store idf*tf "
-        "products (round-3 format)",
-    )
     b.add_argument("--lang", default=None)
     b.add_argument("--no-resume", action="store_true")
     b.add_argument(
@@ -157,8 +148,8 @@ def main(argv=None):
 
     ap = sub.add_parser(
         "append",
-        help="exact append-only ingestion into a weight_scheme='raw' "
-        "index (committed blocks never rewritten); optionally catches "
+        help="exact append-only ingestion into a built index (committed "
+        "blocks never rewritten); optionally catches "
         "the positional / doc-values sidecars up in the same run",
     )
     ap.add_argument("--index", required=True)
@@ -211,7 +202,6 @@ def main(argv=None):
             shard_size=args.shard_size,
             n_groups=args.groups,
             lang=args.lang,
-            weight_scheme=args.weight_scheme,
             commit=(
                 ObjectStoreCommitProtocol() if args.commit == "pointer"
                 else None
