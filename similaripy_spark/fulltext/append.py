@@ -218,17 +218,3 @@ def append_to_index(
     if postings_input:
         postings.unpersist()
     return new_meta
-
-
-def read_doc_stats_all(spark: SparkSession, index_dir: str) -> DataFrame:
-    """doc_stats across every epoch (the initial build's table plus each
-    committed ``doc_stats_epoch_*`` delta)."""
-    from similaripy_spark.fulltext.commit import resolve_artifact
-
-    parts = [resolve_artifact(os.path.join(index_dir, "doc_stats"))]
-    n_epochs = int(read_meta(index_dir).get("n_epochs", 1))
-    for e in range(1, n_epochs):
-        p = os.path.join(index_dir, f"doc_stats_epoch_{e}")
-        if os.path.isdir(p) or os.path.exists(p + ".ptr.json"):
-            parts.append(resolve_artifact(p))
-    return spark.read.parquet(*parts)

@@ -1072,8 +1072,8 @@ def collapse_topk(
         )
     from pyspark.sql import Window
 
-    from similaripy_spark.fulltext.append import read_doc_stats_all
     from similaripy_spark.fulltext.index_build import (
+        read_doc_stats,
         read_segments,
         read_term_stats,
     )
@@ -1103,7 +1103,7 @@ def collapse_topk(
             F.broadcast(qterms.select("term").distinct()), "term", "semi"
         )
     posts = decode_segments(seg).join(
-        read_doc_stats_all(spark, index_dir).select("doc_id", "dl"),
+        read_doc_stats(spark, index_dir).select("doc_id", "dl"),
         "doc_id",
     )
     tfp = bm25_tf_part(

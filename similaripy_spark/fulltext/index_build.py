@@ -45,7 +45,6 @@ import functools
 import json
 import math
 import os
-import sys
 import time
 import uuid
 import numpy as np
@@ -474,8 +473,6 @@ class IndexBuilder:
                 {"run_id": run_id, "phase_ms": dict(self._phase_ms),
                  "segment_parts": self._segment_parts},
             )
-            if os.environ.get("SIMILARIPY_BUILD_METRICS_STDERR") == "1":
-                print(f"build phases: {self._phase_ms}", file=sys.stderr)
             return meta
         finally:
             if reuse:
@@ -994,9 +991,15 @@ def read_term_stats(spark: SparkSession, index_dir: str) -> DataFrame:
 
 
 def read_doc_stats(spark: SparkSession, index_dir: str) -> DataFrame:
-    return spark.read.parquet(
-        resolve_artifact(os.path.join(index_dir, "doc_stats"))
-    )
+    """doc_stats across every epoch: the initial build's table plus each
+    committed ``doc_stats_epoch_*`` delta an ``append_to_index`` wrote."""
+    parts = [resolve_artifact(os.path.join(index_dir, "doc_stats"))]
+    n_epochs = int(read_meta(index_dir).get("n_epochs", 1))
+    for e in range(1, n_epochs):
+        p = os.path.join(index_dir, f"doc_stats_epoch_{e}")
+        if os.path.isdir(p) or os.path.exists(p + ".ptr.json"):
+            parts.append(resolve_artifact(p))
+    return spark.read.parquet(*parts)
 
 
 def describe_index(spark: SparkSession, index_dir: str) -> dict:

@@ -227,8 +227,8 @@ def search(
         return handle.topk(qdf, k=k, filter=filters, path="segment")
 
     # --- phrase composition (candidate-driven) ---------------------------
-    from similaripy_spark.fulltext.append import read_doc_stats_all
     from similaripy_spark.fulltext.index_build import (
+        read_doc_stats,
         read_segments,
         read_term_stats,
     )
@@ -276,7 +276,7 @@ def search(
         decoded.filter(F.col("term").isin(ranked))
         .join(verified, "doc_id", "left_semi")
         .join(
-            read_doc_stats_all(spark, index_dir).select("doc_id", "dl"),
+            read_doc_stats(spark, index_dir).select("doc_id", "dl"),
             "doc_id",
         )
     )

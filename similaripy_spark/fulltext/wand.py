@@ -41,8 +41,6 @@ tests/test_similarity.py:293-294).
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 
@@ -1064,10 +1062,10 @@ def segment_topk(
         # k=1000, local[8], warm, best-of-2): one-pass 24.1 s; two-pass
         # unsampled 9.5 s; sampled 8.8 s (pass 2's floored sweep dominates
         # the two-pass cost, so the pass-1 cut yields ~7%). Exactness is
-        # unchanged (rank-identity pinned in tests/test_retrieve.py);
-        # disable with SIMILARIPY_DEEP_SAMPLE=0 or tune the divisor.
-        sample_div = int(os.environ.get("SIMILARIPY_DEEP_SAMPLE", "4"))
-        if sample_div > 1 and n_shards >= 4 * sample_div:
+        # unchanged (rank-identity pinned in tests/test_retrieve.py, for
+        # the sampled pass at 16 shards and the unsampled one below them).
+        sample_div = 4
+        if n_shards >= 4 * sample_div:
             p = max(8, n_shards // sample_div)
             stride = max(1, n_shards // p)
             sample_ids = shards_list[::stride][:p]

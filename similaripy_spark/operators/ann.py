@@ -4,40 +4,17 @@
   there the whole s_plus similarity family applies to embeddings for free.
 * ``ann_bruteforce_topk``   — exact cosine top-k baseline (the s_plus cosine
   kernel: join on dimension → hash-agg → norms → window top-k).
-* ``ann_lsh_topk``          — random-hyperplane LSH buckets (deterministic
-  sign patterns from an integer-hash plane matrix), exact cosine on the
-  candidate pairs: a scale path. Recall vs brute force is measured in
-  tests, and multi-probe (``n_tables``) trades cost for recall.
-* ``ivf_fit`` / ``ivf_topk`` — inverted-file ANN: k-means coarse quantizer
-  (deterministic hash-bucket init + Lloyd rounds as DataFrame passes),
-  queries probe their n_probe nearest cells, one cogrouped GEMM per cell —
-  per-query fan-out is n_probe, per-task memory one cell; probing every
-  cell degrades gracefully to exact brute force (tested).
-* ``ivf_build`` / ``ivf_query`` — the build-once/query-many layout: member
-  assignments persisted as cell-partitioned parquet + centroids + meta
-  (CommitProtocol-published); queries partition-prune to their probed
-  cells, no re-assignment per call. ``pq_m`` builds the columnar IVF-PQ
-  stack: codes stored next to vectors, ``method='adc'`` scans only
-  (iid, codes) of the probed cells (parquet column pruning, plan-pinned),
-  then re-ranks the shortlist exactly; full probe + corpus-covering
-  refine == brute force (pinned).
 * ``pq_fit`` / ``pq_encode`` / ``pq_topk`` — product quantization: the
   memory-compression scale path (m one-byte codes per vector, 32× smaller
   than float32); ADC lookup-table scan over the codes relation → global
   shortlist → exact re-rank against true vectors. ``refine`` covering the
   corpus equals brute force exactly (pinned); recall@k measured in tests.
 * ``embedding_dedup_pairs`` — near-duplicate vectors (cosine ≥ threshold).
-
-Hyperplane coefficients are ±1 from an explicit integer hash of
-(table, plane, dim) — engine-independent, broadcastable, and never
-materialized bigger than n_tables·n_planes·dim rows.
 """
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from similaripy_spark.functions.similarity import cosine
@@ -45,7 +22,6 @@ from similaripy_spark.operators.topk import top_k
 
 _HA = 2654435761
 _HB = 97
-_PRIME = 2038074743
 
 
 def embeddings_to_matrix(
@@ -283,111 +259,6 @@ def _blocked_gemm_topk(
     return top_k(out, k)
 
 
-def _plane_table(spark, n_tables: int, n_planes: int, dim: int) -> DataFrame:
-    """(table, plane, col, coef ±1) deterministic hyperplane matrix."""
-    return (
-        spark.range(n_tables)
-        .select(F.col("id").cast("int").alias("table"))
-        .crossJoin(
-            spark.range(n_planes).select(F.col("id").cast("int").alias("plane"))
-        )
-        .crossJoin(spark.range(dim).select(F.col("id").cast("int").alias("col")))
-        .withColumn(
-            "coef",
-            F.when(
-                (
-                    (
-                        (F.col("table") * 131 + F.col("plane") + 1) * _HA
-                        + (F.col("col") + 1) * _HB
-                    )
-                    % _PRIME
-                )
-                % 2
-                == 1,
-                F.lit(1.0),
-            ).otherwise(F.lit(-1.0)),
-        )
-    )
-
-
-def lsh_buckets(
-    emb: DataFrame,
-    n_tables: int = 4,
-    n_planes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """→ (row, table, bucket): sign-pattern bucket per hash table."""
-    spark = emb.sparkSession
-    m = embeddings_to_matrix(emb, id_col, vec_col)
-    dim = emb.select(F.size(vec_col).alias("d")).agg(F.max("d").alias("d")).first()["d"]
-    planes = _plane_table(spark, n_tables, n_planes, dim)
-    proj = (
-        m.join(F.broadcast(planes), "col")
-        .groupBy("row", "table", "plane")
-        .agg(F.sum(F.col("value") * F.col("coef")).alias("dot"))
-    )
-    bit = F.when(F.col("dot") > 0, F.expr("shiftleft(1L, plane)")).otherwise(0)
-    return proj.groupBy("row", "table").agg(F.sum(bit).alias("bucket"))
-
-
-def ann_lsh_topk(
-    emb: DataFrame,
-    k: int = 10,
-    n_tables: int = 4,
-    n_planes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Approximate cosine top-k: candidates = pairs sharing any (table,
-    bucket); exact cosine computed directly ON the candidate pairs (join the
-    two embedding arrays onto each pair, ``zip_with`` dot product + norms),
-    then per-row top-k. Cost is linear in the candidate count — the
-    dimension-key SpGEMM never runs, which is the whole point of the LSH
-    scale path. (Round 1 passed the candidates as a target_cols matrix,
-    which s_plus applies only AFTER the full quadratic join.)"""
-    buckets = lsh_buckets(emb, n_tables, n_planes, id_col, vec_col)
-    a = buckets.select(F.col("row").alias("doc_a"), "table", "bucket")
-    b = buckets.select(F.col("row").alias("doc_b"), "table", "bucket")
-    cand = (
-        a.join(b, ["table", "bucket"])
-        .filter(F.col("doc_a") != F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-    dbl = lambda arr: F.transform(arr, lambda x: x.cast("double"))
-    norm = F.sqrt(
-        F.aggregate(dbl(F.col(vec_col)), F.lit(0.0), lambda acc, x: acc + x * x)
-    )
-    ea = emb.select(
-        F.col(id_col).cast("long").alias("doc_a"),
-        dbl(F.col(vec_col)).alias("_va"),
-        norm.alias("_na"),
-    )
-    eb = emb.select(
-        F.col(id_col).cast("long").alias("doc_b"),
-        dbl(F.col(vec_col)).alias("_vb"),
-        norm.alias("_nb"),
-    )
-    dot = F.aggregate(
-        F.zip_with("_va", "_vb", lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    scored = (
-        cand.join(ea, "doc_a")
-        .join(eb, "doc_b")
-        .select(
-            F.col("doc_a").alias("row"),
-            F.col("doc_b").alias("col"),
-            (dot / (F.col("_na") * F.col("_nb"))).alias("value"),
-        )
-        # match s_plus output semantics: threshold 0 + drop exact zeros
-        .filter((F.col("value") >= 0.0) & (F.col("value") != 0.0))
-    )
-    return top_k(scored, k)
-
-
 def embedding_dedup_pairs(
     emb: DataFrame,
     threshold: float = 0.95,
@@ -418,554 +289,6 @@ def embedding_dedup_pairs(
     )
 
 
-# --- IVF (inverted-file) ANN --------------------------------------------------
-
-def ivf_fit(
-    emb: DataFrame,
-    n_centroids: int = 64,
-    iters: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-):
-    """Coarse quantizer: k-means centroids fit with DataFrame passes.
-
-    Init is deterministic (hash-bucket means: one groupBy over
-    ``xxhash64(id) % k``), then ``iters`` Lloyd rounds — each round is one
-    mapInPandas assignment against the BROADCAST centroid matrix (centroids
-    are aggregates: k×dim floats, inherently driver-sized) plus one groupBy
-    mean. Returns a NumPy (k, dim) float64 array of centroids.
-
-    Scale: every pass is one scan + one tiny aggregate; no pairwise work.
-    """
-    import numpy as np
-
-    from pyspark.sql import types as T
-
-    base = emb.select(
-        F.col(id_col).cast("long").alias("id"), F.col(vec_col).alias("v")
-    )
-    dim = len(base.select("v").first()["v"])
-
-    def _mean_by(df, key_col):
-        sums = df.select(
-            key_col.alias("cid"),
-            *[F.col("v")[i].cast("double").alias(f"_d{i}") for i in range(dim)],
-        ).groupBy("cid").agg(
-            *[F.avg(f"_d{i}").alias(f"_d{i}") for i in range(dim)]
-        )
-        rows = sums.collect()
-        cents = np.full((n_centroids, dim), np.nan)
-        for r in rows:
-            cents[int(r["cid"]) % n_centroids] = [r[f"_d{i}"] for i in range(dim)]
-        # empty cells stay NaN and are EXCLUDED from the argmax below —
-        # assignment is cosine-based, so the round-2 1e9 magnitude sentinel
-        # normalized into the all-ones direction and attracted mass
-        # (ADVICE r2); NaN-exclusion is the honest empty-cluster handling
-        # available without a data-point reseed pass.
-        return cents
-
-    cents = _mean_by(base, F.pmod(F.xxhash64("id"), F.lit(n_centroids)))
-
-    schema = T.StructType(
-        [
-            T.StructField("id", T.LongType(), False),
-            T.StructField("cid", T.IntegerType(), False),
-        ]
-    )
-    for _ in range(iters):
-        bc = emb.sparkSession.sparkContext.broadcast(cents)
-
-        def assign(batches):
-            import pandas as pd
-
-            C = bc.value
-            dead = np.isnan(C).any(axis=1)
-            C = np.nan_to_num(C)
-            cn = np.sqrt((C * C).sum(axis=1))
-            cn[cn == 0] = 1.0
-            for b in batches:
-                X = np.array(b["v"].tolist(), dtype=np.float64)
-                xn = np.sqrt((X * X).sum(axis=1))
-                xn[xn == 0] = 1.0
-                # cosine assignment (the search metric) — argmax similarity
-                S = (X @ C.T) / np.outer(xn, cn)
-                S[:, dead] = -np.inf
-                yield pd.DataFrame(
-                    {
-                        "id": b["id"].to_numpy(np.int64),
-                        "cid": S.argmax(axis=1).astype(np.int32),
-                    }
-                )
-
-        assigned = base.mapInPandas(assign, schema=schema)
-        cents = _mean_by(base.join(assigned, "id"), F.col("cid"))
-    # drop cells that ended empty: callers get only live centroids
-    return cents[~np.isnan(cents).any(axis=1)]
-
-
-def ivf_topk(
-    emb: DataFrame,
-    k: int = 10,
-    n_centroids: int = 64,
-    n_probe: int = 8,
-    iters: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroids=None,
-) -> DataFrame:
-    """IVF approximate cosine top-k: index vectors live in their nearest
-    centroid's cell; each query probes its ``n_probe`` nearest cells; one
-    cogrouped GEMM per cell scores queries-of-cell × members-of-cell
-    (exact within the probed cells), then a relational top-k merges cells.
-
-    Per-query fan-out is n_probe (not n_cells, not n_shards); per-task
-    memory is one cell + its probing queries. recall@k rises with n_probe
-    (tested vs brute force); n_probe = n_centroids degrades gracefully to
-    exact brute force.
-    """
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql import types as T
-
-    if centroids is None:
-        centroids = ivf_fit(emb, n_centroids, iters, id_col, vec_col)
-    base = emb.select(
-        F.col(id_col).cast("long").alias("id"), F.col(vec_col).alias("v")
-    )
-    members = _assign_cells(base, centroids, 1).select(
-        F.col("id").alias("iid"), F.col("v").alias("iv"), "cid"
-    )
-    probes = _assign_cells(base, centroids, n_probe).select(
-        F.col("id").alias("qid"), F.col("v").alias("qv"), "cid"
-    )
-    return _score_probed_cells(probes, members, k, exclude_self=True)
-
-
-def _assign_cells(base: DataFrame, centroids, n_assign: int) -> DataFrame:
-    """(id, v) + broadcast centroid matrix → (id, v, cid) with each vector
-    replicated to its ``n_assign`` nearest cells (cosine)."""
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql import types as T
-
-    bc = base.sparkSession.sparkContext.broadcast(np.asarray(centroids))
-    schema = T.StructType(
-        [
-            T.StructField("id", T.LongType(), False),
-            T.StructField("v", base.schema["v"].dataType, False),
-            T.StructField("cid", T.IntegerType(), False),
-        ]
-    )
-
-    def fn(batches):
-        C = bc.value
-        cn = np.sqrt((C * C).sum(axis=1))
-        cn[cn == 0] = 1.0
-        for b in batches:
-            X = np.array(b["v"].tolist(), dtype=np.float64)
-            xn = np.sqrt((X * X).sum(axis=1))
-            xn[xn == 0] = 1.0
-            S = (X @ C.T) / np.outer(xn, cn)
-            nn = min(n_assign, S.shape[1])
-            top = np.argpartition(-S, nn - 1, axis=1)[:, :nn]
-            ids = np.repeat(b["id"].to_numpy(np.int64), nn)
-            vs = b["v"].iloc[np.repeat(np.arange(len(b)), nn)]
-            yield pd.DataFrame(
-                {
-                    "id": ids,
-                    "v": vs.to_numpy(),
-                    "cid": top.reshape(-1).astype(np.int32),
-                }
-            )
-
-    return base.mapInPandas(fn, schema=schema)
-
-
-def _score_probed_cells(
-    probes: DataFrame, members: DataFrame, k: int, exclude_self: bool
-) -> DataFrame:
-    """Cogrouped per-cell GEMM (exact within probed cells) + relational
-    top-k merge across cells."""
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType(
-        [
-            T.StructField("row", T.LongType(), False),
-            T.StructField("col", T.LongType(), False),
-            T.StructField("value", T.DoubleType(), False),
-        ]
-    )
-
-    def score_cell(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if left.empty or right.empty:
-            return pd.DataFrame({"row": [], "col": [], "value": []}).astype(
-                {"row": "int64", "col": "int64", "value": "float64"}
-            )
-        q_ids = left["qid"].to_numpy(np.int64)
-        Q = np.array(left["qv"].tolist(), dtype=np.float64)
-        b_ids = right["iid"].to_numpy(np.int64)
-        E = np.array(right["iv"].tolist(), dtype=np.float64)
-        qn = np.sqrt((Q * Q).sum(axis=1))
-        qn[qn == 0] = 1.0
-        bn = np.sqrt((E * E).sum(axis=1))
-        bn[bn == 0] = 1.0
-        S = (Q @ E.T) / np.outer(qn, bn)
-        if exclude_self:
-            order = np.argsort(b_ids)
-            pos = np.clip(
-                np.searchsorted(b_ids[order], q_ids), 0, len(b_ids) - 1
-            )
-            hit = b_ids[order][pos] == q_ids
-            S[np.arange(len(q_ids))[hit], order[pos[hit]]] = -np.inf
-        kk = min(k, S.shape[1])
-        part = np.argpartition(-S, kk - 1, axis=1)[:, :kk]
-        kth = S[np.arange(len(q_ids))[:, None], part].min(axis=1)
-        cand = S >= kth[:, None]
-        ri, ci = np.nonzero(cand)
-        vals = S[ri, ci]
-        keepm = np.isfinite(vals)
-        return pd.DataFrame(
-            {"row": q_ids[ri[keepm]], "col": b_ids[ci[keepm]],
-             "value": vals[keepm]}
-        )
-
-    cells = (
-        probes.groupBy("cid")
-        .cogroup(members.groupBy("cid"))
-        .applyInPandas(score_cell, schema=out_schema)
-    )
-    return top_k(
-        cells.groupBy("row", "col").agg(F.max("value").alias("value")), k
-    )
-
-
-def ivf_build(
-    emb: DataFrame,
-    index_dir: str,
-    n_centroids: int = 64,
-    iters: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    commit=None,
-    pq_m: int | None = None,
-    pq_nbits: int = 8,
-) -> dict:
-    """Build-once IVF layout on disk (VERDICT r3 item 4 — ``ivf_topk``
-    re-assigned members on every call):
-
-        index_dir/
-          meta.json              n_centroids, dim, n_vectors [, pq_m/pq_nbits]
-          centroids/             parquet (cid, c array<double>)
-          pq_books/              parquet (j, code, c array<double>) [pq_m set]
-          cells/cid=C/           parquet (iid, iv [, codes]) — one partition/cell
-
-    Members are assigned ONCE at build; queries touch only their probed
-    cells (partition-pruned scan on ``cid``). Published via the same
-    CommitProtocol as the fulltext index (write-then-commit).
-
-    ``pq_m``: additionally train product-quantization codebooks and store
-    each member's m one-byte ``codes`` NEXT TO its full vector — a columnar
-    IVF-PQ layout: the ADC query phase scans only (iid, codes) of the
-    probed cells (parquet column pruning reads ~32× fewer bytes than the
-    vectors), and the exact re-rank re-reads the ``iv`` column for just the
-    shortlist. Codes are computed inside the member pass (broadcast
-    codebooks) — no extra join or shuffle in the build."""
-    import numpy as np
-
-    from pyspark.sql import Observation
-
-    from similaripy_spark.fulltext.commit import LocalFSCommitProtocol
-
-    commit = commit or LocalFSCommitProtocol()
-    commit.ensure_dir(index_dir)
-    cents = ivf_fit(emb, n_centroids, iters, id_col, vec_col)
-    spark = emb.sparkSession
-
-    cpath = os.path.join(index_dir, "centroids")
-    ctmp = commit.stage_path(cpath)
-    spark.createDataFrame(
-        [(int(i), [float(x) for x in c]) for i, c in enumerate(cents)],
-        "cid int, c array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(ctmp)
-    commit.commit_dir(ctmp, cpath)
-
-    books = None
-    if pq_m:
-        books = pq_fit(emb, m=pq_m, nbits=pq_nbits,
-                       id_col=id_col, vec_col=vec_col)
-        bpath = os.path.join(index_dir, "pq_books")
-        btmp = commit.stage_path(bpath)
-        m_, ksub, _ = books.shape
-        spark.createDataFrame(
-            [
-                (int(j), int(ci), [float(x) for x in books[j, ci]])
-                for j in range(m_) for ci in range(ksub)
-            ],
-            "j int, code int, c array<double>",
-        ).coalesce(1).write.mode("overwrite").parquet(btmp)
-        commit.commit_dir(btmp, bpath)
-
-    base = emb.select(
-        F.col(id_col).cast("long").alias("id"), F.col(vec_col).alias("v")
-    )
-    obs = Observation("ivf")
-    members = _assign_cells(base, cents, 1).select(
-        F.col("id").alias("iid"), F.col("v").alias("iv"), "cid"
-    )
-    if books is not None:
-        members = _with_pq_codes(members, books)
-    members = members.observe(obs, F.count(F.lit(1)).alias("n_vectors"))
-    mpath = os.path.join(index_dir, "cells")
-    mtmp = commit.stage_path(mpath)
-    members.write.mode("overwrite").partitionBy("cid").parquet(mtmp)
-    commit.commit_dir(mtmp, mpath)
-
-    meta = {
-        "version": 1,
-        "n_centroids": int(len(cents)),
-        "dim": int(np.asarray(cents).shape[1]),
-        "n_vectors": int(obs.get["n_vectors"]),
-    }
-    if books is not None:
-        meta["pq_m"] = int(pq_m)
-        meta["pq_nbits"] = int(pq_nbits)
-    commit.publish_json(os.path.join(index_dir, "meta.json"), meta)
-    return meta
-
-
-def _with_pq_codes(members: DataFrame, books) -> DataFrame:
-    """members(iid, iv, cid) → + ``codes`` (m int32 per row), computed in
-    the same pass from the broadcast codebooks — no join."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    books = np.asarray(books)
-    m, ksub, dsub = books.shape
-    bc = members.sparkSession.sparkContext.broadcast(books)
-    schema = T.StructType(
-        [
-            T.StructField("iid", T.LongType(), False),
-            T.StructField("iv", members.schema["iv"].dataType, False),
-            T.StructField("codes", T.ArrayType(T.IntegerType()), False),
-            T.StructField("cid", T.IntegerType(), False),
-        ]
-    )
-
-    def add_codes(batches):
-        B = bc.value
-        for b in batches:
-            X = np.array(b["iv"].tolist(), dtype=np.float64)
-            norms = np.sqrt((X * X).sum(axis=1))
-            norms[norms == 0] = 1.0
-            X = X / norms[:, None]
-            codes = np.empty((len(X), m), dtype=np.int32)
-            for j in range(m):
-                C = B[j]
-                dead = np.isnan(C).any(axis=1)
-                Cz = np.nan_to_num(C)
-                d2 = X[:, j * dsub:(j + 1) * dsub] @ Cz.T \
-                    - 0.5 * (Cz * Cz).sum(axis=1)
-                d2[:, dead] = -np.inf
-                codes[:, j] = d2.argmax(axis=1)
-            yield pd.DataFrame(
-                {
-                    "iid": b["iid"].to_numpy(np.int64),
-                    "iv": b["iv"].to_numpy(),
-                    "codes": list(codes),
-                    "cid": b["cid"].to_numpy(np.int32),
-                }
-            )
-
-    return members.mapInPandas(add_codes, schema=schema)
-
-
-def ivf_query(
-    spark,
-    index_dir: str,
-    queries: DataFrame,
-    k: int = 10,
-    n_probe: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    exclude_self: bool = True,
-    method: str = "exact",
-    refine: int = 4,
-) -> DataFrame:
-    """Query a persisted IVF layout without re-assigning members: probe the
-    ``n_probe`` nearest cells per query, scan ONLY those cell partitions
-    (the ``cid`` isin filter partition-prunes the parquet scan — the probe
-    list is collected from the small query side, never from the index).
-
-    ``method='exact'`` (default): cogrouped GEMM against the probed cells'
-    full vectors — exact within the probed cells.
-
-    ``method='adc'`` (needs an index built with ``pq_m``): the IVF-PQ
-    stack — the probed-cell scan projects ONLY (iid, codes), so parquet
-    column pruning reads ~32× fewer bytes than the vectors; each cell is
-    scored with per-query ADC lookup tables; the global ``refine·k``
-    shortlist is then re-ranked EXACTLY against the ``iv`` column of the
-    probed cells in double precision. ``n_probe`` = all cells and
-    ``refine`` covering the corpus equals exact brute force (pinned)."""
-    import json
-
-    import numpy as np
-
-    with open(os.path.join(index_dir, "meta.json")) as f:
-        meta = json.load(f)
-    crows = (
-        spark.read.parquet(os.path.join(index_dir, "centroids"))
-        .orderBy("cid")
-        .collect()
-    )
-    cents = np.array([r["c"] for r in crows], dtype=np.float64)
-
-    qbase = queries.select(
-        F.col(id_col).cast("long").alias("id"), F.col(vec_col).alias("v")
-    )
-    probes = _assign_cells(qbase, cents, n_probe).select(
-        F.col("id").alias("qid"), F.col("v").alias("qv"), "cid"
-    ).localCheckpoint()  # the probed-cell collect below AND the scoring
-    # cogroup both consume this relation — unmaterialized, every query call
-    # ran the query-side assignment GEMM twice. Small by construction
-    # (n_queries × n_probe rows). localCheckpoint (not persist): repeated
-    # ivf_query calls each build a fresh RDD that the ContextCleaner
-    # releases once the result is dropped — a plain persist() accumulated
-    # cached relations until driver GC with no unpersist hook (ADVICE r5).
-    probed = sorted(
-        {int(r["cid"]) for r in probes.select("cid").distinct().collect()}
-    )
-    cells = spark.read.parquet(os.path.join(index_dir, "cells")).filter(
-        F.col("cid").isin(probed)
-    )
-    if method == "exact":
-        return _score_probed_cells(
-            probes, cells.select("iid", "iv", "cid"), k,
-            exclude_self=exclude_self,
-        )
-    if method != "adc":
-        raise ValueError(f"method must be 'exact' or 'adc', got {method!r}")
-    if not meta.get("pq_m"):
-        raise ValueError(
-            "method='adc' needs an index built with pq_m (no pq_books here)"
-        )
-    brows = spark.read.parquet(
-        os.path.join(index_dir, "pq_books")
-    ).orderBy("j", "code").collect()
-    m = int(meta["pq_m"])
-    ksub = 1 << int(meta["pq_nbits"])
-    dsub = int(meta["dim"]) // m
-    books = np.full((m, ksub, dsub), np.nan)
-    for r in brows:
-        books[int(r["j"]), int(r["code"])] = r["c"]
-    shortlist = max(refine, 1) * k
-    short = top_k(
-        _adc_probed_cells(
-            probes, cells.select("iid", "codes", "cid"), books, shortlist,
-            exclude_self,
-        ),
-        shortlist,
-    )
-    # exact re-rank: true vectors for the shortlist only, double precision
-    iv = cells.select(
-        F.col("iid").alias("col"),
-        F.col("iv").cast("array<double>").alias("_iv"),
-    )
-    qv = qbase.select(
-        F.col("id").alias("row"), F.col("v").cast("array<double>").alias("_qv")
-    )
-    dot = F.aggregate(
-        F.zip_with("_qv", "_iv", lambda a, b: a * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    nrm = lambda c: F.sqrt(F.aggregate(  # noqa: E731
-        c, F.lit(0.0), lambda acc, x: acc + x * x
-    ))
-    exact = (
-        short.select("row", "col")
-        .join(F.broadcast(qv), "row")
-        .join(iv, "col")
-        .select(
-            "row", "col",
-            (dot / (nrm(F.col("_qv")) * nrm(F.col("_iv")))).alias("value"),
-        )
-    )
-    return top_k(exact, k)
-
-
-def _adc_probed_cells(
-    probes: DataFrame, members: DataFrame, books, shortlist: int,
-    exclude_self: bool,
-) -> DataFrame:
-    """Cogrouped per-cell ADC: each cell scores its probing queries against
-    its members' CODES with per-query lookup tables (LUT[j][code] =
-    q_sub · centroid) — no float vectors touched. Emits per-cell
-    ``shortlist`` (+boundary ties) candidates."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    books = np.asarray(books)
-    m, ksub, dsub = books.shape
-    bc = probes.sparkSession.sparkContext.broadcast(books)
-    out_schema = T.StructType(
-        [
-            T.StructField("row", T.LongType(), False),
-            T.StructField("col", T.LongType(), False),
-            T.StructField("value", T.DoubleType(), False),
-        ]
-    )
-
-    def adc_cell(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if left.empty or right.empty:
-            return pd.DataFrame({"row": [], "col": [], "value": []}).astype(
-                {"row": "int64", "col": "int64", "value": "float64"}
-            )
-        B = bc.value
-        q_ids = left["qid"].to_numpy(np.int64)
-        Q = np.array(left["qv"].tolist(), dtype=np.float64)
-        qn = np.sqrt((Q * Q).sum(axis=1))
-        qn[qn == 0] = 1.0
-        Qn = Q / qn[:, None]
-        c_ids = right["iid"].to_numpy(np.int64)
-        Cm = np.array(right["codes"].tolist(), dtype=np.int64)
-        S = np.zeros((len(q_ids), len(c_ids)))
-        for j in range(m):
-            lut = Qn[:, j * dsub:(j + 1) * dsub] @ np.nan_to_num(B[j]).T
-            S += lut[:, Cm[:, j]]
-        if exclude_self:
-            order = np.argsort(c_ids)
-            pos = np.clip(
-                np.searchsorted(c_ids[order], q_ids), 0, len(c_ids) - 1
-            )
-            hit = c_ids[order][pos] == q_ids
-            S[np.arange(len(q_ids))[hit], order[pos[hit]]] = -np.inf
-        kk = min(shortlist, S.shape[1])
-        part = np.argpartition(-S, kk - 1, axis=1)[:, :kk]
-        kth = S[np.arange(len(q_ids))[:, None], part].min(axis=1)
-        ri, ci = np.nonzero(S >= kth[:, None])
-        vals = S[ri, ci]
-        keep = np.isfinite(vals)
-        return pd.DataFrame(
-            {"row": q_ids[ri[keep]], "col": c_ids[ci[keep]],
-             "value": vals[keep]}
-        )
-
-    return (
-        probes.groupBy("cid")
-        .cogroup(members.groupBy("cid"))
-        .applyInPandas(adc_cell, schema=out_schema)
-        .groupBy("row", "col")
-        .agg(F.max("value").alias("value"))
-    )
-
-
 # --- PQ (product quantization) -------------------------------------------------
 #
 # The memory-compression scale path for web-scale ANN: a 64-dim float32
@@ -976,8 +299,7 @@ def _adc_probed_cells(
 # encoding, so subspace inner products against reconstruction centroids
 # approximate the cosine). The production pattern is ADC shortlist +
 # exact re-rank (``refine``); ``refine`` covering the whole corpus equals
-# brute force EXACTLY (pinned in tests — the same anchor ivf uses with
-# full-probe).
+# brute force EXACTLY (pinned in tests).
 
 
 def pq_fit(
@@ -995,10 +317,10 @@ def pq_fit(
     defaults), and PQ training needs only a bounded sample, so the k-means
     runs driver-side on a DETERMINISTIC hash-ordered sample capped at
     ``train_cap_rows`` (the xxhash64 order is corpus-size-stable and
-    unbiased; the collect is the same bounded pattern as ivf's centroid
-    table). Init per subspace is hash-bucket means (ivf_fit's rule);
-    empty clusters stay NaN and are excluded from assignment — the honest
-    dead-centroid handling, matching ivf.
+    unbiased, and the collect is bounded by the cap). Init per subspace is
+    the mean of an integer-hash bucket of the sample rows; empty clusters
+    stay NaN and are excluded from assignment — the honest dead-centroid
+    handling.
     """
     import numpy as np
 

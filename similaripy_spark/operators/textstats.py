@@ -3,20 +3,16 @@ document fingerprinting.
 
 ``token_stats`` / ``quality_score`` / ``stopword_lang_guess`` /
 ``winnow_fingerprints`` are pure column-expression pipelines with exact SQL
-oracle twins. ``langid_ngram`` is the richer character-n-gram classifier as
-an Arrow-vectorized pandas UDF (profiles are public stopword/char-frequency
-knowledge, embedded as constants).
+oracle twins (the stopword profiles are public knowledge, embedded as
+constants).
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
 from similaripy_spark.fulltext.tokenizer import tokenize_expr
 
@@ -46,9 +42,9 @@ def extract_html_text(
     DuckDB: drop <script>/<style> blocks (separate non-greedy passes — RE2
     has no \\1), strip remaining tags, decode the five predefined XML
     entities (&amp; last, so '&amp;lt;' decodes to the literal '&lt;'),
-    collapse whitespace, trim. Full DOM parsing is a codec-library slot
-    like jpeg decode (multimodal.py); this is the exact-contract core that
-    covers machine-generated page bodies.
+    collapse whitespace, trim. Full DOM parsing would need a parser
+    library; this is the exact-contract core that covers
+    machine-generated page bodies.
     """
     x = F.col(html_col).cast("string")
     x = F.regexp_replace(x, r"(?is)<script[^>]*>.*?</script>", " ")
@@ -268,41 +264,3 @@ def _winnow_arrow_kernel(kgram: int, window: int):
             )
 
     return kernel
-
-
-# --- character-n-gram language ID (pandas UDF path) -------------------------
-
-_CHAR_PROFILES = {
-    # top character trigrams per language (public linguistic knowledge)
-    "en": [" th", "the", "he ", " an", "and", "nd ", " of", "of ", "ion", " to"],
-    "de": ["en ", "er ", " de", "der", "ie ", "ch ", "sch", "die", "ein", " un"],
-    "fr": [" de", "es ", "de ", " le", "ent", "le ", "nt ", "la ", " la", "ion"],
-    "es": [" de", "de ", "os ", " la", "la ", "as ", "el ", " el", "ión", "es "],
-    "it": [" di", "di ", "to ", " co", "la ", "re ", "ell", " de", "del", "one"],
-}
-
-
-def _langid_pd(text: pd.Series) -> pd.Series:
-    t = (" " + text.str.lower().str.replace(r"[^a-zà-ÿ ]", " ", regex=True) + " ")
-    scores = {}
-    for lang, grams in _CHAR_PROFILES.items():
-        s = None
-        for g in grams:
-            c = t.str.count(__import__("re").escape(g))
-            s = c if s is None else s + c
-        scores[lang] = s
-    sdf = pd.DataFrame(scores)
-    best = sdf.idxmax(axis=1)
-    best[sdf.max(axis=1) <= 0] = "und"
-    return best
-
-
-langid_ngram_udf = pandas_udf(_langid_pd, T.StringType())
-
-
-def langid_ngram(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Character-trigram language ID (Arrow-vectorized pandas UDF)."""
-    return docs.select(
-        F.col(id_col).alias("doc_id"),
-        langid_ngram_udf(F.col(text_col)).alias("lang_pred"),
-    )

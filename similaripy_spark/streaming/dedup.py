@@ -1,149 +1,19 @@
-"""Stateful streaming deduplication: first-seen-wins exact dedup on arrival.
+"""Streaming deduplication: drop a document whose content already arrived.
 
 The batch dedup family (operators/dedup.py) answers "which documents in this
 corpus are duplicates"; a training-data INGESTION pipeline needs the
 streaming twin — "is this arriving document new?" — answered continuously
-with bounded state. Two operators:
-
-* ``streaming_dedup_exact`` — ``applyInPandasWithState`` keyed by the
-  content hash: the first document of a hash is emitted, every later
-  arrival is dropped, and per-hash state (first doc, duplicate count)
-  expires via event-time timeout once the watermark passes ``state_ttl``
-  (bounded state ⇒ runs forever at 100 TB/day; duplicates separated by more
-  than the TTL are deliberately treated as new, the standard
-  windowed-dedup contract).
-* ``streaming_dedup_builtin`` — the one-liner
-  ``dropDuplicatesWithinWatermark`` twin for when no custom state/metrics
-  are needed (same contract, engine-managed state).
-
-The custom operator exists because it carries EXTRA state the builtin
-cannot: the emitted row includes nothing extra, but the state tracks
-``n_dups`` so ``flush on timeout`` emits a (text_hash, first_doc, n_dups)
-summary row when a hash's state expires — the dedup *report* stream that a
-pipeline dashboards, for free from the same pass.
+with bounded state. ``streaming_dedup_builtin`` is
+``dropDuplicatesWithinWatermark`` on the content hash: whole rows pass
+through, the engine manages the state, and it expires once the watermark
+passes it (duplicates separated by more than the watermark are treated as
+new, the standard windowed-dedup contract).
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-#: emitted rows: first-seen docs (kind='first') and, on state expiry,
-#: one summary row per hash (kind='summary', n_dups = later arrivals seen)
-DEDUP_OUTPUT_SCHEMA = T.StructType(
-    [
-        T.StructField("text_hash", T.StringType(), False),
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("kind", T.StringType(), False),
-        T.StructField("n_dups", T.LongType(), False),
-    ]
-)
-
-_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("first_doc", T.LongType(), False),
-        T.StructField("n_dups", T.LongType(), False),
-    ]
-)
-
-
-def _first_seen_fn(state_ttl_ms: int):
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (text_hash,) = key
-        if state.hasTimedOut:
-            first_doc, n_dups = state.get
-            state.remove()
-            yield pd.DataFrame(
-                {
-                    "text_hash": [text_hash],
-                    "doc_id": [first_doc],
-                    "kind": ["summary"],
-                    "n_dups": [n_dups],
-                }
-            )
-            return
-        rows = pd.concat(list(pdfs), ignore_index=True)
-        # deterministic first-seen within the micro-batch: earliest event
-        # time, then smallest doc_id
-        rows = rows.sort_values(["event_ms", "doc_id"], kind="mergesort")
-        if state.exists:
-            first_doc, n_dups = state.get
-            state.update((int(first_doc), int(n_dups) + len(rows)))
-        else:
-            first = rows.iloc[0]
-            state.update((int(first["doc_id"]), len(rows) - 1))
-            yield pd.DataFrame(
-                {
-                    "text_hash": [text_hash],
-                    "doc_id": [int(first["doc_id"])],
-                    "kind": ["first"],
-                    "n_dups": [0],
-                }
-            )
-        # TTL anchored to EVENT time, not the current watermark: the first
-        # micro-batch runs with watermark 0, which would date the timeout
-        # from the epoch and expire all state at the next batch. The anchor
-        # is the ``event_ms`` TRUE-epoch column computed Spark-side: the
-        # tz-naive pandas timestamp in ``event_ts`` is localized to
-        # spark.sql.session.timeZone, so ``.timestamp()`` on it (which
-        # assumes UTC) would shift the expiry by the TZ offset in any
-        # non-UTC session (ADVICE r2).
-        max_event_ms = int(rows["event_ms"].max())
-        state.setTimeoutTimestamp(
-            max(state.getCurrentWatermarkMs(), max_event_ms) + state_ttl_ms
-        )
-
-    return fn
-
-
-def streaming_dedup_exact(
-    pages_stream: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    ts_col: str = "warc_ts",
-    watermark: str = "1 hour",
-    state_ttl_ms: int = 24 * 3600 * 1000,
-) -> DataFrame:
-    """Streaming first-seen exact dedup (append mode).
-
-    Input: a streaming pages DataFrame with an event-time column. Output:
-    one 'first' row per new content hash as it arrives, plus one 'summary'
-    row (first_doc, n_dups) when a hash's state expires — the continuous
-    twin of ``operators.dedup.dedup_exact``.
-    """
-    hashed = (
-        pages_stream.withColumn(
-            "text_hash", F.md5(F.lower(F.col(text_col)))
-        )
-        .withColumn("event_ts", F.col(ts_col).cast("timestamp"))
-        .withWatermark("event_ts", watermark)
-        .select(
-            "text_hash",
-            F.col(id_col).alias("doc_id"),
-            "event_ts",
-            # true epoch millis (timestamp→double is TZ-independent); the
-            # state fn must never derive epoch from the session-localized
-            # naive timestamp
-            (F.col("event_ts").cast("double") * 1000).cast("long").alias(
-                "event_ms"
-            ),
-        )
-    )
-    return hashed.groupBy("text_hash").applyInPandasWithState(
-        _first_seen_fn(state_ttl_ms),
-        outputStructType=DEDUP_OUTPUT_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
 
 
 def streaming_dedup_builtin(
@@ -152,8 +22,8 @@ def streaming_dedup_builtin(
     ts_col: str = "warc_ts",
     watermark: str = "1 hour",
 ) -> DataFrame:
-    """Engine-managed twin: dropDuplicatesWithinWatermark on the content
-    hash — keeps whole rows, no custom state, same bounded-state contract."""
+    """First-seen content dedup: dropDuplicatesWithinWatermark on the
+    content hash — keeps whole rows, engine-managed bounded state."""
     return (
         pages_stream.withColumn(
             "text_hash", F.md5(F.lower(F.col(text_col)))

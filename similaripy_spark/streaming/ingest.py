@@ -18,11 +18,10 @@ Design points:
   text-per-url invariant makes replays harmless.
 * Cross-micro-batch content dedup: the stream passes through
   ``streaming_dedup_builtin`` (dropDuplicatesWithinWatermark on the content
-  hash — the row-preserving twin of ``streaming_dedup_exact``) BEFORE
-  ``foreachBatch``, so a document whose text already arrived in an earlier
-  micro-batch never enters a delta index at all (bounded state via the
-  ``dedup_watermark``; duplicates separated by more than it are treated as
-  new, the standard windowed contract).
+  hash, whole rows kept) BEFORE ``foreachBatch``, so a document whose text
+  already arrived in an earlier micro-batch never enters a delta index at
+  all (bounded state via the ``dedup_watermark``; duplicates separated by
+  more than it are treated as new, the standard windowed contract).
 * BM25 global stats drift across deltas by design; ``compact()`` re-weights
   from merged postings (the correct-by-construction path) — query a delta
   set only through ``compact()`` output.

@@ -22,17 +22,18 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from similaripy_spark.fulltext.append import (
-    append_to_index,
-    read_doc_stats_all,
-)
+from similaripy_spark.fulltext.append import append_to_index
 from similaripy_spark.fulltext.index_build import (
     IndexBuilder,
+    read_doc_stats,
     read_meta,
     read_segments,
     read_term_stats,
 )
-from similaripy_spark.fulltext.index_merge import merge_to_term_major
+from similaripy_spark.fulltext.index_merge import (
+    merge_indexes,
+    merge_to_term_major,
+)
 from similaripy_spark.fulltext.retrieve import open_index
 from similaripy_spark.fulltext.wand import segment_topk, term_major_topk
 from similaripy_spark.sources.pages import generate_pages
@@ -114,7 +115,24 @@ def test_append_merges_corpus_scalars_exactly(spark, appended):
     tsi = {r.term: r.df for r in
            read_term_stats(spark, appended["inc"]).collect()}
     assert tsf == tsi
-    assert read_doc_stats_all(spark, appended["inc"]).count() == N_DOCS
+    assert read_doc_stats(spark, appended["inc"]).count() == N_DOCS
+
+
+def test_merge_keeps_appended_docs(spark, appended, queries, tmp_path):
+    """Merging an appended index keeps the docs of every epoch: the merge
+    joins the decoded postings with doc_stats, so a base-only doc_stats
+    would drop every appended doc."""
+    out = str(tmp_path / "merged")
+    merge_indexes(spark, [appended["inc"]], out)
+    assert read_meta(out)["n_docs"] == N_DOCS
+    full = appended["full_raw"]
+    a = _rows(segment_topk(
+        read_segments(spark, full), queries, k=5, index_dir=full,
+    ))
+    b = _rows(segment_topk(
+        read_segments(spark, out), queries, k=5, index_dir=out,
+    ))
+    assert a == b and len(a) > 0
 
 
 def test_pruned_paths_exact_on_drifted_index(spark, appended, queries):

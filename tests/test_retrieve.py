@@ -180,47 +180,40 @@ def test_queries_without_terms_or_text_rejected(spark, built):
 def test_deep_paging_two_pass_rank_identity(spark, tmp_path):
     """The exact two-pass deep-paging scheme (per-shard cap k1 -> per-query
     tau floor -> filtered second sweep) must return the same ranking as the
-    one-pass merge. 16 shards + k=300 makes k1=75 < k, so the prepass is
-    genuinely exercised (with few shards k1 >= k and segment_topk falls
-    back to one-pass by construction)."""
-    import numpy as np
+    one-pass merge. k=300 over 2,000 pages runs two passes on both inputs
+    (with few shards k1 >= k and segment_topk falls back to one-pass by
+    construction):
 
-    from similaripy_spark.fulltext.index_build import read_segments
+    * 16 shards: k1=75 < k, and pass 1 sweeps a stride sample of the
+      shards (sampling starts at 16 shards);
+    * 8 shards: k1=150 < k, and pass 1 sweeps every shard. The sampled tau
+      is merely a weaker valid floor than this one, never a different
+      ranking."""
+    from similaripy_spark.fulltext.index_build import read_meta, read_segments
     from similaripy_spark.fulltext.wand import segment_topk
 
-    d = str(tmp_path / "deep")
     pages = generate_pages(spark, 2000, vocab_size=900)
-    IndexBuilder(d, shard_size=128, n_groups=4).build(pages)
     queries = spark.createDataFrame(generate_queries_pandas(30, vocab_size=900))
-    seg = read_segments(spark, d)
-    common = dict(k=300, index_dir=d)
-    one = (
-        segment_topk(seg, queries, deep_paging=False, **common)
-        .toPandas().sort_values(["query_id", "rank"]).reset_index(drop=True)
-    )
-    two = (
-        segment_topk(seg, queries, deep_paging=True, **common)
-        .toPandas().sort_values(["query_id", "rank"]).reset_index(drop=True)
-    )
-    assert list(two["query_id"]) == list(one["query_id"])
-    assert list(two["doc_id"]) == list(one["doc_id"])
-    np.testing.assert_allclose(two["score"], one["score"], rtol=1e-9)
-    # pass-1 shard sampling is on by default (16 shards >= 4*divisor above
-    # exercises it); the UNSAMPLED pass-1 must agree too — the sampled tau
-    # is merely a weaker valid floor, never a different ranking
-    import os
-
-    os.environ["SIMILARIPY_DEEP_SAMPLE"] = "0"
-    try:
-        full = (
+    for shard_size, n_shards in ((128, 16), (256, 8)):
+        d = str(tmp_path / f"deep_{n_shards}")
+        IndexBuilder(d, shard_size=shard_size, n_groups=4).build(pages)
+        assert read_meta(d)["n_shards"] == n_shards
+        seg = read_segments(spark, d)
+        common = dict(k=300, index_dir=d)
+        one = (
+            segment_topk(seg, queries, deep_paging=False, **common)
+            .toPandas().sort_values(["query_id", "rank"])
+            .reset_index(drop=True)
+        )
+        two = (
             segment_topk(seg, queries, deep_paging=True, **common)
             .toPandas().sort_values(["query_id", "rank"])
             .reset_index(drop=True)
         )
-    finally:
-        del os.environ["SIMILARIPY_DEEP_SAMPLE"]
-    assert list(full["doc_id"]) == list(two["doc_id"])
-    np.testing.assert_allclose(full["score"], two["score"], rtol=1e-9)
+        assert len(one) > 0
+        assert list(two["query_id"]) == list(one["query_id"])
+        assert list(two["doc_id"]) == list(one["doc_id"])
+        np.testing.assert_allclose(two["score"], one["score"], rtol=1e-9)
 
 
 def test_and_mode_relational_parity(spark, built):

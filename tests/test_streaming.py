@@ -78,61 +78,6 @@ def _write_drop(spark, pages, pred, src, name, tmp_path):
     shutil.move(part, f"{src}/{name}.parquet")
 
 
-def test_streaming_dedup_exact_first_seen(spark, tmp_path):
-    """applyInPandasWithState first-seen dedup: duplicates arriving in a
-    LATER micro-batch are dropped (cross-batch state), originals emitted
-    exactly once."""
-    from similaripy_spark.sources.pages import PAGES_SCHEMA
-    from similaripy_spark.streaming.dedup import streaming_dedup_exact
-
-    rows1 = [
-        (0, "https://a/0", "2026-01-01 00:00:00", b"", "alpha beta", "en"),
-        (1, "https://a/1", "2026-01-01 00:01:00", b"", "gamma delta", "en"),
-        (2, "https://a/2", "2026-01-01 00:02:00", b"", "alpha beta", "en"),
-    ]
-    rows2 = [
-        (3, "https://a/3", "2026-01-01 00:10:00", b"", "alpha beta", "en"),
-        (4, "https://a/4", "2026-01-01 00:11:00", b"", "epsilon", "en"),
-    ]
-
-    def mk(rows):
-        return spark.createDataFrame(
-            rows,
-            "doc_id long, url string, warc_ts string, html binary, "
-            "text string, lang string",
-        ).withColumn("warc_ts", F.to_timestamp("warc_ts"))
-
-    src = str(tmp_path / "drops")
-    os.makedirs(src)
-    out_dir = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-
-    schema = mk(rows1).schema
-
-    def run_once(name, rows):
-        _write_drop(spark, mk(rows), "true", src, name, tmp_path)
-        stream = spark.readStream.schema(schema).parquet(src)
-        q = (
-            streaming_dedup_exact(stream, watermark="10 seconds")
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        assert q.exception() is None, q.exception()
-
-    run_once("drop1", rows1)
-    run_once("drop2", rows2)
-
-    got = spark.read.parquet(out_dir).toPandas()
-    firsts = got[got["kind"] == "first"].sort_values("doc_id")
-    # doc 2 (in-batch dup of 0) and doc 3 (cross-batch dup of 0) are dropped
-    assert list(firsts["doc_id"]) == [0, 1, 4]
-    assert set(firsts["text_hash"]).__len__() == 3
-
-
 def test_streaming_dedup_builtin(spark, tmp_path):
     from similaripy_spark.streaming.dedup import streaming_dedup_builtin
 
@@ -163,63 +108,6 @@ def test_streaming_dedup_builtin(spark, tmp_path):
     assert q.exception() is None, q.exception()
     got = spark.read.parquet(out_dir).toPandas().sort_values("doc_id")
     assert list(got["doc_id"]) == [0, 2]
-
-
-def test_streaming_dedup_state_expiry_emits_summary(spark, tmp_path):
-    """After the watermark passes a hash's TTL its state is evicted: a
-    'summary' row reports (first_doc, n_dups) and a later duplicate is
-    treated as new — the bounded-state contract."""
-    from similaripy_spark.streaming.dedup import streaming_dedup_exact
-
-    def mk(rows):
-        return spark.createDataFrame(
-            rows,
-            "doc_id long, url string, warc_ts string, html binary, "
-            "text string, lang string",
-        ).withColumn("warc_ts", F.to_timestamp("warc_ts"))
-
-    src = str(tmp_path / "drops3")
-    os.makedirs(src)
-    out_dir, ckpt = str(tmp_path / "out3"), str(tmp_path / "ckpt3")
-    schema = mk([(0, "u", "2026-01-01 00:00:00", b"", "t", "en")]).schema
-
-    def run_once(name, rows, ttl_ms):
-        _write_drop(spark, mk(rows), "true", src, name, tmp_path)
-        stream = spark.readStream.schema(schema).parquet(src)
-        q = (
-            streaming_dedup_exact(stream, watermark="1 second",
-                                  state_ttl_ms=ttl_ms)
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        assert q.exception() is None, q.exception()
-
-    ttl = 60_000  # 1 minute
-    run_once("d1", [
-        (0, "https://a/0", "2026-01-01 00:00:00", b"", "dup text", "en"),
-        (1, "https://a/1", "2026-01-01 00:00:05", b"", "dup text", "en"),
-    ], ttl)
-    # hours later: a different hash advances the watermark past the TTL...
-    run_once("d2", [
-        (2, "https://a/2", "2026-01-01 06:00:00", b"", "other text", "en"),
-    ], ttl)
-    # ...and the NEXT batch processes the timed-out dup-text state (keys
-    # with new data are never the timed-out invocation, so the evicted key
-    # must be quiet in this batch)
-    run_once("d3", [
-        (3, "https://a/3", "2026-01-01 06:10:00", b"", "third text", "en"),
-    ], ttl)
-    got = spark.read.parquet(out_dir).toPandas()
-    summaries = got[got["kind"] == "summary"]
-    assert len(summaries) >= 1
-    dup_summary = summaries[summaries["doc_id"] == 0]
-    assert len(dup_summary) == 1 and dup_summary.iloc[0]["n_dups"] == 1
-    firsts = got[got["kind"] == "first"].sort_values("doc_id")
-    assert list(firsts["doc_id"]) == [0, 2, 3]
 
 
 def test_streaming_ingest_cross_batch_dedup(spark, tmp_path):
