@@ -7,9 +7,10 @@ kernel derives the tf-part at the CURRENT avgdl (wand._ShardIndex), so
 appending documents (which shifts avgdl and idf) leaves no committed
 block stale, and an append is just:
 
-1. delta doc_stats epoch (staged, validated, committed) — new documents
-   must land in NEW shards (min doc_id ≥ n_shards × shard_size), so no
-   committed shard is ever touched;
+1. delta corpus scalars (n_docs, Σdl, max shard, min doc_id) from one
+   aggregate, validated before anything commits — new documents must land
+   in NEW shards (min doc_id ≥ n_shards × shard_size), so no committed
+   shard is ever touched. Nothing is written: dl is stored in the blocks;
 2. delta segment groups at ``group_base = n_groups`` — the same
    one-wide-exchange segment job as a fresh build, committed per group
    through the same lineage protocol (a crashed append re-runs and skips
@@ -54,6 +55,7 @@ from pyspark.sql import functions as F
 
 from similaripy_spark.fulltext.index_build import (
     IndexBuilder,
+    _corpus_scalars,
     read_meta,
 )
 from similaripy_spark.fulltext.postings import build_postings, doc_lengths
@@ -95,14 +97,6 @@ def append_to_index(
         if lang is not None:
             pages = pages.filter(F.col("lang") == lang)
         postings = build_postings(pages)
-    if postings_input:
-        # the caller's relation feeds BOTH the phase-1 stats job and the
-        # phase-2 segment job — persist so its upstream DAG runs once
-        # (the builder's own policy for stats-from-postings; the pages
-        # path instead re-tokenizes for the count-only stats pass, the
-        # measured-cheaper trade)
-        postings = postings.persist()
-
     from similaripy_spark.fulltext.commit import detect_commit_protocol
 
     builder = IndexBuilder(
@@ -124,61 +118,52 @@ def append_to_index(
     builder._bounds_avgdl = float(meta["bounds_avgdl"])
     t0 = time.monotonic()
 
-    # ---- phase 1: delta doc_stats (staged → validated → committed) ------
-    from pyspark.sql import Observation
+    if postings_input:
+        # the caller's relation feeds BOTH the phase-1 stats job and the
+        # phase-2 segment job — persist so its upstream DAG runs once
+        # (the builder's own policy for stats-from-postings; the pages
+        # path instead re-tokenizes for the count-only stats pass, the
+        # measured-cheaper trade)
+        postings = postings.persist()
+    try:
+        # ---- phase 1: delta corpus scalars (validated, nothing written) -
+        if pages is not None:
+            ds = doc_lengths(pages).filter(F.col("dl") > 0)
+        else:
+            ds = postings.groupBy("doc_id").agg(F.max("dl").alias("dl"))
+        m = _corpus_scalars(ds, shard_size, F.min("doc_id").alias("min_doc"))
+        n_seen = int(m["n_seen"] or 0)
+        min_doc = m["min_doc"]
+        if n_seen == 0:
+            raise ValueError("append delta holds no non-empty documents")
+        if int(min_doc) < base_doc:
+            raise ValueError(
+                f"appended doc_ids must start at the next shard boundary "
+                f"(≥ {base_doc} = n_shards {base_shard} × shard_size "
+                f"{shard_size}); got min doc_id {int(min_doc)} — committed "
+                "shards are immutable"
+            )
+        n_delta = int(n_docs) if n_docs is not None else n_seen
+        delta_shards = int(m["max_shard"]) - base_shard + 1
 
-    if pages is not None:
-        ds = doc_lengths(pages).filter(F.col("dl") > 0)
-    else:
-        ds = postings.groupBy("doc_id").agg(F.max("dl").alias("dl"))
-    ds = ds.withColumn(
-        "shard", (F.col("doc_id") / shard_size).cast("int")
-    )
-    obs = Observation(f"append_epoch_{epoch}")
-    ds_path = os.path.join(index_dir, f"doc_stats_epoch_{epoch}")
-    ds_tmp = builder.commit.stage_path(ds_path)
-    (
-        ds.observe(
-            obs,
-            F.count(F.lit(1)).alias("n_seen"),
-            F.sum(F.col("dl").cast("double")).alias("sum_dl"),
-            F.max("shard").alias("max_shard"),
-            F.min("doc_id").alias("min_doc"),
-        )
-        .write.mode("overwrite")
-        .parquet(ds_tmp)
-    )
-    m = obs.get
-    n_seen = int(m["n_seen"] or 0)
-    min_doc = m["min_doc"]
-    if n_seen == 0:
-        builder.commit.discard(ds_tmp)
-        raise ValueError("append delta holds no non-empty documents")
-    if int(min_doc) < base_doc:
-        builder.commit.discard(ds_tmp)
-        raise ValueError(
-            f"appended doc_ids must start at the next shard boundary "
-            f"(≥ {base_doc} = n_shards {base_shard} × shard_size "
-            f"{shard_size}); got min doc_id {int(min_doc)} — committed "
-            "shards are immutable"
-        )
-    builder.commit.commit_dir(ds_tmp, ds_path)
-    n_delta = int(n_docs) if n_docs is not None else n_seen
-    delta_shards = int(m["max_shard"]) - base_shard + 1
+        # ---- phase 2: delta segment groups (same job shape as a build) --
+        weighted = builder._weighted(postings)
+        done = builder.committed_groups()
+        pending = [
+            g for g in range(base_group, base_group + int(n_groups))
+            if g not in done
+        ]
+        if pending:
+            builder._build_groups_batched(
+                weighted, pending, delta_shards, run_id
+            )
 
-    # ---- phase 2: delta segment groups (same job shape as a build) ------
-    weighted = builder._weighted(postings)
-    done = builder.committed_groups()
-    pending = [
-        g for g in range(base_group, base_group + int(n_groups))
-        if g not in done
-    ]
-    if pending:
-        builder._build_groups_batched(weighted, pending, delta_shards, run_id)
-
-    # ---- phase 3: term_stats (full recompute — idempotent) ---------------
-    builder.n_groups = base_group + int(n_groups)  # the all-committed gate
-    builder._write_term_stats(spark)
+        # ---- phase 3: term_stats (full recompute — idempotent) -----------
+        builder.n_groups = base_group + int(n_groups)  # all-committed gate
+        builder._write_term_stats(spark)
+    finally:
+        if postings_input:
+            postings.unpersist()
 
     # ---- phase 4: meta swap (atomic publish) -----------------------------
     sum_dl = float(meta["sum_dl"]) + float(m["sum_dl"] or 0.0)
@@ -215,6 +200,4 @@ def append_to_index(
     builder.commit.publish_json(
         os.path.join(index_dir, "meta.json"), new_meta
     )
-    if postings_input:
-        postings.unpersist()
     return new_meta

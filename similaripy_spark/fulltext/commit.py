@@ -206,9 +206,9 @@ class ObjectStoreCommitProtocol(CommitProtocol):
       generation-match) — atomic, and detecting concurrent committers; the
       local simulation uses the same single-object atomic replace.
     * Readers resolve through ``resolve``/``resolve_artifact`` — the
-      engine's ``read_segments``/``read_term_stats``/``read_doc_stats``
-      auto-detect pointer files, so an index committed by THIS backend is
-      readable by the same code that reads a rename-committed one.
+      engine's ``read_segments``/``read_term_stats`` auto-detect pointer
+      files, so an index committed by THIS backend is readable by the
+      same code that reads a rename-committed one.
 
     The filesystem here stands in for the store (keys = paths); swapping the
     open/replace calls for S3 Get/PutObject is mechanical and the interface

@@ -138,18 +138,13 @@ def compact_index(
     builder with EXACT post-deletion corpus stats (df, N, avgdl all
     recomputed). The output carries no tombstone epochs and stays
     append-capable, with freshly pinned bounds_avgdl."""
-    from similaripy_spark.fulltext.index_build import (
-        read_doc_stats,
-        read_segments,
-    )
+    from similaripy_spark.fulltext.index_build import read_segments
     from similaripy_spark.fulltext.index_merge import decode_segments
 
     meta = read_meta(index_dir)
     tomb = read_tombstones(spark, index_dir)
-    decoded = decode_segments(read_segments(spark, index_dir))
-    ds = read_doc_stats(spark, index_dir).select("doc_id", "dl")
-    postings = (
-        decoded.join(tomb, "doc_id", "left_anti").join(ds, "doc_id")
+    postings = decode_segments(read_segments(spark, index_dir)).join(
+        tomb, "doc_id", "left_anti"
     )
     kwargs = dict(
         k1=meta["k1"],

@@ -1049,9 +1049,9 @@ def collapse_topk(
     (query_id, doc_id, value, score, rank).
 
     Exact by construction: every match is scored RELATIONALLY with the
-    index's own statistics (decoded tf blocks under term pushdown ⋈
-    doc_stats(dl) → bm25_tf_part at the index's (k1, b, avgdl) ⋈
-    idf_table — float64), the per-value
+    index's own statistics (decoded (tf, dl) blocks under term pushdown
+    → bm25_tf_part at the index's (k1, b, avgdl) ⋈ idf_table —
+    float64), the per-value
     row_number keeps the best ``per_value`` docs of each (query, value)
     group under the engine tie rule, and the global top-k ranks the
     survivors. A kernel top-k then collapse would be INEXACT (a value's
@@ -1073,7 +1073,6 @@ def collapse_topk(
     from pyspark.sql import Window
 
     from similaripy_spark.fulltext.index_build import (
-        read_doc_stats,
         read_segments,
         read_term_stats,
     )
@@ -1102,12 +1101,8 @@ def collapse_topk(
         seg = seg.join(
             F.broadcast(qterms.select("term").distinct()), "term", "semi"
         )
-    posts = decode_segments(seg).join(
-        read_doc_stats(spark, index_dir).select("doc_id", "dl"),
-        "doc_id",
-    )
     tfp = bm25_tf_part(
-        posts, k1=float(meta["k1"]), b=float(meta["b"]),
+        decode_segments(seg), k1=float(meta["k1"]), b=float(meta["b"]),
         avgdl=float(meta["avgdl"]),
     )
     idf = idf_table(read_term_stats(spark, index_dir), int(meta["n_docs"]))

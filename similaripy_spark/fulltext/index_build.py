@@ -25,13 +25,12 @@ Layout decisions (the 100 TB argument):
   fresh build efficiency 0.499; VERDICT r3 item 1). A re-run anti-joins
   pending groups against committed manifests and recomputes only the rest —
   FIXTURES.md §6 semantics.
-* **Stats in one pass**: per-doc lengths are one combiner-friendly
-  ``groupBy(doc_id)`` whose write carries an ``Observation`` that yields the
-  corpus scalars (n_docs, Σdl, max shard) for free; term stats are derived
-  AFTER the segment commit from block metadata (Σn, max/min of block
-  max/min_score — a scan of blocks, ~1/128th of the postings), so the
-  weighted postings relation is materialized exactly once, inside the
-  segment job itself.
+* **Stats in one pass**: the corpus scalars (n_docs, Σdl, max shard) are
+  one aggregate over the per-doc lengths; dl itself is stored only in the
+  blocks' ``weights`` column. Term stats are derived AFTER the segment
+  commit from block metadata (Σn, max/min of block max/min_score — a scan
+  of blocks, ~1/128th of the postings), so the weighted postings relation
+  is materialized exactly once, inside the segment job itself.
 * Weights are float32 (reference compute dtype, s_plus.pyx:237-238); docIDs
   int64 end-to-end.
 
@@ -339,16 +338,12 @@ class IndexBuilder:
         pages: DataFrame,
         *,
         resume: bool = True,
-        fail_after_groups: int | None = None,
         n_docs: int | None = None,
     ) -> dict:
-        """Build the index from a pages table; returns meta dict.
-        ``fail_after_groups`` injects a crash after N group commits (resume
-        test hook, FIXTURES.md §6)."""
+        """Build the index from a pages table; returns meta dict."""
         return self.build_from_postings(
             build_postings(pages, lang=self.lang),
             resume=resume,
-            fail_after_groups=fail_after_groups,
             n_docs=n_docs,
             pages=pages,
         )
@@ -358,31 +353,37 @@ class IndexBuilder:
         postings: DataFrame,
         *,
         resume: bool = True,
-        fail_after_groups: int | None = None,
         n_docs: int | None = None,
         pages: DataFrame | None = None,
     ) -> dict:
         """Build from a postings relation (doc_id, term, tf, dl) — also the
         re-weighting entry for incremental merges (index_merge.py).
 
-        Job structure (exactly three Spark jobs on a fresh build):
+        Phases of a fresh build:
 
-        1. doc_stats: with ``pages`` available (the ``build()`` entry), a
-           count-only token pass over the raw text (doc_lengths — no split,
-           no posting explosion) written to parquet with the corpus scalars
-           observed on the same action. Without pages, a ``groupBy(doc_id)``
-           over the postings (map-side combinable);
+        1. corpus scalars (the ``doc_stats`` phase of
+           ``lineage/build_metrics.json``): one job with no exchange
+           (``_corpus_scalars``) yields n_docs, Σdl and the max shard,
+           which meta.json and the encoder's ``bounds_avgdl`` need
+           before the segment job runs.
+           With ``pages`` available (the ``build()`` entry) it is a
+           count-only token pass over the raw text (doc_lengths — no
+           split, no posting explosion); without pages, a
+           ``groupBy(doc_id)`` over the postings (map-side combinable).
+           It writes no table: dl is stored in the blocks;
         2. segments: the one big job — the (tf, dl) projection,
            repartition(shard, term-salt) → Arrow encode →
            ``partitionBy(group)`` staged write; every pending group then
            publishes independently (rename + lineage manifest);
-        3. term_stats: Σn / max / min over committed block metadata.
+        3. term_stats: Σn / max / min over committed block metadata —
+           driver-side with pyarrow below the block-count gate (no Spark
+           job), a Spark aggregate above it.
 
         With ``pages``, the postings relation has exactly ONE consumer (the
         segment job), so it is never persisted:
         tokenize runs once, streamed straight into the shard exchange —
         no 10^?-row cache encode/decode, which on a bandwidth-bound box is
-        the difference between the doc_stats phase scaling and not (measured
+        the difference between the stats phase scaling and not (measured
         300k docs: phase eff 0.31 persisted vs the count-only pass).
         """
         spark = postings.sparkSession
@@ -436,24 +437,9 @@ class IndexBuilder:
                 g for g in range(base, base + self.n_groups) if g not in done
             ]
             if pending:
-                weighted = self._weighted(postings)
-                if fail_after_groups is not None:
-                    # deterministic sequential mode for the crash-injection
-                    # test (FIXTURES.md §6) — one commit unit per job
-                    n_committed = 0
-                    for g in pending:
-                        self._build_group_single(
-                            weighted, g, n_shards, run_id
-                        )
-                        n_committed += 1
-                        if n_committed >= fail_after_groups:
-                            raise RuntimeError(
-                                f"injected failure after {n_committed} groups"
-                            )
-                else:
-                    self._build_groups_batched(
-                        weighted, pending, n_shards, run_id
-                    )
+                self._build_groups_batched(
+                    self._weighted(postings), pending, n_shards, run_id
+                )
             # term stats from block metadata once every group is committed
             # (idempotent: recomputed whenever this run added groups)
             t_ph = time.monotonic()
@@ -480,60 +466,37 @@ class IndexBuilder:
 
     def _build_stats(self, postings: DataFrame, n_docs: int | None,
                      run_id: str) -> dict:
-        """Job 1 (postings entry): doc_stats parquet + corpus scalars
-        (observed on the same action) + meta.json. The reference's N is the
-        declared matrix shape incl. empty docs (normalization.pyx:315, 323)
-        — pass ``n_docs`` to pin it; else the distinct doc count in the
-        postings is used."""
+        """Phase 1 (postings entry): corpus scalars from the per-doc
+        lengths + meta.json. The reference's N is the declared matrix
+        shape incl. empty docs (normalization.pyx:315, 323) — pass
+        ``n_docs`` to pin it; else the distinct doc count in the postings
+        is used."""
         if self.shard_size == "auto":
             # one cheap max() action; doc ids are dense-ish by contract
             hi = postings.agg(F.max("doc_id").alias("m")).first()["m"] or 0
             self.shard_size = derive_shard_size(int(hi) + 1)
-        ds = (
-            postings.groupBy("doc_id")
-            .agg(F.max("dl").alias("dl"))
-            .withColumn("shard", (F.col("doc_id") / self.shard_size).cast("int"))
-        )
+        ds = postings.groupBy("doc_id").agg(F.max("dl").alias("dl"))
         return self._write_stats(ds, n_docs, run_id)
 
     def _build_stats_pages(self, pages: DataFrame, n_docs: int | None,
                            run_id: str) -> dict:
-        """Job 1 (pages entry): doc_stats straight from the raw text with
-        the count-only token kernel (postings.doc_lengths) — no posting
-        explosion, no postings persist, no groupBy shuffle. ``dl > 0``
-        filter keeps the table's contents identical to the postings-derived
-        variant (a doc with no tokens emits no postings)."""
+        """Phase 1 (pages entry): corpus scalars straight from the raw text
+        with the count-only token kernel (postings.doc_lengths) — no
+        posting explosion, no postings persist, no groupBy shuffle. The
+        ``dl > 0`` filter keeps the scalars identical to the
+        postings-derived variant (a doc with no tokens emits no
+        postings)."""
         if self.lang is not None:
             pages = pages.filter(F.col("lang") == self.lang)
         if self.shard_size == "auto":
             hi = pages.agg(F.max("doc_id").alias("m")).first()["m"] or 0
             self.shard_size = derive_shard_size(int(hi) + 1)
-        ds = (
-            doc_lengths(pages)
-            .filter(F.col("dl") > 0)
-            .withColumn("shard", (F.col("doc_id") / self.shard_size).cast("int"))
-        )
+        ds = doc_lengths(pages).filter(F.col("dl") > 0)
         return self._write_stats(ds, n_docs, run_id)
 
     def _write_stats(self, ds: DataFrame, n_docs: int | None,
                      run_id: str) -> dict:
-        from pyspark.sql import Observation
-
-        obs = Observation("corpus")
-        ds_path = os.path.join(self.index_dir, "doc_stats")
-        ds_tmp = self.commit.stage_path(ds_path)
-        (
-            ds.observe(
-                obs,
-                F.count(F.lit(1)).alias("n_seen"),
-                F.sum(F.col("dl").cast("double")).alias("sum_dl"),
-                F.max("shard").alias("max_shard"),
-            )
-            .write.mode("overwrite")
-            .parquet(ds_tmp)
-        )
-        self.commit.commit_dir(ds_tmp, ds_path)
-        m = obs.get
+        m = _corpus_scalars(ds, self.shard_size)
         N = int(n_docs) if n_docs is not None else int(m["n_seen"] or 0)
         avgdl = float(m["sum_dl"] or 0.0) / max(N, 1)
         meta = {
@@ -772,28 +735,6 @@ class IndexBuilder:
         self.commit.discard(stage_parent)
         self._record_phase("commit", t_ph)
 
-    def _build_group_single(
-        self, weighted: DataFrame, g: int, n_shards: int, run_id: str
-    ) -> None:
-        """One commit unit as its own job (crash-injection test path)."""
-        t0 = time.monotonic()
-        part = weighted.filter(
-            F.col("shard") % self.n_groups + F.lit(self.group_base) == g
-        )
-        shards_in_group = max(-(-n_shards // self.n_groups), 1)
-        seg = self._segment_plan(part, shards_in_group)
-        gdir = os.path.join(self.index_dir, "segments", f"group={g}")
-        gtmp = self.commit.stage_path(gdir)
-        seg.write.mode("overwrite").parquet(gtmp)
-        if self.input_layout == "aligned":
-            self._check_aligned_contract(gtmp)
-        blocks, n_postings, disk_bytes = self._group_footer_stats(gtmp)
-        self.commit.commit_dir(gtmp, gdir)
-        self._publish_lineage(
-            g, run_id, blocks, n_postings, disk_bytes,
-            int((time.monotonic() - t0) * 1000),
-        )
-
     def _write_term_stats(self, spark: SparkSession) -> None:
         """Job 3: (term, df, max_weight, min_weight) from block metadata —
         df = Σn over a term's blocks (every posting appears in exactly one
@@ -908,6 +849,25 @@ class IndexBuilder:
         return True
 
 
+def _corpus_scalars(ds: DataFrame, shard_size: int, *extra) -> dict:
+    """``n_seen``, ``sum_dl`` and ``max_shard`` (plus the ``extra``
+    aggregates) of a per-doc ``(doc_id, dl)`` relation, in ONE Spark job
+    with no exchange: the aggregates are observed on a ``noop`` write.
+    ``ds.agg(...)`` would add a single-partition exchange, which adaptive
+    execution runs as a second job."""
+    from pyspark.sql import Observation
+
+    obs = Observation("corpus")
+    ds.observe(
+        obs,
+        F.count(F.lit(1)).alias("n_seen"),
+        F.sum(F.col("dl").cast("double")).alias("sum_dl"),
+        F.max((F.col("doc_id") / shard_size).cast("int")).alias("max_shard"),
+        *extra,
+    ).write.format("noop").mode("overwrite").save()
+    return obs.get
+
+
 def read_segments(spark: SparkSession, index_dir: str) -> DataFrame:
     """Backend-transparent: a rename-committed index is one directory tree;
     a pointer-committed one (ObjectStoreCommitProtocol) is read by resolving
@@ -988,18 +948,6 @@ def read_term_stats(spark: SparkSession, index_dir: str) -> DataFrame:
     return spark.read.schema(TERM_STATS_SCHEMA).parquet(
         resolve_artifact(os.path.join(index_dir, "term_stats"))
     )
-
-
-def read_doc_stats(spark: SparkSession, index_dir: str) -> DataFrame:
-    """doc_stats across every epoch: the initial build's table plus each
-    committed ``doc_stats_epoch_*`` delta an ``append_to_index`` wrote."""
-    parts = [resolve_artifact(os.path.join(index_dir, "doc_stats"))]
-    n_epochs = int(read_meta(index_dir).get("n_epochs", 1))
-    for e in range(1, n_epochs):
-        p = os.path.join(index_dir, f"doc_stats_epoch_{e}")
-        if os.path.isdir(p) or os.path.exists(p + ".ptr.json"):
-            parts.append(resolve_artifact(p))
-    return spark.read.parquet(*parts)
 
 
 def describe_index(spark: SparkSession, index_dir: str) -> dict:

@@ -11,10 +11,10 @@ postings are never re-shuffled):
   stay doc-sorted per (term, shard, block_id), so posting lists concatenate
   without re-sorting — the "k-way merge" is free by construction.
 * ``merge_indexes`` — incremental ingestion: decode N delta indexes back to
-  postings (one vectorized pass over blocks), union, re-weight with the
-  merged global stats (df/avgdl/N change when docs arrive — BM25 weights are
-  corpus-global, so a correct merge MUST re-weight), and rebuild via the
-  same checkpoint-resumable builder.
+  postings with their dl (one vectorized pass over blocks), union,
+  re-weight with the merged global stats (df/avgdl/N change when docs
+  arrive — BM25 weights are corpus-global, so a correct merge MUST
+  re-weight), and rebuild via the same checkpoint-resumable builder.
 
 ``decode_segments`` is the shared block→postings expansion (also the index
 introspection tool).
@@ -35,7 +35,6 @@ from pyspark.sql import types as T
 from similaripy_spark.fulltext import codec
 from similaripy_spark.fulltext.index_build import (
     IndexBuilder,
-    read_doc_stats,
     read_meta,
     read_segments,
 )
@@ -45,6 +44,7 @@ _DECODED_SCHEMA = T.StructType(
         T.StructField("doc_id", T.LongType(), False),
         T.StructField("term", T.StringType(), False),
         T.StructField("tf", T.IntegerType(), False),
+        T.StructField("dl", T.LongType(), False),
     ]
 )
 
@@ -121,7 +121,9 @@ def read_merged_for_terms(
 
 
 def decode_segments(segments: DataFrame) -> DataFrame:
-    """Compressed blocks → postings (doc_id, term, tf).
+    """Compressed blocks → postings (doc_id, term, tf, dl), the columns of
+    ``postings.build_postings``. dl is read from the blocks' ``weights``
+    column, the one store of each document's length.
 
     One vectorized pass per Arrow batch via ``codec.decode_doc_blocks`` —
     ONE varint decode over the concatenated buffers + a cumsum rebase, the
@@ -143,11 +145,13 @@ def decode_segments(segments: DataFrame) -> DataFrame:
             tfs = codec.decode_varints(
                 b"".join(b["tfs"].tolist()), int(ns.sum())
             ).astype(np.int32)
+            dls = codec.decode_f32(b"".join(b["weights"].tolist()))
             yield pd.DataFrame(
                 {
                     "doc_id": docs,
                     "term": np.repeat(b["term"].to_numpy(object), ns),
                     "tf": tfs,
+                    "dl": dls.astype(np.int64),
                 }
             )
 
@@ -164,9 +168,7 @@ def merge_indexes(
     rebuild with merged global BM25 stats. Returns new meta."""
     postings_parts = []
     for d in index_dirs:
-        decoded = decode_segments(read_segments(spark, d))
-        ds = read_doc_stats(spark, d).select("doc_id", "dl")
-        part = decoded.join(ds, "doc_id")
+        part = decode_segments(read_segments(spark, d))
         if read_meta(d).get("n_tombstone_epochs"):
             # deleted docs stay in the source SEGMENTS until compaction;
             # decoding without the tombstone set would silently RESURRECT

@@ -27,11 +27,11 @@ one string per call, the interactive-search server path:
   set comes from the positional path (posting-list intersection +
   ordered-position verification, positional.phrase_topk_pos), phrase sets
   intersect, and the survivors are scored RELATIONALLY over all ranked
-  terms with the index's own statistics — decoded (tf) blocks
-  (term-pushdown scan) ⋈ doc_stats(dl) → bm25_tf_part at the index's
-  (k1, b, avgdl) ⋈ idf_table(term_stats, N) — exact float64 reference
-  BM25, independent of the kernels' float32 rounding (tf rides in every
-  block precisely so readers can re-derive weights). NOT terms anti-join,
+  terms with the index's own statistics — decoded (tf, dl) blocks
+  (term-pushdown scan) → bm25_tf_part at the index's (k1, b, avgdl) ⋈
+  idf_table(term_stats, N) — exact float64 reference BM25, independent of
+  the kernels' float32 rounding (tf and dl ride in every block precisely
+  so readers can re-derive weights). NOT terms anti-join,
   doc-values filters apply via docvalues.filter_docs (the relational twin
   of the kernel matcher), standard (score DESC, doc_id ASC) tie rule.
   Cost is linear in the phrase match sets and the ranked terms' posting
@@ -228,7 +228,6 @@ def search(
 
     # --- phrase composition (candidate-driven) ---------------------------
     from similaripy_spark.fulltext.index_build import (
-        read_doc_stats,
         read_segments,
         read_term_stats,
     )
@@ -272,13 +271,8 @@ def search(
 
         verified = filter_docs(spark, verified, index_dir, filters)
 
-    posts = (
-        decoded.filter(F.col("term").isin(ranked))
-        .join(verified, "doc_id", "left_semi")
-        .join(
-            read_doc_stats(spark, index_dir).select("doc_id", "dl"),
-            "doc_id",
-        )
+    posts = decoded.filter(F.col("term").isin(ranked)).join(
+        verified, "doc_id", "left_semi"
     )
     tfp = bm25_tf_part(
         posts,

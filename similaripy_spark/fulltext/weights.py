@@ -47,8 +47,8 @@ def bm25_weights(
     weight = idf * (tf*(k1+1) / (tf + k1*((1-b) + b*dl/avgdl)) + delta)
 
     When BOTH ``n_docs`` and ``avgdl`` are given (the index builder already
-    computed them from doc_stats) they become plan literals — no corpus agg,
-    no crossJoin, one less pass over the postings.
+    computed them in its corpus-scalars pass) they become plan literals —
+    no corpus agg, no crossJoin, one less pass over the postings.
     """
     p = postings.join(term_stats(postings), "term")
     if n_docs is not None and avgdl is not None:

@@ -25,15 +25,16 @@ from pyspark.sql import functions as F
 from similaripy_spark.fulltext.append import append_to_index
 from similaripy_spark.fulltext.index_build import (
     IndexBuilder,
-    read_doc_stats,
     read_meta,
     read_segments,
     read_term_stats,
 )
 from similaripy_spark.fulltext.index_merge import (
+    decode_segments,
     merge_indexes,
     merge_to_term_major,
 )
+from similaripy_spark.fulltext.postings import build_postings, doc_lengths
 from similaripy_spark.fulltext.retrieve import open_index
 from similaripy_spark.fulltext.wand import segment_topk, term_major_topk
 from similaripy_spark.sources.pages import generate_pages
@@ -115,13 +116,33 @@ def test_append_merges_corpus_scalars_exactly(spark, appended):
     tsi = {r.term: r.df for r in
            read_term_stats(spark, appended["inc"]).collect()}
     assert tsf == tsi
-    assert read_doc_stats(spark, appended["inc"]).count() == N_DOCS
+    decoded = decode_segments(read_segments(spark, appended["inc"]))
+    assert decoded.select("doc_id").distinct().count() == N_DOCS
+
+
+def test_dl_is_read_from_every_epochs_blocks(spark, corpus, appended):
+    """The segment blocks are the one store of dl: decoding an appended
+    index gives every doc, base and appended, the dl of its page, and no
+    build or append writes a separate doc-length table."""
+    got = {
+        (r.doc_id, r.dl)
+        for r in decode_segments(read_segments(spark, appended["inc"]))
+        .select("doc_id", "dl").distinct().collect()
+    }
+    want = {
+        (r.doc_id, r.dl)
+        for r in doc_lengths(corpus).filter(F.col("dl") > 0).collect()
+    }
+    assert got == want
+    assert {d for d, _ in got if d >= SPLIT}, "no appended doc decoded"
+    for d in (appended["full_raw"], appended["inc"]):
+        assert not [f for f in os.listdir(d) if f.startswith("doc_stats")]
 
 
 def test_merge_keeps_appended_docs(spark, appended, queries, tmp_path):
     """Merging an appended index keeps the docs of every epoch: the merge
-    joins the decoded postings with doc_stats, so a base-only doc_stats
-    would drop every appended doc."""
+    decodes (doc_id, term, tf, dl) from the blocks of every epoch's
+    segment groups, so no appended doc is dropped."""
     out = str(tmp_path / "merged")
     merge_indexes(spark, [appended["inc"]], out)
     assert read_meta(out)["n_docs"] == N_DOCS
@@ -181,16 +202,31 @@ def test_append_rejects_docs_in_committed_shards(spark, corpus, tmp_path):
             spark, inc,
             pages=corpus.filter(F.col("doc_id") >= SPLIT - 8), n_groups=2,
         )
-    # nothing committed: meta unchanged, no epoch dir
+    # nothing committed: meta unchanged, no delta group, no manifest
     assert read_meta(inc).get("n_epochs", 1) == 1
-    assert not os.path.exists(os.path.join(inc, "doc_stats_epoch_1"))
+    assert not os.path.exists(os.path.join(inc, "segments", "group=2"))
+    assert not os.path.exists(os.path.join(inc, "lineage", "group_2.json"))
+
+
+def test_append_unpersists_callers_postings_on_raise(spark, corpus,
+                                                      tmp_path):
+    """A postings= append persists the caller's frame for its two passes;
+    a validation raise must release it like a successful append does."""
+    inc = str(tmp_path / "inc_cache")
+    IndexBuilder(inc, n_groups=2, shard_size=SHARD).build(
+        corpus.filter(F.col("doc_id") < SPLIT)
+    )
+    delta = build_postings(corpus.filter(F.col("doc_id") >= SPLIT - 8))
+    with pytest.raises(ValueError, match="shard boundary"):
+        append_to_index(spark, inc, postings=delta, n_groups=2)
+    assert delta.is_cached is False
 
 
 def test_append_crash_resume(spark, corpus, queries, monkeypatch, tmp_path):
     """An append that dies after its segment groups committed but before
-    term_stats/meta re-runs to the same final state: the delta doc_stats
-    epoch is rewritten (same bytes — deterministic input), committed delta
-    groups are skipped via the lineage manifests, and the idempotent
+    term_stats/meta re-runs to the same final state: the delta corpus
+    scalars are recomputed (same values — deterministic input), committed
+    delta groups are skipped via the lineage manifests, and the idempotent
     term_stats recompute + atomic meta swap finish the epoch. A re-run
     AFTER the meta swap is a different epoch and fails the new-shards
     validation loudly instead of double-ingesting."""

@@ -24,7 +24,7 @@ from similaripy_spark.fulltext.commit import (
 )
 from similaripy_spark.fulltext.index_build import (
     IndexBuilder,
-    read_doc_stats,
+    read_meta,
     read_segments,
     read_term_stats,
 )
@@ -71,17 +71,28 @@ def test_objectstore_build_parity_with_localfs(spark, tmp_path):
     # stats tables resolve through their pointers too
     assert read_term_stats(spark, d_os).count() == \
         read_term_stats(spark, d_fs).count()
-    assert read_doc_stats(spark, d_os).count() == N_DOCS
+    assert read_meta(d_os)["n_docs"] == N_DOCS
 
 
-def test_objectstore_crash_resume(spark, tmp_path):
+def test_objectstore_crash_resume(spark, tmp_path, monkeypatch):
     """Crash after one committed group: resume publishes only the missing
     groups (lineage is authoritative), and the finished index matches a
     clean one-shot build."""
     d = str(tmp_path / "crash")
     commit = ObjectStoreCommitProtocol()
-    with pytest.raises(RuntimeError, match="injected failure"):
-        _build(spark, d, commit, fail_after_groups=1)
+    orig = IndexBuilder._publish_lineage
+    calls = {"n": 0}
+
+    def boom(self, *args):
+        if calls["n"] >= 1:
+            raise RuntimeError("injected failure after 1 group")
+        calls["n"] += 1
+        return orig(self, *args)
+
+    with monkeypatch.context() as mp:
+        mp.setattr(IndexBuilder, "_publish_lineage", boom)
+        with pytest.raises(RuntimeError, match="injected failure"):
+            _build(spark, d, commit)
     b = IndexBuilder(d, shard_size=256, n_groups=3, commit=commit)
     done_before = b.committed_groups()
     assert len(done_before) == 1

@@ -408,7 +408,22 @@ def test_legacy_weight_scheme_rejected(spark, legacy_source, tmp_path,
             call()
 
 
-def test_resume_after_injected_failure(spark, tmp_path):
+def _crash_after_lineage_publishes(monkeypatch, n):
+    """Make ``IndexBuilder._publish_lineage`` raise on its (n+1)-th call,
+    so a build dies after n group commits."""
+    orig = IndexBuilder._publish_lineage
+    calls = {"n": 0}
+
+    def boom(self, *args, **kwargs):
+        if calls["n"] >= n:
+            raise RuntimeError(f"injected failure after {n} groups")
+        calls["n"] += 1
+        return orig(self, *args, **kwargs)
+
+    monkeypatch.setattr(IndexBuilder, "_publish_lineage", boom)
+
+
+def test_resume_after_injected_failure(spark, tmp_path, monkeypatch):
     d1, d2 = str(tmp_path / "a"), str(tmp_path / "b")
     pages = generate_pages(spark, 600, vocab_size=800)
 
@@ -417,8 +432,10 @@ def test_resume_after_injected_failure(spark, tmp_path):
 
     # interrupted build: crash after 2 of 4 group commits
     b2 = IndexBuilder(d2, shard_size=128, n_groups=4)
-    with pytest.raises(RuntimeError, match="injected failure"):
-        b2.build(pages, fail_after_groups=2)
+    with monkeypatch.context() as mp:
+        _crash_after_lineage_publishes(mp, 2)
+        with pytest.raises(RuntimeError, match="injected failure"):
+            b2.build(pages)
     assert len(b2.committed_groups()) == 2
 
     # resume recomputes exactly the missing groups

@@ -46,7 +46,7 @@ def test_decode_roundtrip(spark, built):
     )
     raw = (
         build_postings(pages)
-        .select("doc_id", "term", "tf")
+        .select("doc_id", "term", "tf", "dl")
         .orderBy("doc_id", "term")
         .toPandas()
     )
