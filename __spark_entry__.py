@@ -17,7 +17,6 @@ Matrix conventions used by the similarity entries:
 from __future__ import annotations
 
 import math
-import os
 
 from collections.abc import Callable
 
@@ -28,52 +27,8 @@ from pyspark.sql import functions as F
 # shared loaders / fragments
 # ---------------------------------------------------------------------------
 
-def _spread(spark, df, path):
-    """Parallelize scans of few-row-group parquet tables: parquet splits
-    only at row-group boundaries, so a table with fewer row groups than the
-    session has cores serializes the map work above the scan (tokenization,
-    partial aggregation — the dominant per-row cost of these entries) no
-    matter the split-size conf. A keyless round-robin repartition
-    (deterministic: sort-before-repartition is on) spreads it. Scale-
-    adaptive, not a constant: decided from the parquet footers (a few ms,
-    no Spark planning), and any table with at least one row group per core
-    — every production-sized table — skips it without any shuffle.
-
-    Caveat: the footers are read through the LOCAL filesystem (os.listdir,
-    pyarrow on a plain path), not through Spark's Hadoop filesystem, so
-    only local paths are supported. On object storage the check cannot
-    list the table: os.path.isdir is False for a URI, and pyarrow then
-    either raises on a scheme it does not know (s3a:// gives ArrowInvalid,
-    a ValueError) or reads the footers outside Spark's credentials and
-    configuration. Both errors leave ``df`` unchanged: the spread is an
-    optimization, never a precondition of the scan."""
-    par = spark.sparkContext.defaultParallelism
-    try:
-        import pyarrow.parquet as pq
-
-        if os.path.isdir(path):
-            names = [n for n in os.listdir(path) if n.endswith(".parquet")]
-            if len(names) >= par:
-                return df
-            groups = 0
-            for n in names:
-                groups += pq.ParquetFile(
-                    os.path.join(path, n)
-                ).metadata.num_row_groups
-                if groups >= par:
-                    return df
-        else:
-            groups = pq.ParquetFile(path).metadata.num_row_groups
-    except (OSError, ValueError):
-        return df
-    if groups >= par:
-        return df
-    return df.repartition(par)
-
-
 def _docs(spark, sf_dir):
-    p = f"{sf_dir}/documents.parquet"
-    return _spread(spark, spark.read.parquet(p), p)
+    return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
 
 def _emb(spark, sf_dir):
@@ -111,8 +66,8 @@ def _postings(spark, sf_dir):
     tokenizer (identical rows to the SQL-plan twin — parity is pinned in
     tests — with no token-level shuffle). The BM25 entries consume the
     postings relation three times (weights join, term stats, corpus
-    scalars); with the tokenize spread across cores (_docs) the three
-    map-side passes are cheaper than any materialization barrier — a
+    scalars); the three map-side passes are cheaper than any
+    materialization barrier — a
     localCheckpoint variant was measured ~2 s SLOWER on the first (timed)
     invocation for its extra materialization job and ExistingRDD scans,
     at equal steady state."""
@@ -279,11 +234,7 @@ def _q_bm25_topk(spark, sf_dir):
     from similaripy_spark.fulltext.query import bm25_topk
     from similaripy_spark.fulltext.weights import bm25_weights
 
-    # raw (unspread) read for the QUERY side: the %25 filter pushes into
-    # the parquet scan, and the 200-row query relation has no tokenize
-    # stage worth parallelizing — the spread's round-robin exchange would
-    # just sit between the scan and the filter
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _docs(spark, sf_dir)
     queries = docs.filter(F.col("doc_id") % 25 == 0).select(
         F.col("doc_id").alias("query_id"),
         F.slice(F.split(F.lower("text"), "[^a-z0-9]+"), 1, 3).alias("terms"),

@@ -5,9 +5,10 @@ postings are never re-shuffled):
 
 * ``merge_to_term_major`` — re-groups the doc-sharded segments by term bucket
   (``crc32(term) % n_buckets``) into a partition-pruned global layout: a
-  selective query touches only its terms' bucket directories (Catalyst
-  partition pruning on ``term_bucket``), the physical analog of the
-  reference's array-selector pre-filter (s_plus_utils.pyx:424-490). Blocks
+  selective query touches only its terms' bucket directories (the
+  driver-side ``pyarrow.dataset`` filter of ``wand.TermMajorIndex``), the
+  physical analog of the reference's array-selector pre-filter
+  (s_plus_utils.pyx:424-490). Blocks
   stay doc-sorted per (term, shard, block_id), so posting lists concatenate
   without re-sorting — the "k-way merge" is free by construction.
 * ``merge_indexes`` — incremental ingestion: decode N delta indexes back to
@@ -60,7 +61,8 @@ def merge_to_term_major(
 
     Staged + committed like every other artifact; the layout records its own
     ``n_buckets`` in ``merged/_meta.json`` (underscore-prefixed → invisible
-    to Spark's file index) so readers never have to guess the bucket count —
+    to Spark's file index and to pyarrow's dataset discovery) so readers
+    never have to guess the bucket count —
     a mismatched guess would silently prune the WRONG partitions."""
     from similaripy_spark.fulltext.commit import LocalFSCommitProtocol
 
@@ -93,31 +95,6 @@ def merged_n_buckets(index_dir: str, default: int = 64) -> int:
             return int(json.load(f)["n_buckets"])
     except (OSError, json.JSONDecodeError, KeyError):
         return default
-
-
-def open_merged(spark: SparkSession, index_dir: str) -> DataFrame:
-    """The merged layout as one relation. Opening it lists every
-    ``term_bucket=`` directory: at the default 64 buckets (above Spark's
-    32-path parallel-discovery threshold) that is a listing job plus a
-    schema job, so a server opens it once and filters it per call
-    (``read_merged_for_terms``)."""
-    return spark.read.parquet(os.path.join(index_dir, "merged"))
-
-
-def read_merged_for_terms(
-    merged: DataFrame, terms: list[str], n_buckets: int
-) -> DataFrame:
-    """Bucket-and-term filter over an opened merged relation
-    (``open_merged``): only the requested terms' buckets are read, visible
-    as PartitionFilters in .explain. ``n_buckets`` must be the count the
-    layout was written with (``merged_n_buckets``); a wrong one prunes the
-    wrong partitions. Runs no Spark job."""
-    import zlib
-
-    buckets = sorted({zlib.crc32(t.encode()) % n_buckets for t in terms})
-    return merged.filter(
-        F.col("term_bucket").isin(buckets) & F.col("term").isin(list(terms))
-    )
 
 
 def decode_segments(segments: DataFrame) -> DataFrame:

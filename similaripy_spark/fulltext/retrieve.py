@@ -5,11 +5,11 @@ regime — exactly like the reference exposes one ``dot_product``
 call while s_plus.h picks blocked vs single-pass accumulation internally
 (s_plus.pyx:217-225):
 
-* ``term_major_topk`` — point queries: ships only the queried terms' blocks
-  (partition-pruned merged layout) to a per-query group — the only path
-  whose I/O is proportional to the QUERY, not the index, so it also wins
-  whenever the index is cold (a 5-term query over a 100-TB index reads a
-  few buckets, not every shard).
+* ``term_major_topk`` — point queries: reads only the queried terms' blocks
+  (the partition-pruned merged layout) and scores them in the driver — the
+  only path whose I/O is proportional to the QUERY, not the index, so it
+  also wins whenever the index is cold (a 5-term query over a 100-TB index
+  reads a few buckets, not every shard).
 * ``segment_topk``    — everything else: replicate the batch to every doc
   shard, one vectorized dense-accumulator pass per shard. Measured on the
   50k-doc Zipf corpus (local[8], cached index) it dominates at every batch
@@ -20,12 +20,13 @@ call while s_plus.h picks blocked vs single-pass accumulation internally
 index's own metadata (``meta.json`` for the shard list — no per-call
 shard-discovery job — and ``merged/_meta.json`` for the bucket count). The
 route probe collects at most ``point_cutoff + 1`` query rows; a point batch
-is then served from those rows (the query side plans as a local scan), over
-the merged and idf relations the handle opened once, and each query's ranks
-come out of its scoring kernel. Every path returns the same (query_id,
-doc_id, score, rank) with the same deterministic tie rule (score DESC,
-doc_id ASC), so routing is a pure physical choice — parity across the
-routing boundaries is pinned in tests/test_retrieve.py.
+is then scored from those rows in the driver, eagerly inside ``topk()``,
+over the ``pyarrow`` datasets the handle opened once: no Spark job runs,
+and the ranked result is a local frame (``LocalTableScan``). Every path
+returns the same (query_id, doc_id, score, rank) with the same
+deterministic tie rule (score DESC, doc_id ASC) and the same idf function
+(``weights.idf_np``), so routing is a pure physical choice — parity across
+the routing boundaries is pinned in tests/test_retrieve.py.
 """
 
 from __future__ import annotations
@@ -89,22 +90,22 @@ class IndexHandle:
     * ``meta.json`` read (shard count, corpus scalars, format check) — a
       driver-side file read, so no per-call shard-discovery job;
     * the merged-layout probe for term-major routing;
-    * the per-term ``idf`` join onto the segment relation
+    * the per-term ``df`` join onto the segment relation
       (``segments_with_idf`` — measured +30% wall per 10k-query batch when
       paid per call instead), with the annotated segments persisted
       (``cache=True``) so repeated batches read memory, not parquet;
     * on a merged index, the term-major state (``wand.TermMajorIndex``):
-      the merged relation (its 64-bucket listing is a Spark job), the
-      bucket count from ``merged/_meta.json`` and the idf relation over
-      ``term_stats``. It is opened at ``.warm()`` or at the first
-      term-major call, never at construction, so a handle over an
-      unmerged index launches no job for it.
+      ``pyarrow`` datasets over ``merged/`` and ``term_stats`` plus the
+      bucket count from ``merged/_meta.json``, all opened in the driver
+      with no Spark job (nothing is listed through Spark). It is opened at
+      ``.warm()`` or at the first term-major call, never at construction.
 
-    Every ``.topk()`` batch then reuses the loaded state. Constructing the
-    handle runs NO Spark job (reads are lazy; persist is lazy) — call
-    ``.warm()`` to materialize the segment cache and open the term-major
-    state eagerly, ``.close()`` (or use it as a context manager) to
-    release it.
+    Every ``.topk()`` batch then reuses the loaded state. A point batch is
+    scored eagerly, inside ``.topk()``, and comes back as a local frame;
+    a segment batch stays a lazy Spark plan. Constructing the handle runs
+    NO Spark job (reads are lazy; persist is lazy) — call ``.warm()`` to
+    materialize the segment cache and open the term-major state eagerly,
+    ``.close()`` (or use it as a context manager) to release it.
 
     The handle is a snapshot of the index it opened: ``append_to_index``
     renames ``merged/`` away and changes the corpus statistics, so reopen
@@ -113,7 +114,7 @@ class IndexHandle:
 
     One-shot convenience: ``retrieve.topk`` is this handle with
     ``cache=False, annotate_segments=False`` — a single uncached call
-    where the per-batch query-side idf annotation (which only touches the
+    where the per-batch query-side df annotation (which only touches the
     tiny query batch) beats a segment-relation-sized join.
     """
 
@@ -143,8 +144,8 @@ class IndexHandle:
 
     def warm(self) -> "IndexHandle":
         """Materialize the (annotated) segment cache now, and open the
-        term-major state of a merged index, so the first query batch of
-        either route doesn't pay the load."""
+        term-major datasets of a merged index (driver-side, no Spark job),
+        so the first query batch of either route doesn't pay the load."""
         self.segments.count()
         if self.has_merged:
             self._open_term_major()
@@ -187,9 +188,11 @@ class IndexHandle:
         are only supported by the batch scorer, so they always route to
         'segment'. Routing collects at most ``point_cutoff + 1`` rows of
         ``(query_id, terms)`` — one action over the (small) query side
-        only, which a point batch reuses as its query side; pass ``path``
-        to skip even that (a forced term-major call then collects the
-        batch's distinct terms instead).
+        only, whose rows a point batch is scored from in the driver (no
+        further Spark job); pass ``path`` to skip even that (a forced
+        term-major call then collects at most
+        ``wand.TERM_MAJOR_MAX_QUERIES`` rows of its batch, and raises
+        above).
         """
         queries = _ensure_terms(queries)
         if mode not in ("or", "and"):

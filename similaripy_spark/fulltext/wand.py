@@ -1,18 +1,23 @@
 """Segment-based BM25 top-k: the engine's custom physical strategy (playing
 the role s_plus.h plays in the reference).
 
-Distributed shape:
+Two query paths (``retrieve.route`` picks one):
 
-* **Doc-shard scatter**: queries (tiny) are replicated to every shard of the
-  doc-sharded index; a cogrouped ``applyInPandas`` scores ALL queries of a
-  shard against that shard's posting blocks in one Arrow pass.
-* **Local top-k, global merge**: each shard emits its local top-k per query
-  (global top-k ⊆ union of shard top-k); a windowed top-k merges them.
-  The term-major point path needs no merge: a query's group holds every
-  block of its terms, so its kernel emits the final ranks.
+* **Batches: doc-shard scatter, global merge** (``segment_topk``). Queries
+  (tiny) are replicated to every shard of the doc-sharded index; a
+  cogrouped ``applyInPandas`` scores ALL queries of a shard against that
+  shard's posting blocks in one Arrow pass, each shard emits its local
+  top-k per query (global top-k ⊆ union of shard top-k), and a windowed
+  top-k merges them.
+* **Point batches: in the driver** (``term_major_topk``). A
+  ``pyarrow.dataset`` read of the term-major merged layout fetches only
+  the queried terms' blocks, which hold every posting of those terms, so
+  each query's kernel emits its final ranks. No Spark job runs; the
+  result is a local frame.
 
-Two query paths, each with its own exact scorer (``retrieve.route`` picks
-the path):
+Both paths take idf from one function (``weights.idf_np``) over the
+index's ``df``, so exact ties rank alike across the route boundary. Each
+path has its own exact scorer:
 
 * ``_score_batch`` (``segment_topk``, batches): a dense sparse-accumulator —
   the distributed twin of the reference's SPA (s_plus.h:71-240) —
@@ -41,15 +46,20 @@ tests/test_similarity.py:293-294).
 
 from __future__ import annotations
 
+import os
+import zlib
+
 import numpy as np
 import pandas as pd
+import pyarrow.compute as pc
+import pyarrow.dataset as pads
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from similaripy_spark.fulltext import codec
-from similaripy_spark.fulltext.weights import tf_part_np
+from similaripy_spark.fulltext.weights import idf_np, tf_part_np
 from similaripy_spark.operators.topk import top_k
 
 _RESULT_SCHEMA = T.StructType(
@@ -468,39 +478,39 @@ _RANKED_SCHEMA = T.StructType(
 _EMPTY_RANKED = {**_EMPTY_RESULT, "rank": pd.Series(dtype="int32")}
 
 
-def _attach_idfs(queries: DataFrame, idf_df: DataFrame) -> DataFrame:
-    """queries(query_id, terms, ...) → + ``idfs`` array<double> positionally
-    aligned with ``terms`` (the per-term idf the scorers multiply into the
-    derived doc-local tf-parts).
+def _attach_dfs(queries: DataFrame, term_stats: DataFrame) -> DataFrame:
+    """queries(query_id, terms, ...) → + ``dfs`` array<double> positionally
+    aligned with ``terms``: each term's document frequency, from which the
+    kernel computes its idf (``_idf_map``).
 
     Distributed by construction: explode the (tiny) query side, join the
-    V-row idf table — AQE broadcast-converts it when small, shuffle-joins at
-    web-scale vocabularies — and regroup by position. Terms absent from the
-    index get idf 0 (they match no postings anyway)."""
-    idfs = (
+    V-row term_stats — AQE broadcast-converts it when small, shuffle-joins
+    at web-scale vocabularies — and regroup by position. Terms absent from
+    the index get a null df, hence idf 0 (they match no postings anyway)."""
+    dfs = (
         queries.select(
             "query_id", F.posexplode("terms").alias("pos", "term")
         )
-        .join(idf_df, "term", "left")
+        .join(term_stats.select("term", "df"), "term", "left")
         .groupBy("query_id")
         .agg(
             F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "idf"))),
-                lambda s: F.coalesce(s["idf"], F.lit(0.0)),
-            ).alias("idfs")
+                F.array_sort(F.collect_list(F.struct("pos", "df"))),
+                lambda s: s["df"].cast("double"),
+            ).alias("dfs")
         )
     )
-    return queries.join(idfs, "query_id", "left")
+    return queries.join(dfs, "query_id", "left")
 
 
-def _idf_map_from_pdf(terms_col, idfs_col) -> dict:
-    """Per-task idf lookup from the annotated query arrays."""
-    idf: dict = {}
-    for ts, vs in zip(terms_col, idfs_col):
-        if vs is None:
-            continue
-        idf.update(zip(ts, vs))
-    return idf
+def _idf_map(terms, dfs, n_docs: int) -> dict:
+    """term → idf, computed by ``weights.idf_np`` (the one idf of both
+    kernel paths) from each term's df; a null df (term absent from the
+    index) maps to 0."""
+    idf = np.nan_to_num(
+        idf_np(np.asarray(dfs, dtype=np.float64), n_docs), nan=0.0
+    )
+    return dict(zip(terms, idf.tolist()))
 
 
 def _tomb_for(index_dir: str, meta: dict) -> "np.ndarray | None":
@@ -525,38 +535,26 @@ def _raw_params_from_meta(meta: dict) -> dict:
     }
 
 
-def _index_idf_table(spark, index_dir: str) -> DataFrame:
-    """(term, idf) of an index — term_stats df × the meta n_docs."""
-    from similaripy_spark.fulltext.index_build import (
-        read_meta,
-        read_term_stats,
-    )
-    from similaripy_spark.fulltext.weights import idf_table
-
-    return idf_table(
-        read_term_stats(spark, index_dir),
-        int(read_meta(index_dir)["n_docs"]),
-    )
-
-
 def segments_with_idf(segments: DataFrame, index_dir: str) -> DataFrame:
-    """Serve-path annotation: join the per-term ``idf`` onto the segment relation ONCE, at index-load time, so
-    every subsequent ``segment_topk`` batch skips the per-batch query-side
-    annotation (posexplode → V-row join → collect_list regroup — two extra
-    exchanges per batch, measured +30% wall on a 10k-query batch at
-    local[32]). Persist the result and hand it to ``segment_topk``; the
-    scorer detects the column and builds its idf lookup from the shard's
-    own rows.
+    """Serve-path annotation: join each term's ``df`` onto the segment
+    relation ONCE, at index-load time, so every subsequent ``segment_topk``
+    batch skips the per-batch query-side annotation (posexplode → V-row
+    join → collect_list regroup — two extra exchanges per batch, measured
+    +30% wall on a 10k-query batch at local[32]). Persist the result and
+    hand it to ``segment_topk``; the scorer detects the column and computes
+    its idf lookup from the shard's own rows (``_idf_map``).
 
     The join keys on term over the block-metadata-sized relation
-    (~postings/block_size rows): AQE broadcast-converts the V-row idf table
-    when it is small; at a web-scale vocabulary it shuffle-joins — either
-    way the cost is paid once per load and amortized over every batch an
-    index server answers. A per-batch caller that loads segments fresh each
-    time should NOT use this at large V (the query-side annotation only
-    ever touches the tiny batch)."""
-    idf_df = _index_idf_table(segments.sparkSession, index_dir)
-    return segments.join(idf_df, "term", "left")
+    (~postings/block_size rows): AQE broadcast-converts the V-row
+    term_stats when it is small; at a web-scale vocabulary it
+    shuffle-joins — either way the cost is paid once per load and
+    amortized over every batch an index server answers. A per-batch caller
+    that loads segments fresh each time should NOT use this at large V
+    (the query-side annotation only ever touches the tiny batch)."""
+    from similaripy_spark.fulltext.index_build import read_term_stats
+
+    term_stats = read_term_stats(segments.sparkSession, index_dir)
+    return segments.join(term_stats.select("term", "df"), "term", "left")
 
 
 #: score+match grid budget per worker (bytes): the two per-chunk dense
@@ -944,26 +942,21 @@ def segment_topk(
                     spark, index_dir, field, base_segments
                 )
             )
-    # segments pre-annotated with idf (segments_with_idf — the serve path)
-    # need no per-batch query-side annotation: the kernel reads the idf
+    n_docs = int(meta["n_docs"])
+    # segments pre-annotated with df (segments_with_idf — the serve path)
+    # need no per-batch query-side annotation: the kernel reads the df
     # straight off the shard's own rows
-    seg_has_idf = "idf" in segments.columns
-    if not seg_has_idf:
+    seg_has_df = "df" in segments.columns
+    if not seg_has_df:
         from similaripy_spark.fulltext.index_build import read_term_stats
-        from similaripy_spark.fulltext.weights import idf_table
 
-        queries = _attach_idfs(
-            queries,
-            idf_table(
-                read_term_stats(spark, index_dir), int(meta["n_docs"])
-            ),
-        )
+        queries = _attach_dfs(queries, read_term_stats(spark, index_dir))
     shards_list = list(range(int(meta["n_shards"])))
     shards = _shard_frame(spark, shards_list)
     qcols = (
         ["query_id", "terms"]
         + (["weights"] if query_weighted else [])
-        + ([] if seg_has_idf else ["idfs"])
+        + ([] if seg_has_df else ["dfs"])
         + (["not_terms"] if "not_terms" in queries.columns else [])
     )
     def make_score_shard(k_emit: int, with_tau: bool):
@@ -989,15 +982,16 @@ def segment_topk(
                          "doc_id": pd.Series(dtype="int64"),
                          "score": pd.Series(dtype="float64")}
                     )
-            if seg_has_idf:
-                idf = dict(zip(
-                    seg_pdf["term"],
-                    np.nan_to_num(
-                        seg_pdf["idf"].to_numpy(np.float64), nan=0.0
-                    ),
-                ))
+            if seg_has_df:
+                idf = _idf_map(seg_pdf["term"], seg_pdf["df"], n_docs)
             else:
-                idf = _idf_map_from_pdf(q_pdf["terms"], q_pdf["idfs"])
+                pairs = [
+                    p for ts, vs in zip(q_pdf["terms"], q_pdf["dfs"])
+                    if vs is not None for p in zip(ts, vs)
+                ]
+                idf = _idf_map(
+                    [t for t, _ in pairs], [v for _, v in pairs], n_docs
+                )
             idx = _ShardIndex(
                 seg_pdf, idf=idf, raw=raw_params, tomb=tomb, dv=dv
             )
@@ -1092,34 +1086,58 @@ def segment_topk(
     return out.select("query_id", "doc_id", "score", "rank")
 
 
+#: the most queries a forced term-major call (``path='term_major'``,
+#: ``term_major_topk``) collects to the driver; the point path scores in
+#: the driver, so a larger batch belongs on the segment path
+TERM_MAJOR_MAX_QUERIES = 1024
+
+
 class TermMajorIndex:
     """The per-index state of the term-major point path, opened once.
 
-    Opening reads ``meta.json`` and ``merged/_meta.json`` (driver-side
-    file reads) and opens two relations: the merged layout
-    (``index_merge.open_merged``, whose file listing is a Spark job at 64
-    buckets) and the ``(term, idf)`` table over ``term_stats``. Every ``topk`` call then filters them to the
-    batch's terms. Tombstones are re-read per call (``delete_docs`` leaves
-    the layout in place and takes effect at once); an append renames
-    ``merged/`` away, so an opened instance is a snapshot of one layout.
+    Opening reads ``meta.json`` and ``merged/_meta.json`` (the bucket
+    count) and opens two ``pyarrow.dataset`` views, all in the driver:
+    the merged layout (hive-partitioned on ``term_bucket``) and
+    ``term_stats`` (through ``resolve_artifact``, so either commit backend
+    reads). No Spark job runs, here or in ``topk``. Tombstones are re-read
+    per call (``delete_docs`` leaves the layout in place and takes effect
+    at once); an append renames ``merged/`` away, so an opened instance is
+    a snapshot of one layout.
+
+    The driver reads these files through the local filesystem (pyarrow on
+    a plain path), as it reads ``meta.json``, not through Spark's Hadoop
+    filesystem and its credentials.
     """
 
-    def __init__(self, spark: SparkSession, index_dir: str,
-                 n_buckets: int | None = None):
+    def __init__(self, spark: SparkSession, index_dir: str):
+        from similaripy_spark.fulltext.commit import resolve_artifact
         from similaripy_spark.fulltext.index_build import read_meta
-        from similaripy_spark.fulltext.index_merge import (
-            merged_n_buckets,
-            open_merged,
-        )
+        from similaripy_spark.fulltext.index_merge import merged_n_buckets
 
+        self.spark = spark
         self.index_dir = index_dir
         meta = read_meta(index_dir)
-        self.merged = open_merged(spark, index_dir)
-        self.n_buckets = (
-            merged_n_buckets(index_dir) if n_buckets is None else n_buckets
-        )
-        self.idf = _index_idf_table(spark, index_dir)
+        self.n_docs = int(meta["n_docs"])
         self.raw_params = _raw_params_from_meta(meta)
+        self.n_buckets = merged_n_buckets(index_dir)
+        self.merged = pads.dataset(
+            os.path.join(index_dir, "merged"), format="parquet",
+            partitioning="hive",
+        )
+        self.term_stats = pads.dataset(
+            resolve_artifact(os.path.join(index_dir, "term_stats")),
+            format="parquet",
+        )
+
+    def blocks_filter(self, terms: list) -> pc.Expression:
+        """The filter that reads only ``terms``' blocks: ``term_bucket``
+        IN their buckets (whole bucket directories are skipped) and
+        ``term`` IN the terms."""
+        buckets = sorted(
+            {zlib.crc32(t.encode()) % self.n_buckets for t in terms}
+        )
+        return (pc.field("term_bucket").isin(buckets)
+                & pc.field("term").isin(terms))
 
     def topk(
         self,
@@ -1128,90 +1146,75 @@ class TermMajorIndex:
         *,
         mode: str = "or",
         rows: list | None = None,
-        max_pruned_terms: int = 10_000,
     ) -> DataFrame:
         """See :func:`term_major_topk`. ``rows``: the batch's
         ``(query_id, terms)`` rows when the caller has already collected
-        them (``IndexHandle.topk``'s route probe); the query side is then
-        built from pandas and needs no Spark job."""
+        them (``IndexHandle.topk``'s route probe); otherwise this collects
+        at most ``TERM_MAJOR_MAX_QUERIES`` of them and raises above."""
         from similaripy_spark.fulltext.index_build import read_meta
-        from similaripy_spark.fulltext.index_merge import (
-            read_merged_for_terms,
-        )
 
         if mode not in ("or", "and"):
             raise ValueError(f"mode must be 'or' or 'and', got {mode!r}")
-        spark = self.merged.sparkSession
-        if rows is not None:
-            qt = (
-                pd.DataFrame(rows, columns=["query_id", "term"])
-                .explode("term").dropna().drop_duplicates()
+        if rows is None:
+            rows = queries.select("query_id", "terms").limit(
+                TERM_MAJOR_MAX_QUERIES + 1
+            ).collect()
+            if len(rows) > TERM_MAJOR_MAX_QUERIES:
+                raise ValueError(
+                    "the term-major path scores in the driver and takes at "
+                    f"most {TERM_MAJOR_MAX_QUERIES} queries; use "
+                    "path='segment' for a larger batch"
+                )
+        # distinct non-null terms per query, in query order; rows sharing
+        # a query_id are one query
+        by_query: dict = {}
+        for qid, ts in rows:
+            by_query.setdefault(int(qid), {}).update(
+                dict.fromkeys(t for t in ts or () if t is not None)
             )
-            qt["query_id"] = qt["query_id"].astype(np.int64)
-            schema = "query_id long, term string"
-            if mode == "and":
-                qt["nreq"] = (qt.groupby("query_id")["term"]
-                              .transform("size").astype(np.int32))
-                schema += ", nreq int"
-            # a pandas frame plans as LocalTableScan (no Python task);
-            # one partition: its broadcast is one task, not one per core
-            qterms = spark.createDataFrame(qt, schema).coalesce(1)
-            terms = sorted(qt["term"].unique())
-        else:
-            uterms = F.array_distinct(F.array_compact("terms"))
-            qterms = queries.select(
-                "query_id",
-                *([F.size(uterms).alias("nreq")] if mode == "and" else []),
-                F.explode(uterms).alias("term"),
+        terms = sorted({t for ts in by_query.values() for t in ts})
+        out = {c: [] for c in _EMPTY_RANKED}
+        seg = self.merged.to_table(
+            filter=self.blocks_filter(terms)
+        ).to_pandas() if terms else ()
+        if len(seg):
+            st = self.term_stats.to_table(
+                columns=["term", "df"], filter=pc.field("term").isin(terms)
             )
-            terms = [
-                r["term"] for r in qterms.select("term").distinct()
-                .limit(max_pruned_terms + 1).collect()
-            ]
-        if len(terms) > max_pruned_terms:
-            terms = None  # too many literals: semi-join instead
-        idf = (self.idf if terms is None
-               else self.idf.filter(F.col("term").isin(terms)))
-        qterms = qterms.join(idf, "term", "left")
-        if terms is not None:
-            blocks = read_merged_for_terms(self.merged, terms, self.n_buckets)
-            joined = blocks.join(F.broadcast(qterms), "term")
-        else:
-            blocks = self.merged.join(
-                qterms.select("term").distinct(), "term", "left_semi"
+            idx = _ShardIndex(
+                seg,
+                idf=_idf_map(
+                    st.column("term").to_pylist(),
+                    st.column("df").to_numpy(), self.n_docs,
+                ),
+                raw=self.raw_params,
+                tomb=_tomb_for(self.index_dir, read_meta(self.index_dir)),
             )
-            joined = blocks.join(qterms, "term")
-
-        raw_params = self.raw_params
-        tomb = _tomb_for(self.index_dir, read_meta(self.index_dir))
-
-        def score_query(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-            seg = pdf.drop_duplicates(subset=["term", "shard", "block_id"])
-            idf = dict(zip(
-                pdf["term"],
-                np.nan_to_num(pdf["idf"].to_numpy(np.float64), nan=0.0),
-            ))
-            idx = _ShardIndex(seg, idf=idf, raw=raw_params, tomb=tomb)
-            uterms = list(dict.fromkeys(pdf["term"]))
-            if "nreq" in pdf.columns:
-                if len(uterms) < int(pdf["nreq"].iloc[0]):
-                    return pd.DataFrame(_EMPTY_RANKED)
-                docs, scores = _score_intersect(idx, uterms)
-            else:
-                docs, scores = _score_maxscore(idx, uterms, k)
-            # the group holds every block of this query's terms, so its
-            # local top-k IS the query's top-k: rank it here
-            docs, scores = _local_topk(docs, scores, k)
-            return pd.DataFrame({
-                "query_id": np.full(len(docs), key[0], np.int64),
-                "doc_id": docs,
-                "score": scores,
-                "rank": np.arange(1, len(docs) + 1, dtype=np.int32),
-            })
-
-        return joined.groupby("query_id").applyInPandas(
-            score_query, schema=_RANKED_SCHEMA
-        )
+            for qid in sorted(by_query):
+                uterms = list(by_query[qid])
+                if not uterms:
+                    continue
+                if mode == "and":
+                    # the strict-AND guard: uterms keeps every distinct
+                    # query term, and _score_intersect returns nothing
+                    # when one of them has no block in the index
+                    docs, scores = _score_intersect(idx, uterms)
+                else:
+                    docs, scores = _score_maxscore(idx, uterms, k)
+                # the index holds every block of this query's terms, so
+                # its local top-k IS the query's top-k: rank it here
+                docs, scores = _local_topk(docs, scores, k)
+                out["query_id"].append(np.full(len(docs), qid, np.int64))
+                out["doc_id"].append(docs)
+                out["score"].append(scores)
+                out["rank"].append(
+                    np.arange(1, len(docs) + 1, dtype=np.int32)
+                )
+        pdf = (pd.DataFrame({c: np.concatenate(v) for c, v in out.items()})
+               if out["rank"] else pd.DataFrame(_EMPTY_RANKED))
+        # a pandas frame plans as a LocalTableScan: collecting it runs no
+        # Spark job
+        return self.spark.createDataFrame(pdf, schema=_RANKED_SCHEMA)
 
 
 def term_major_topk(
@@ -1219,50 +1222,32 @@ def term_major_topk(
     index_dir: str,
     queries: DataFrame,
     k: int = 10,
-    n_buckets: int | None = None,
-    max_pruned_terms: int = 10_000,
     mode: str = "or",
 ) -> DataFrame:
-    """Point-query path over the term-major merged layout: bucket-pruned scan
-    of exactly the queried terms' blocks, then one scoring pass per query.
+    """Point-query path over the term-major merged layout, scored in the
+    driver. Returns (query_id, doc_id, score, rank) like every path.
 
     Opens a :class:`TermMajorIndex` for this one call; a server holds one
-    (``retrieve.IndexHandle`` does) so the layout listing and the idf
-    relation are paid once per index, not per call.
+    (``retrieve.IndexHandle`` does), and passes the rows its route probe
+    collected. Here the batch's ``(query_id, terms)`` rows are collected
+    once, capped at ``TERM_MAJOR_MAX_QUERIES`` (above it this raises and
+    names the segment path). The rest runs no Spark job: a
+    ``pyarrow.dataset`` read of only the queried terms' buckets and rows,
+    their ``df`` from ``term_stats``, idf by ``weights.idf_np`` (the
+    segment scorer's idf function, so exact ties rank alike on both
+    paths), then per query ``_ShardIndex`` → ``_score_maxscore`` (OR) or
+    ``_score_intersect`` (AND) → ``_local_topk``. The blocks hold every
+    posting of each queried term, so a query's local top-k is its exact
+    top-k in (score DESC, doc_id ASC) order. Tombstoned docs drop at
+    decode; null terms match nothing; in AND mode a term absent from the
+    index empties its query (strict AND). The result is a pandas-built
+    ``LocalTableScan``, so collecting it runs no job.
 
-    Per call: one driver collect of the batch's distinct terms (capped at
-    ``max_pruned_terms``; ``IndexHandle.topk`` passes the rows its route
-    probe already collected, so its point calls need none). The terms
-    drive the bucket-and-term filter on the merged relation and restrict
-    the idf relation before the join, so the ``term_stats`` scan pushes
-    ``term IN (...)`` and the broadcast holds at most one row per queried
-    term. Above the cap the scan degrades to a semi-join on the query
-    terms (row-level pruning only, no partition pruning, but safe at any
-    batch size).
-
-    Each query's group holds every block of its terms, so the kernel's
-    local top-k is that query's exact top-k: the kernel emits ``rank``
-    1..n in (score DESC, doc_id ASC) order and there is no global top-k
-    (no window, no second exchange). Returns (query_id, doc_id, score,
-    rank) like every path.
-
-    ``mode='and'``: rarest-first posting-list intersection inside the
-    per-query group (every queried term's full posting list is shipped
-    there, so the intersection is complete). Query terms absent from the
-    index vanish at the blocks⋈terms join, so the query's distinct term
-    count rides along on the query side (``nreq``) — a group holding
-    fewer distinct terms than nreq returns empty, the strict-AND contract.
-
-    Best when the query batch is small and selective (the blocks of each
-    query's terms are shipped to that query's group). For large batches use
-    ``segment_topk`` — it amortizes decode per shard instead.
-
-    OR queries are scored by Block-Max MaxScore (``_score_maxscore``).
-    Block-Max WAND, run as best-first doc-range scoring, measured ~1.5×
-    slower on the Zipf corpus (100k docs, k=10: 5.09 s vs 3.27 s): the
-    unclamped idf makes hot terms' weights negative, so their blocks add 0
-    to every upper bound yet must still be decoded for every visited range.
+    Best when the batch is small and selective; ``segment_topk``
+    amortizes decode per shard for large ones. Block-Max WAND, run as
+    best-first doc-range scoring, measured ~1.5× slower than MaxScore on
+    the Zipf corpus (100k docs, k=10: 5.09 s vs 3.27 s): the unclamped idf
+    makes hot terms' weights negative, so their blocks add 0 to every
+    upper bound yet must still be decoded for every visited range.
     """
-    return TermMajorIndex(spark, index_dir, n_buckets).topk(
-        queries, k, mode=mode, max_pruned_terms=max_pruned_terms
-    )
+    return TermMajorIndex(spark, index_dir).topk(queries, k, mode=mode)

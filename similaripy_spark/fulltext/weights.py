@@ -113,9 +113,10 @@ def idf_table(
     idf_mode: str = "bm25",
     logbase: float = math.e,
 ) -> DataFrame:
-    """term_stats(term, df, ...) → (term, idf double): the query-time idf
-    of an index. V rows, computed once per query batch — joined against
-    the (tiny) exploded query terms, never against postings."""
+    """term_stats(term, df, ...) → (term, idf double): the idf of an index
+    for the relational scorers (``docvalues.collapse_topk``, the phrase
+    composition of ``querylang.search``, more-like-this term selection).
+    The query kernels compute theirs with ``idf_np`` instead."""
     return term_stats.select(
         "term",
         idf_expr(
@@ -123,6 +124,23 @@ def idf_table(
             logbase,
         ).alias("idf"),
     )
+
+
+def idf_np(df: "np.ndarray", n_docs: int) -> "np.ndarray":
+    """NumPy twin of ``idf_table``'s expression (bm25 idf mode):
+
+        log((N - df + 0.5) / (df + 0.5))
+
+    The one idf of both query kernels: the segment scorer and the
+    term-major point path carry ``df`` and call this, so a term's idf is
+    bit-identical on both sides of the route boundary (Spark's ``log`` and
+    ``np.log`` can differ in the last bit, which would reorder exact ties).
+    A NaN df (a term absent from the index) gives a NaN idf; callers map it
+    to 0, since such a term matches no posting."""
+    import numpy as np
+
+    df = np.asarray(df, dtype=np.float64)
+    return np.log((float(n_docs) - df + 0.5) / (df + 0.5))
 
 
 def tf_part_np(

@@ -126,6 +126,27 @@ def test_handle_sees_new_tombstones_without_reopen(
         )
 
 
+def test_held_handle_point_topk_excludes_later_deletes(
+    spark, corpus, queries, oracle_rows, tmp_path
+):
+    """A handle opened BEFORE ``delete_docs``: its auto-routed point
+    batch re-reads the tombstones on every call, so the next call on the
+    same handle already excludes the deleted docs, exactly."""
+    from similaripy_spark.fulltext.retrieve import route
+
+    d = str(tmp_path / "held")
+    IndexBuilder(d, n_groups=3, shard_size=256).build(corpus)
+    merge_to_term_major(spark, d, n_buckets=16)
+    point = queries.filter(F.col("query_id") < 16)
+    assert route(16, has_merged=True) == "term_major"
+    want = [r for r in oracle_rows if r[0] < 16]
+    with open_index(spark, d).warm() as h:
+        before = _rows(h.topk(point, k=5))
+        assert {doc for _, doc, _ in before} & set(DELETED)
+        delete_docs(spark, d, DELETED)
+        _assert_same_ranking(_rows(h.topk(point, k=5)), want)
+
+
 def test_survivors_fill_all_k_slots(spark, tombstoned, queries):
     got = segment_topk(
         read_segments(spark, tombstoned), queries, k=5,

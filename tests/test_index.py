@@ -318,9 +318,9 @@ def test_encoder_parity():
 
 
 def test_segments_with_idf_serve_path_parity(spark, tmp_path):
-    """segments_with_idf pre-joins idf onto an index's segments
+    """segments_with_idf pre-joins df onto an index's segments
     (one-time, at load) — scoring through it must be IDENTICAL (doc ids
-    and float-exact scores: same kernel arithmetic, only the idf lookup
+    and float-exact scores: same kernel arithmetic, only the df lookup
     source differs) to the per-batch query-side annotation. Pre-annotated
     segments feed only the segment batch scorer; the term-major path reads
     the merged layout."""
@@ -334,7 +334,7 @@ def test_segments_with_idf_serve_path_parity(spark, tmp_path):
     )
     plain = read_segments(spark, d)
     served = segments_with_idf(plain, d)
-    assert "idf" in served.columns and "idf" not in plain.columns
+    assert "df" in served.columns and "df" not in plain.columns
     a = (
         segment_topk(plain, queries, k=10, index_dir=d)
         .toPandas().sort_values(["query_id", "rank"])

@@ -16,12 +16,14 @@ from similaripy_spark.fulltext.index_merge import (
     decode_segments,
     merge_indexes,
     merge_to_term_major,
-    open_merged,
-    read_merged_for_terms,
 )
 from similaripy_spark.fulltext.postings import build_postings
 from similaripy_spark.fulltext.query import bm25_topk
-from similaripy_spark.fulltext.wand import segment_topk, term_major_topk
+from similaripy_spark.fulltext.wand import (
+    TermMajorIndex,
+    segment_topk,
+    term_major_topk,
+)
 from similaripy_spark.fulltext.weights import bm25_weights
 from similaripy_spark.sources.pages import generate_pages, generate_queries_pandas
 
@@ -57,14 +59,24 @@ def test_decode_roundtrip(spark, built):
 
 
 def test_merged_pruned_scan(spark, built):
+    """The term-major reader's pyarrow filter opens only the queried
+    terms' ``term_bucket=`` directories, and reads only their rows; the
+    bucket count comes from ``merged/_meta.json``."""
+    import re
+    import zlib
+
     d, _ = built
+    tm = TermMajorIndex(spark, d)
+    assert tm.n_buckets == 16
     terms = ["t000001", "t000042"]
-    df = read_merged_for_terms(open_merged(spark, d), terms, n_buckets=16)
-    got_terms = {r["term"] for r in df.select("term").distinct().collect()}
-    assert got_terms == set(terms)
-    # partition pruning visible in the plan
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "term_bucket" in plan
+    filt = tm.blocks_filter(terms)
+    read = {
+        int(re.search(r"term_bucket=(\d+)", f.path).group(1))
+        for f in tm.merged.get_fragments(filter=filt)
+    }
+    assert read == {zlib.crc32(t.encode()) % 16 for t in terms}
+    rows = tm.merged.to_table(columns=["term"], filter=filt)
+    assert set(rows.column("term").to_pylist()) == set(terms)
 
 
 def test_term_major_topk_matches_sql(spark, built):
@@ -76,21 +88,11 @@ def test_term_major_topk_matches_sql(spark, built):
         .toPandas().sort_values(["query_id", "rank"]).reset_index(drop=True)
     )
     got = (
-        term_major_topk(spark, d, queries, k=10, n_buckets=16)
+        term_major_topk(spark, d, queries, k=10)
         .toPandas().sort_values(["query_id", "rank"]).reset_index(drop=True)
     )
     assert list(got["doc_id"]) == list(expected["doc_id"])
     np.testing.assert_allclose(got["score"], expected["score"], rtol=1e-4)
-
-    # above the collect cap the scan degrades to a semi-join (no driver-side
-    # isin literal list) and must return the identical ranking
-    capped = (
-        term_major_topk(spark, d, queries, k=10, n_buckets=16,
-                        max_pruned_terms=2)
-        .toPandas().sort_values(["query_id", "rank"]).reset_index(drop=True)
-    )
-    assert list(capped["doc_id"]) == list(expected["doc_id"])
-    np.testing.assert_allclose(capped["score"], expected["score"], rtol=1e-4)
 
 
 def test_shard_size_auto_derivation(spark, tmp_path):

@@ -113,32 +113,6 @@ def test_s_plus_exchange_budget_entry_input(spark):
         conf.set("spark.sql.autoBroadcastJoinThreshold", bcast)
 
 
-def test_spread_object_store_path_returns_df_unchanged(spark, tmp_path):
-    """``_spread`` reads footers through the local filesystem; on an
-    object-store URI pyarrow raises ArrowInvalid (a ValueError), which must
-    leave the scan as it is. Local paths keep their behaviour: a
-    one-row-group file is spread over the cores, a table with one file per
-    core is not."""
-    import pandas as pd
-
-    import __spark_entry__ as E
-
-    df = spark.range(10)
-    assert E._spread(spark, df, "s3a://bucket/t.parquet") is df
-
-    par = spark.sparkContext.defaultParallelism
-    one = str(tmp_path / "one.parquet")
-    pd.DataFrame({"x": range(10)}).to_parquet(one)
-    spread = E._spread(spark, spark.read.parquet(one), one)
-    assert spread.rdd.getNumPartitions() == par
-    many = tmp_path / "many"
-    many.mkdir()
-    for i in range(par):
-        pd.DataFrame({"x": [i]}).to_parquet(many / f"part-{i}.parquet")
-    scan = spark.read.parquet(str(many))
-    assert E._spread(spark, scan, str(many)) is scan
-
-
 def test_matrix_weighting_skew_safe_plan_shapes(spark, li_matrix):
     """tfidf/bm25/normalize never window-partition by a corpus-sized key:
     term stats are groupBy aggregates joined back (map-side combine + AQE
@@ -259,13 +233,9 @@ def test_dv_filter_adds_no_exchange(spark, tmp_path):
 
 
 def test_point_topk_plan_ranks_in_kernel(spark, tmp_path):
-    """A 16-query auto-routed point call on an open handle: the only
-    shuffle is the per-query exchange into the scoring kernel, which
-    emits the ranks itself (no Window, no second exchange for a global
-    top-k), and the idf relation is filtered to the queried terms, so the
-    ``term_stats`` scan pushes ``In(term, ...)``."""
-    import re
-
+    """A 16-query auto-routed point call on a warm handle is scored in the
+    driver, eagerly inside ``topk()``: its plan is a ``LocalTableScan`` of
+    the ranked rows — no exchange, no parquet scan, no Window."""
     from similaripy_spark.fulltext.index_build import IndexBuilder
     from similaripy_spark.fulltext.index_merge import merge_to_term_major
     from similaripy_spark.fulltext.retrieve import open_index
@@ -283,12 +253,8 @@ def test_point_topk_plan_ranks_in_kernel(spark, tmp_path):
     with open_index(spark, d).warm() as h:
         df = h.topk(q, k=10)
         plan = physical_plan(df)
-        assert count_exchanges(df) == 1, plan
+        assert "LocalTableScan" in plan, plan
+        assert count_exchanges(df) == 0, plan
+        assert "Scan parquet" not in plan, plan
         assert "Window" not in plan, plan
-        # the idf side reads (term, df) of term_stats; the path in the
-        # scan node is truncated, its read schema is not
-        scans = [ln for ln in plan.splitlines()
-                 if "ReadSchema: struct<term:string,df:bigint>" in ln]
-        assert len(scans) == 1, plan
-        assert re.search(r"PushedFilters: \[.*In\(term, ", scans[0]), scans
         assert df.count() > 0

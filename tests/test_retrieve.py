@@ -118,6 +118,57 @@ def test_paths_rank_identical(spark, built, dup_built, n_queries):
         np.testing.assert_allclose(got["score"], want["score"], rtol=1e-6)
 
 
+def test_forced_term_major_batch_above_cap_raises(spark, built,
+                                                  monkeypatch):
+    """A forced term-major call collects its batch to the driver, capped
+    at ``wand.TERM_MAJOR_MAX_QUERIES``: above the cap it raises and names
+    the segment path; at the cap it serves."""
+    from similaripy_spark.fulltext import wand
+
+    monkeypatch.setattr(wand, "TERM_MAJOR_MAX_QUERIES", 4)
+    over = spark.createDataFrame(generate_queries_pandas(5, vocab_size=VOCAB))
+    with pytest.raises(ValueError, match="path='segment'"):
+        topk(spark, built, over, k=10, path="term_major")
+    with pytest.raises(ValueError, match="path='segment'"):
+        wand.term_major_topk(spark, built, over, k=10)
+    at = spark.createDataFrame(generate_queries_pandas(4, vocab_size=VOCAB))
+    assert topk(spark, built, at, k=10, path="term_major").collect()
+
+
+def test_term_major_batch_without_indexed_terms_is_empty(spark, built):
+    """A point batch none of whose terms has a block in the index (absent
+    or null terms only) returns no rows, in both modes."""
+    q = spark.createDataFrame(
+        [(0, ["zz_absent_term"]), (1, [None]), (2, [])],
+        "query_id long, terms array<string>",
+    )
+    for mode in ("or", "and"):
+        assert topk(spark, built, q, k=10, mode=mode).collect() == []
+
+
+def test_idf_np_matches_idf_table(spark, built):
+    """The kernels' numpy idf and the relational ``idf_table`` agree
+    within 1 ulp over the index's whole vocabulary (Spark's ``log`` and
+    ``np.log`` may differ in the last bit, so the kernels use only
+    ``idf_np``)."""
+    from similaripy_spark.fulltext.index_build import (
+        read_meta,
+        read_term_stats,
+    )
+    from similaripy_spark.fulltext.weights import idf_np, idf_table
+
+    n_docs = int(read_meta(built)["n_docs"])
+    ts = read_term_stats(spark, built)
+    want = (
+        idf_table(ts, n_docs).join(ts.select("term", "df"), "term")
+        .toPandas()
+    )
+    assert len(want) > 100
+    got = idf_np(want["df"].to_numpy(), n_docs)
+    ulp = np.spacing(np.abs(want["idf"].to_numpy()))
+    assert np.all(np.abs(got - want["idf"].to_numpy()) <= ulp)
+
+
 def test_auto_routing_matches_forced(spark, built):
     queries = spark.createDataFrame(
         generate_queries_pandas(6, vocab_size=VOCAB)
@@ -393,6 +444,9 @@ def test_removed_query_options_raise(spark, built, tmp_path):
             term_major_topk(spark, built, queries, k=10, scorer=scorer)
     with pytest.raises(TypeError, match="prune"):
         term_major_topk(spark, built, queries, k=10, prune=False)
+    for opt in ("n_buckets", "max_pruned_terms"):
+        with pytest.raises(TypeError, match=opt):
+            term_major_topk(spark, built, queries, k=10, **{opt: 16})
     seg = read_segments(spark, built)
     for opt in ("batch", "prune"):
         with pytest.raises(TypeError, match=opt):

@@ -5,8 +5,9 @@ Every Python task pays a fixed worker cost before it runs any engine code
 query batch launches is part of its speed. These tests pin it: the build
 encoder runs ``max(shards, cores)`` tasks, the driver-side shard and
 tombstone lists plan as local scans (no PythonRDD), and a list delete
-launches no stage wider than one task. A point query on an open handle
-pays the merged layout's listing once per handle, not per call.
+launches no stage wider than one task. A point query on a warm handle
+runs no Spark job at all, and warming the handle lists nothing through
+Spark.
 """
 
 from __future__ import annotations
@@ -35,9 +36,9 @@ from similaripy_spark.sources.pages import (
 SHARD = 64
 
 
-def _job_stage_tasks(spark, fn) -> list[list[int]]:
-    """Run ``fn`` inside a fresh job group; return, per job it ran, the
-    task count of each of the job's stages."""
+def _group_stage_tasks(spark, fn) -> list[list[int]]:
+    """Run ``fn`` inside a fresh job group; return, per job it ran (none
+    is fine), the task count of each of the job's stages."""
     sc = spark.sparkContext
     group = f"task-budget-{uuid.uuid4().hex[:8]}"
     sc.setJobGroup(group, group)
@@ -54,6 +55,12 @@ def _job_stage_tasks(spark, fn) -> list[list[int]]:
             for info in map(tracker.getStageInfo, tracker.getJobInfo(j).stageIds)
             if info is not None
         ])
+    return jobs
+
+
+def _job_stage_tasks(spark, fn) -> list[list[int]]:
+    """``_group_stage_tasks`` of a ``fn`` that must run a Spark job."""
+    jobs = _group_stage_tasks(spark, fn)
     assert jobs, "no Spark job ran inside the group"
     return jobs
 
@@ -146,11 +153,11 @@ def test_segment_topk_plans_no_python_rdd(spark, sixteen_shards, k, deep):
 
 def test_point_topk_on_open_handle_job_budget(spark, tmp_path):
     """A 16-query auto-routed point call on a warm handle over the default
-    64-bucket layout: the handle already listed ``merged/`` (a 64-task
-    job above Spark's 32-path parallel-discovery threshold) and opened the
-    idf relation, the route probe's rows are the query side, and the
-    kernel ranks, so the call runs at most 6 jobs, none wider than the
-    shuffle partitions (the listing job was 64 tasks wide)."""
+    64-bucket layout runs no Spark job: the route probe's rows come from a
+    local frame, the term-major state is pyarrow datasets the handle
+    opened once, and the ranked rows come back as a local frame. Warming
+    the handle runs the segment-cache job only — no 64-task listing job
+    over ``merged/``."""
     d = str(tmp_path / "idx")
     IndexBuilder(d, shard_size=SHARD, n_groups=2).build(
         generate_pages(spark, 8 * SHARD, vocab_size=200)
@@ -158,6 +165,7 @@ def test_point_topk_on_open_handle_job_budget(spark, tmp_path):
     merge_to_term_major(spark, d)
     parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     with open_index(spark, d) as h:
+        warm = _job_stage_tasks(spark, h.warm)
 
         def call(seed):
             q = spark.createDataFrame(
@@ -165,7 +173,7 @@ def test_point_topk_on_open_handle_job_budget(spark, tmp_path):
             )
             return h.topk(q, k=10).collect()
 
-        assert call(1)  # the warm call
-        jobs = _job_stage_tasks(spark, lambda: call(2))
-    assert len(jobs) <= 6, jobs
-    assert max(t for job in jobs for t in job) <= parts, jobs
+        assert call(1)
+        jobs = _group_stage_tasks(spark, lambda: call(2))
+    assert jobs == [], jobs
+    assert max(t for job in warm for t in job) <= parts, warm
