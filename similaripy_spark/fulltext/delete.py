@@ -17,7 +17,7 @@ id that never existed, is a no-op (epochs are distinct-unioned at read).
 
 Scale: kernels receive the tombstone set as a sorted int64 array loaded
 driver-side (pyarrow, no Spark job) and shipped in the cogroup closure —
-bounded by ``SIMILARIPY_TOMBSTONE_CAP`` (default 4M ids ≈ 32 MB). Above
+bounded by ``TOMBSTONE_CAP`` (4M ids ≈ 32 MB). Above
 the cap, queries refuse with instructions to ``compact_index`` (which
 folds ANY number of tombstones into a rewrite and resets the count to
 zero). Deletion fractions beyond a few percent should compact anyway —
@@ -46,7 +46,8 @@ from similaripy_spark.fulltext.commit import (
 )
 from similaripy_spark.fulltext.index_build import IndexBuilder, read_meta
 
-TOMBSTONE_CAP = int(os.environ.get("SIMILARIPY_TOMBSTONE_CAP", "4000000"))
+#: the most tombstones a query kernel takes in its closure
+TOMBSTONE_CAP = 4_000_000
 
 
 def delete_docs(
@@ -123,7 +124,7 @@ def tombstone_array(index_dir: str) -> np.ndarray | None:
     if len(out) > TOMBSTONE_CAP:
         raise ValueError(
             f"{len(out)} tombstones exceed the kernel-closure cap "
-            f"({TOMBSTONE_CAP}; SIMILARIPY_TOMBSTONE_CAP) — run "
+            f"({TOMBSTONE_CAP}) — run "
             "delete.compact_index to fold deletions into a rewrite"
         )
     return out

@@ -30,7 +30,9 @@ block/term bounds still include excluded docs' scores — they remain valid
 selective filters. Corpus statistics (idf, avgdl) deliberately stay
 WHOLE-corpus: a filter restricts the result set, not the collection —
 Lucene's filter-query semantics, and the only reading that keeps scores
-stable across filters.
+stable across filters. One predicate function (:func:`dv_keep`) states
+the filter semantics for both the kernel and the relational
+:func:`filter_docs`.
 
 Delivery to the kernel needs no broadcast: each shard's codes row is
 reshaped into ONE sentinel segment row (term = ``"\\x00dv:<field>"``,
@@ -39,11 +41,15 @@ the existing per-shard cogroup shuffle — per-shard state travels to
 exactly the task that scores that shard. The allowed-code lookup table
 (bool array the size of the field's dictionary) ships in the task closure.
 
-Facet counts (:func:`facet_counts`) are fully relational: match set =
-query terms ⋈ decoded postings (term-pushdown scan), then a per-shard
-cogroup gathers each matched doc's code from the positional array (traffic
-∝ matches + sidecar size, never corpus text), then a partial-aggregated
-``groupBy(query_id, value).count()``.
+The relational operators (:func:`filter_docs`, :func:`facet_counts`,
+:func:`facet_stats`, :func:`sort_topk`, :func:`collapse_topk`) share three
+private jobs: one term scan (``_live_postings``: the query batch's terms
+filter the segment scan, decoded, tombstones dropped), one float64 BM25
+scorer (``_bm25_scores``, also the phrase composition of
+querylang.search) and one per-shard cogroup gather (``_gather``) that
+appends each row's stored value from the positional array (traffic ∝
+rows + sidecar size, never corpus text). Everything after the gather —
+filters, aggregates, rankings — is Spark expressions.
 
 Staleness: ``_meta.json`` pins the main index's (n_epochs, n_docs); a
 sidecar older than the index (``append_to_index`` grows both) raises
@@ -61,7 +67,7 @@ import os
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -81,9 +87,17 @@ DV_TERM_PREFIX = "\x00dv:"
 MAX_CARDINALITY = 65534
 
 #: numeric doc-values: int64 per doc; NULL / doc-absent stores the int64
-#: minimum, which no closed [lo, hi] range with lo > INT64_MIN matches —
-#: and the kernel masks it explicitly anyway
+#: minimum, which no closed [lo, hi] range with lo > INT64_MIN matches
 NUMERIC_NULL = np.iinfo(np.int64).min
+
+#: a query batch with at most this many distinct terms filters the segment
+#: scan with a literal ``isin`` (the predicate reaches the parquet
+#: row-group stats); a larger one semi-joins a broadcast of its terms
+TERM_PUSHDOWN_CAP = 10000
+
+#: the column ``_gather`` appends: the stored dictionary code (int) or
+#: numeric value (long) of each row's document
+DV_COL = "__dv"
 
 CODES_SCHEMA = T.StructType(
     [
@@ -146,12 +160,11 @@ def build_docvalues(
             "index was built from"
         )
     cur = (int(meta.get("n_epochs", 1)), int(meta["n_docs"]))
-    prior0 = docvalues_meta(index_dir)
-    if prior0 is not None:
-        got = (int(prior0.get("n_epochs", 1)),
-               int(prior0.get("n_docs", -1)))
+    prior = docvalues_meta(index_dir) or {}
+    if prior:
+        got = (int(prior.get("n_epochs", 1)), int(prior.get("n_docs", -1)))
         names = {s if isinstance(s, str) else s[0] for s in fields}
-        untouched = set(prior0.get("fields", [])) - names
+        untouched = set(prior.get("fields", [])) - names
         if got != cur and untouched:
             # rebuilding a SUBSET against a grown index would stamp the
             # sidecar-global freshness pin over fields whose codes arrays
@@ -166,69 +179,100 @@ def build_docvalues(
     # committed sidecar beside pointer-committed groups is invisible to
     # pointer-reading resolvers (mirrors append.py / delete.py)
     commit = detect_commit_protocol(index_dir)
-    field_meta = {}
+    field_meta = dict(prior.get("field_meta", {}))
     for spec in fields:
         field, kind = (spec, "dict") if isinstance(spec, str) else spec
-        if kind == "numeric":
-            _build_numeric_field(
-                pages, index_dir, field, id_col, shard_size, commit
-            )
-            field_meta[field] = {"kind": "numeric"}
-            continue
-        if kind != "dict":
+        if kind not in ("dict", "numeric"):
             raise ValueError(
                 f"unknown doc-values kind {kind!r} for field {field!r} "
                 "(use 'dict' or 'numeric')"
             )
-        vals = [
-            r[0]
-            for r in (
-                pages.select(F.col(field).cast("string"))
-                .filter(F.col(field).isNotNull())
-                .distinct()
-                .limit(max_cardinality + 1)
-                .collect()
-            )
-        ]
-        if len(vals) > max_cardinality:
-            raise ValueError(
-                f"field {field!r} exceeds {max_cardinality} distinct "
-                "values — doc-values dictionaries are for low-cardinality "
-                "attributes (lang, source, content-type); bucket or hash "
-                "the column at build time for high-cardinality use"
-            )
-        vals = sorted(vals)
         out = os.path.join(_dv_dir(index_dir), field)
         staged = commit.stage_path(out)
-        _pack_dict_codes(
-            pages, field, id_col, shard_size, vals, spark
-        ).write.mode("overwrite").parquet(os.path.join(staged, "codes"))
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        pq.write_table(
-            pa.table(
-                {
-                    "code": pa.array(
-                        range(1, len(vals) + 1), type=pa.int32()
-                    ),
-                    "value": pa.array(vals, type=pa.string()),
-                }
-            ),
-            os.path.join(staged, "dict.parquet"),
-        )
+        if kind == "numeric":
+            codes = _pack_numeric_codes(pages, field, id_col, shard_size)
+            field_meta[field] = {"kind": "numeric"}
+        else:
+            vals = sorted(_distinct_values(pages, field, max_cardinality))
+            codes = _pack_dict_codes(
+                pages, field, id_col, shard_size, vals, spark
+            )
+            field_meta[field] = {"kind": "dict", "cardinality": len(vals)}
+        codes.write.mode("overwrite").parquet(os.path.join(staged, "codes"))
+        if kind == "dict":
+            _write_dict(staged, vals)
         commit.commit_dir(staged, out)
-        field_meta[field] = {"kind": "dict", "cardinality": len(vals)}
+    return _write_side_meta(index_dir, meta, field_meta)
+
+
+def _distinct_values(pages: DataFrame, field: str,
+                     max_cardinality: int) -> list:
+    """The field's distinct non-null values as strings, collected with a
+    bound: an accidentally high-cardinality column fails with the
+    cardinality error, not a driver OOM."""
+    vals = [
+        r[0]
+        for r in (
+            pages.select(F.col(field).cast("string"))
+            .filter(F.col(field).isNotNull())
+            .distinct()
+            .limit(max_cardinality + 1)
+            .collect()
+        )
+    ]
+    if len(vals) > max_cardinality:
+        raise ValueError(
+            f"field {field!r} exceeds {max_cardinality} distinct "
+            "values — doc-values dictionaries are for low-cardinality "
+            "attributes (lang, source, content-type); bucket or hash "
+            "the column at build time for high-cardinality use"
+        )
+    return vals
+
+
+def _dict_frame(spark: SparkSession, vals: list) -> DataFrame:
+    """(code, value) rows of a dictionary (code i+1 = vals[i]). Built from
+    pandas so it plans as a LocalTableScan, not a PythonRDD of Python
+    tasks that only unpickle the dictionary."""
+    return spark.createDataFrame(
+        pd.DataFrame({
+            "code": np.arange(1, len(vals) + 1, dtype=np.int32),
+            "value": pd.Series(vals, dtype=object),
+        }),
+        T.StructType(
+            [
+                T.StructField("code", T.IntegerType(), False),
+                T.StructField("value", T.StringType(), False),
+            ]
+        ),
+    )
+
+
+def _write_dict(staged: str, vals: list) -> None:
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(
+        pa.table(
+            {
+                "code": pa.array(range(1, len(vals) + 1), type=pa.int32()),
+                "value": pa.array(vals, type=pa.string()),
+            }
+        ),
+        os.path.join(staged, "dict.parquet"),
+    )
+
+
+def _write_side_meta(index_dir: str, meta: dict, field_meta: dict) -> dict:
+    """Publish the sidecar's ``_meta.json`` (atomic replace), pinned to
+    the index's current (n_epochs, n_docs)."""
     side_meta = {
         "n_epochs": int(meta.get("n_epochs", 1)),
         "n_docs": int(meta["n_docs"]),
-        "shard_size": shard_size,
+        "shard_size": int(meta["shard_size"]),
+        "field_meta": field_meta,
+        "fields": sorted(field_meta),
     }
-    prior = docvalues_meta(index_dir) or {}
-    merged_fields = dict(prior.get("field_meta", {}))
-    merged_fields.update(field_meta)
-    side_meta["field_meta"] = merged_fields
-    side_meta["fields"] = sorted(merged_fields)
     os.makedirs(_dv_dir(index_dir), exist_ok=True)
     tmp = os.path.join(_dv_dir(index_dir), "_meta.json.tmp")
     with open(tmp, "w") as f:
@@ -237,46 +281,15 @@ def build_docvalues(
     return side_meta
 
 
-def _pack_dict_codes(
-    pages: DataFrame, field: str, id_col: str, shard_size: int,
-    vals: list, spark: SparkSession,
-) -> DataFrame:
-    """(shard, base_doc, n, codes) rows: dense per-shard uint16 arrays
-    coding ``field`` against the given ordered dictionary (code i+1 =
-    vals[i]; 0 = NULL / absent)."""
-    # from pandas: plans as LocalTableScan, not a PythonRDD of Python tasks
-    # that only unpickle the dictionary
-    code_df = spark.createDataFrame(
-        pd.DataFrame({
-            "__dv_value": vals,
-            "__dv_code": np.arange(1, len(vals) + 1, dtype=np.int32),
-        }),
-        T.StructType(
-            [
-                T.StructField("__dv_value", T.StringType(), False),
-                T.StructField("__dv_code", T.IntegerType(), False),
-            ]
-        ),
-    )
-    coded = (
-        pages.select(
-            F.col(id_col).cast("long").alias("doc_id"),
-            F.col(field).cast("string").alias("__dv_value"),
-        )
-        .join(F.broadcast(code_df), "__dv_value", "left")
-        .select(
-            (F.col("doc_id") / shard_size).cast("int").alias("shard"),
-            (F.col("doc_id") % shard_size).cast("int").alias("off"),
-            F.coalesce(F.col("__dv_code"), F.lit(0)).alias("code"),
-        )
-    )
+def _pack_codes(coded: DataFrame, shard_size: int, fill, dtype) -> DataFrame:
+    """(shard, off, code) rows → one (shard, base_doc, n, codes) row per
+    shard: a dense ``dtype`` array over the shard's offsets, ``fill`` where
+    no row lands."""
 
     def pack(pdf: pd.DataFrame) -> pd.DataFrame:
         shard = int(pdf["shard"].iloc[0])
-        arr = np.zeros(shard_size, np.uint16)
-        arr[pdf["off"].to_numpy(np.int64)] = pdf["code"].to_numpy(
-            np.uint16
-        )
+        arr = np.full(shard_size, fill, dtype)
+        arr[pdf["off"].to_numpy(np.int64)] = pdf["code"].to_numpy(dtype)
         return pd.DataFrame(
             {
                 "shard": np.array([shard], np.int32),
@@ -289,12 +302,39 @@ def _pack_dict_codes(
     return coded.groupBy("shard").applyInPandas(pack, schema=CODES_SCHEMA)
 
 
+def _shard_off(id_col: str, shard_size: int, code: Column) -> list:
+    doc = F.col(id_col).cast("long")
+    return [
+        (doc / shard_size).cast("int").alias("shard"),
+        (doc % shard_size).cast("int").alias("off"),
+        code.alias("code"),
+    ]
+
+
+def _pack_dict_codes(
+    pages: DataFrame, field: str, id_col: str, shard_size: int,
+    vals: list, spark: SparkSession,
+) -> DataFrame:
+    """Dense per-shard uint16 arrays coding ``field`` against the given
+    ordered dictionary (code i+1 = vals[i]; 0 = NULL / absent)."""
+    coded = pages.select(
+        F.col(id_col).cast("long").alias("doc_id"),
+        F.col(field).cast("string").alias("value"),
+    ).join(F.broadcast(_dict_frame(spark, vals)), "value", "left")
+    return _pack_codes(
+        coded.select(
+            *_shard_off("doc_id", shard_size, F.coalesce("code", F.lit(0)))
+        ),
+        shard_size, 0, np.uint16,
+    )
+
+
 def _pack_numeric_codes(
     pages: DataFrame, field: str, id_col: str, shard_size: int,
 ) -> DataFrame:
-    """(shard, base_doc, n, codes) rows: dense per-shard int64 arrays.
-    Timestamps become epoch microseconds; anything else is cast to long.
-    NULL / absent docs store NUMERIC_NULL, masked in the kernel."""
+    """Dense per-shard int64 arrays. Timestamps become epoch microseconds;
+    anything else is cast to long. NULL / absent docs store
+    NUMERIC_NULL."""
     ftype = dict(pages.dtypes).get(field)
     if ftype is None:
         raise ValueError(f"pages has no column {field!r}")
@@ -303,40 +343,12 @@ def _pack_numeric_codes(
         F.unix_micros(src) if ftype.startswith("timestamp")
         else src.cast("long")
     )
-    coded = pages.select(
-        (F.col(id_col).cast("long") / shard_size).cast("int").alias(
-            "shard"
-        ),
-        (F.col(id_col).cast("long") % shard_size).cast("int").alias("off"),
-        F.coalesce(val, F.lit(int(NUMERIC_NULL))).alias("code"),
+    return _pack_codes(
+        pages.select(*_shard_off(
+            id_col, shard_size, F.coalesce(val, F.lit(int(NUMERIC_NULL)))
+        )),
+        shard_size, NUMERIC_NULL, np.int64,
     )
-
-    def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        shard = int(pdf["shard"].iloc[0])
-        arr = np.full(shard_size, NUMERIC_NULL, np.int64)
-        arr[pdf["off"].to_numpy(np.int64)] = pdf["code"].to_numpy(np.int64)
-        return pd.DataFrame(
-            {
-                "shard": np.array([shard], np.int32),
-                "base_doc": np.array([shard * shard_size], np.int64),
-                "n": np.array([len(pdf)], np.int32),
-                "codes": [arr.tobytes()],
-            }
-        )
-
-    return coded.groupBy("shard").applyInPandas(pack, schema=CODES_SCHEMA)
-
-
-def _build_numeric_field(
-    pages: DataFrame, index_dir: str, field: str, id_col: str,
-    shard_size: int, commit,
-) -> None:
-    out = os.path.join(_dv_dir(index_dir), field)
-    staged = commit.stage_path(out)
-    _pack_numeric_codes(
-        pages, field, id_col, shard_size
-    ).write.mode("overwrite").parquet(os.path.join(staged, "codes"))
-    commit.commit_dir(staged, out)
 
 
 def field_kind(index_dir: str, field: str) -> str:
@@ -446,29 +458,16 @@ def append_docvalues(
         if os.path.isdir(delta_dir):
             shutil.rmtree(delta_dir)
         if kind == "numeric":
-            _pack_numeric_codes(
+            codes = _pack_numeric_codes(
                 delta_pages, field, id_col, shard_size
-            ).write.mode("overwrite").parquet(delta_dir)
+            )
         else:
             old_vals = load_dict(index_dir, field)
             known = set(old_vals)
-            # bounded collect (build_docvalues' own guard): an
-            # accidentally high-cardinality delta column must fail with
-            # the cardinality error, not OOM the driver
-            delta_distinct = (
-                delta_pages.select(F.col(field).cast("string"))
-                .filter(F.col(field).isNotNull())
-                .distinct()
-                .limit(max_cardinality + 1)
-                .collect()
-            )
-            if len(delta_distinct) > max_cardinality:
-                raise ValueError(
-                    f"field {field!r} exceeds {max_cardinality} distinct "
-                    "values in the delta alone"
-                )
             new_vals = sorted(
-                v for (v,) in delta_distinct if v not in known
+                v for v in _distinct_values(
+                    delta_pages, field, max_cardinality
+                ) if v not in known
             )
             vals = old_vals + new_vals  # append-only: old codes stable
             if len(vals) > max_cardinality:
@@ -476,9 +475,11 @@ def append_docvalues(
                     f"field {field!r} exceeds {max_cardinality} distinct "
                     "values after the append"
                 )
-            _pack_dict_codes(
+            codes = _pack_dict_codes(
                 delta_pages, field, id_col, shard_size, vals, spark
-            ).write.mode("overwrite").parquet(delta_dir)
+            )
+            field_meta[field] = {"kind": "dict", "cardinality": len(vals)}
+        codes.write.mode("overwrite").parquet(delta_dir)
         os.makedirs(os.path.join(staged, "codes"), exist_ok=True)
         # retry idempotence: a crash between this field's commit and the
         # sidecar _meta.json write leaves THIS epoch's files already
@@ -502,38 +503,11 @@ def append_docvalues(
                         staged, "codes", f"epoch{epoch:05d}-{name}"
                     ),
                 )
-        if kind == "numeric":
-            pass
-        else:
-            import pyarrow as pa
-            import pyarrow.parquet as pq
-
-            pq.write_table(
-                pa.table(
-                    {
-                        "code": pa.array(
-                            range(1, len(vals) + 1), type=pa.int32()
-                        ),
-                        "value": pa.array(vals, type=pa.string()),
-                    }
-                ),
-                os.path.join(staged, "dict.parquet"),
-            )
-            field_meta[field] = {"kind": "dict", "cardinality": len(vals)}
+        if kind == "dict":
+            _write_dict(staged, vals)
         commit.commit_dir(staged, out)
         shutil.rmtree(delta_dir, ignore_errors=True)
-    side_meta = {
-        "n_epochs": epoch,
-        "n_docs": int(meta["n_docs"]),
-        "shard_size": shard_size,
-        "field_meta": field_meta,
-        "fields": sorted(field_meta),
-    }
-    tmp = os.path.join(_dv_dir(index_dir), "_meta.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(side_meta, f)
-    os.replace(tmp, os.path.join(_dv_dir(index_dir), "_meta.json"))
-    return side_meta
+    return _write_side_meta(index_dir, meta, field_meta)
 
 
 def docvalues_meta(index_dir: str) -> dict | None:
@@ -542,11 +516,6 @@ def docvalues_meta(index_dir: str) -> dict | None:
         return None
     with open(p) as f:
         return json.load(f)
-
-
-def has_docvalues(index_dir: str, field: str) -> bool:
-    meta = docvalues_meta(index_dir)
-    return bool(meta) and field in meta.get("fields", [])
 
 
 def check_docvalues_fresh(index_dir: str, fields) -> dict:
@@ -613,7 +582,7 @@ def sentinel_segments(
 ) -> DataFrame:
     """The field's per-shard codes reshaped into segment-schema sentinel
     rows (term = DV_TERM_PREFIX + field, codes in ``doc_deltas``), with
-    every extra column of ``like`` (group, idf, ...) null-filled so a
+    every extra column of ``like`` (df, ...) null-filled so a
     ``unionByName`` is exact. One row per shard."""
     width = 8 if field_kind(index_dir, field) == "numeric" else 2
     dv = read_codes(spark, index_dir, field).select(
@@ -690,13 +659,25 @@ def resolve_filter(index_dir: str, dv_filter: dict) -> dict:
     return specs
 
 
+def dv_keep(spec: tuple, vals):
+    """Keep mask of a ``resolve_filter`` matcher spec over stored values:
+    a numpy array in the kernel (wand._ShardIndex._live_mask), a Spark
+    column in :func:`filter_docs`. A range is closed; a LUT never allows
+    code 0, and NUMERIC_NULL lies below every range's lo, so a NULL
+    attribute never matches."""
+    if spec[0] == "range":
+        return (vals >= spec[1]) & (vals <= spec[2])
+    if isinstance(vals, Column):
+        return vals.isin(np.flatnonzero(spec[1]).tolist())
+    return spec[1][vals]
+
+
 def split_dv_rows(seg_pdf: pd.DataFrame, dv_luts: dict):
     """Pop the sentinel rows out of a shard's segment frame → (clean
-    frame, kernel matcher entries ``('dict', base, codes, lut)`` /
-    ``('range', base, vals, lo, hi)``). Raises when a filter field's
-    sentinel row is missing for a shard that has postings — a missing row
-    means the sidecar and segment relations went out of sync (never
-    silently rank unfiltered)."""
+    frame, kernel matcher entries ``(base, stored values, spec)``).
+    Raises when a filter field's sentinel row is missing for a shard that
+    has postings — a missing row means the sidecar and segment relations
+    went out of sync (never silently rank unfiltered)."""
     is_dv = seg_pdf["term"].str.startswith(DV_TERM_PREFIX, na=False)
     if not is_dv.any():
         if dv_luts:
@@ -718,14 +699,144 @@ def split_dv_rows(seg_pdf: pd.DataFrame, dv_luts: dict):
                 "in a shard that has postings"
             )
         r = hit.iloc[0]
-        base = int(r["first_doc"])
-        if spec[0] == "range":
-            vals = np.frombuffer(r["doc_deltas"], dtype=np.int64)
-            dv.append(("range", base, vals, spec[1], spec[2]))
-        else:
-            codes = np.frombuffer(r["doc_deltas"], dtype=np.uint16)
-            dv.append(("dict", base, codes, spec[1]))
+        dtype = np.int64 if spec[0] == "range" else np.uint16
+        dv.append((
+            int(r["first_doc"]), np.frombuffer(r["doc_deltas"], dtype), spec
+        ))
     return clean, dv
+
+
+def _with_shard(frame: DataFrame, meta: dict) -> DataFrame:
+    return frame.withColumn(
+        "shard", (F.col("doc_id") / int(meta["shard_size"])).cast("int")
+    )
+
+
+def _gather(frame: DataFrame, index_dir: str, field: str) -> DataFrame:
+    """``frame`` (any rows carrying ``doc_id`` and ``shard``) + ``DV_COL``:
+    each row's stored value of ``field`` — the uint16 dictionary code as
+    int (0 = NULL), or the int64 numeric value (NUMERIC_NULL = NULL).
+
+    One per-shard cogroup against the field's positional codes rows, so
+    the traffic is the frame's rows plus the sidecar bytes. Rows of a
+    shard without a codes row are dropped."""
+    numeric = field_kind(index_dir, field) == "numeric"
+    dtype = np.int64 if numeric else np.uint16
+    schema = T.StructType(frame.schema.fields + [T.StructField(
+        DV_COL, T.LongType() if numeric else T.IntegerType(), False
+    )])
+
+    # exactly TWO positional args — pyspark's cogroup dispatch inspects
+    # the arity and a third (even defaulted) parameter flips it to
+    # (key, left, right) mode
+    def gather(m_pdf: pd.DataFrame, dv_pdf: pd.DataFrame) -> pd.DataFrame:
+        if len(m_pdf) == 0 or len(dv_pdf) == 0:
+            return pd.DataFrame()
+        vals = np.frombuffer(dv_pdf["codes"].iloc[0], dtype=dtype)[
+            m_pdf["doc_id"].to_numpy(np.int64)
+            - int(dv_pdf["base_doc"].iloc[0])
+        ]
+        return m_pdf.assign(**{DV_COL: vals.astype(
+            np.int64 if numeric else np.int32
+        )})
+
+    codes = read_codes(frame.sparkSession, index_dir, field)
+    return (
+        frame.groupBy("shard")
+        .cogroup(codes.groupBy("shard"))
+        .applyInPandas(gather, schema=schema)
+    )
+
+
+def _query_terms(queries: DataFrame) -> DataFrame:
+    """The distinct non-empty (query_id, term) pairs of a query batch."""
+    from similaripy_spark.fulltext.retrieve import _ensure_terms
+
+    return (
+        _ensure_terms(queries)
+        .select("query_id", F.explode("terms").alias("term"))
+        .filter(F.col("term") != "")
+        .distinct()
+    )
+
+
+def _live_postings(spark: SparkSession, index_dir: str, meta: dict,
+                   terms: DataFrame) -> DataFrame:
+    """Decoded postings (doc_id, term, tf, dl) of the distinct ``terms``
+    (a one-column ``term`` frame) over the LIVE corpus: the terms filter
+    the segment scan (a literal ``isin`` up to TERM_PUSHDOWN_CAP terms, a
+    broadcast semi-join above it), the surviving blocks are decoded, and
+    tombstoned docs are dropped."""
+    from similaripy_spark.fulltext.index_build import read_segments
+    from similaripy_spark.fulltext.index_merge import decode_segments
+
+    seg = read_segments(spark, index_dir)
+    lit = [r[0] for r in terms.limit(TERM_PUSHDOWN_CAP + 1).collect()]
+    if len(lit) <= TERM_PUSHDOWN_CAP:
+        seg = seg.filter(F.col("term").isin(lit))
+    else:
+        seg = seg.join(F.broadcast(terms), "term", "semi")
+    posted = decode_segments(seg)
+    if meta.get("n_tombstone_epochs"):
+        from similaripy_spark.fulltext.delete import read_tombstones
+
+        posted = posted.join(
+            read_tombstones(spark, index_dir), "doc_id", "left_anti"
+        )
+    return posted
+
+
+def _bm25_scores(qterms: DataFrame, postings: DataFrame, index_dir: str,
+                 meta: dict) -> DataFrame:
+    """(query_id, doc_id, score, n_matched): the exact float64 reference
+    BM25 of every (query, doc) pair that shares a term — distinct
+    ``qterms`` (query_id, term) ⋈ ``bm25_tf_part`` of the decoded postings
+    at the index's (k1, b, avgdl) ⋈ ``idf_table`` of its term_stats, then
+    Σ weight·idf. ``n_matched`` counts the query terms the doc contains
+    (an AND filter compares it with the query's term count)."""
+    from similaripy_spark.fulltext.index_build import read_term_stats
+    from similaripy_spark.fulltext.weights import bm25_tf_part, idf_table
+
+    tfp = bm25_tf_part(
+        postings, k1=float(meta["k1"]), b=float(meta["b"]),
+        avgdl=float(meta["avgdl"]),
+    )
+    idf = idf_table(
+        read_term_stats(postings.sparkSession, index_dir),
+        int(meta["n_docs"]),
+    )
+    return (
+        qterms.join(tfp, "term")
+        .join(idf, "term")
+        .groupBy("query_id", "doc_id")
+        .agg(
+            F.sum(F.col("weight") * F.col("idf")).alias("score"),
+            F.count("*").alias("n_matched"),
+        )
+    )
+
+
+def _all_terms(matched: DataFrame, qterms: DataFrame) -> DataFrame:
+    """Keep the (query, doc) rows whose ``n_matched`` equals the query's
+    distinct-term count (AND semantics — a HAVING)."""
+    need = qterms.groupBy("query_id").agg(F.count("*").alias("__need"))
+    return matched.join(need, "query_id").filter(
+        F.col("n_matched") == F.col("__need")
+    )
+
+
+def _check_field(index_dir: str, field: str, kind: str, op: str,
+                 mode: str = "or") -> None:
+    if mode not in ("or", "and"):
+        raise ValueError(f"mode must be 'or' or 'and', got {mode!r}")
+    check_docvalues_fresh(index_dir, [field])
+    actual = field_kind(index_dir, field)
+    if actual != kind:
+        names = {"dict": "dictionary-encoded", "numeric": "numeric"}
+        raise ValueError(
+            f"{op} needs a {names[kind]} field; {field!r} is "
+            f"{names[actual]}"
+        )
 
 
 def filter_docs(
@@ -737,60 +848,26 @@ def filter_docs(
 ) -> DataFrame:
     """Relational twin of the kernel dv matcher: keep rows of ``docs``
     whose attributes satisfy ``dv_filter`` (same predicate forms as
-    ``resolve_filter``). Candidate-driven — a per-shard cogroup gathers
-    only the CANDIDATE docs' values from the positional arrays (traffic ∝
-    candidates + sidecar bytes), then a semi-join keeps survivors. Used
-    by the query-string phrase composition (querylang.py); parity with
-    the kernel path is pinned in tests."""
+    ``resolve_filter``, same :func:`dv_keep` semantics). Candidate-driven
+    — per field, the CANDIDATE docs' values are gathered from the
+    positional arrays (``_gather``), filtered, and semi-joined back. Used
+    by the query-string phrase composition (querylang.py) and the
+    ``dv_filter`` of sort_topk / collapse_topk; parity with the kernel
+    path is pinned in tests."""
     specs = resolve_filter(index_dir, dv_filter)
     meta = read_meta(index_dir)
-    shard_size = int(meta["shard_size"])
     out = docs
     for sent_term, spec in specs.items():
-        field = sent_term[len(DV_TERM_PREFIX):]
-        ids = (
+        ids = _with_shard(
             out.select(F.col(id_col).cast("long").alias("doc_id"))
-            .distinct()
-            .withColumn(
-                "shard", (F.col("doc_id") / shard_size).cast("int")
-            )
+            .distinct(),
+            meta,
         )
-        dv = read_codes(spark, index_dir, field)
-
-        def make_keep_fn(_spec):
-            # exactly TWO positional args — pyspark's cogroup dispatch
-            # inspects the arity and a third (even defaulted) parameter
-            # flips it to (key, left, right) mode
-            def keep_fn(
-                m_pdf: pd.DataFrame, dv_pdf: pd.DataFrame
-            ) -> pd.DataFrame:
-                if len(m_pdf) == 0 or len(dv_pdf) == 0:
-                    return pd.DataFrame(
-                        {"doc_id": pd.Series(dtype="int64")}
-                    )
-                base = int(dv_pdf["base_doc"].iloc[0])
-                docs_np = m_pdf["doc_id"].to_numpy(np.int64)
-                if _spec[0] == "range":
-                    vals = np.frombuffer(
-                        dv_pdf["codes"].iloc[0], dtype=np.int64
-                    )[docs_np - base]
-                    k = (vals >= _spec[1]) & (vals <= _spec[2])
-                else:
-                    codes = np.frombuffer(
-                        dv_pdf["codes"].iloc[0], dtype=np.uint16
-                    )[docs_np - base]
-                    k = _spec[1][codes]
-                return pd.DataFrame({"doc_id": docs_np[k]})
-
-            return keep_fn
-
-        kept = (
-            ids.groupBy("shard")
-            .cogroup(dv.groupBy("shard"))
-            .applyInPandas(make_keep_fn(spec), schema="doc_id long")
-        )
+        kept = _gather(ids, index_dir, sent_term[len(DV_TERM_PREFIX):])
         out = out.join(
-            kept.withColumnRenamed("doc_id", id_col), id_col, "left_semi"
+            kept.filter(dv_keep(spec, F.col(DV_COL)))
+            .select(F.col("doc_id").alias(id_col)),
+            id_col, "left_semi",
         )
     return out
 
@@ -800,69 +877,30 @@ def match_set(
     queries: DataFrame,
     index_dir: str,
     mode: str = "or",
-    term_pushdown_cap: int = 10000,
 ) -> DataFrame:
     """The DISTINCT live (query_id, doc_id, shard) match set of a query
-    batch — the relation every facet/stats aggregation runs over.
-
-    (1) the batch's distinct terms filter the segment scan (literal
-    ``isin`` under ``term_pushdown_cap`` so the predicate reaches parquet
-    row-group stats; a broadcast semi-join above it), (2) decoded
-    postings ⋈ query terms; ``mode='and'`` keeps docs matching every
-    distinct query term (HAVING on the distinct-term count),
-    (3) tombstones anti-joined (LIVE corpus)."""
-    from similaripy_spark.fulltext.index_build import read_segments
-    from similaripy_spark.fulltext.index_merge import decode_segments
-    from similaripy_spark.fulltext.retrieve import _ensure_terms
-
+    batch — the relation every facet/stats aggregation runs over: the
+    batch's live postings (``_live_postings``) ⋈ its distinct terms;
+    ``mode='and'`` keeps docs matching every distinct query term (HAVING
+    on the matched-term count)."""
     if mode not in ("or", "and"):
         raise ValueError(f"mode must be 'or' or 'and', got {mode!r}")
     meta = read_meta(index_dir)
-    shard_size = int(meta["shard_size"])
-    queries = _ensure_terms(queries)
-    qterms = (
-        queries.select("query_id", F.explode("terms").alias("term"))
-        .filter(F.col("term") != "")
-        .distinct()
+    qterms = _query_terms(queries)
+    posted = _live_postings(
+        spark, index_dir, meta, qterms.select("term").distinct()
     )
-    seg = read_segments(spark, index_dir)
-    terms = [
-        r[0]
-        for r in qterms.select("term")
-        .distinct()
-        .limit(term_pushdown_cap + 1)
-        .collect()
-    ]
-    if len(terms) <= term_pushdown_cap:
-        seg = seg.filter(F.col("term").isin(terms))
-    else:
-        seg = seg.join(
-            F.broadcast(qterms.select("term").distinct()), "term", "semi"
-        )
-    posted = decode_segments(seg).select("term", "doc_id")
-    matches = qterms.join(posted, "term").select("query_id", "doc_id")
+    matches = qterms.join(posted.select("term", "doc_id"), "term")
     if mode == "and":
-        need = qterms.groupBy("query_id").agg(
-            F.count("*").alias("__need")
-        )
-        matches = (
+        matches = _all_terms(
             matches.groupBy("query_id", "doc_id")
-            .agg(F.count("*").alias("__got"))
-            .join(need, "query_id")
-            .filter(F.col("__got") == F.col("__need"))
-            .select("query_id", "doc_id")
+            .agg(F.count("*").alias("n_matched")),
+            qterms,
         )
-    else:
+    matches = matches.select("query_id", "doc_id")
+    if mode == "or":
         matches = matches.distinct()
-    if meta.get("n_tombstone_epochs"):
-        from similaripy_spark.fulltext.delete import read_tombstones
-
-        matches = matches.join(
-            read_tombstones(spark, index_dir), "doc_id", "left_anti"
-        )
-    return matches.withColumn(
-        "shard", (F.col("doc_id") / shard_size).cast("int")
-    )
+    return _with_shard(matches, meta)
 
 
 def facet_counts(
@@ -871,83 +909,28 @@ def facet_counts(
     index_dir: str,
     field: str,
     mode: str = "or",
-    term_pushdown_cap: int = 10000,
 ) -> DataFrame:
     """Per-query match counts grouped by a doc-values field →
     (query_id, value, n_docs) — the facet panel next to search results.
 
-    Fully relational plan: (1) the query batch's DISTINCT terms filter the
-    segment scan (literal ``isin`` under ``term_pushdown_cap`` so the
-    predicate reaches the parquet row-group stats; a broadcast semi-join
-    above it), (2) decoded postings ⋈ query terms → the DISTINCT
-    (query_id, doc_id) match set (``mode='and'`` keeps docs matching every
-    distinct query term — a HAVING on the distinct-term count),
-    (3) tombstones anti-joined, (4) a per-shard cogroup gathers each
-    matched doc's uint16 code from the positional array (traffic ∝ matches
-    + sidecar bytes, never corpus text), (5) partial-aggregated
+    Fully relational plan: the match set (:func:`match_set` — term
+    pushdown, OR/AND, tombstones dropped), the gathered uint16 code of
+    each matched doc (``_gather``), then a partial-aggregated
     ``groupBy(query_id, code).count()`` ⋈ the broadcast dictionary.
 
     Corpus-stat semantics match filtered retrieval: counts are over the
     LIVE corpus (tombstones excluded), values NULL for docs with no
     dictionary entry."""
-    if mode not in ("or", "and"):
-        raise ValueError(f"mode must be 'or' or 'and', got {mode!r}")
-    check_docvalues_fresh(index_dir, [field])
-    if field_kind(index_dir, field) != "dict":
-        raise ValueError(
-            f"facet_counts needs a dictionary-encoded field; {field!r} is "
-            "numeric (bucket it into a dict field at build time to facet)"
-        )
-    matches = match_set(
-        spark, queries, index_dir, mode=mode,
-        term_pushdown_cap=term_pushdown_cap,
-    )
-    dv = read_codes(spark, index_dir, field)
-
-    def gather(m_pdf: pd.DataFrame, dv_pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(m_pdf) == 0 or len(dv_pdf) == 0:
-            return pd.DataFrame(
-                {
-                    "query_id": pd.Series(dtype="int64"),
-                    "code": pd.Series(dtype="int32"),
-                }
-            )
-        codes = np.frombuffer(dv_pdf["codes"].iloc[0], dtype=np.uint16)
-        base = int(dv_pdf["base_doc"].iloc[0])
-        docs = m_pdf["doc_id"].to_numpy(np.int64)
-        return pd.DataFrame(
-            {
-                "query_id": m_pdf["query_id"].to_numpy(np.int64),
-                "code": codes[docs - base].astype(np.int32),
-            }
-        )
-
-    gathered = (
-        matches.groupBy("shard")
-        .cogroup(dv.groupBy("shard"))
-        .applyInPandas(
-            gather,
-            schema=T.StructType(
-                [
-                    T.StructField("query_id", T.LongType(), False),
-                    T.StructField("code", T.IntegerType(), False),
-                ]
-            ),
-        )
-    )
-    dict_df = spark.createDataFrame(
-        [(i + 1, v) for i, v in enumerate(load_dict(index_dir, field))],
-        T.StructType(
-            [
-                T.StructField("code", T.IntegerType(), False),
-                T.StructField("value", T.StringType(), False),
-            ]
-        ),
-    )
+    _check_field(index_dir, field, "dict", "facet_counts", mode)
     return (
-        gathered.groupBy("query_id", "code")
+        _gather(match_set(spark, queries, index_dir, mode=mode),
+                index_dir, field)
+        .groupBy("query_id", F.col(DV_COL).alias("code"))
         .agg(F.count("*").alias("n_docs"))
-        .join(F.broadcast(dict_df), "code", "left")
+        .join(
+            F.broadcast(_dict_frame(spark, load_dict(index_dir, field))),
+            "code", "left",
+        )
         .select("query_id", "value", "n_docs")
     )
 
@@ -961,7 +944,6 @@ def sort_topk(
     mode: str = "or",
     ascending: bool = False,
     dv_filter: dict | None = None,
-    term_pushdown_cap: int = 10000,
 ) -> DataFrame:
     """Top-k matches per query ORDERED BY a numeric doc-values field
     (Lucene's sort-by-field — newest-first / longest-first result pages)
@@ -969,61 +951,24 @@ def sort_topk(
     engine-wide rule. Docs with a NULL attribute never rank (SQL ORDER BY
     over an inner attribute join). ``dv_filter`` composes (filter_docs).
 
-    Relational, candidate-driven: the match set (term-pushdown scan,
-    OR/AND, tombstones anti-joined) → per-shard cogroup gather of the
-    int64 value → exact distributed top-k. At web scale the cost is the
-    match set + sidecar traffic — no posting weight is even decoded."""
-    if mode not in ("or", "and"):
-        raise ValueError(f"mode must be 'or' or 'and', got {mode!r}")
-    check_docvalues_fresh(index_dir, [field])
-    if field_kind(index_dir, field) != "numeric":
-        raise ValueError(
-            f"sort_topk needs a numeric field; {field!r} is "
-            "dictionary-encoded"
-        )
+    Relational, candidate-driven: the match set (:func:`match_set`) → the
+    gathered int64 value (``_gather``) → exact distributed top-k. At web
+    scale the cost is the match set + sidecar traffic — no posting weight
+    is even decoded."""
+    _check_field(index_dir, field, "numeric", "sort_topk", mode)
     from similaripy_spark.operators.topk import top_k
 
-    matches = match_set(
-        spark, queries, index_dir, mode=mode,
-        term_pushdown_cap=term_pushdown_cap,
-    )
+    matches = match_set(spark, queries, index_dir, mode=mode)
     if dv_filter:
         matches = filter_docs(spark, matches, index_dir, dv_filter)
-    dv = read_codes(spark, index_dir, field)
-
-    def gather(m_pdf: pd.DataFrame, dv_pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(m_pdf) == 0 or len(dv_pdf) == 0:
-            return pd.DataFrame(
-                {
-                    "query_id": pd.Series(dtype="int64"),
-                    "doc_id": pd.Series(dtype="int64"),
-                    "value": pd.Series(dtype="int64"),
-                }
-            )
-        vals = np.frombuffer(dv_pdf["codes"].iloc[0], dtype=np.int64)
-        docs = m_pdf["doc_id"].to_numpy(np.int64)
-        v = vals[docs - int(dv_pdf["base_doc"].iloc[0])]
-        keep = v != NUMERIC_NULL
-        return pd.DataFrame(
-            {
-                "query_id": m_pdf["query_id"].to_numpy(np.int64)[keep],
-                "doc_id": docs[keep],
-                "value": v[keep],
-            }
-        )
-
-    gathered = (
-        matches.groupBy("shard")
-        .cogroup(dv.groupBy("shard"))
-        .applyInPandas(
-            gather, schema="query_id long, doc_id long, value long"
-        )
-    )
+    gathered = _gather(matches, index_dir, field).select(
+        "query_id", "doc_id", F.col(DV_COL).alias("value")
+    ).filter(F.col("value") != int(NUMERIC_NULL))
     # top_k keeps the LARGEST ordering key; ascending sorts negate it.
     # The key STAYS int64 — a double cast would collapse values differing
     # above 2^53 (epoch nanos, snowflake IDs) into spurious doc_id-ordered
     # ties. Negation is safe: NUMERIC_NULL (int64 min, the only
-    # non-negatable value) was filtered in the gather.
+    # non-negatable value) was filtered out above.
     signed = (-F.col("value")) if ascending else F.col("value")
     ranked = top_k(
         gathered.withColumn("__ord", signed),
@@ -1042,151 +987,65 @@ def collapse_topk(
     per_value: int = 1,
     mode: str = "or",
     dv_filter: dict | None = None,
-    term_pushdown_cap: int = 10000,
 ) -> DataFrame:
     """BM25 top-k with at most ``per_value`` docs per dictionary value of
     ``field`` (Lucene's field collapsing — one result per site/domain) →
     (query_id, doc_id, value, score, rank).
 
-    Exact by construction: every match is scored RELATIONALLY with the
-    index's own statistics (decoded (tf, dl) blocks under term pushdown
-    → bm25_tf_part at the index's (k1, b, avgdl) ⋈ idf_table —
-    float64), the per-value
-    row_number keeps the best ``per_value`` docs of each (query, value)
-    group under the engine tie rule, and the global top-k ranks the
-    survivors. A kernel top-k then collapse would be INEXACT (a value's
-    second doc could crowd out another value's best); scoring the full
-    match set is the honest cost, the same Σ df(query terms) every facet
-    aggregation pays. NULL-attribute docs (no dictionary entry) collapse
-    as their own group per doc (never suppressed by each other).
-    ``dv_filter`` composes via filter_docs."""
-    if mode not in ("or", "and"):
-        raise ValueError(f"mode must be 'or' or 'and', got {mode!r}")
+    Exact by construction: every live match is scored RELATIONALLY with
+    the index's own statistics (``_live_postings`` → ``_bm25_scores``,
+    float64; ``mode='and'`` keeps docs with every query term), the
+    gathered dictionary code (``_gather``) keys a per-value row_number
+    that keeps the best ``per_value`` docs of each (query, value) group
+    under the engine tie rule, and the global top-k ranks the survivors.
+    A kernel top-k then collapse would be INEXACT (a value's second doc
+    could crowd out another value's best); scoring the full match set is
+    the honest cost, the same Σ df(query terms) every facet aggregation
+    pays. NULL-attribute docs (no dictionary entry) collapse as their own
+    group per doc (never suppressed by each other). ``dv_filter``
+    composes via filter_docs."""
     if per_value < 1:
         raise ValueError(f"per_value must be >= 1, got {per_value}")
-    check_docvalues_fresh(index_dir, [field])
-    if field_kind(index_dir, field) != "dict":
-        raise ValueError(
-            f"collapse_topk needs a dictionary-encoded field; {field!r} "
-            "is numeric"
-        )
+    _check_field(index_dir, field, "dict", "collapse_topk", mode)
     from pyspark.sql import Window
 
-    from similaripy_spark.fulltext.index_build import (
-        read_segments,
-        read_term_stats,
-    )
-    from similaripy_spark.fulltext.index_merge import decode_segments
-    from similaripy_spark.fulltext.retrieve import _ensure_terms
-    from similaripy_spark.fulltext.weights import bm25_tf_part, idf_table
     from similaripy_spark.operators.topk import top_k
 
     meta = read_meta(index_dir)
-    shard_size = int(meta["shard_size"])
-    queries = _ensure_terms(queries)
-    qterms = (
-        queries.select("query_id", F.explode("terms").alias("term"))
-        .filter(F.col("term") != "")
-        .distinct()
-    )
-    seg = read_segments(spark, index_dir)
-    terms = [
-        r[0]
-        for r in qterms.select("term").distinct()
-        .limit(term_pushdown_cap + 1).collect()
-    ]
-    if len(terms) <= term_pushdown_cap:
-        seg = seg.filter(F.col("term").isin(terms))
-    else:
-        seg = seg.join(
-            F.broadcast(qterms.select("term").distinct()), "term", "semi"
-        )
-    tfp = bm25_tf_part(
-        decode_segments(seg), k1=float(meta["k1"]), b=float(meta["b"]),
-        avgdl=float(meta["avgdl"]),
-    )
-    idf = idf_table(read_term_stats(spark, index_dir), int(meta["n_docs"]))
-    scored = (
-        qterms.join(tfp, "term")
-        .join(idf, "term")
-        .groupBy("query_id", "doc_id")
-        .agg(
-            F.sum(F.col("weight") * F.col("idf")).alias("score"),
-            F.count("*").alias("__nm"),
-        )
+    qterms = _query_terms(queries)
+    scored = _bm25_scores(
+        qterms,
+        _live_postings(
+            spark, index_dir, meta, qterms.select("term").distinct()
+        ),
+        index_dir, meta,
     )
     if mode == "and":
-        need = qterms.groupBy("query_id").agg(F.count("*").alias("__need"))
-        scored = scored.join(need, "query_id").filter(
-            F.col("__nm") == F.col("__need")
-        )
+        scored = _all_terms(scored, qterms)
     scored = scored.select("query_id", "doc_id", "score")
-    if meta.get("n_tombstone_epochs"):
-        from similaripy_spark.fulltext.delete import read_tombstones
-
-        scored = scored.join(
-            read_tombstones(spark, index_dir), "doc_id", "left_anti"
-        )
     if dv_filter:
         scored = filter_docs(spark, scored, index_dir, dv_filter)
-    scored = scored.withColumn(
-        "shard", (F.col("doc_id") / shard_size).cast("int")
-    )
-    dv = read_codes(spark, index_dir, field)
-
-    def gather(m_pdf: pd.DataFrame, dv_pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(m_pdf) == 0 or len(dv_pdf) == 0:
-            return pd.DataFrame(
-                {
-                    "query_id": pd.Series(dtype="int64"),
-                    "doc_id": pd.Series(dtype="int64"),
-                    "score": pd.Series(dtype="float64"),
-                    "code": pd.Series(dtype="int32"),
-                }
-            )
-        codes = np.frombuffer(dv_pdf["codes"].iloc[0], dtype=np.uint16)
-        docs = m_pdf["doc_id"].to_numpy(np.int64)
-        return pd.DataFrame(
-            {
-                "query_id": m_pdf["query_id"].to_numpy(np.int64),
-                "doc_id": docs,
-                "score": m_pdf["score"].to_numpy(np.float64),
-                "code": codes[
-                    docs - int(dv_pdf["base_doc"].iloc[0])
-                ].astype(np.int32),
-            }
-        )
-
-    with_code = (
-        scored.groupBy("shard")
-        .cogroup(dv.groupBy("shard"))
-        .applyInPandas(
-            gather,
-            schema="query_id long, doc_id long, score double, code int",
-        )
-    )
+    with_code = _gather(_with_shard(scored, meta), index_dir, field)
     # NULL-attribute docs (code 0) form per-doc singleton groups
-    grp = F.when(
-        F.col("code") == 0, -F.col("doc_id") - 1
-    ).otherwise(F.col("code").cast("long"))
+    code = F.col(DV_COL)
+    grp = F.when(code == 0, -F.col("doc_id") - 1).otherwise(
+        code.cast("long")
+    )
     w = Window.partitionBy("query_id", grp).orderBy(
         F.col("score").desc(), F.col("doc_id").asc()
     )
     best = with_code.withColumn("__vr", F.row_number().over(w)).filter(
         F.col("__vr") <= per_value
     )
-    dict_df = spark.createDataFrame(
-        [(i + 1, v) for i, v in enumerate(load_dict(index_dir, field))],
-        "code int, value string",
-    )
     ranked = top_k(
-        best.select("query_id", "doc_id", "score", "code"),
+        best.select("query_id", "doc_id", "score", code.alias("code")),
         k, group="query_id", order_value="score", tiebreak="doc_id",
         keep_rank=True,
     )
-    return ranked.join(F.broadcast(dict_df), "code", "left").select(
-        "query_id", "doc_id", "value", "score", "rank"
-    )
+    return ranked.join(
+        F.broadcast(_dict_frame(spark, load_dict(index_dir, field))),
+        "code", "left",
+    ).select("query_id", "doc_id", "value", "score", "rank")
 
 
 def facet_stats(
@@ -1195,53 +1054,19 @@ def facet_stats(
     index_dir: str,
     field: str,
     mode: str = "or",
-    term_pushdown_cap: int = 10000,
 ) -> DataFrame:
     """Per-query numeric statistics of a doc-values field over the match
     set → (query_id, n_docs, vmin, vmax, vsum, vavg) — the stats
     aggregation next to search results (result-set size, value range,
     average length / recency). Same relational plan as facet_counts with
-    the int64 positional array gathered instead of dictionary codes;
-    NULL-valued docs (NUMERIC_NULL sentinel) are excluded from every
-    statistic, tombstones from the match set."""
-    if mode not in ("or", "and"):
-        raise ValueError(f"mode must be 'or' or 'and', got {mode!r}")
-    check_docvalues_fresh(index_dir, [field])
-    if field_kind(index_dir, field) != "numeric":
-        raise ValueError(
-            f"facet_stats needs a numeric field; {field!r} is "
-            "dictionary-encoded (use facet_counts for value counts)"
-        )
-    matches = match_set(
-        spark, queries, index_dir, mode=mode,
-        term_pushdown_cap=term_pushdown_cap,
-    )
-    dv = read_codes(spark, index_dir, field)
-
-    def gather(m_pdf: pd.DataFrame, dv_pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(m_pdf) == 0 or len(dv_pdf) == 0:
-            return pd.DataFrame(
-                {
-                    "query_id": pd.Series(dtype="int64"),
-                    "v": pd.Series(dtype="int64"),
-                }
-            )
-        vals = np.frombuffer(dv_pdf["codes"].iloc[0], dtype=np.int64)
-        docs = m_pdf["doc_id"].to_numpy(np.int64)
-        v = vals[docs - int(dv_pdf["base_doc"].iloc[0])]
-        keep = v != NUMERIC_NULL
-        return pd.DataFrame(
-            {
-                "query_id": m_pdf["query_id"].to_numpy(np.int64)[keep],
-                "v": v[keep],
-            }
-        )
-
-    gathered = (
-        matches.groupBy("shard")
-        .cogroup(dv.groupBy("shard"))
-        .applyInPandas(gather, schema="query_id long, v long")
-    )
+    the int64 value gathered instead of the dictionary code; NULL-valued
+    docs (NUMERIC_NULL sentinel) are excluded from every statistic,
+    tombstones from the match set."""
+    _check_field(index_dir, field, "numeric", "facet_stats", mode)
+    v = F.col(DV_COL)
+    gathered = _gather(
+        match_set(spark, queries, index_dir, mode=mode), index_dir, field
+    ).filter(v != int(NUMERIC_NULL))
     # the sum accumulates in decimal(38,0): a LongType F.sum silently
     # WRAPS on overflow in non-ANSI Spark, and epoch-microsecond values
     # (~1.75e15/doc, the documented crawl-date use) overflow int64 once a
@@ -1251,9 +1076,9 @@ def facet_stats(
     # accumulation is partial-agg-order dependent above 2^53).
     return gathered.groupBy("query_id").agg(
         F.count("*").alias("n_docs"),
-        F.min("v").alias("vmin"),
-        F.max("v").alias("vmax"),
-        F.sum(F.col("v").cast("decimal(38,0)")).alias("vsum"),
+        F.min(v).alias("vmin"),
+        F.max(v).alias("vmax"),
+        F.sum(v.cast("decimal(38,0)")).alias("vsum"),
     ).withColumn(
         # round the exact sum to double FIRST, then one double division —
         # the same expression shape as the SQL oracle's

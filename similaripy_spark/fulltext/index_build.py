@@ -70,6 +70,10 @@ BLOCK_SIZE = 128
 #: growing the shard instead (the shard_size↑ knob for 100x corpora).
 DEFAULT_TARGET_SHARDS = 256
 
+#: at most this many blocks in the whole block table, a build aggregates
+#: term_stats in the driver (pyarrow) instead of a Spark job
+TERM_STATS_DRIVER_MAX_BLOCKS = 4_000_000
+
 
 def derive_shard_size(
     n_docs: int,
@@ -743,16 +747,13 @@ class IndexBuilder:
 
         Small indexes skip the job entirely: per-group block counts are
         already in the lineage manifests, so when the whole block table is
-        ≤ SIMILARIPY_TERM_STATS_DRIVER_MAX_BLOCKS rows (default 4M ≈ a few
+        ≤ TERM_STATS_DRIVER_MAX_BLOCKS rows (4M ≈ a few
         hundred MB of postings) the four metadata columns are aggregated
         driver-side with pyarrow — a whole Spark job (~1.3-1.7 s of pure
         fixed cost per build at local[8]) gone. Anything bigger takes the
         distributed aggregate below; a 10^12-doc block table never comes
         near the driver."""
         ts_path = os.path.join(self.index_dir, "term_stats")
-        gate = int(os.environ.get(
-            "SIMILARIPY_TERM_STATS_DRIVER_MAX_BLOCKS", "4000000"
-        ))
         try:
             total_blocks = sum(
                 int(r.get("blocks", 0))
@@ -763,7 +764,7 @@ class IndexBuilder:
             total_blocks = None
         if (
             total_blocks is not None
-            and total_blocks <= gate
+            and total_blocks <= TERM_STATS_DRIVER_MAX_BLOCKS
             and self._write_term_stats_driver(ts_path)
         ):
             return

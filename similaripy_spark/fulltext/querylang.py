@@ -27,15 +27,18 @@ one string per call, the interactive-search server path:
   set comes from the positional path (posting-list intersection +
   ordered-position verification, positional.phrase_topk_pos), phrase sets
   intersect, and the survivors are scored RELATIONALLY over all ranked
-  terms with the index's own statistics — decoded (tf, dl) blocks
-  (term-pushdown scan) → bm25_tf_part at the index's (k1, b, avgdl) ⋈
-  idf_table(term_stats, N) — exact float64 reference BM25, independent of
-  the kernels' float32 rounding (tf and dl ride in every block precisely
-  so readers can re-derive weights). NOT terms anti-join,
-  doc-values filters apply via docvalues.filter_docs (the relational twin
-  of the kernel matcher), standard (score DESC, doc_id ASC) tie rule.
-  Cost is linear in the phrase match sets and the ranked terms' posting
-  sizes — the same candidate-driven shape as phrase/more-like-this.
+  terms with the index's own statistics, through the same two helpers as
+  docvalues.collapse_topk: the term scan (``_live_postings`` — decoded
+  (tf, dl) blocks of the ranked and NOT terms under term pushdown,
+  tombstones dropped) and the float64 scorer (``_bm25_scores`` —
+  bm25_tf_part at the index's (k1, b, avgdl) ⋈ idf_table(term_stats, N)),
+  exact reference BM25, independent of the kernels' float32 rounding
+  (tf and dl ride in every block precisely so readers can re-derive
+  weights). NOT terms anti-join, doc-values filters apply via
+  docvalues.filter_docs (the relational twin of the kernel matcher),
+  standard (score DESC, doc_id ASC) tie rule. Cost is linear in the
+  phrase match sets and the ranked terms' posting sizes — the same
+  candidate-driven shape as phrase/more-like-this.
 
 Ranking semantics with phrases: docs must satisfy EVERY phrase; the score
 is the BM25 sum over all DISTINCT ranked terms (loose + phrase tokens) —
@@ -199,9 +202,7 @@ def search(
         if handle is None:
             from similaripy_spark.fulltext.retrieve import IndexHandle
 
-            handle = IndexHandle(
-                spark, index_dir, cache=False, annotate_segments=False
-            )
+            handle = IndexHandle(spark, index_dir, cache=False)
         # one-row frames come from pandas so they plan as LocalTableScan,
         # not a PythonRDD of Python tasks that only unpickle the row
         qdf = spark.createDataFrame(
@@ -227,13 +228,12 @@ def search(
         return handle.topk(qdf, k=k, filter=filters, path="segment")
 
     # --- phrase composition (candidate-driven) ---------------------------
-    from similaripy_spark.fulltext.index_build import (
-        read_segments,
-        read_term_stats,
+    from similaripy_spark.fulltext.docvalues import (
+        _bm25_scores,
+        _live_postings,
+        filter_docs,
     )
-    from similaripy_spark.fulltext.index_merge import decode_segments
     from similaripy_spark.fulltext.positional import phrase_topk_pos
-    from similaripy_spark.fulltext.weights import bm25_tf_part, idf_table
     from similaripy_spark.operators.topk import top_k
 
     meta = read_meta(index_dir)
@@ -251,8 +251,10 @@ def search(
     verified = reduce(lambda a, b: a.join(b, "doc_id"), phrase_sets)
 
     need = ranked + [t for t in p["not_terms"] if t not in ranked]
-    seg = read_segments(spark, index_dir).filter(F.col("term").isin(need))
-    decoded = decode_segments(seg)
+    decoded = _live_postings(
+        spark, index_dir, meta,
+        spark.createDataFrame(pd.DataFrame({"term": need}), "term string"),
+    )
     if p["not_terms"]:
         excl = (
             decoded.filter(F.col("term").isin(p["not_terms"]))
@@ -260,38 +262,17 @@ def search(
             .distinct()
         )
         verified = verified.join(excl, "doc_id", "left_anti")
-    if meta.get("n_tombstone_epochs"):
-        from similaripy_spark.fulltext.delete import read_tombstones
-
-        verified = verified.join(
-            read_tombstones(spark, index_dir), "doc_id", "left_anti"
-        )
     if filters:
-        from similaripy_spark.fulltext.docvalues import filter_docs
-
         verified = filter_docs(spark, verified, index_dir, filters)
 
-    posts = decoded.filter(F.col("term").isin(ranked)).join(
-        verified, "doc_id", "left_semi"
-    )
-    tfp = bm25_tf_part(
-        posts,
-        k1=float(meta["k1"]),
-        b=float(meta["b"]),
-        avgdl=float(meta["avgdl"]),
-    )
-    idf = idf_table(
-        read_term_stats(spark, index_dir), int(meta["n_docs"])
-    )
-    scored = (
-        tfp.join(idf, "term")
-        .groupBy("doc_id")
-        .agg(F.sum(F.col("weight") * F.col("idf")).alias("score"))
-        .select(
-            F.lit(int(query_id)).cast("long").alias("query_id"),
-            "doc_id",
-            "score",
-        )
+    # exploded from ONE row: its broadcast runs one task, not one per term
+    qterms = spark.createDataFrame(
+        pd.DataFrame({"query_id": [int(query_id)], "terms": [ranked]}),
+        "query_id long, terms array<string>",
+    ).select("query_id", F.explode("terms").alias("term"))
+    scored = _bm25_scores(
+        qterms, decoded.join(verified, "doc_id", "left_semi"), index_dir,
+        meta,
     )
     return top_k(
         scored, k, group="query_id", order_value="score",

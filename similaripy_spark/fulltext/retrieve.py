@@ -91,9 +91,9 @@ class IndexHandle:
       driver-side file read, so no per-call shard-discovery job;
     * the merged-layout probe for term-major routing;
     * the per-term ``df`` join onto the segment relation
-      (``segments_with_idf`` — measured +30% wall per 10k-query batch when
-      paid per call instead), with the annotated segments persisted
-      (``cache=True``) so repeated batches read memory, not parquet;
+      (``segments_with_idf``, the segment kernel's one idf source), with
+      the annotated segments persisted (``cache=True``) so repeated
+      batches read memory, not parquet;
     * on a merged index, the term-major state (``wand.TermMajorIndex``):
       ``pyarrow`` datasets over ``merged/`` and ``term_stats`` plus the
       bucket count from ``merged/_meta.json``, all opened in the driver
@@ -113,9 +113,7 @@ class IndexHandle:
     tombstones on every call.
 
     One-shot convenience: ``retrieve.topk`` is this handle with
-    ``cache=False, annotate_segments=False`` — a single uncached call
-    where the per-batch query-side df annotation (which only touches the
-    tiny query batch) beats a segment-relation-sized join.
+    ``cache=False`` — a single uncached call.
     """
 
     def __init__(
@@ -124,15 +122,14 @@ class IndexHandle:
         index_dir: str,
         *,
         cache: bool = True,
-        annotate_segments: bool = True,
     ):
         self.spark = spark
         self.index_dir = index_dir
         self.meta = read_meta(index_dir)
         self.has_merged = os.path.isdir(os.path.join(index_dir, "merged"))
-        segments = read_segments(spark, index_dir)
-        if annotate_segments:
-            segments = segments_with_idf(segments, index_dir)
+        segments = segments_with_idf(
+            read_segments(spark, index_dir), index_dir
+        )
         self._cached = cache
         self.segments = segments.persist() if cache else segments
         self._term_major = None
@@ -413,13 +410,10 @@ def open_index(
     index_dir: str,
     *,
     cache: bool = True,
-    annotate_segments: bool = True,
 ) -> IndexHandle:
     """Open a built index for serving: ``open_index(spark, d).topk(q)``.
     See :class:`IndexHandle`."""
-    return IndexHandle(
-        spark, index_dir, cache=cache, annotate_segments=annotate_segments
-    )
+    return IndexHandle(spark, index_dir, cache=cache)
 
 
 def topk(
@@ -436,12 +430,10 @@ def topk(
     filter: dict | None = None,
 ) -> DataFrame:
     """One-shot BM25 top-k over a built index (thin convenience over
-    :class:`IndexHandle` — no caching, per-batch query-side idf
-    annotation; a query server answering repeated batches should hold an
-    ``open_index`` handle instead). See :meth:`IndexHandle.topk`."""
-    return IndexHandle(
-        spark, index_dir, cache=False, annotate_segments=False
-    ).topk(
+    :class:`IndexHandle` — no caching; a query server answering repeated
+    batches should hold an ``open_index`` handle instead). See
+    :meth:`IndexHandle.topk`."""
+    return IndexHandle(spark, index_dir, cache=False).topk(
         queries, k=k, path=path, query_weighted=query_weighted,
         point_cutoff=point_cutoff, mode=mode, min_match=min_match,
         filter=filter,
@@ -540,9 +532,7 @@ def more_like_this(
     exclude_seed: bool = True,
 ) -> DataFrame:
     """One-shot more-like-this over a built index (thin convenience over
-    :meth:`IndexHandle.more_like_this` — uncached, per-batch idf)."""
-    return IndexHandle(
-        spark, index_dir, cache=False, annotate_segments=False
-    ).more_like_this(
+    :meth:`IndexHandle.more_like_this` — uncached)."""
+    return IndexHandle(spark, index_dir, cache=False).more_like_this(
         pages, seed_ids, k=k, max_terms=max_terms, exclude_seed=exclude_seed
     )

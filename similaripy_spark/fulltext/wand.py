@@ -59,6 +59,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from similaripy_spark.fulltext import codec
+from similaripy_spark.fulltext.docvalues import dv_keep
 from similaripy_spark.fulltext.weights import idf_np, tf_part_np
 from similaripy_spark.operators.topk import top_k
 
@@ -113,8 +114,8 @@ class _ShardIndex:
         self._idf = idf
         self._raw = raw
         self._tomb = tomb if tomb is not None and len(tomb) else None
-        # dv: matcher entries ('dict', base, codes, lut) / ('range', base,
-        # vals, lo, hi) — one per active doc-values filter (docvalues.py).
+        # dv: matcher entries (base, stored values, spec) — one per active
+        # doc-values filter (docvalues.split_dv_rows / dv_keep).
         # Applied in _live_mask (the decode choke point), so every scorer
         # is exact over the filtered corpus, same argument as tombstones.
         self._dv = dv if dv else None
@@ -218,14 +219,8 @@ class _ShardIndex:
             k = self._tomb[pos] != docs
             keep = k if not k.all() else None
         if self._dv is not None:
-            for entry in self._dv:
-                if entry[0] == "range":
-                    _, base, vals, lo, hi = entry
-                    v = vals[docs - base]
-                    k = (v >= lo) & (v <= hi)
-                else:
-                    _, base, codes, lut = entry
-                    k = lut[codes[docs - base]]
+            for base, vals, spec in self._dv:
+                k = dv_keep(spec, vals[docs - base])
                 keep = k if keep is None else (keep & k)
         return None if keep is None or keep.all() else keep
 
@@ -478,31 +473,6 @@ _RANKED_SCHEMA = T.StructType(
 _EMPTY_RANKED = {**_EMPTY_RESULT, "rank": pd.Series(dtype="int32")}
 
 
-def _attach_dfs(queries: DataFrame, term_stats: DataFrame) -> DataFrame:
-    """queries(query_id, terms, ...) → + ``dfs`` array<double> positionally
-    aligned with ``terms``: each term's document frequency, from which the
-    kernel computes its idf (``_idf_map``).
-
-    Distributed by construction: explode the (tiny) query side, join the
-    V-row term_stats — AQE broadcast-converts it when small, shuffle-joins
-    at web-scale vocabularies — and regroup by position. Terms absent from
-    the index get a null df, hence idf 0 (they match no postings anyway)."""
-    dfs = (
-        queries.select(
-            "query_id", F.posexplode("terms").alias("pos", "term")
-        )
-        .join(term_stats.select("term", "df"), "term", "left")
-        .groupBy("query_id")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "df"))),
-                lambda s: s["df"].cast("double"),
-            ).alias("dfs")
-        )
-    )
-    return queries.join(dfs, "query_id", "left")
-
-
 def _idf_map(terms, dfs, n_docs: int) -> dict:
     """term → idf, computed by ``weights.idf_np`` (the one idf of both
     kernel paths) from each term's df; a null df (term absent from the
@@ -536,21 +506,17 @@ def _raw_params_from_meta(meta: dict) -> dict:
 
 
 def segments_with_idf(segments: DataFrame, index_dir: str) -> DataFrame:
-    """Serve-path annotation: join each term's ``df`` onto the segment
-    relation ONCE, at index-load time, so every subsequent ``segment_topk``
-    batch skips the per-batch query-side annotation (posexplode → V-row
-    join → collect_list regroup — two extra exchanges per batch, measured
-    +30% wall on a 10k-query batch at local[32]). Persist the result and
-    hand it to ``segment_topk``; the scorer detects the column and computes
-    its idf lookup from the shard's own rows (``_idf_map``).
+    """Join each term's ``df`` onto the segment relation — the one source
+    of the segment kernel's idf: the scorer computes its idf lookup from
+    the shard's own rows (``_idf_map``). ``IndexHandle`` joins it ONCE, at
+    load, and persists the result, so every batch an index server answers
+    reuses it; ``segment_topk`` joins it itself onto segments that lack
+    the column.
 
     The join keys on term over the block-metadata-sized relation
     (~postings/block_size rows): AQE broadcast-converts the V-row
     term_stats when it is small; at a web-scale vocabulary it
-    shuffle-joins — either way the cost is paid once per load and
-    amortized over every batch an index server answers. A per-batch caller
-    that loads segments fresh each time should NOT use this at large V
-    (the query-side annotation only ever touches the tiny batch)."""
+    shuffle-joins."""
     from similaripy_spark.fulltext.index_build import read_term_stats
 
     term_stats = read_term_stats(segments.sparkSession, index_dir)
@@ -902,8 +868,9 @@ def segment_topk(
     ``index_dir`` is the index ``segments`` were read from: its
     ``meta.json`` (a driver-side file read — no job) gives the shard list
     and the corpus scalars the kernel derives the tf-part at, and its
-    term_stats the per-term idf the query batch is annotated with (unless
-    the segments already carry it — ``segments_with_idf``).
+    term_stats each term's df, joined onto ``segments`` here unless they
+    already carry it (``segments_with_idf``, as ``IndexHandle`` holds
+    them).
     """
     if mode not in ("or", "and"):
         raise ValueError(f"mode must be 'or' or 'and', got {mode!r}")
@@ -930,6 +897,10 @@ def segment_topk(
     # append.py) and applies the term-global idf
     raw_params = _raw_params_from_meta(meta)
     tomb = _tomb_for(index_dir, meta)
+    # the kernel reads each term's df off the shard's own rows; the
+    # sentinel rows below take a null df
+    if "df" not in segments.columns:
+        segments = segments_with_idf(segments, index_dir)
     dv_luts = None
     if dv_filter is not None:
         from similaripy_spark.fulltext import docvalues as _dvmod
@@ -943,20 +914,11 @@ def segment_topk(
                 )
             )
     n_docs = int(meta["n_docs"])
-    # segments pre-annotated with df (segments_with_idf — the serve path)
-    # need no per-batch query-side annotation: the kernel reads the df
-    # straight off the shard's own rows
-    seg_has_df = "df" in segments.columns
-    if not seg_has_df:
-        from similaripy_spark.fulltext.index_build import read_term_stats
-
-        queries = _attach_dfs(queries, read_term_stats(spark, index_dir))
     shards_list = list(range(int(meta["n_shards"])))
     shards = _shard_frame(spark, shards_list)
     qcols = (
         ["query_id", "terms"]
         + (["weights"] if query_weighted else [])
-        + ([] if seg_has_df else ["dfs"])
         + (["not_terms"] if "not_terms" in queries.columns else [])
     )
     def make_score_shard(k_emit: int, with_tau: bool):
@@ -982,16 +944,7 @@ def segment_topk(
                          "doc_id": pd.Series(dtype="int64"),
                          "score": pd.Series(dtype="float64")}
                     )
-            if seg_has_df:
-                idf = _idf_map(seg_pdf["term"], seg_pdf["df"], n_docs)
-            else:
-                pairs = [
-                    p for ts, vs in zip(q_pdf["terms"], q_pdf["dfs"])
-                    if vs is not None for p in zip(ts, vs)
-                ]
-                idf = _idf_map(
-                    [t for t, _ in pairs], [v for _, v in pairs], n_docs
-                )
+            idf = _idf_map(seg_pdf["term"], seg_pdf["df"], n_docs)
             idx = _ShardIndex(
                 seg_pdf, idf=idf, raw=raw_params, tomb=tomb, dv=dv
             )

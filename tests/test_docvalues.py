@@ -22,6 +22,7 @@ from similaripy_spark.fulltext.docvalues import (
     StaleDocValuesError,
     build_docvalues,
     build_lut,
+    collapse_topk,
     facet_counts,
     load_dict,
 )
@@ -43,11 +44,18 @@ N_DOCS = 1500
 @pytest.fixture(scope="module")
 def corpus(spark):
     # lang: 'xx' for doc_id % 20 == 0, else 'en' (sources/pages.py);
-    # bucket: a second derived attribute for multi-field AND tests
+    # bucket: a second derived attribute for multi-field AND tests;
+    # site: NULL for every fourth doc (collapse's NULL singleton groups)
     pages = (
         generate_pages(spark, N_DOCS, vocab_size=400, partitions=8)
         .withColumn(
             "bucket", F.concat(F.lit("b"), (F.col("doc_id") % 3))
+        )
+        .withColumn(
+            "site",
+            F.when(F.col("doc_id") % 4 == 0, F.lit(None)).otherwise(
+                F.concat(F.lit("s"), F.col("doc_id") % 3)
+            ),
         )
         .persist()
     )
@@ -69,9 +77,21 @@ def indexed(spark, corpus, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("dv") / "idx")
     IndexBuilder(d, n_groups=3, shard_size=256).build(corpus)
     build_docvalues(
-        corpus, d, ["lang", "bucket", ("warc_ts", "numeric")]
+        corpus, d, ["lang", "bucket", "site", ("warc_ts", "numeric")]
     )
     return d
+
+
+@pytest.fixture(scope="module")
+def tombstoned(spark, corpus, tmp_path_factory):
+    """An index with every fifth doc (doc_id % 5 == 1) deleted →
+    (index_dir, deleted ids)."""
+    d = str(tmp_path_factory.mktemp("dvfacet") / "idx")
+    IndexBuilder(d, n_groups=2, shard_size=256).build(corpus)
+    build_docvalues(corpus, d, ["lang", "bucket"])
+    deleted = [i for i in range(N_DOCS) if i % 5 == 1]
+    delete_docs(spark, d, deleted)
+    return d, deleted
 
 
 def _rows(df):
@@ -362,9 +382,19 @@ def _facet_twin(corpus, queries, mode="or", drop_ids=None):
     }
 
 
-@pytest.mark.parametrize("mode", ["or", "and"])
+@pytest.mark.parametrize("mode,cap", [
+    pytest.param("or", None, id="or"),
+    pytest.param("and", None, id="and"),
+    pytest.param("or", 1, id="or-cap1"),
+])
 def test_facet_counts_match_relational(spark, corpus, queries, indexed,
-                                       mode):
+                                       monkeypatch, mode, cap):
+    """cap=1 puts the batch's terms above the term-pushdown cap, so the
+    scan semi-joins a broadcast of them instead of a literal isin."""
+    if cap is not None:
+        from similaripy_spark.fulltext import docvalues
+
+        monkeypatch.setattr(docvalues, "TERM_PUSHDOWN_CAP", cap)
     got = {
         (r.query_id, r.value): r.n_docs
         for r in facet_counts(
@@ -556,70 +586,98 @@ def test_partial_field_rebuild_on_moved_index_rejected(
     assert got
 
 
-def test_collapse_topk_matches_relational(spark, corpus, queries, indexed):
-    """Field collapsing: at most per_value docs per attribute value; the
-    twin computes full relational BM25, per-(query,value) row_number,
-    then global top-k."""
+def _collapse_twin(corpus, queries, field, mode="or", keep=None,
+                   drop_ids=None, k=5, per_value=2):
+    """Relational collapse oracle: full BM25 over the corpus tables
+    (whole-corpus weights), AND on the distinct-term count, the
+    attribute/deletion restriction, per-(query, value) row_number with a
+    NULL value its own group per doc, then global top-k."""
     from pyspark.sql import Window
 
-    from similaripy_spark.fulltext.docvalues import collapse_topk
     from similaripy_spark.operators.topk import top_k
 
-    got = [
-        (r.query_id, r.doc_id, r.value, round(r.score, 6))
-        for r in collapse_topk(
-            spark, queries, indexed, "bucket", k=5, per_value=2
-        ).orderBy("query_id", "rank").collect()
-    ]
     w = bm25_weights(build_postings(corpus))
     qt = queries.select(
         "query_id", F.explode("terms").alias("term")
     ).filter(F.col("term") != "").distinct()
-    scored = (
-        qt.join(w, "term")
-        .groupBy("query_id", "doc_id")
-        .agg(F.sum("weight").alias("score"))
-        .join(corpus.select("doc_id", "bucket"), "doc_id")
+    scored = qt.join(w, "term").groupBy("query_id", "doc_id").agg(
+        F.sum("weight").alias("score"), F.count("*").alias("nm")
     )
-    vw = Window.partitionBy("query_id", "bucket").orderBy(
+    if mode == "and":
+        need = qt.groupBy("query_id").agg(F.count("*").alias("need"))
+        scored = scored.join(need, "query_id").filter(
+            F.col("nm") == F.col("need")
+        )
+    docs = corpus if keep is None else corpus.filter(keep)
+    if drop_ids:
+        docs = docs.filter(~F.col("doc_id").isin(drop_ids))
+    scored = scored.join(
+        docs.select("doc_id", F.col(field).alias("value")), "doc_id"
+    )
+    grp = F.coalesce(
+        F.col("value"), F.concat(F.lit("\x00"), F.col("doc_id").cast("string"))
+    )
+    vw = Window.partitionBy("query_id", grp).orderBy(
         F.col("score").desc(), F.col("doc_id").asc()
     )
     best = scored.withColumn("vr", F.row_number().over(vw)).filter(
-        F.col("vr") <= 2
+        F.col("vr") <= per_value
     )
-    want = [
-        (r.query_id, r.doc_id, r.bucket, round(r.score, 6))
+    return [
+        (r.query_id, r.doc_id, r.value, round(r.score, 6))
         for r in top_k(
-            best.select("query_id", "doc_id", "bucket", "score"),
-            5, group="query_id", order_value="score", tiebreak="doc_id",
+            best.select("query_id", "doc_id", "value", "score"),
+            k, group="query_id", order_value="score", tiebreak="doc_id",
             keep_rank=True,
         ).orderBy("query_id", "rank").collect()
     ]
+
+
+def test_collapse_topk_matches_relational(spark, corpus, queries, indexed,
+                                          tombstoned):
+    """Field collapsing: at most per_value docs per attribute value, in
+    OR and AND mode, under a dv_filter, over a tombstoned index, and with
+    NULL-attribute docs (each its own group)."""
+    for case in ("or", "and", "filter", "tombstones", "null"):
+        _check_collapse(spark, corpus, queries, indexed, tombstoned, case)
+    with pytest.raises(ValueError):
+        collapse_topk(spark, queries, indexed, "warc_ts", k=5)
+
+
+def _check_collapse(spark, corpus, queries, indexed, tombstoned, case):
+    from collections import Counter
+
+    field = "site" if case == "null" else "bucket"
+    d, deleted = tombstoned if case == "tombstones" else (indexed, None)
+    mode = "and" if case == "and" else "or"
+    keep = (F.col("lang") == "en") if case == "filter" else None
+    got = [
+        (r.query_id, r.doc_id, r.value, round(r.score, 6))
+        for r in collapse_topk(
+            spark, queries, d, field, k=5, per_value=2, mode=mode,
+            dv_filter={"lang": ["en"]} if case == "filter" else None,
+        ).orderBy("query_id", "rank").collect()
+    ]
+    want = _collapse_twin(
+        corpus, queries, field, mode=mode, keep=keep, drop_ids=deleted
+    )
     assert [(q, d, v) for q, d, v, _ in got] == [
         (q, d, v) for q, d, v, _ in want
     ]
     assert np.allclose(
         [s for *_, s in got], [s for *_, s in want], rtol=1e-9
     )
-    # collapsing bites: no query has >2 docs of one bucket
-    from collections import Counter
-
+    assert len(got) > 0, case
+    # collapsing bites: no query has >2 docs of one (non-NULL) value
     for qid in {q for q, *_ in got}:
-        c = Counter(v for q, _, v, _ in got if q == qid)
-        assert max(c.values()) <= 2
-    assert len(got) > 0
-    with pytest.raises(ValueError):
-        collapse_topk(spark, queries, indexed, "warc_ts", k=5)
+        c = Counter(v for q, _, v, _ in got if q == qid and v is not None)
+        assert max(c.values(), default=0) <= 2, case
+    if case == "null":
+        assert any(v is None for _, _, v, _ in got)
 
 
-def test_facet_counts_exclude_tombstones(
-    spark, corpus, queries, tmp_path_factory
-):
-    d = str(tmp_path_factory.mktemp("dvfacet") / "idx")
-    IndexBuilder(d, n_groups=2, shard_size=256).build(corpus)
-    build_docvalues(corpus, d, ["lang"])
-    deleted = [i for i in range(N_DOCS) if i % 5 == 1]
-    delete_docs(spark, d, deleted)
+def test_facet_counts_exclude_tombstones(spark, corpus, queries, tombstoned):
+    d, deleted = tombstoned
     got = {
         (r.query_id, r.value): r.n_docs
         for r in facet_counts(spark, queries, d, "lang").collect()

@@ -318,37 +318,38 @@ def test_encoder_parity():
 
 
 def test_segments_with_idf_serve_path_parity(spark, tmp_path):
-    """segments_with_idf pre-joins df onto an index's segments
-    (one-time, at load) — scoring through it must be IDENTICAL (doc ids
-    and float-exact scores: same kernel arithmetic, only the df lookup
-    source differs) to the per-batch query-side annotation. Pre-annotated
-    segments feed only the segment batch scorer; the term-major path reads
-    the merged layout."""
+    """The segment kernel has one df source, the segment rows: plain
+    segments get df joined on inside segment_topk (segments_with_idf),
+    pre-annotated ones (as IndexHandle holds them) carry it already —
+    both must give IDENTICAL rows (doc ids and float-exact scores)."""
+    from similaripy_spark.fulltext.docvalues import build_docvalues
     from similaripy_spark.fulltext.wand import segments_with_idf
 
     d = str(tmp_path / "serve")
     pages = generate_pages(spark, N_DOCS, vocab_size=VOCAB)
     IndexBuilder(d, shard_size=256, n_groups=2).build(pages)
+    build_docvalues(pages, d, ["lang"])
     queries = spark.createDataFrame(
         generate_queries_pandas(40, vocab_size=VOCAB)
     )
     plain = read_segments(spark, d)
     served = segments_with_idf(plain, d)
     assert "df" in served.columns and "df" not in plain.columns
-    a = (
-        segment_topk(plain, queries, k=10, index_dir=d)
-        .toPandas().sort_values(["query_id", "rank"])
-        .reset_index(drop=True)
-    )
-    b = (
-        segment_topk(served, queries, k=10, index_dir=d)
-        .toPandas().sort_values(["query_id", "rank"])
-        .reset_index(drop=True)
-    )
-    assert list(a["doc_id"]) == list(b["doc_id"])
-    np.testing.assert_array_equal(
-        a["score"].to_numpy(), b["score"].to_numpy()
-    )
+    # the filtered case unions the doc-values sentinel rows after the df
+    # join on the plain side and after the load-time one on the served side
+    for dv_filter in (None, {"lang": ["en"]}):
+        a, b = (
+            segment_topk(seg, queries, k=10, index_dir=d,
+                         dv_filter=dv_filter)
+            .toPandas().sort_values(["query_id", "rank"])
+            .reset_index(drop=True)
+            for seg in (plain, served)
+        )
+        assert len(a) > 0
+        assert list(a["doc_id"]) == list(b["doc_id"])
+        np.testing.assert_array_equal(
+            a["score"].to_numpy(), b["score"].to_numpy()
+        )
 
 
 @pytest.fixture(scope="module")
@@ -465,13 +466,14 @@ def test_term_stats_driver_path_matches_spark_job(spark, tmp_path, monkeypatch):
     """The small-index driver-side term_stats aggregate (pyarrow over the
     committed block metadata) must be value- AND dtype-identical to the
     Spark-job aggregate it replaces below the block-count gate."""
+    from similaripy_spark.fulltext import index_build
     from similaripy_spark.fulltext.index_build import read_term_stats
 
     pages = generate_pages(spark, 700, vocab_size=900)
     d_drv = str(tmp_path / "ts_drv")
     IndexBuilder(d_drv, shard_size=256, n_groups=2).build(pages)
     d_job = str(tmp_path / "ts_job")
-    monkeypatch.setenv("SIMILARIPY_TERM_STATS_DRIVER_MAX_BLOCKS", "0")
+    monkeypatch.setattr(index_build, "TERM_STATS_DRIVER_MAX_BLOCKS", 0)
     IndexBuilder(d_job, shard_size=256, n_groups=2).build(pages)
     a = read_term_stats(spark, d_drv)
     b = read_term_stats(spark, d_job)

@@ -79,9 +79,11 @@ def main():
 
     qs, oracles = E.queries(), E.oracle_sql()
     failures = []
+    n_run = 0
     for name, fn in qs.items():
         if only and name not in only:
             continue
+        n_run += 1
         t0 = time.monotonic()
         try:
             got = fn(spark, sf_dir).toPandas()
@@ -105,7 +107,7 @@ def main():
             print(f"FAIL  {name:28s} {diff}")
         else:
             print(f"ok    {name:28s} {len(got):7d} rows  {dt:5.1f}s")
-    print(f"\n{len(qs) - len(failures)}/{len(qs)} ok")
+    print(f"\n{n_run - len(failures)}/{n_run} ok")
     spark.stop()
     return 1 if failures else 0
 
