@@ -42,14 +42,14 @@ exactly the task that scores that shard. The allowed-code lookup table
 (bool array the size of the field's dictionary) ships in the task closure.
 
 The relational operators (:func:`filter_docs`, :func:`facet_counts`,
-:func:`facet_stats`, :func:`sort_topk`, :func:`collapse_topk`) share three
-private jobs: one term scan (``_live_postings``: the query batch's terms
-filter the segment scan, decoded, tombstones dropped), one float64 BM25
-scorer (``_bm25_scores``, also the phrase composition of
-querylang.search) and one per-shard cogroup gather (``_gather``) that
-appends each row's stored value from the positional array (traffic ∝
-rows + sidecar size, never corpus text). Everything after the gather —
-filters, aggregates, rankings — is Spark expressions.
+:func:`facet_stats`, :func:`sort_topk`, :func:`collapse_topk`) share one
+per-shard cogroup gather (``_gather``) that appends each row's stored
+value from the positional array (traffic ∝ rows + sidecar size, never
+corpus text), and score or match through query.py's index helpers (the
+term scan ``live_postings``: the query batch's terms filter the segment
+scan, decoded, tombstones dropped; the float64 BM25 scorer
+``bm25_scores``). Everything after the gather — aggregates, rankings —
+is Spark expressions; filter_docs applies :func:`dv_keep` inside it.
 
 Staleness: ``_meta.json`` pins the main index's (n_epochs, n_docs); a
 sidecar older than the index (``append_to_index`` grows both) raises
@@ -77,6 +77,12 @@ from similaripy_spark.fulltext.commit import (
     resolve_artifact,
 )
 from similaripy_spark.fulltext.index_build import read_meta
+from similaripy_spark.fulltext.query import (
+    all_terms,
+    bm25_scores,
+    live_postings,
+    query_terms,
+)
 
 #: sentinel term prefix for doc-values rows unioned into a segment relation
 #: ("\\x00" sorts before every real token and can never be produced by the
@@ -89,11 +95,6 @@ MAX_CARDINALITY = 65534
 #: numeric doc-values: int64 per doc; NULL / doc-absent stores the int64
 #: minimum, which no closed [lo, hi] range with lo > INT64_MIN matches
 NUMERIC_NULL = np.iinfo(np.int64).min
-
-#: a query batch with at most this many distinct terms filters the segment
-#: scan with a literal ``isin`` (the predicate reaches the parquet
-#: row-group stats); a larger one semi-joins a broadcast of its terms
-TERM_PUSHDOWN_CAP = 10000
 
 #: the column ``_gather`` appends: the stored dictionary code (int) or
 #: numeric value (long) of each row's document
@@ -659,16 +660,14 @@ def resolve_filter(index_dir: str, dv_filter: dict) -> dict:
     return specs
 
 
-def dv_keep(spec: tuple, vals):
-    """Keep mask of a ``resolve_filter`` matcher spec over stored values:
-    a numpy array in the kernel (wand._ShardIndex._live_mask), a Spark
-    column in :func:`filter_docs`. A range is closed; a LUT never allows
-    code 0, and NUMERIC_NULL lies below every range's lo, so a NULL
-    attribute never matches."""
+def dv_keep(spec: tuple, vals: np.ndarray) -> np.ndarray:
+    """Keep mask of a ``resolve_filter`` matcher spec over an array of
+    stored values — the kernel's (wand._ShardIndex._live_mask) and
+    :func:`filter_docs`'s (inside ``_gather``). A range is closed; a LUT
+    never allows code 0, and NUMERIC_NULL lies below every range's lo, so
+    a NULL attribute never matches."""
     if spec[0] == "range":
         return (vals >= spec[1]) & (vals <= spec[2])
-    if isinstance(vals, Column):
-        return vals.isin(np.flatnonzero(spec[1]).tolist())
     return spec[1][vals]
 
 
@@ -712,10 +711,13 @@ def _with_shard(frame: DataFrame, meta: dict) -> DataFrame:
     )
 
 
-def _gather(frame: DataFrame, index_dir: str, field: str) -> DataFrame:
+def _gather(frame: DataFrame, index_dir: str, field: str,
+            keep: tuple | None = None) -> DataFrame:
     """``frame`` (any rows carrying ``doc_id`` and ``shard``) + ``DV_COL``:
     each row's stored value of ``field`` — the uint16 dictionary code as
     int (0 = NULL), or the int64 numeric value (NUMERIC_NULL = NULL).
+    ``keep`` (a ``resolve_filter`` matcher spec) drops the rows whose
+    value fails :func:`dv_keep`, in the same numpy step.
 
     One per-shard cogroup against the field's positional codes rows, so
     the traffic is the frame's rows plus the sidecar bytes. Rows of a
@@ -736,9 +738,10 @@ def _gather(frame: DataFrame, index_dir: str, field: str) -> DataFrame:
             m_pdf["doc_id"].to_numpy(np.int64)
             - int(dv_pdf["base_doc"].iloc[0])
         ]
-        return m_pdf.assign(**{DV_COL: vals.astype(
+        out = m_pdf.assign(**{DV_COL: vals.astype(
             np.int64 if numeric else np.int32
         )})
+        return out if keep is None else out[dv_keep(keep, vals)]
 
     codes = read_codes(frame.sparkSession, index_dir, field)
     return (
@@ -748,85 +751,11 @@ def _gather(frame: DataFrame, index_dir: str, field: str) -> DataFrame:
     )
 
 
-def _query_terms(queries: DataFrame) -> DataFrame:
-    """The distinct non-empty (query_id, term) pairs of a query batch."""
-    from similaripy_spark.fulltext.retrieve import _ensure_terms
-
-    return (
-        _ensure_terms(queries)
-        .select("query_id", F.explode("terms").alias("term"))
-        .filter(F.col("term") != "")
-        .distinct()
-    )
-
-
-def _live_postings(spark: SparkSession, index_dir: str, meta: dict,
-                   terms: DataFrame) -> DataFrame:
-    """Decoded postings (doc_id, term, tf, dl) of the distinct ``terms``
-    (a one-column ``term`` frame) over the LIVE corpus: the terms filter
-    the segment scan (a literal ``isin`` up to TERM_PUSHDOWN_CAP terms, a
-    broadcast semi-join above it), the surviving blocks are decoded, and
-    tombstoned docs are dropped."""
-    from similaripy_spark.fulltext.index_build import read_segments
-    from similaripy_spark.fulltext.index_merge import decode_segments
-
-    seg = read_segments(spark, index_dir)
-    lit = [r[0] for r in terms.limit(TERM_PUSHDOWN_CAP + 1).collect()]
-    if len(lit) <= TERM_PUSHDOWN_CAP:
-        seg = seg.filter(F.col("term").isin(lit))
-    else:
-        seg = seg.join(F.broadcast(terms), "term", "semi")
-    posted = decode_segments(seg)
-    if meta.get("n_tombstone_epochs"):
-        from similaripy_spark.fulltext.delete import read_tombstones
-
-        posted = posted.join(
-            read_tombstones(spark, index_dir), "doc_id", "left_anti"
-        )
-    return posted
-
-
-def _bm25_scores(qterms: DataFrame, postings: DataFrame, index_dir: str,
-                 meta: dict) -> DataFrame:
-    """(query_id, doc_id, score, n_matched): the exact float64 reference
-    BM25 of every (query, doc) pair that shares a term — distinct
-    ``qterms`` (query_id, term) ⋈ ``bm25_tf_part`` of the decoded postings
-    at the index's (k1, b, avgdl) ⋈ ``idf_table`` of its term_stats, then
-    Σ weight·idf. ``n_matched`` counts the query terms the doc contains
-    (an AND filter compares it with the query's term count)."""
-    from similaripy_spark.fulltext.index_build import read_term_stats
-    from similaripy_spark.fulltext.weights import bm25_tf_part, idf_table
-
-    tfp = bm25_tf_part(
-        postings, k1=float(meta["k1"]), b=float(meta["b"]),
-        avgdl=float(meta["avgdl"]),
-    )
-    idf = idf_table(
-        read_term_stats(postings.sparkSession, index_dir),
-        int(meta["n_docs"]),
-    )
-    return (
-        qterms.join(tfp, "term")
-        .join(idf, "term")
-        .groupBy("query_id", "doc_id")
-        .agg(
-            F.sum(F.col("weight") * F.col("idf")).alias("score"),
-            F.count("*").alias("n_matched"),
-        )
-    )
-
-
-def _all_terms(matched: DataFrame, qterms: DataFrame) -> DataFrame:
-    """Keep the (query, doc) rows whose ``n_matched`` equals the query's
-    distinct-term count (AND semantics — a HAVING)."""
-    need = qterms.groupBy("query_id").agg(F.count("*").alias("__need"))
-    return matched.join(need, "query_id").filter(
-        F.col("n_matched") == F.col("__need")
-    )
-
-
 def _check_field(index_dir: str, field: str, kind: str, op: str,
-                 mode: str = "or") -> None:
+                 mode: str = "or", hint: str = "") -> None:
+    """An operator's shared prologue: a valid ``mode``, a fresh sidecar
+    and a field of ``kind``; ``hint`` ends the wrong-kind error with what
+    to do instead."""
     if mode not in ("or", "and"):
         raise ValueError(f"mode must be 'or' or 'and', got {mode!r}")
     check_docvalues_fresh(index_dir, [field])
@@ -835,7 +764,7 @@ def _check_field(index_dir: str, field: str, kind: str, op: str,
         names = {"dict": "dictionary-encoded", "numeric": "numeric"}
         raise ValueError(
             f"{op} needs a {names[kind]} field; {field!r} is "
-            f"{names[actual]}"
+            f"{names[actual]}" + (f" ({hint})" if hint else "")
         )
 
 
@@ -850,10 +779,11 @@ def filter_docs(
     whose attributes satisfy ``dv_filter`` (same predicate forms as
     ``resolve_filter``, same :func:`dv_keep` semantics). Candidate-driven
     — per field, the CANDIDATE docs' values are gathered from the
-    positional arrays (``_gather``), filtered, and semi-joined back. Used
-    by the query-string phrase composition (querylang.py) and the
-    ``dv_filter`` of sort_topk / collapse_topk; parity with the kernel
-    path is pinned in tests."""
+    positional arrays and filtered in the same step (``_gather`` with
+    ``keep``), and the survivors semi-joined back. Used by the
+    query-string phrase composition (querylang.py) and the ``dv_filter``
+    of sort_topk / collapse_topk; parity with the kernel path is pinned
+    in tests."""
     specs = resolve_filter(index_dir, dv_filter)
     meta = read_meta(index_dir)
     out = docs
@@ -863,11 +793,11 @@ def filter_docs(
             .distinct(),
             meta,
         )
-        kept = _gather(ids, index_dir, sent_term[len(DV_TERM_PREFIX):])
+        kept = _gather(
+            ids, index_dir, sent_term[len(DV_TERM_PREFIX):], keep=spec
+        )
         out = out.join(
-            kept.filter(dv_keep(spec, F.col(DV_COL)))
-            .select(F.col("doc_id").alias(id_col)),
-            id_col, "left_semi",
+            kept.select(F.col("doc_id").alias(id_col)), id_col, "left_semi"
         )
     return out
 
@@ -880,19 +810,19 @@ def match_set(
 ) -> DataFrame:
     """The DISTINCT live (query_id, doc_id, shard) match set of a query
     batch — the relation every facet/stats aggregation runs over: the
-    batch's live postings (``_live_postings``) ⋈ its distinct terms;
+    batch's live postings (``query.live_postings``) ⋈ its distinct terms;
     ``mode='and'`` keeps docs matching every distinct query term (HAVING
     on the matched-term count)."""
     if mode not in ("or", "and"):
         raise ValueError(f"mode must be 'or' or 'and', got {mode!r}")
     meta = read_meta(index_dir)
-    qterms = _query_terms(queries)
-    posted = _live_postings(
+    qterms = query_terms(queries)
+    posted = live_postings(
         spark, index_dir, meta, qterms.select("term").distinct()
     )
     matches = qterms.join(posted.select("term", "doc_id"), "term")
     if mode == "and":
-        matches = _all_terms(
+        matches = all_terms(
             matches.groupBy("query_id", "doc_id")
             .agg(F.count("*").alias("n_matched")),
             qterms,
@@ -921,7 +851,10 @@ def facet_counts(
     Corpus-stat semantics match filtered retrieval: counts are over the
     LIVE corpus (tombstones excluded), values NULL for docs with no
     dictionary entry."""
-    _check_field(index_dir, field, "dict", "facet_counts", mode)
+    _check_field(
+        index_dir, field, "dict", "facet_counts", mode,
+        hint="bucket it into a dict field at build time to facet",
+    )
     return (
         _gather(match_set(spark, queries, index_dir, mode=mode),
                 index_dir, field)
@@ -993,11 +926,12 @@ def collapse_topk(
     (query_id, doc_id, value, score, rank).
 
     Exact by construction: every live match is scored RELATIONALLY with
-    the index's own statistics (``_live_postings`` → ``_bm25_scores``,
-    float64; ``mode='and'`` keeps docs with every query term), the
-    gathered dictionary code (``_gather``) keys a per-value row_number
-    that keeps the best ``per_value`` docs of each (query, value) group
-    under the engine tie rule, and the global top-k ranks the survivors.
+    the index's own statistics (``query.live_postings`` →
+    ``query.bm25_scores``, float64; ``mode='and'`` keeps docs with every
+    query term), the gathered dictionary code (``_gather``) keys a
+    per-value row_number that keeps the best ``per_value`` docs of each
+    (query, value) group under the engine tie rule, and the global top-k
+    ranks the survivors.
     A kernel top-k then collapse would be INEXACT (a value's second doc
     could crowd out another value's best); scoring the full match set is
     the honest cost, the same Σ df(query terms) every facet aggregation
@@ -1012,16 +946,16 @@ def collapse_topk(
     from similaripy_spark.operators.topk import top_k
 
     meta = read_meta(index_dir)
-    qterms = _query_terms(queries)
-    scored = _bm25_scores(
+    qterms = query_terms(queries)
+    scored = bm25_scores(
         qterms,
-        _live_postings(
+        live_postings(
             spark, index_dir, meta, qterms.select("term").distinct()
         ),
         index_dir, meta,
     )
     if mode == "and":
-        scored = _all_terms(scored, qterms)
+        scored = all_terms(scored, qterms)
     scored = scored.select("query_id", "doc_id", "score")
     if dv_filter:
         scored = filter_docs(spark, scored, index_dir, dv_filter)
@@ -1062,7 +996,10 @@ def facet_stats(
     the int64 value gathered instead of the dictionary code; NULL-valued
     docs (NUMERIC_NULL sentinel) are excluded from every statistic,
     tombstones from the match set."""
-    _check_field(index_dir, field, "numeric", "facet_stats", mode)
+    _check_field(
+        index_dir, field, "numeric", "facet_stats", mode,
+        hint="use facet_counts for value counts",
+    )
     v = F.col(DV_COL)
     gathered = _gather(
         match_set(spark, queries, index_dir, mode=mode), index_dir, field

@@ -73,6 +73,7 @@ import os
 import shutil
 
 import numpy as np
+import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -548,15 +549,14 @@ def _positions_for(
     spark: SparkSession,
     index_dir: str,
     shard_size: int,
-    term_rel: DataFrame,
+    terms: list,
     docs_rel: DataFrame,
 ) -> DataFrame:
-    """Long-form positions restricted to a term set and a doc set: the
-    query vocabulary is tiny (driver-side distinct collect) → parquet
-    predicate pushdown on the sidecar scan; block doc-range skipping
-    against the doc set's per-shard [min, max] ranges; Arrow decode of the
-    surviving blocks only."""
-    terms = [r[0] for r in term_rel.distinct().collect()]
+    """Long-form positions restricted to a term list (the query
+    vocabulary, collected to the driver: it is tiny) and a doc set:
+    parquet predicate pushdown of the terms on the sidecar scan; block
+    doc-range skipping against the doc set's per-shard [min, max] ranges;
+    Arrow decode of the surviving blocks only."""
     blocks = read_positions(spark, index_dir).filter(
         F.col("term").isin(terms)
     )
@@ -622,7 +622,8 @@ def best_window_spans(
     ).distinct()
     p = pairs.select("query_id", "doc_id")
     long = _positions_for(
-        spark, index_dir, int(meta["shard_size"]), qterms.select("term"), p
+        spark, index_dir, int(meta["shard_size"]),
+        [r[0] for r in qterms.select("term").distinct().collect()], p,
     )
     occ = long.join(qterms, "term").join(p, ["query_id", "doc_id"], "left_semi")
     a = occ.select(
@@ -699,8 +700,8 @@ def phrase_topk_pos(
     Queries carry ``phrase`` (raw string, build-tokenized) or an ordered
     ``terms`` array. Raises StalePositionsError if the sidecar predates the
     index's current epoch (see module docstring)."""
+    from similaripy_spark.fulltext.query import term_segments
     from similaripy_spark.fulltext.wand import segment_topk
-    from similaripy_spark.fulltext.index_build import read_segments
     from similaripy_spark.operators.topk import top_k
 
     check_positions_fresh(index_dir)
@@ -714,8 +715,21 @@ def phrase_topk_pos(
     q = queries.filter(F.size("terms") > 0).select("query_id", "terms")
     meta = read_meta(index_dir)
     shard_size = int(meta["shard_size"])
+    # one driver collect of the phrase vocabulary filters both scans:
+    # only its blocks reach the kernel (so the kernel's df join is
+    # query-sized), and only its positions are decoded
+    terms = [
+        r[0]
+        for r in q.select(F.explode("terms").alias("term")).distinct()
+        .collect()
+    ]
     cand = segment_topk(
-        read_segments(spark, index_dir),
+        term_segments(
+            spark, index_dir,
+            spark.createDataFrame(
+                pd.DataFrame({"term": terms}), "term string"
+            ),
+        ),
         q,
         k=1 << 62,
         mode="and",
@@ -729,9 +743,7 @@ def phrase_topk_pos(
     n_off = q.select(
         "query_id", F.size("terms").alias("n_off")
     )
-    long = _positions_for(
-        spark, index_dir, shard_size, offsets.select("term"), cand
-    )
+    long = _positions_for(spark, index_dir, shard_size, terms, cand)
     occ = long.join(offsets, "term").join(
         cand.select("query_id", "doc_id"), ["query_id", "doc_id"],
         "left_semi",

@@ -24,14 +24,28 @@ UNHINTED so AQE broadcast-converts it only when the measured size is small
 otherwise (VERDICT r2 finding 1). The postings side is term-partitioned
 parquet so the join prunes to exactly the touched terms (predicate pushdown
 on ``term``).
+
+The same composition over a BUILT index (its segment blocks, term_stats
+and tombstones) is spelled by four helpers, shared by the relational
+doc-values operators (docvalues.py), the query-string phrase composition
+(querylang.py) and the phrase kernels' candidate scans: ``term_segments``
+(the segment rows of a batch's terms), ``live_postings`` (those rows
+decoded, tombstones dropped), ``bm25_scores`` (the exact float64 BM25
+sum per (query, doc)) and ``all_terms`` (its AND filter).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from similaripy_spark.operators.topk import top_k
+
+#: a query batch with at most this many distinct terms filters the segment
+#: scan with a literal ``isin`` (the predicate reaches the parquet
+#: row-group stats, and the optimizer carries it across a join on term); a
+#: larger one semi-joins a broadcast of its terms
+TERM_PUSHDOWN_CAP = 10000
 
 
 def bm25_topk(
@@ -101,3 +115,87 @@ def bm25_topk(
         keep_rank=True,
     )
     return out.select("query_id", "doc_id", "score", "rank")
+
+
+def query_terms(queries: DataFrame) -> DataFrame:
+    """The distinct non-empty (query_id, term) pairs of a query batch."""
+    from similaripy_spark.fulltext.retrieve import _ensure_terms
+
+    return (
+        _ensure_terms(queries)
+        .select("query_id", F.explode("terms").alias("term"))
+        .filter(F.col("term") != "")
+        .distinct()
+    )
+
+
+def term_segments(spark: SparkSession, index_dir: str,
+                  terms: DataFrame) -> DataFrame:
+    """The segment rows of the distinct ``terms`` (a one-column ``term``
+    frame): a literal ``isin`` up to TERM_PUSHDOWN_CAP terms, a broadcast
+    semi-join above it. Under the cap the optimizer carries the literal
+    across a join on term, so a df join onto the result
+    (``wand.segment_topk``) scans only those terms' term_stats rows."""
+    from similaripy_spark.fulltext.index_build import read_segments
+
+    seg = read_segments(spark, index_dir)
+    lit = [r[0] for r in terms.limit(TERM_PUSHDOWN_CAP + 1).collect()]
+    if len(lit) <= TERM_PUSHDOWN_CAP:
+        return seg.filter(F.col("term").isin(lit))
+    return seg.join(F.broadcast(terms), "term", "semi")
+
+
+def live_postings(spark: SparkSession, index_dir: str, meta: dict,
+                  terms: DataFrame) -> DataFrame:
+    """Decoded postings (doc_id, term, tf, dl) of the distinct ``terms``
+    over the LIVE corpus: the ``term_segments`` blocks, decoded, with
+    tombstoned docs dropped."""
+    from similaripy_spark.fulltext.index_merge import decode_segments
+
+    posted = decode_segments(term_segments(spark, index_dir, terms))
+    if meta.get("n_tombstone_epochs"):
+        from similaripy_spark.fulltext.delete import read_tombstones
+
+        posted = posted.join(
+            read_tombstones(spark, index_dir), "doc_id", "left_anti"
+        )
+    return posted
+
+
+def bm25_scores(qterms: DataFrame, postings: DataFrame, index_dir: str,
+                meta: dict) -> DataFrame:
+    """(query_id, doc_id, score, n_matched): the exact float64 reference
+    BM25 of every (query, doc) pair that shares a term — distinct
+    ``qterms`` (query_id, term) ⋈ ``bm25_tf_part`` of the decoded postings
+    at the index's (k1, b, avgdl) ⋈ ``idf_table`` of its term_stats, then
+    Σ weight·idf. ``n_matched`` counts the query terms the doc contains
+    (``all_terms`` compares it with the query's term count)."""
+    from similaripy_spark.fulltext.index_build import read_term_stats
+    from similaripy_spark.fulltext.weights import bm25_tf_part, idf_table
+
+    tfp = bm25_tf_part(
+        postings, k1=float(meta["k1"]), b=float(meta["b"]),
+        avgdl=float(meta["avgdl"]),
+    )
+    idf = idf_table(
+        read_term_stats(postings.sparkSession, index_dir),
+        int(meta["n_docs"]),
+    )
+    return (
+        qterms.join(tfp, "term")
+        .join(idf, "term")
+        .groupBy("query_id", "doc_id")
+        .agg(
+            F.sum(F.col("weight") * F.col("idf")).alias("score"),
+            F.count("*").alias("n_matched"),
+        )
+    )
+
+
+def all_terms(matched: DataFrame, qterms: DataFrame) -> DataFrame:
+    """Keep the (query, doc) rows whose ``n_matched`` equals the query's
+    distinct-term count (AND semantics — a HAVING)."""
+    need = qterms.groupBy("query_id").agg(F.count("*").alias("__need"))
+    return matched.join(need, "query_id").filter(
+        F.col("n_matched") == F.col("__need")
+    )

@@ -27,10 +27,10 @@ one string per call, the interactive-search server path:
   set comes from the positional path (posting-list intersection +
   ordered-position verification, positional.phrase_topk_pos), phrase sets
   intersect, and the survivors are scored RELATIONALLY over all ranked
-  terms with the index's own statistics, through the same two helpers as
-  docvalues.collapse_topk: the term scan (``_live_postings`` — decoded
-  (tf, dl) blocks of the ranked and NOT terms under term pushdown,
-  tombstones dropped) and the float64 scorer (``_bm25_scores`` —
+  terms with the index's own statistics, through the same two query.py
+  helpers as docvalues.collapse_topk: the term scan (``live_postings`` —
+  decoded (tf, dl) blocks of the ranked and NOT terms under term pushdown,
+  tombstones dropped) and the float64 scorer (``bm25_scores`` —
   bm25_tf_part at the index's (k1, b, avgdl) ⋈ idf_table(term_stats, N)),
   exact reference BM25, independent of the kernels' float32 rounding
   (tf and dl ride in every block precisely so readers can re-derive
@@ -228,12 +228,9 @@ def search(
         return handle.topk(qdf, k=k, filter=filters, path="segment")
 
     # --- phrase composition (candidate-driven) ---------------------------
-    from similaripy_spark.fulltext.docvalues import (
-        _bm25_scores,
-        _live_postings,
-        filter_docs,
-    )
+    from similaripy_spark.fulltext.docvalues import filter_docs
     from similaripy_spark.fulltext.positional import phrase_topk_pos
+    from similaripy_spark.fulltext.query import bm25_scores, live_postings
     from similaripy_spark.operators.topk import top_k
 
     meta = read_meta(index_dir)
@@ -251,7 +248,7 @@ def search(
     verified = reduce(lambda a, b: a.join(b, "doc_id"), phrase_sets)
 
     need = ranked + [t for t in p["not_terms"] if t not in ranked]
-    decoded = _live_postings(
+    decoded = live_postings(
         spark, index_dir, meta,
         spark.createDataFrame(pd.DataFrame({"term": need}), "term string"),
     )
@@ -270,7 +267,7 @@ def search(
         pd.DataFrame({"query_id": [int(query_id)], "terms": [ranked]}),
         "query_id long, terms array<string>",
     ).select("query_id", F.explode("terms").alias("term"))
-    scored = _bm25_scores(
+    scored = bm25_scores(
         qterms, decoded.join(verified, "doc_id", "left_semi"), index_dir,
         meta,
     )

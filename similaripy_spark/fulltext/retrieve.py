@@ -479,6 +479,7 @@ def phrase_topk(
     keeps the pages relation the single source of truth for text, and its
     verification filter is JVM-codegen (no Python in the loop).
     """
+    from similaripy_spark.fulltext.query import term_segments
     from similaripy_spark.fulltext.tokenizer import TOKEN_SPLIT_RE, tokenize_expr
     from similaripy_spark.operators.topk import top_k
 
@@ -499,9 +500,14 @@ def phrase_topk(
             F.lit("($|" + TOKEN_SPLIT_RE + ")"),
         ).alias("pattern"),
     )
-    # every AND match, no per-shard cap (k_emit = huge), no deep paging
+    # every AND match, no per-shard cap (k_emit = huge), no deep paging;
+    # only the phrase terms' blocks reach the kernel, so its df join is
+    # query-sized
     cand = segment_topk(
-        read_segments(spark, index_dir),
+        term_segments(
+            spark, index_dir,
+            q.select(F.explode("terms").alias("term")).distinct(),
+        ),
         q.select("query_id", "terms"),
         k=1 << 62,
         mode="and",

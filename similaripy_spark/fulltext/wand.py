@@ -511,7 +511,8 @@ def segments_with_idf(segments: DataFrame, index_dir: str) -> DataFrame:
     the shard's own rows (``_idf_map``). ``IndexHandle`` joins it ONCE, at
     load, and persists the result, so every batch an index server answers
     reuses it; ``segment_topk`` joins it itself onto segments that lack
-    the column.
+    the column, which the one-shot phrase paths restrict to their batch's
+    terms first (``query.term_segments``), so their join is query-sized.
 
     The join keys on term over the block-metadata-sized relation
     (~postings/block_size rows): AQE broadcast-converts the V-row
@@ -870,7 +871,9 @@ def segment_topk(
     and the corpus scalars the kernel derives the tf-part at, and its
     term_stats each term's df, joined onto ``segments`` here unless they
     already carry it (``segments_with_idf``, as ``IndexHandle`` holds
-    them).
+    them). A caller passing plain segments should restrict them to the
+    batch's terms (``query.term_segments``): the join, and the blocks the
+    kernel receives, are then query-sized, not index-sized.
     """
     if mode not in ("or", "and"):
         raise ValueError(f"mode must be 'or' or 'and', got {mode!r}")

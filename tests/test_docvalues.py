@@ -349,8 +349,13 @@ def test_kind_mismatch_and_numeric_facet_raise(spark, queries, indexed):
         handle.topk(queries, k=5, filter={"lang": (0, 1)})
     with pytest.raises(ValueError):
         handle.topk(queries, k=5, filter={"warc_ts": ["2020"]})
-    with pytest.raises(ValueError):
+    # a wrong-kind operator error names the operator to use instead
+    with pytest.raises(ValueError, match="bucket it into a dict field"):
         facet_counts(spark, queries, indexed, "warc_ts")
+    from similaripy_spark.fulltext.docvalues import facet_stats
+
+    with pytest.raises(ValueError, match="use facet_counts"):
+        facet_stats(spark, queries, indexed, "lang")
 
 
 def _facet_twin(corpus, queries, mode="or", drop_ids=None):
@@ -392,9 +397,9 @@ def test_facet_counts_match_relational(spark, corpus, queries, indexed,
     """cap=1 puts the batch's terms above the term-pushdown cap, so the
     scan semi-joins a broadcast of them instead of a literal isin."""
     if cap is not None:
-        from similaripy_spark.fulltext import docvalues
+        from similaripy_spark.fulltext import query
 
-        monkeypatch.setattr(docvalues, "TERM_PUSHDOWN_CAP", cap)
+        monkeypatch.setattr(query, "TERM_PUSHDOWN_CAP", cap)
     got = {
         (r.query_id, r.value): r.n_docs
         for r in facet_counts(
