@@ -1,7 +1,8 @@
 """Fulltext index engine: SPIMI-style sharded postings build
 (``index_build.IndexBuilder``), BM25-family weighting (``weights``),
-exact top-k retrieval with three physical strategies (``wand``), and the
-public serve surface (``retrieve``):
+exact top-k retrieval on two query paths (``wand``: the shard-scatter
+batch scorer and the driver-side term-major point scorer), and the public
+serve surface (``retrieve``):
 
 * ``open_index(spark, index_dir)`` → :class:`IndexHandle` — the load-once
   query-server path (meta + idf-annotated segments + routing state loaded

@@ -6,6 +6,13 @@ encoded raw. Per-block float32 ``max_score`` + ``max_doc`` metadata enable
 block skipping at query time (the Block-Max structure of Ding & Suel,
 SIGIR 2011).
 
+This module is the one home of the posting-block format: ``block_layout``
+cuts and encodes blocks for both writers (the index encoder,
+index_build._encode_sorted_cols_factory, and the positional sidecar,
+positional._encode_pos_partition), and ``decode_blocks`` bulk-decodes them
+for every reader (wand._ShardIndex, index_merge.decode_segments,
+positional._decode_positions_arrow).
+
 Everything is NumPy byte-twiddling over whole arrays — no per-element Python
 — so it is safe inside Arrow-batched pandas UDFs (the north rule's "no
 per-row Python" constraint). Encode: byte-lengths via threshold compares,
@@ -55,6 +62,44 @@ def encode_varints(values: np.ndarray) -> bytes:
     return encode_varints_with_lens(values)[0]
 
 
+def varint_slices(values: np.ndarray, starts: np.ndarray, ends: np.ndarray):
+    """Varint-encode ``values`` in ONE pass, then cut the stream into the
+    byte strings of the value ranges ``[starts[i], ends[i])``."""
+    buf, lens = encode_varints_with_lens(values.astype(np.uint64))
+    off = np.zeros(len(values) + 1, dtype=np.int64)
+    np.cumsum(lens, out=off[1:])
+    return [buf[off[s]:off[e]] for s, e in zip(starts, ends)]
+
+
+def block_layout(shards, codes, docs, tfs, block_size: int):
+    """Postings sorted by (shard, term code, doc_id) → posting blocks:
+    ``(starts, ends, block_id, doc_delta_bytes, tf_bytes)``. A block starts
+    at every (shard, term) boundary and every ``block_size`` postings;
+    ``[starts[i], ends[i])`` is block i's posting range and ``block_id`` its
+    ordinal within its (shard, term) list. Doc ids are stored as varint
+    deltas whose first delta is 0 (the block's ``first_doc`` is stored
+    beside it), tfs as raw varints."""
+    n = len(docs)
+    change = np.empty(n, dtype=bool)
+    change[0] = True
+    change[1:] = (codes[1:] != codes[:-1]) | (shards[1:] != shards[:-1])
+    gstart = np.flatnonzero(change)
+    pos_in_group = np.arange(n) - np.repeat(
+        gstart, np.diff(np.append(gstart, n))
+    )
+    starts = np.flatnonzero(change | (pos_in_group % block_size == 0))
+    ends = np.append(starts[1:], n)
+    block_id = (pos_in_group[starts] // block_size).astype(np.int32)
+    deltas = np.empty(n, dtype=np.int64)
+    deltas[0] = 0
+    np.subtract(docs[1:], docs[:-1], out=deltas[1:])
+    deltas[starts] = 0
+    return (
+        starts, ends, block_id,
+        varint_slices(deltas, starts, ends), varint_slices(tfs, starts, ends),
+    )
+
+
 def decode_varints(buf: bytes, count: int | None = None) -> np.ndarray:
     """LEB128 byte stream → uint64 array (vectorized).
 
@@ -91,8 +136,7 @@ def decode_doc_blocks(
     """Bulk-decode MANY delta+varint posting blocks in one vectorized pass:
     all blocks' varints are decoded from one concatenated buffer, then
     absolute docIDs are restored with a cross-block cumsum-rebase (the first
-    delta of every block is 0 by construction,
-    index_build._encode_sorted_cols_factory).
+    delta of every block is 0 by construction, ``block_layout``).
 
     delta_bufs: iterable of per-block varint byte strings;
     ns: per-block posting counts (int64); first_docs: per-block first docID.
@@ -110,6 +154,15 @@ def decode_doc_blocks(
     starts = np.concatenate(([0], np.cumsum(ns)[:-1]))
     base = np.asarray(first_docs, dtype=np.int64) - cs[starts]
     return cs + np.repeat(base, ns)
+
+
+def decode_blocks(delta_bufs, tf_bufs, ns, first_docs):
+    """Bulk-decode a run of blocks' ``doc_deltas`` and ``tfs`` →
+    (docIDs int64, tfs int64), blocks concatenated in input order."""
+    ns = np.asarray(ns, dtype=np.int64)
+    docs = decode_doc_blocks(delta_bufs, ns, first_docs)
+    tfs = decode_varints(b"".join(tf_bufs), int(ns.sum())).astype(np.int64)
+    return docs, tfs
 
 
 def delta_encode(sorted_docs: np.ndarray, first_doc: int) -> np.ndarray:

@@ -76,7 +76,7 @@ from similaripy_spark.fulltext.commit import (
     detect_commit_protocol,
     resolve_artifact,
 )
-from similaripy_spark.fulltext.index_build import read_meta
+from similaripy_spark.fulltext.index_build import epoch_pin, read_meta
 from similaripy_spark.fulltext.query import (
     all_terms,
     bm25_scores,
@@ -160,10 +160,10 @@ def build_docvalues(
             "ranking; pass the same pages relation (and lang filter) the "
             "index was built from"
         )
-    cur = (int(meta.get("n_epochs", 1)), int(meta["n_docs"]))
+    cur = epoch_pin(meta)
     prior = docvalues_meta(index_dir) or {}
     if prior:
-        got = (int(prior.get("n_epochs", 1)), int(prior.get("n_docs", -1)))
+        got = epoch_pin(prior)
         names = {s if isinstance(s, str) else s[0] for s in fields}
         untouched = set(prior.get("fields", [])) - names
         if got != cur and untouched:
@@ -407,9 +407,7 @@ def append_docvalues(
             f"{sorted(fields)}"
         )
     fields = list(side.get("fields", []))
-    cur = (int(meta.get("n_epochs", 1)), int(meta["n_docs"]))
-    got = (int(side.get("n_epochs", 1)), int(side.get("n_docs", -1)))
-    if got == cur:
+    if epoch_pin(side) == epoch_pin(meta):
         raise ValueError("docvalues sidecar is already fresh — nothing "
                          "to append")
     shard_size = int(meta["shard_size"])
@@ -536,8 +534,7 @@ def check_docvalues_fresh(index_dir: str, fields) -> dict:
             f"{side.get('fields')}) — rebuild with build_docvalues"
         )
     meta = read_meta(index_dir)
-    cur = (int(meta.get("n_epochs", 1)), int(meta["n_docs"]))
-    got = (int(side.get("n_epochs", 1)), int(side.get("n_docs", -1)))
+    cur, got = epoch_pin(meta), epoch_pin(side)
     if got != cur:
         raise StaleDocValuesError(
             f"docvalues sidecar built at epoch/docs {got} but the index "

@@ -166,8 +166,8 @@ def _encode_partition_arrow_unsorted(batches, block_size: int, bounds_fn):
     enc = _encode_sorted_cols_factory(block_size, bounds_fn)
     for s, e in zip(cuts[:-1], cuts[1:]):
         if e > s:
-            yield enc(shard[s:e], term.slice(s, e - s), doc[s:e],
-                      tf[s:e], w32[s:e])
+            yield enc(shard[s:e], term.slice(s, e - s), codes[s:e],
+                      doc[s:e], tf[s:e], w32[s:e])
 
 
 def _encode_sorted_cols_factory(block_size: int, bounds_fn):
@@ -180,50 +180,24 @@ def _encode_sorted_cols_factory(block_size: int, bounds_fn):
     bounds are over the derived tf-part (weights.tf_part_np at the index's
     pinned bounds_avgdl)."""
     import pyarrow as pa
-    import pyarrow.compute as pc
 
-    def encode_cols(shards, terms, docs, tfs, w32):
-        n = len(docs)
-        codes = pc.dictionary_encode(terms).indices.to_numpy(
-            zero_copy_only=False
+    def encode_cols(shards, terms, codes, docs, tfs, w32):
+        starts, ends, block_id, dd, tt = codec.block_layout(
+            shards, codes, docs, tfs, block_size
         )
-        change = np.empty(n, dtype=bool)
-        change[0] = True
-        change[1:] = (codes[1:] != codes[:-1]) | (shards[1:] != shards[:-1])
-        gstart_idx = np.flatnonzero(change)
-        pos_in_group = np.arange(n) - np.repeat(
-            gstart_idx, np.diff(np.append(gstart_idx, n))
-        )
-        bstart = change | (pos_in_group % block_size == 0)
-        block_starts = np.flatnonzero(bstart)
-        block_ends = np.append(block_starts[1:], n)
-        block_n = block_ends - block_starts
-        block_id = (pos_in_group[block_starts] // block_size).astype(np.int32)
         bscore = bounds_fn(tfs, w32)
-        max_score = np.maximum.reduceat(bscore, block_starts)
-        min_score = np.minimum.reduceat(bscore, block_starts)
-        deltas = np.empty(n, dtype=np.int64)
-        deltas[0] = 0
-        np.subtract(docs[1:], docs[:-1], out=deltas[1:])
-        deltas[block_starts] = 0
-        dbuf, dlens = codec.encode_varints_with_lens(deltas.astype(np.uint64))
-        doff = np.zeros(n + 1, dtype=np.int64)
-        np.cumsum(dlens, out=doff[1:])
-        tbuf, tlens = codec.encode_varints_with_lens(tfs.astype(np.uint64))
-        toff = np.zeros(n + 1, dtype=np.int64)
-        np.cumsum(tlens, out=toff[1:])
+        max_score = np.maximum.reduceat(bscore, starts)
+        min_score = np.minimum.reduceat(bscore, starts)
         wbuf = w32.tobytes()
-        dd = [dbuf[doff[s]:doff[e]] for s, e in zip(block_starts, block_ends)]
-        tt = [tbuf[toff[s]:toff[e]] for s, e in zip(block_starts, block_ends)]
-        ww = [wbuf[4 * s:4 * e] for s, e in zip(block_starts, block_ends)]
+        ww = [wbuf[4 * s:4 * e] for s, e in zip(starts, ends)]
         return pa.RecordBatch.from_arrays(
             [
-                pa.array(shards[block_starts], type=pa.int32()),
-                terms.take(pa.array(block_starts)).cast(pa.string()),
+                pa.array(shards[starts], type=pa.int32()),
+                terms.take(pa.array(starts)).cast(pa.string()),
                 pa.array(block_id, type=pa.int32()),
-                pa.array(block_n.astype(np.int32), type=pa.int32()),
-                pa.array(docs[block_starts], type=pa.int64()),
-                pa.array(docs[block_ends - 1], type=pa.int64()),
+                pa.array((ends - starts).astype(np.int32), type=pa.int32()),
+                pa.array(docs[starts], type=pa.int64()),
+                pa.array(docs[ends - 1], type=pa.int64()),
                 pa.array(max_score, type=pa.float32()),
                 pa.array(min_score, type=pa.float32()),
                 pa.array(dd, type=pa.binary()),
@@ -901,7 +875,13 @@ def read_segments(spark: SparkSession, index_dir: str) -> DataFrame:
         for p in parts[1:]:
             df = df.unionByName(p)
         return df
-    return spark.read.parquet(seg_dir)
+    # explicit schema here too: inferring it runs a one-task Spark job on
+    # every call (each open_index and one-shot segment_topk)
+    return spark.read.schema(
+        T.StructType(
+            SEGMENT_SCHEMA.fields + [T.StructField("group", T.IntegerType())]
+        )
+    ).parquet(seg_dir)
 
 
 def check_weight_scheme(meta: dict, index_dir: str) -> dict:
@@ -926,6 +906,13 @@ def check_weight_scheme(meta: dict, index_dir: str) -> dict:
             "'raw' indexes can be served — rebuild it with IndexBuilder"
         )
     return meta
+
+
+def epoch_pin(meta: dict) -> tuple[int, int]:
+    """``(n_epochs, n_docs)`` of an index meta or of a sidecar's
+    ``_meta.json``: a sidecar is fresh when its pin equals the index's
+    (append_to_index grows both). A meta with no n_docs never matches."""
+    return int(meta.get("n_epochs", 1)), int(meta.get("n_docs", -1))
 
 
 def read_meta(index_dir: str) -> dict:
@@ -1015,11 +1002,7 @@ def describe_index(spark: SparkSession, index_dir: str) -> dict:
     if positional.has_positions(index_dir):
         side = positional.positions_meta(index_dir)
         out["positions"] = {
-            "fresh": (
-                int(side.get("n_epochs", 1)),
-                int(side.get("n_docs", -1)),
-            )
-            == (int(meta.get("n_epochs", 1)), int(meta["n_docs"])),
+            "fresh": epoch_pin(side) == epoch_pin(meta),
             "block_size": int(side.get("block_size", 0)),
             "n_epochs": int(side.get("n_epochs", 1)),
         }
@@ -1028,11 +1011,7 @@ def describe_index(spark: SparkSession, index_dir: str) -> dict:
     dv = docvalues.docvalues_meta(index_dir)
     if dv is not None:
         out["docvalues"] = {
-            "fresh": (
-                int(dv.get("n_epochs", 1)),
-                int(dv.get("n_docs", -1)),
-            )
-            == (int(meta.get("n_epochs", 1)), int(meta["n_docs"])),
+            "fresh": epoch_pin(dv) == epoch_pin(meta),
             "fields": {
                 f: fm.get("kind", "dict")
                 for f, fm in dv.get("field_meta", {}).items()

@@ -102,9 +102,10 @@ def decode_segments(segments: DataFrame) -> DataFrame:
     ``postings.build_postings``. dl is read from the blocks' ``weights``
     column, the one store of each document's length.
 
-    One vectorized pass per Arrow batch via ``codec.decode_doc_blocks`` —
-    ONE varint decode over the concatenated buffers + a cumsum rebase, the
-    same bulk pattern the query path uses (wand._ShardIndex._decode_rows).
+    One vectorized pass per Arrow batch via ``codec.decode_blocks`` —
+    one varint decode per column over the concatenated buffers + a cumsum
+    rebase, the same bulk decode the query path uses
+    (wand._ShardIndex._decode_rows).
     The round-2 version looped ``itertuples`` per block, paying an
     interpreted decode call per 128 postings on every incremental merge
     (VERDICT r2 finding 2; the timed ≥5× test is
@@ -115,19 +116,16 @@ def decode_segments(segments: DataFrame) -> DataFrame:
             if len(b) == 0:
                 continue
             ns = b["n"].to_numpy(np.int64)
-            docs = codec.decode_doc_blocks(
-                b["doc_deltas"].tolist(), ns,
+            docs, tfs = codec.decode_blocks(
+                b["doc_deltas"].tolist(), b["tfs"].tolist(), ns,
                 b["first_doc"].to_numpy(np.int64),
             )
-            tfs = codec.decode_varints(
-                b"".join(b["tfs"].tolist()), int(ns.sum())
-            ).astype(np.int32)
             dls = codec.decode_f32(b"".join(b["weights"].tolist()))
             yield pd.DataFrame(
                 {
                     "doc_id": docs,
                     "term": np.repeat(b["term"].to_numpy(object), ns),
-                    "tf": tfs,
+                    "tf": tfs.astype(np.int32),
                     "dl": dls.astype(np.int64),
                 }
             )

@@ -16,20 +16,26 @@ Layout (parquet, one row per posting block):
 
     shard int32 | term string | block_id int32 | n int32 |
     first_doc int64 | max_doc int64 |
-    doc_deltas binary  -- delta+varint docIDs, same codec as the main index
-    tfs binary         -- varint per-posting occurrence counts
+    doc_deltas binary  -- delta+varint docIDs, as in the main index
+    tfs binary         -- varint per-posting occurrence counts, as in the
+                          main index
     pos_deltas binary  -- varint positions: per posting, first value is the
                           ABSOLUTE token offset of the first occurrence,
                           the rest are gaps (standard positional posting
                           compression; positions are token indices in
-                          tokenizer.tokenize_expr's stream, 0-based)
+                          the tokenizer's stream, 0-based)
 
-``tfs`` rides in the sidecar too (not just the main index) so a block is
-decodable WITHOUT a join: tf values are the sub-list lengths that split the
-``pos_deltas`` stream. Sharding follows the main index (``shard = doc_id //
-shard_size`` from meta.json), so candidate→positions lookups are
-shard-aligned and block ``[first_doc, max_doc]`` ranges support the same
-doc-range skipping the main index uses.
+The block columns are the main index's block format, written by the same
+encoder (``codec.block_layout``) and read by the same bulk decoder
+(``codec.decode_blocks``): built at the index's ``block_size``, a sidecar's
+``(shard, term, block_id)`` blocks carry the main index's exact ``n``,
+``first_doc``, ``max_doc``, ``doc_deltas`` and ``tfs`` (pinned by test).
+``tfs`` rides in the sidecar too so a block is decodable WITHOUT a join:
+tf values are the sub-list lengths that split the ``pos_deltas`` stream.
+Sharding follows the main index (``shard = doc_id // shard_size`` from
+meta.json), so candidate→positions lookups are shard-aligned and block
+``[first_doc, max_doc]`` ranges support the same doc-range skipping the
+main index uses.
 
 Phrase verification is fully RELATIONAL (Catalyst does the matching): decode
 the phrase terms' positions to long form ``(doc_id, term, pos)`` — the only
@@ -46,20 +52,21 @@ same semantics as the adjacency regexp (rank parity is pinned in
 tests/test_positional.py). Repeated phrase tokens ("a b a") fall out
 naturally: each offset must be matched independently.
 
-Scale: the sidecar build is one tokenize pass (mapInArrow, no per-row
-Python) + one hash repartition by shard — the same shape as the main
-segment job. Query-time cost is proportional to the PHRASE TERMS' posting
-sizes in the shards that hold candidates (term-pushdown on the parquet scan,
-block doc-range skipping against the candidates' per-shard doc ranges),
-never to document text size.
+Scale: the sidecar build is one tokenize pass (``tokenizer.arrow_tokens``
+in a mapInArrow kernel, no per-row Python) + one hash repartition by shard
+— the same shape as the main segment job. Query-time cost is proportional
+to the PHRASE TERMS' posting sizes in the shards that hold candidates
+(term-pushdown on the parquet scan, block doc-range skipping against the
+candidates' per-shard doc ranges), never to document text size.
 
-Staleness: ``_meta.json`` records the main index's ``n_epochs``/``n_docs``
-at sidecar build time. ``append_to_index`` grows the corpus without
-touching the sidecar, so positional phrase raises ``StalePositionsError``
-(listing both epochs) instead of silently missing appended docs — rebuild
-with :func:`build_positions`. Tombstoned (deleted) docs need no sidecar
-handling: candidates come from the main index, which filters them at decode
-time, and verification only ever LOOKS AT candidates.
+Staleness: ``_meta.json`` records the main index's ``index_build.epoch_pin``
+(``n_epochs``, ``n_docs``) at sidecar build time. ``append_to_index`` grows
+the corpus without touching the sidecar, so positional phrase raises
+``StalePositionsError`` (listing both epochs) instead of silently missing
+appended docs — rebuild with :func:`build_positions`. Tombstoned (deleted)
+docs need no sidecar handling: candidates come from the main index, which
+filters them at decode time, and verification only ever LOOKS AT
+candidates.
 
 Reference parity: similaripy has no phrase or positional structure (its
 kernels are bag-of-words CSR products) — this is engine extension surface
@@ -85,8 +92,12 @@ from similaripy_spark.fulltext.commit import (
     LocalFSCommitProtocol,
     resolve_artifact,
 )
-from similaripy_spark.fulltext.index_build import read_meta
-from similaripy_spark.fulltext.tokenizer import TOKEN_SPLIT_RE, tokenize_expr
+from similaripy_spark.fulltext.index_build import epoch_pin, read_meta
+from similaripy_spark.fulltext.tokenizer import (
+    TOKEN_SPLIT_RE,
+    arrow_tokens,
+    tokenize_expr,
+)
 
 POS_POSTINGS_SCHEMA = T.StructType(
     [
@@ -123,28 +134,18 @@ class StalePositionsError(RuntimeError):
 
 def _pos_postings_arrow(batches):
     """pages(doc_id, text) → (doc_id, term, tf, pos_deltas) — the positional
-    twin of postings._count_terms_arrow. Tokenize on Arrow string kernels,
-    positions are per-doc token indices (empty tokens removed BEFORE
-    numbering, matching tokenize_expr's filtered stream), grouping via one
-    stable int64 lexsort; all position lists varint-encoded in ONE codec
-    pass with per-group byte slices."""
+    twin of postings._count_terms_arrow. Tokens from
+    ``tokenizer.arrow_tokens``; positions are per-doc token indices (empty
+    tokens removed BEFORE numbering, matching tokenize_expr's filtered
+    stream), grouping via one stable int64 lexsort; all position lists
+    varint-encoded in ONE codec pass with per-group byte slices."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
     for b in batches:
-        n = b.num_rows
-        if n == 0:
+        if b.num_rows == 0:
             continue
-        text = pc.fill_null(b.column(b.schema.get_field_index("text")), "")
-        toks = pc.split_pattern_regex(pc.utf8_lower(text), TOKEN_SPLIT_RE)
-        n_per = pc.list_value_length(toks).to_numpy(
-            zero_copy_only=False
-        ).astype(np.int64)
-        flat = pc.list_flatten(toks)
-        doc_idx = np.repeat(np.arange(n, dtype=np.int64), n_per)
-        keep = pc.not_equal(flat, "")
-        flat = flat.filter(keep)
-        doc_idx = doc_idx[keep.to_numpy(zero_copy_only=False)]
+        doc_ids, doc_idx, flat = arrow_tokens(b)
         nt = len(doc_idx)
         if nt == 0:
             continue
@@ -168,14 +169,7 @@ def _pos_postings_arrow(batches):
         deltas[0] = g_pos[0]
         np.subtract(g_pos[1:], g_pos[:-1], out=deltas[1:])
         deltas[gstart] = g_pos[gstart]
-        buf, lens = codec.encode_varints_with_lens(deltas.astype(np.uint64))
-        off = np.zeros(nt + 1, dtype=np.int64)
-        np.cumsum(lens, out=off[1:])
-        gend = np.append(gstart[1:], nt)
-        payload = [buf[off[s]:off[e]] for s, e in zip(gstart, gend)]
-        doc_ids = b.column(
-            b.schema.get_field_index("doc_id")
-        ).to_numpy(zero_copy_only=False)
+        payload = codec.varint_slices(deltas, gstart, np.append(gstart[1:], nt))
         yield pa.RecordBatch.from_arrays(
             [
                 pa.array(doc_ids[g_doc[gstart]], type=pa.int64()),
@@ -192,10 +186,11 @@ def _pos_postings_arrow(batches):
 def _encode_pos_partition(batches, block_size: int):
     """(shard, doc_id, term, tf, pos_deltas) partition → positional block
     rows. Same shape as index_build's lexsort encoder: buffer, dictionary-
-    encode terms, one np.lexsort by (shard, term-code, doc_id), then blocks
-    of ``block_size`` postings with doc deltas + tf varints; the per-posting
-    position payloads concatenate into the block payload (they are already
-    independently decodable sub-streams — tf values give the split)."""
+    encode terms, one np.lexsort by (shard, term-code, doc_id), then the
+    index's own block cut and doc/tf encode (``codec.block_layout``); the
+    per-posting position payloads concatenate into the block payload (they
+    are already independently decodable sub-streams — tf values give the
+    split)."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -222,28 +217,9 @@ def _encode_pos_partition(batches, block_size: int):
             else pa.array([], type=pa.binary())
         )
     n = len(doc)
-    change = np.empty(n, dtype=bool)
-    change[0] = True
-    change[1:] = (codes[1:] != codes[:-1]) | (shard[1:] != shard[:-1])
-    gstart_idx = np.flatnonzero(change)
-    pos_in_group = np.arange(n) - np.repeat(
-        gstart_idx, np.diff(np.append(gstart_idx, n))
+    starts, ends, block_id, dd, tt = codec.block_layout(
+        shard, codes, doc, tf, block_size
     )
-    bstart = change | (pos_in_group % block_size == 0)
-    block_starts = np.flatnonzero(bstart)
-    block_ends = np.append(block_starts[1:], n)
-    block_n = block_ends - block_starts
-    block_id = (pos_in_group[block_starts] // block_size).astype(np.int32)
-    deltas = np.empty(n, dtype=np.int64)
-    deltas[0] = 0
-    np.subtract(doc[1:], doc[:-1], out=deltas[1:])
-    deltas[block_starts] = 0
-    dbuf, dlens = codec.encode_varints_with_lens(deltas.astype(np.uint64))
-    doff = np.zeros(n + 1, dtype=np.int64)
-    np.cumsum(dlens, out=doff[1:])
-    tbuf, tlens = codec.encode_varints_with_lens(tf.astype(np.uint64))
-    toff = np.zeros(n + 1, dtype=np.int64)
-    np.cumsum(tlens, out=toff[1:])
     # per-posting position payloads → one contiguous (offsets, data) pair
     # straight from the Arrow binary buffers, so a block's payload is a
     # single byte slice (no per-posting Python join). buffers() of a
@@ -255,17 +231,15 @@ def _encode_pos_partition(batches, block_size: int):
     )[a0:a0 + n + 1].astype(np.int64)
     _pdata = pos_payload.buffers()[2]
     pbytes = _pdata.to_pybytes() if _pdata is not None else b""
-    dd = [dbuf[doff[s]:doff[e]] for s, e in zip(block_starts, block_ends)]
-    tt = [tbuf[toff[s]:toff[e]] for s, e in zip(block_starts, block_ends)]
-    pp = [pbytes[poff[s]:poff[e]] for s, e in zip(block_starts, block_ends)]
+    pp = [pbytes[poff[s]:poff[e]] for s, e in zip(starts, ends)]
     yield pa.RecordBatch.from_arrays(
         [
-            pa.array(shard[block_starts], type=pa.int32()),
-            term.take(pa.array(block_starts)).cast(pa.string()),
+            pa.array(shard[starts], type=pa.int32()),
+            term.take(pa.array(starts)).cast(pa.string()),
             pa.array(block_id, type=pa.int32()),
-            pa.array(block_n.astype(np.int32), type=pa.int32()),
-            pa.array(doc[block_starts], type=pa.int64()),
-            pa.array(doc[block_ends - 1], type=pa.int64()),
+            pa.array((ends - starts).astype(np.int32), type=pa.int32()),
+            pa.array(doc[starts], type=pa.int64()),
+            pa.array(doc[ends - 1], type=pa.int64()),
             pa.array(dd, type=pa.binary()),
             pa.array(tt, type=pa.binary()),
             pa.array(pp, type=pa.binary()),
@@ -374,9 +348,7 @@ def append_positions(
             "to append to; run positional.build_positions first"
         )
     side = positions_meta(index_dir)
-    if int(side.get("n_epochs", 1)) == int(meta.get("n_epochs", 1)) and int(
-        side.get("n_docs", -1)
-    ) == int(meta["n_docs"]):
+    if epoch_pin(side) == epoch_pin(meta):
         raise ValueError("positional sidecar is already fresh — nothing to append")
     if int(side["shard_size"]) != int(meta["shard_size"]):
         raise ValueError(
@@ -476,8 +448,7 @@ def check_positions_fresh(index_dir: str) -> dict:
         )
     side = positions_meta(index_dir)
     meta = read_meta(index_dir)
-    cur = (int(meta.get("n_epochs", 1)), int(meta["n_docs"]))
-    got = (int(side.get("n_epochs", 1)), int(side.get("n_docs", -1)))
+    cur, got = epoch_pin(meta), epoch_pin(side)
     if got != cur:
         raise StalePositionsError(
             f"positional sidecar built at epoch/docs {got} but the index "
@@ -494,10 +465,11 @@ def read_positions(spark: SparkSession, index_dir: str) -> DataFrame:
 
 
 def _decode_positions_arrow(batches):
-    """Positional block rows → long form (doc_id, term, pos). One bulk
-    varint decode per column per batch; absolute positions restored with
-    the cross-group cumsum-rebase (codec.decode_doc_blocks' trick applied
-    to per-POSTING groups)."""
+    """Positional block rows → long form (doc_id, term, pos). The doc and
+    tf columns through the index's bulk decoder (``codec.decode_blocks``),
+    then one varint decode of the positions; absolute positions restored
+    with the cross-group cumsum-rebase (codec.decode_doc_blocks' trick
+    applied to per-POSTING groups)."""
     import pyarrow as pa
 
     for b in batches:
@@ -512,10 +484,7 @@ def _decode_positions_arrow(batches):
         dd = b.column(b.schema.get_field_index("doc_deltas")).to_pylist()
         tt = b.column(b.schema.get_field_index("tfs")).to_pylist()
         pp = b.column(b.schema.get_field_index("pos_deltas")).to_pylist()
-        docs = codec.decode_doc_blocks(dd, ns, first)
-        tfs = codec.decode_varints(b"".join(tt), int(ns.sum())).astype(
-            np.int64
-        )
+        docs, tfs = codec.decode_blocks(dd, tt, ns, first)
         total = int(tfs.sum())
         deltas = codec.decode_varints(b"".join(pp), total).astype(np.int64)
         # per-posting groups: lengths = tfs; rebase cumsum per group
@@ -543,6 +512,12 @@ def decode_positions_long(blocks: DataFrame) -> DataFrame:
     return blocks.mapInArrow(
         _decode_positions_arrow, schema="doc_id long, term string, pos long"
     )
+
+
+def _vocabulary(term_lists) -> list:
+    """The distinct terms of the collected ``terms`` arrays, in first-seen
+    order (a null array holds none)."""
+    return list(dict.fromkeys(t for ts in term_lists for t in ts or ()))
 
 
 def _positions_for(
@@ -623,7 +598,7 @@ def best_window_spans(
     p = pairs.select("query_id", "doc_id")
     long = _positions_for(
         spark, index_dir, int(meta["shard_size"]),
-        [r[0] for r in qterms.select("term").distinct().collect()], p,
+        _vocabulary(r[0] for r in queries.select("terms").collect()), p,
     )
     occ = long.join(qterms, "term").join(p, ["query_id", "doc_id"], "left_semi")
     a = occ.select(
@@ -715,14 +690,12 @@ def phrase_topk_pos(
     q = queries.filter(F.size("terms") > 0).select("query_id", "terms")
     meta = read_meta(index_dir)
     shard_size = int(meta["shard_size"])
-    # one driver collect of the phrase vocabulary filters both scans:
-    # only its blocks reach the kernel (so the kernel's df join is
-    # query-sized), and only its positions are decoded
-    terms = [
-        r[0]
-        for r in q.select(F.explode("terms").alias("term")).distinct()
-        .collect()
-    ]
+    # one driver collect of the phrase rows: their vocabulary filters both
+    # scans (only its blocks reach the kernel, so the kernel's df join is
+    # query-sized, and only its positions are decoded) and their lengths
+    # drive the slop sweep. A local query frame collects without a job.
+    phrases = [r["terms"] for r in q.collect()]
+    terms = _vocabulary(phrases)
     cand = segment_topk(
         term_segments(
             spark, index_dir,
@@ -761,11 +734,9 @@ def phrase_topk_pos(
     else:
         # greedy ordered-window sweep, one relational step per offset;
         # phrase lengths vary per query, so run each length group through
-        # its own (n-1)-step chain (the distinct-lengths collect is tiny)
+        # its own (n-1)-step chain
         occ = occ.join(n_off, "query_id")
-        lengths = [
-            int(r[0]) for r in q.select(F.size("terms")).distinct().collect()
-        ]
+        lengths = sorted({len(ph) for ph in phrases})
         parts = []
         for n in lengths:
             window = n - 1 + slop

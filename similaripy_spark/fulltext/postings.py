@@ -27,7 +27,7 @@ from pyspark.sql import types as T
 
 from similaripy_spark.fulltext.tokenizer import (
     TOKEN_RUN_RE,
-    TOKEN_SPLIT_RE,
+    arrow_tokens,
     tokenize_expr,
 )
 
@@ -72,22 +72,7 @@ def _count_terms_arrow(batches):
         n = b.num_rows
         if n == 0:
             continue
-        doc_col = b.schema.get_field_index("doc_id")
-        text_col = b.schema.get_field_index("text")
-        # Null text must behave like empty text: a null token list would
-        # make list_value_length yield null → NaN → garbage int64 counts
-        # fed to np.repeat. (validate_pages_schema also rejects nullable
-        # text, but this kernel is callable on bare DataFrames.)
-        text = pc.fill_null(b.column(text_col), "")
-        toks = pc.split_pattern_regex(pc.utf8_lower(text), TOKEN_SPLIT_RE)
-        n_per = pc.list_value_length(toks).to_numpy(
-            zero_copy_only=False
-        ).astype(np.int64)
-        flat = pc.list_flatten(toks)
-        doc_idx = np.repeat(np.arange(n, dtype=np.int64), n_per)
-        keep = pc.not_equal(flat, "")
-        flat = flat.filter(keep)
-        doc_idx = doc_idx[keep.to_numpy(zero_copy_only=False)]
+        doc_ids, doc_idx, flat = arrow_tokens(b)
         dl = np.bincount(doc_idx, minlength=n).astype(np.int64)
         denc = pc.dictionary_encode(flat)
         codes = denc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
@@ -96,7 +81,6 @@ def _count_terms_arrow(batches):
         ukey, counts = np.unique(key, return_counts=True)
         u_doc = ukey // V
         u_code = ukey % V
-        doc_ids = b.column(doc_col).to_numpy(zero_copy_only=False)
         yield pa.RecordBatch.from_arrays(
             [
                 pa.array(doc_ids[u_doc], type=pa.int64()),

@@ -61,6 +61,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from similaripy_spark.fulltext.tokenizer import tokenize_str
+
 _PHRASE_RE = re.compile(r'"([^"]*)"')
 _RANGE_RE = re.compile(
     r'(-?)([A-Za-z_][\w.]*):\[([^\]]*?)\s+TO\s+([^\]]*?)\]', re.IGNORECASE
@@ -75,11 +77,6 @@ _RESULT_SCHEMA = T.StructType(
         T.StructField("rank", T.IntegerType(), False),
     ]
 )
-
-
-def _toks(s: str) -> list[str]:
-    """Build-tokenizer twin (tokenizer.TOKEN_SPLIT_RE semantics)."""
-    return [t for t in re.split(r"[^a-z0-9]+", s.lower()) if t]
 
 
 def _bound(s: str):
@@ -99,7 +96,7 @@ def parse_query(q: str) -> dict:
     phrases: list[list[str]] = []
 
     def grab_phrase(m):
-        toks = _toks(m.group(1))
+        toks = tokenize_str(m.group(1))
         if toks:
             phrases.append(toks)
         return " "
@@ -165,9 +162,9 @@ def parse_query(q: str) -> dict:
             field, vals = m.groups()
             _narrow(field, [v for v in vals.split(",") if v])
         elif neg:
-            not_terms.extend(_toks(body))
+            not_terms.extend(tokenize_str(body))
         else:
-            terms.extend(_toks(body))
+            terms.extend(tokenize_str(body))
     return {
         "terms": terms,
         "not_terms": not_terms,

@@ -182,22 +182,20 @@ class _ShardIndex:
 
     def _decode_rows(self, rows: np.ndarray):
         """Bulk-decode arbitrary block rows in one vectorized pass
-        (codec.decode_doc_blocks: one varint decode over the concatenated
-        buffers + cumsum rebase — shared with index_merge.decode_segments)."""
+        (codec.decode_blocks: one varint decode per column over the
+        concatenated buffers + cumsum rebase — shared with
+        index_merge.decode_segments and the positional sidecar)."""
         if len(rows) == 0:
             return np.zeros(0, np.int64), np.zeros(0, np.float64)
-        ns = self._n[rows]
-        docs = codec.decode_doc_blocks(
-            [self._dd[r] for r in rows], ns, self._first[rows]
+        docs, tfs = codec.decode_blocks(
+            [self._dd[r] for r in rows], [self._tt[r] for r in rows],
+            self._n[rows], self._first[rows],
         )
         dls = np.frombuffer(
             b"".join(self._ww[r] for r in rows), dtype=np.float32
         ).astype(np.float64)
         # stored weights are dl; derive the tf-part at the CURRENT avgdl
         # (float32-rounded, like every stored BM25 weight of the engine)
-        tfs = codec.decode_varints(
-            b"".join(self._tt[r] for r in rows), int(ns.sum())
-        )
         weights = tf_part_np(
             tfs, dls,
             k1=float(self._raw["k1"]), b=float(self._raw["b"]),

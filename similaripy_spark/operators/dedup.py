@@ -25,8 +25,14 @@ effective universe stays far above the 31-bit modulus.
 
 from __future__ import annotations
 
+import hashlib
+
+import numpy as np
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from similaripy_spark.fulltext.tokenizer import arrow_tokens
 
 # deterministic LCG-style constants (Knuth multiplicative hashing)
 _HA = 2654435761
@@ -46,6 +52,16 @@ def _hash_pair(col):
     x1 = F.conv(F.substring(F.md5(col), 1, 7), 16, 10).cast("long")
     x2 = F.conv(F.substring(F.md5(col), 9, 7), 16, 10).cast("long")
     return x1, x2
+
+
+def _hash_pair_np(strings) -> tuple[np.ndarray, np.ndarray]:
+    """numpy twin of ``_hash_pair`` over Python strings (hashlib md5 ≡
+    Spark md5): the int64 arrays (x1, x2), one entry per string."""
+    hexes = [hashlib.md5(s.encode("utf-8")).hexdigest() for s in strings]
+    return (
+        np.array([int(h[:7], 16) for h in hexes], np.int64),
+        np.array([int(h[8:15], 16) for h in hexes], np.int64),
+    )
 
 
 def _hash60(col):
@@ -124,37 +140,20 @@ def word_shingles(
 
 def _word_shingles_kernel(n: int):
     """Arrow kernel: (doc_id, text) batches → distinct (doc_id, shingle).
-    Tokenize on Arrow string kernels (same lower/split/drop-empties stream
-    as tokenize_expr), n-gram assembly by object-array concatenation over
+    Tokens from ``tokenizer.arrow_tokens`` (the same stream as
+    tokenize_expr), n-gram assembly by object-array concatenation over
     positions whose full window stays inside one doc, per-doc dedup via
     one int64 unique pass over (doc, shingle-code)."""
-    import numpy as np
-
-    from similaripy_spark.fulltext.tokenizer import TOKEN_SPLIT_RE
 
     def kernel(batches):
         import pandas as pd
         import pyarrow as pa
-        import pyarrow.compute as pc
 
         for b in batches:
-            nrows = b.num_rows
-            if nrows == 0:
+            if b.num_rows == 0:
                 continue
-            doc_ids = b.column(
-                b.schema.get_field_index("doc_id")
-            ).to_numpy(zero_copy_only=False)
+            doc_ids, doc_idx, flat = arrow_tokens(b)
             require_one_row_per_doc(doc_ids, "word_shingles")
-            text = pc.fill_null(b.column(b.schema.get_field_index("text")), "")
-            toks = pc.split_pattern_regex(pc.utf8_lower(text), TOKEN_SPLIT_RE)
-            n_per = pc.list_value_length(toks).to_numpy(
-                zero_copy_only=False
-            ).astype(np.int64)
-            flat = pc.list_flatten(toks)
-            doc_idx = np.repeat(np.arange(nrows, dtype=np.int64), n_per)
-            keep = pc.not_equal(flat, "")
-            flat = flat.filter(keep)
-            doc_idx = doc_idx[keep.to_numpy(zero_copy_only=False)]
             nt = len(doc_idx)
             if nt < n:
                 continue
@@ -273,10 +272,6 @@ def _minhash_arrow_kernel(n: int, n_hashes: int):
     machinery, hashes each DISTINCT shingle once, evaluates the n_hashes
     polynomials over the (V × H) grid and scatters per-doc minima with
     one np.minimum.at."""
-    import hashlib
-
-    import numpy as np
-
     a = np.array(
         [(i * 2 + 1) * _HA % _PRIME for i in range(n_hashes)], np.int64
     )
@@ -298,11 +293,7 @@ def _minhash_arrow_kernel(n: int, n_hashes: int):
                 (uniq.setdefault(s, len(uniq)) for s in shingles),
                 count=len(shingles), dtype=np.int64,
             )
-            hexes = [
-                hashlib.md5(s.encode("utf-8")).hexdigest() for s in uniq
-            ]
-            x1 = np.array([int(h[:7], 16) for h in hexes], np.int64)
-            x2 = np.array([int(h[8:15], 16) for h in hexes], np.int64)
+            x1, x2 = _hash_pair_np(uniq)
             hv = (a * x1[:, None] + c * x2[:, None] + bco) % _PRIME
             # per-doc minima: compact doc index over this shingle batch
             docs_u, doc_pos = np.unique(u_doc_ids, return_inverse=True)
@@ -449,12 +440,6 @@ def _simhash_arrow_kernel(bits: int):
     MINSTD/xor-shift chain in int64), vectorized: md5 runs once per
     DISTINCT term per batch, the mix chain once per (distinct term × bit),
     and the per-doc signed votes are one np.add.at scatter."""
-    import hashlib
-
-    import numpy as np
-
-    from similaripy_spark.fulltext.tokenizer import TOKEN_SPLIT_RE
-
     bitvals = np.array(
         [(1 << b) if b < 63 else -(1 << 63) for b in range(bits)],
         dtype=np.int64,
@@ -469,20 +454,8 @@ def _simhash_arrow_kernel(bits: int):
             n = b.num_rows
             if n == 0:
                 continue
-            doc_ids = b.column(
-                b.schema.get_field_index("doc_id")
-            ).to_numpy(zero_copy_only=False)
+            doc_ids, doc_idx, flat = arrow_tokens(b)
             require_one_row_per_doc(doc_ids, "simhash")
-            text = pc.fill_null(b.column(b.schema.get_field_index("text")), "")
-            toks = pc.split_pattern_regex(pc.utf8_lower(text), TOKEN_SPLIT_RE)
-            n_per = pc.list_value_length(toks).to_numpy(
-                zero_copy_only=False
-            ).astype(np.int64)
-            flat = pc.list_flatten(toks)
-            doc_idx = np.repeat(np.arange(n, dtype=np.int64), n_per)
-            keep = pc.not_equal(flat, "")
-            flat = flat.filter(keep)
-            doc_idx = doc_idx[keep.to_numpy(zero_copy_only=False)]
             if len(doc_idx) == 0:
                 continue
             denc = pc.dictionary_encode(flat)
@@ -496,10 +469,8 @@ def _simhash_arrow_kernel(bits: int):
             ukey, tf = np.unique(key, return_counts=True)
             u_doc = ukey // V
             u_code = ukey % V
-            # md5 id pair per DISTINCT term (== _hash_pair: hex[0:7]/[8:15])
-            hexes = [hashlib.md5(t.encode("utf-8")).hexdigest() for t in terms]
-            x1 = np.array([int(h[:7], 16) for h in hexes], dtype=np.int64)
-            x2 = np.array([int(h[8:15], 16) for h in hexes], dtype=np.int64)
+            # md5 id pair per DISTINCT term
+            x1, x2 = _hash_pair_np(terms)
             # the mix chain over (V × bits), int64 throughout (== _mix_bit)
             x = (x1[:, None] * 48271 + x2[:, None] * 16807 + bit_c) % _M31
             x = ((x ^ (x >> 7)) * 48271) % _M31

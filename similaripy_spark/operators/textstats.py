@@ -14,11 +14,12 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from similaripy_spark.fulltext.tokenizer import tokenize_expr
-
-_HA = 2654435761
-_HB = 40503
-_PRIME = 2038074743
+from similaripy_spark.fulltext.tokenizer import arrow_tokens, tokenize_expr
+from similaripy_spark.operators.dedup import (
+    _HB,
+    _PRIME,
+    require_one_row_per_doc,
+)
 
 # small public stopword marker sets (top function words per language)
 STOPWORDS = {
@@ -188,33 +189,15 @@ def _winnow_arrow_kernel(kgram: int, window: int):
     doc, so a window never crosses into the next doc)."""
     import hashlib
 
-    import numpy as np
-
-    from similaripy_spark.fulltext.tokenizer import TOKEN_SPLIT_RE
-    from similaripy_spark.operators.dedup import require_one_row_per_doc
-
     def kernel(batches):
         import pyarrow as pa
         import pyarrow.compute as pc
 
         for b in batches:
-            nrows = b.num_rows
-            if nrows == 0:
+            if b.num_rows == 0:
                 continue
-            doc_ids = b.column(
-                b.schema.get_field_index("doc_id")
-            ).to_numpy(zero_copy_only=False)
+            doc_ids, doc_idx, flat = arrow_tokens(b)
             require_one_row_per_doc(doc_ids, "winnow_fingerprints")
-            text = pc.fill_null(b.column(b.schema.get_field_index("text")), "")
-            toks = pc.split_pattern_regex(pc.utf8_lower(text), TOKEN_SPLIT_RE)
-            n_per = pc.list_value_length(toks).to_numpy(
-                zero_copy_only=False
-            ).astype(np.int64)
-            flat = pc.list_flatten(toks)
-            doc_idx = np.repeat(np.arange(nrows, dtype=np.int64), n_per)
-            keep = pc.not_equal(flat, "")
-            flat = flat.filter(keep)
-            doc_idx = doc_idx[keep.to_numpy(zero_copy_only=False)]
             nt = len(doc_idx)
             if nt < kgram:
                 continue

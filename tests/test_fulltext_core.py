@@ -15,7 +15,11 @@ from similaripy_spark.fulltext.postings import (
     build_postings_sql_plan,
 )
 from similaripy_spark.fulltext.query import bm25_topk
-from similaripy_spark.fulltext.tokenizer import tokenize_expr, tokenize_udf
+from similaripy_spark.fulltext.tokenizer import (
+    arrow_tokens,
+    tokenize_expr,
+    tokenize_str,
+)
 from similaripy_spark.fulltext.weights import bm25_weights
 from similaripy_spark.sources.pages import (
     generate_pages,
@@ -63,6 +67,13 @@ def test_pages_shape(pages):
 
 
 def test_tokenizer_expr_udf_agree(spark):
+    """The Catalyst form (tokenize_expr) and the Arrow token stream
+    (arrow_tokens) of the tokenize rule agree with each other, with its
+    plain-Python form (tokenize_str) and with the oracle tokenizer; null text has no tokens (tokenize_expr yields a null
+    array for it, which explode treats as empty), and the Kelvin sign
+    lowers into [a-z] before the split."""
+    import pyarrow as pa
+
     texts = [
         "Hello, WORLD!  foo-bar_baz 42",
         "  leading and trailing  ",
@@ -70,17 +81,31 @@ def test_tokenizer_expr_udf_agree(spark):
         "",
         "a;b:c.d,e",
         "ünïcödé stripped?",
+        None,
+        "\u212aelvin 5\u212a",
     ]
-    df = spark.createDataFrame([(t,) for t in texts], "text string")
-    got = df.select(
-        tokenize_expr(F.col("text")).alias("e"),
-        tokenize_udf(F.col("text")).alias("u"),
-    ).collect()
-    for r in got:
-        assert r["e"] == r["u"]
-    # and both agree with the oracle tokenizer
-    for t, r in zip(texts, got):
-        assert r["e"] == OF.tokenize(t)
+    df = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
+    )
+    got = [
+        r["e"] or [] for r in df.orderBy("doc_id").select(
+            tokenize_expr(F.col("text")).alias("e")
+        ).collect()
+    ]
+    doc_ids, doc_idx, toks = arrow_tokens(pa.RecordBatch.from_arrays(
+        [pa.array(range(len(texts)), type=pa.int64()),
+         pa.array(texts, type=pa.string())],
+        names=["doc_id", "text"],
+    ))
+    assert list(doc_ids) == list(range(len(texts)))
+    assert (np.diff(doc_idx) >= 0).all()
+    arrow = [[] for _ in texts]
+    for i, t in zip(doc_idx, toks.to_pylist()):
+        arrow[i].append(t)
+    assert got == arrow
+    for t, e in zip(texts, got):
+        assert e == OF.tokenize(t or "") == tokenize_str(t or "")
+    assert got[-2] == [] and got[-1] == ["kelvin", "5k"]
 
 
 def test_postings_mapside_equals_sql_plan(spark, pages):

@@ -6,6 +6,7 @@ from __future__ import annotations
 import re
 
 import numpy as np
+import pandas as pd
 import pyarrow as pa
 import pytest
 
@@ -13,7 +14,7 @@ from pyspark.sql import functions as F
 
 from similaripy_spark.fulltext import codec
 from similaripy_spark.fulltext import positional as P
-from similaripy_spark.fulltext.index_build import IndexBuilder
+from similaripy_spark.fulltext.index_build import IndexBuilder, read_segments
 from similaripy_spark.fulltext.positional import (
     StalePositionsError,
     build_positions,
@@ -107,6 +108,29 @@ def test_pos_payload_roundtrip():
         for p in ps
     )
     assert got == want
+
+
+def test_sidecar_blocks_equal_index_blocks(spark, tmp_path):
+    """Built at the index's block_size, the sidecar's doc and tf block
+    columns equal the main index's for every (shard, term, block_id): one
+    block codec writes both."""
+    d = str(tmp_path / "idx")
+    pages = generate_pages(spark, 600, vocab_size=300)
+    IndexBuilder(d, shard_size=256, n_groups=2, block_size=16).build(pages)
+    build_positions(pages, d, block_size=16)
+    key = ["shard", "term", "block_id"]
+    cols = key + ["n", "first_doc", "max_doc", "doc_deltas", "tfs"]
+
+    def blocks(df):
+        pdf = df.select(*cols).toPandas()
+        pdf["doc_deltas"] = pdf["doc_deltas"].map(bytes)
+        pdf["tfs"] = pdf["tfs"].map(bytes)
+        return pdf.sort_values(key).reset_index(drop=True)
+
+    main = blocks(read_segments(spark, d))
+    side = blocks(P.read_positions(spark, d))
+    assert (main["block_id"] > 0).any() and main["shard"].nunique() == 3
+    pd.testing.assert_frame_equal(main, side)
 
 
 def test_phrase_pos_matches_regex(spark, built):

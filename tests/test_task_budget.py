@@ -7,7 +7,7 @@ encoder runs ``max(shards, cores)`` tasks, the driver-side shard and
 tombstone lists plan as local scans (no PythonRDD), and a list delete
 launches no stage wider than one task. A point query on a warm handle
 runs no Spark job at all, and warming the handle lists nothing through
-Spark.
+Spark. Building a phrase query plan runs no Spark job either.
 """
 
 from __future__ import annotations
@@ -26,6 +26,11 @@ from similaripy_spark.fulltext.append import append_to_index
 from similaripy_spark.fulltext.delete import delete_docs, read_tombstones
 from similaripy_spark.fulltext.index_build import IndexBuilder, read_segments
 from similaripy_spark.fulltext.index_merge import merge_to_term_major
+from similaripy_spark.fulltext.positional import (
+    build_positions,
+    phrase_topk_pos,
+)
+from similaripy_spark.fulltext.querylang import search
 from similaripy_spark.fulltext.retrieve import open_index
 from similaripy_spark.fulltext.wand import segment_topk
 from similaripy_spark.sources.pages import (
@@ -177,3 +182,30 @@ def test_point_topk_on_open_handle_job_budget(spark, tmp_path):
         jobs = _group_stage_tasks(spark, lambda: call(2))
     assert jobs == [], jobs
     assert max(t for job in warm for t in job) <= parts, warm
+
+
+def test_phrase_plan_construction_runs_no_job(spark, tmp_path):
+    """Constructing ``phrase_topk_pos`` over a local query frame (exact and
+    sloppy) and a ``querylang.search`` phrase string runs no Spark job:
+    the phrase rows are collected from the local frame, and the segments
+    are read with a pinned schema instead of an inference job."""
+    d = str(tmp_path / "idx")
+    pages = _pages(spark, 4 * SHARD)
+    IndexBuilder(d, shard_size=SHARD, n_groups=2).build(pages)
+    build_positions(pages, d)
+    q = spark.createDataFrame(
+        pd.DataFrame({"query_id": [0], "terms": [["t000001", "t000002"]]}),
+        "query_id long, terms array<string>",
+    )
+    built = {}
+    for name, fn in [
+        ("exact", lambda: phrase_topk_pos(spark, d, q, k=10)),
+        ("slop", lambda: phrase_topk_pos(spark, d, q, k=10, slop=2)),
+        ("search", lambda: search(spark, d, '"t000001 t000002" t000003')),
+    ]:
+        jobs = _group_stage_tasks(
+            spark, lambda name=name, fn=fn: built.__setitem__(name, fn())
+        )
+        assert jobs == [], (name, jobs)
+    for df in built.values():
+        df.collect()
